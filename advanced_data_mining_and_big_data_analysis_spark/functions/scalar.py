@@ -37,13 +37,6 @@ def better_than_median(preds: Column, threshold: float) -> Column:
     return F.when(spread < threshold, mean).otherwise(median)
 
 
-def null_counts(df: DataFrame) -> DataFrame:
-    """Column-wise null counts (kaggle.py:422-423 X.isnull().sum())."""
-    return df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in df.columns]
-    )
-
-
 def impute_defaults(df: DataFrame, numeric_fill: float = 0.0, string_fill: str = "None") -> DataFrame:
     """Fill numeric nulls with 0 and string nulls with 'None'
     (kaggle.py:177-182)."""

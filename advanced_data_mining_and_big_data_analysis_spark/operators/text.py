@@ -54,23 +54,6 @@ def word_shingles(toks: Column, n: int = 3, distinct: bool = True) -> Column:
     return F.array_distinct(sh) if distinct else sh
 
 
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """MinHash signature: k independent permutations simulated by salting
-    md5 (min of md5(shingle || '#i') as hex string — string order is a
-    uniform stand-in for integer order and is engine-portable)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s, i=i: F.md5(F.concat(s, F.lit(f"#{i}")))))
-            for i in range(k)
-        ]
-    )
-
-
-def lsh_band_bucket(sig: Column, band: int, rows_per_band: int = 4) -> Column:
-    """Bucket id for one LSH band: hash of the band's signature slice."""
-    return F.md5(F.concat_ws("|", F.slice(sig, band * rows_per_band + 1, rows_per_band)))
-
-
 def simhash16(toks: Column) -> Column:
     """16-bit SimHash over the token multiset: bit j of each token is the
     high bit of md5 hex nibble j; simhash bit j = majority vote."""
@@ -126,16 +109,6 @@ def predict_lang(toks: Column) -> Column:
             cond = c if cond is None else (cond & c)
         expr = F.when(cond, F.lit(lang)).otherwise(expr)
     return F.when(F.greatest(*[s[lang] for lang in langs]) > 0, expr).otherwise(F.lit("unknown"))
-
-
-def char_ngrams(text: Column | str, n: int = 3) -> Column:
-    """Character n-grams over normalized text (array<string>, distinct)."""
-    s = normalize(text)
-    grams = F.when(
-        F.length(s) >= n,
-        F.transform(F.sequence(F.lit(1), F.length(s) - (n - 1)), lambda i: s.substr(i, F.lit(n))),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
 
 
 def token_count_ws(text: Column | str) -> Column:
@@ -425,50 +398,18 @@ def chunk_rows(
     )
 
 
-def quality_features(text: Column | str) -> dict[str, Column]:
-    """Quality-scoring features (length / punctuation / stopword ratios).
-
-    Deliberately HOF-free on the hot path, and down to ONE regex replace
-    + ONE regex count per row (r5 rewrite; was 3 regexp_replace passes +
-    an array-materializing split):
-    - norm = normalize(c) maps punct -> ' ' and preserves alnum chars, so
-      token_chars = length(translate(norm, ' ', '')) (translate is a
-      non-regex byte map);
-    - [a-z0-9 ]-count of the original = token_chars + literal-space
-      count of the original (again a translate+length);
-    - token count = number of maximal alnum runs in norm =
-      regexp_count(norm, '[a-z0-9]+') — no array ever allocated.
-    Values are integer-identical to the oracle's formulation."""
-    c = F.col(text) if isinstance(text, str) else text
-    norm = normalize(c)
-    n_tok = F.regexp_count(norm, F.lit("[a-z0-9]+"))
-    n_char = F.length(c)
-    token_chars = F.length(F.translate(norm, " ", ""))
-    spaces_orig = n_char - F.length(F.translate(c, " ", ""))
-    n_alnum_space = token_chars + spaces_orig
-    en_ratio = F.when(
-        n_tok > 0, stopword_hits(tokens(c), STOPWORDS["en"]) / n_tok
-    ).otherwise(F.lit(0.0))
-    return {
-        "n_tokens": n_tok,
-        "n_chars": n_char,
-        "punct_ratio": F.when(n_char > 0, (n_char - n_alnum_space) / n_char).otherwise(F.lit(0.0)),
-        "avg_token_len": F.when(n_tok > 0, token_chars / n_tok).otherwise(F.lit(0.0)),
-        "stopword_ratio": en_ratio,
-    }
-
-
 def quality_features_staged(
     docs: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ("source",)
 ) -> DataFrame:
-    """quality_features as STAGED projections: each expensive intermediate
-    (the normalized string, the token count) is materialized as a column
-    in its own select, so it is evaluated exactly ONCE per row.
+    """Quality-scoring features (length / punctuation ratios) as STAGED
+    projections: each expensive intermediate (the normalized string, the
+    token count) is materialized as a column in its own select, so it is
+    evaluated exactly ONCE per row.
 
-    The dict form inlines ``norm`` into every sibling feature column and
-    ``n_tok`` into two CASE branches — codegen subexpression elimination
-    does not hoist across conditional branches, so the single-projection
-    plan evaluates the regex ~7x per row. Staged projections survive
+    A single projection would inline ``norm`` into every sibling feature
+    column and ``n_tok`` into two CASE branches — codegen subexpression
+    elimination does not hoist across conditional branches, so that plan
+    evaluates the regex ~7x per row. Staged projections survive
     CollapseProject (Catalyst refuses to duplicate non-cheap expressions),
     leaving exactly one regexp_replace + one regexp_count in the plan —
     tests/test_plans.py asserts this shape for q45."""
@@ -504,23 +445,14 @@ def quality_features_staged(
 
 def quality_score_from(n_tokens: Column, punct_ratio: Column, avg_token_len: Column) -> Column:
     """Composite 0..1 quality score over ALREADY-PROJECTED feature
-    columns — use this after materializing quality_features in a select
-    so the feature expressions are analyzed once, not re-derived inside
-    the score tree (the optimizer will not collapse the two projections
-    because that would duplicate non-cheap expressions)."""
+    columns — use this after quality_features_staged, so the feature
+    expressions are analyzed once, not re-derived inside the score tree
+    (the optimizer will not collapse the two projections because that
+    would duplicate non-cheap expressions)."""
     length_ok = n_tokens.between(20, 200).cast("double")
     punct_ok = (punct_ratio < 0.1).cast("double")
     wordlen_ok = avg_token_len.between(3.0, 10.0).cast("double")
     return (length_ok + punct_ok + wordlen_ok) / 3.0
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite 0..1 quality score: rewards mid-length docs with low
-    punctuation density — the shape of C4/Gopher-style quality filters.
-    Single-expression form; prefer quality_score_from over a staged
-    projection in wide scans (smaller analysis tree)."""
-    q = quality_features(text)
-    return quality_score_from(q["n_tokens"], q["punct_ratio"], q["avg_token_len"])
 
 
 def pack_assignments(

@@ -7,11 +7,15 @@ unrolls a fixed 3 iterations into one declarative plan (each iteration is
 an edge-join + per-node aggregate — the exact shape GraphX's Pregel runs,
 but optimizer-visible); the oracle unrolls the same three iterations as
 chained CTEs, so the hash pins the damping arithmetic itself.
+
+It also owns the user co-occurrence graph every graph query runs on: the
+hub cap, the edge builder, and the loops more than one query shares
+(degrees, triangles, label propagation, frontier BFS).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
@@ -55,13 +59,11 @@ def _pr_iter_sql(prev: str, out: str) -> str:
     description="PageRank power iteration (damping 0.85, 3 unrolled iterations) over the event-type transition graph built from per-user event sequences — the iterative-numeric fixpoint class in DataFrame form: each iteration is one edge join + per-node aggregate, the whole unrolled recursion is a single declarative plan Catalyst sees end-to-end",
 )
 def q102_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     events = load_table(spark, sf_dir, "events")
     seq = events.select(
         "event_type",
         F.lead("event_type")
-        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
+        .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("next_et"),
     )
     # The aggregated edge list is |event_type|^2 rows — dimension-sized
@@ -78,7 +80,7 @@ def q102_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     p = e.select(
-        "src", "dst", (F.col("w") / F.sum("w").over(W.partitionBy("src"))).alias("p")
+        "src", "dst", (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p")
     )
     nodes = e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
     n_nodes = nodes.count()  # scalar: node-type cardinality, not data volume
@@ -108,65 +110,37 @@ def q102_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q128 — distributed triangle counting over the user co-occurrence
-# graph (the graph-analytics benchmark classic). Edges: two users are
-# connected when they act on the same (event_type, hour) bucket; a
-# bucket CAP (<= 20 users) bounds the per-bucket pair expansion to
-# O(cap^2) — the hub guard every production co-occurrence graph needs
-# (a single viral bucket otherwise emits a quadratic edge blowup; the
-# q83 LSH-cap lesson applied to graphs). Triangles are counted by the
-# canonical oriented two-join (u < v < w, so each triangle counts
-# exactly once); wedges = sum(deg choose 2) give global transitivity.
-# Every join is an equi-join on node ids — shuffle-partitionable, no
-# cartesian anywhere.
+# The user co-occurrence graph — ONE definition for the graph family
+# (q128, a0008, a0012, a0022, a0027, a0028, a0036, a0037, a0077; a0043
+# builds a weighted variant by joins and shares only the cap). Two users
+# are connected when they act on the same (event_type, hour) bucket. The
+# hub cap bounds the per-bucket pair expansion to O(cap^2): a single
+# viral bucket otherwise emits a quadratic edge blowup (the q83 LSH-cap
+# lesson applied to graphs). Every oracle renders the same constant, so
+# both engines apply the identical guard.
 # ---------------------------------------------------------------------------
 
-_TRI_CAP = 20
+_HUB_CAP = 20
 
 
-@query(
-    "q128_triangle_count",
-    oracle=f"""
-    WITH e AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
-               FROM events),
-    bs AS (SELECT event_type, b, COUNT(*) AS n FROM e GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_TRI_CAP}),
-    ek AS (SELECT e.user_id, e.event_type, e.b FROM e JOIN kept USING (event_type, b)),
-    ed AS (SELECT DISTINCT a.user_id AS u, k.user_id AS v
-           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
-                             AND a.user_id < k.user_id),
-    deg AS (SELECT node, COUNT(*) AS c
-            FROM (SELECT u AS node FROM ed UNION ALL SELECT v FROM ed) t GROUP BY node),
-    tri AS (SELECT COUNT(*) AS n
-            FROM ed e1 JOIN ed e2 ON e1.v = e2.u
-                       JOIN ed e3 ON e3.u = e1.u AND e3.v = e2.v)
-    SELECT CAST((SELECT COUNT(*) FROM bs) AS BIGINT) AS n_buckets,
-           CAST((SELECT COUNT(*) FROM bs WHERE n > {_TRI_CAP}) AS BIGINT) AS n_buckets_capped,
-           CAST((SELECT COUNT(*) FROM ed) AS BIGINT) AS n_edges,
-           CAST((SELECT n FROM tri) AS BIGINT) AS n_triangles,
-           ROUND(3.0 * (SELECT n FROM tri) / (SELECT SUM(c * (c - 1) / 2) FROM deg), 6)
-             AS transitivity
-    """,
-    description="distributed triangle counting on the user co-occurrence graph: (event_type, hour) buckets with a <= 20-user hub cap bound the pair expansion to O(cap^2) per bucket (the q83 skew lesson applied to graphs), canonical oriented two-join (u<v<w) counts each triangle once, wedge sum gives global transitivity — every join an equi-join on node ids, no cartesian; the cap-skip count is reported so truncation is never silent",
-)
-def q128_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _user_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, b=hour) -> sorted distinct-user array ``us``: ONE
+    corpus exchange (collect_set dedupes within the bucket, so the
+    separate ev.distinct() pass of the join formulation is subsumed).
+    r9 A/B vs the kept-join + bucket self-join + distinct chain: 0.95 ->
+    0.59 s warm at sf0.1 on q128, same row counts."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
     )
-    # ONE corpus exchange: bucket -> sorted distinct-user array
-    # (collect_set dedupes within the bucket, so the separate
-    # ev.distinct() pass of the join formulation is subsumed). The
-    # bucket census (n_buckets / capped) reads size(us); edges explode
-    # the <= cap(cap-1)/2 oriented pairs from each kept array — r9 A/B
-    # vs the kept-join + bucket self-join + distinct chain: 0.95 ->
-    # 0.59 s warm at sf0.1, same row counts, and one exchange instead
-    # of three on the corpus side. Per-bucket work is cap-bounded, so
-    # the array fan-out is as skew-safe as the join was.
-    ba = (
-        ev.groupBy("event_type", "b")
-        .agg(F.array_sort(F.collect_set("user_id")).alias("us"))
-        .localCheckpoint(eager=False)
+    return ev.groupBy("event_type", "b").agg(
+        F.array_sort(F.collect_set("user_id")).alias("us")
     )
+
+
+def _cooc_edges(buckets: DataFrame) -> DataFrame:
+    """Canonical (u < v) edge frame: the oriented pairs of every bucket
+    at or under the hub cap, exploded row-locally (<= cap(cap-1)/2 per
+    bucket, so the fan-out is as skew-safe as a join), then one distinct."""
     us = F.col("us")
     pairs = F.flatten(
         F.transform(
@@ -183,33 +157,139 @@ def q128_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded = F.when(F.size(us) >= 2, pairs).otherwise(
         F.array().cast("array<struct<u:bigint,v:bigint>>")
     )
-    ed = (
-        ba.filter(F.size(us) <= _TRI_CAP)
+    return (
+        buckets.filter(F.size(us) <= _HUB_CAP)
         .select(F.explode(guarded).alias("p"))
         .select("p.u", "p.v")
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    deg = (
-        ed.select(F.col("u").alias("node"))
-        .unionAll(ed.select(F.col("v").alias("node")))
+
+
+def _sym_edges(edges: DataFrame) -> DataFrame:
+    """Both directions of every edge, lazily checkpointed: the iterative
+    callers re-join it every round, so the edge build runs once."""
+    return edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint(eager=False)
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, c) degree frame of a canonical (u < v) edge frame."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionAll(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("c"))
     )
-    e2 = ed.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    e3 = ed.select(F.col("u").alias("u3"), F.col("v").alias("w3"))
-    tri = (
-        ed.join(e2, "v")
+
+
+def _triangles(edges: DataFrame) -> DataFrame:
+    """(u, v, w) triangles, u < v < w, of a canonical (u < v) edge frame:
+    the oriented two-join counts each triangle exactly once, and every
+    join is an equi-join on node ids (no cartesian)."""
+    e2 = edges.select(F.col("u").alias("v"), F.col("v").alias("w"))
+    e3 = edges.select(F.col("u").alias("u3"), F.col("v").alias("w3"))
+    return (
+        edges.join(e2, "v")
         .join(e3, (F.col("u") == F.col("u3")) & (F.col("w") == F.col("w3")))
-        .agg(F.count("*").alias("n"))
+        .select("u", "v", "w")
     )
+
+
+def _lpa_labels(sym: DataFrame, rounds: int) -> DataFrame:
+    """Synchronous label propagation over direction-doubled edges: every
+    node starts as its own label, and each round adopts the most frequent
+    neighbor label (count DESC, label ASC — the deterministic rule the
+    oracle replays). Returns the node-sized (node, lbl) frame."""
+    lbl = sym.select(F.col("u").alias("node")).distinct().select(
+        "node", F.col("node").alias("lbl")
+    )
+    for _ in range(rounds):
+        nb = sym.join(lbl.withColumnRenamed("node", "v"), "v").select(
+            F.col("u").alias("node"), "lbl"
+        )
+        ct = nb.groupBy("node", "lbl").agg(F.count("*").alias("c"))
+        w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
+        lbl = (
+            ct.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") == 1)
+            .select("node", "lbl")
+            .localCheckpoint(eager=False)  # node-sized; caps plan depth
+        )
+    return lbl
+
+
+def _frontier_bfs(sym: DataFrame, seeds: DataFrame, rounds: int) -> DataFrame:
+    """Multi-source BFS over direction-doubled edges from ``seeds``
+    (seed, node): each round is one frontier-sized edge join + one
+    left-anti against the per-seed visited set, so all seeds ride the
+    same join iterations. Returns visited (seed, node, dist) after
+    ``rounds`` rounds; a single-source BFS is the one-seed case."""
+    frontier = seeds.localCheckpoint(eager=False)
+    visited = frontier.select("seed", "node", F.lit(0).alias("dist")).localCheckpoint(
+        eager=False
+    )
+    for r in range(1, rounds + 1):
+        nxt = (
+            sym.join(frontier.withColumnRenamed("node", "u"), "u")
+            .select("seed", F.col("v").alias("node"))
+            .distinct()
+            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
+            .localCheckpoint(eager=False)  # (seeds x node)-bounded
+        )
+        visited = visited.unionAll(
+            nxt.select("seed", "node", F.lit(r).alias("dist"))
+        ).localCheckpoint(eager=False)
+        frontier = nxt
+    return visited
+
+
+# ---------------------------------------------------------------------------
+# q128 — distributed triangle counting over the user co-occurrence
+# graph (the graph-analytics benchmark classic). Triangles are counted
+# by the canonical oriented two-join; wedges = sum(deg choose 2) give
+# global transitivity. The bucket census reports how many buckets the
+# hub cap skipped, so truncation is never silent.
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q128_triangle_count",
+    oracle=f"""
+    WITH e AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
+               FROM events),
+    bs AS (SELECT event_type, b, COUNT(*) AS n FROM e GROUP BY 1, 2),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
+    ek AS (SELECT e.user_id, e.event_type, e.b FROM e JOIN kept USING (event_type, b)),
+    ed AS (SELECT DISTINCT a.user_id AS u, k.user_id AS v
+           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
+                             AND a.user_id < k.user_id),
+    deg AS (SELECT node, COUNT(*) AS c
+            FROM (SELECT u AS node FROM ed UNION ALL SELECT v FROM ed) t GROUP BY node),
+    tri AS (SELECT COUNT(*) AS n
+            FROM ed e1 JOIN ed e2 ON e1.v = e2.u
+                       JOIN ed e3 ON e3.u = e1.u AND e3.v = e2.v)
+    SELECT CAST((SELECT COUNT(*) FROM bs) AS BIGINT) AS n_buckets,
+           CAST((SELECT COUNT(*) FROM bs WHERE n > {_HUB_CAP}) AS BIGINT) AS n_buckets_capped,
+           CAST((SELECT COUNT(*) FROM ed) AS BIGINT) AS n_edges,
+           CAST((SELECT n FROM tri) AS BIGINT) AS n_triangles,
+           ROUND(3.0 * (SELECT n FROM tri) / (SELECT SUM(c * (c - 1) / 2) FROM deg), 6)
+             AS transitivity
+    """,
+    description="distributed triangle counting on the user co-occurrence graph: (event_type, hour) buckets with a <= 20-user hub cap bound the pair expansion to O(cap^2) per bucket (the q83 skew lesson applied to graphs), canonical oriented two-join (u<v<w) counts each triangle once, wedge sum gives global transitivity — every join an equi-join on node ids, no cartesian; the cap-skip count is reported so truncation is never silent",
+)
+def q128_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the bucket frame feeds both the census and the edge build
+    ba = _user_buckets(spark, sf_dir).localCheckpoint(eager=False)
+    ed = _cooc_edges(ba).localCheckpoint(eager=False)
+    tri = _triangles(ed).agg(F.count("*").alias("n"))
     stats = ba.agg(
         F.count("*").alias("n_buckets"),
-        F.sum((F.size(us) > _TRI_CAP).cast("long")).alias("n_buckets_capped"),
+        F.sum((F.size("us") > _HUB_CAP).cast("long")).alias("n_buckets_capped"),
     )
     # n_edges = sum(deg)/2 folds the edge count into the wedge pass —
     # one branch over the edge frame instead of two.
-    wedge = deg.agg(
+    wedge = _degrees(ed).agg(
         (F.sum("c") / 2).cast("long").alias("n_edges"),
         F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("wedges"),
     )

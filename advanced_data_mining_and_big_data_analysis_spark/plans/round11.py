@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from .graph import _HUB_CAP, _cooc_edges, _degrees, _triangles, _user_buckets
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -785,7 +786,6 @@ def a0076_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equi-join on node ids; the coefficient frame is node-sized.
 # ---------------------------------------------------------------------------
 
-_CC_CAP = 20
 _CC_TOP = 20
 
 
@@ -799,7 +799,7 @@ _CC_TOP = 20
     WITH e AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS n FROM e GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_CC_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
     ek AS (SELECT e.user_id, e.event_type, e.b FROM e JOIN kept USING (event_type, b)),
     ed AS (SELECT DISTINCT a.user_id AS u, k.user_id AS v
            FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
@@ -820,50 +820,13 @@ _CC_TOP = 20
     ORDER BY coeff DESC, node
     LIMIT {_CC_TOP}
     """,
-    description=f"per-node local clustering coefficient 2T/(deg(deg−1)) on the q128 user co-occurrence graph ((event_type,hour) buckets, <={_CC_CAP}-user hub cap, row-local oriented pair explode): triangle membership from the canonical oriented two-join exploded to all three corners, node-sized coefficient frame, top-{_CC_TOP} by (coeff desc, node) — the local-density metric behind community detection",
+    description=f"per-node local clustering coefficient 2T/(deg(deg−1)) on the q128 user co-occurrence graph ((event_type,hour) buckets, <={_HUB_CAP}-user hub cap, row-local oriented pair explode): triangle membership from the canonical oriented two-join exploded to all three corners, node-sized coefficient frame, top-{_CC_TOP} by (coeff desc, node) — the local-density metric behind community detection",
 )
 def a0077_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
-    )
-    ba = ev.groupBy("event_type", "b").agg(
-        F.array_sort(F.collect_set("user_id")).alias("us")
-    )
-    us = F.col("us")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(us) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(us)),
-                lambda j: F.struct(
-                    F.element_at(us, i).alias("u"), F.element_at(us, j).alias("v")
-                ),
-            ),
-        )
-    )
-    guarded = F.when(F.size(us) >= 2, pairs).otherwise(
-        F.array().cast("array<struct<u:bigint,v:bigint>>")
-    )
-    ed = (
-        ba.filter(F.size(us) <= _CC_CAP)
-        .select(F.explode(guarded).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-        .localCheckpoint(eager=False)  # deg + 3-way triangle join reuse it
-    )
-    deg = (
-        ed.select(F.col("u").alias("node"))
-        .unionAll(ed.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg((F.count("*") * 1.0).alias("d"))
-    )
-    e2 = ed.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    e3 = ed.select(F.col("u").alias("u3"), F.col("v").alias("w3"))
-    tri = (
-        ed.join(e2, "v")
-        .join(e3, (F.col("u") == F.col("u3")) & (F.col("w") == F.col("w3")))
-        .select("u", "v", "w")
-    )
+    # deg + 3-way triangle join reuse the edge frame
+    ed = _cooc_edges(_user_buckets(spark, sf_dir)).localCheckpoint(eager=False)
+    deg = _degrees(ed)
+    tri = _triangles(ed)
     ntri = (
         tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
         .groupBy("node")
@@ -871,13 +834,13 @@ def a0077_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         deg.join(ntri, "node", "left")
-        .filter(F.col("d") >= 2)
+        .filter(F.col("c") >= 2)
         .select(
             F.col("node").cast("long").alias("node"),
-            F.col("d").cast("long").alias("degree"),
+            F.col("c").cast("long").alias("degree"),
             F.coalesce("t", F.lit(0)).cast("long").alias("triangles"),
             F.round(
-                2.0 * F.coalesce("t", F.lit(0)) / (F.col("d") * (F.col("d") - 1)), 6
+                2.0 * F.coalesce("t", F.lit(0)) / (F.col("c") * (F.col("c") - 1)), 6
             ).alias("coeff"),
         )
         .orderBy(F.desc("coeff"), "node")

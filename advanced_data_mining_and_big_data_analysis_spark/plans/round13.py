@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources import load_table
+from .graph import _HUB_CAP, _cooc_edges, _degrees, _user_buckets
 from .registry import query
 from .round12 import _dlh_feats_sql
 from .similarity import _DIMS, _SD_PLANT, _SD_THR
@@ -808,7 +809,7 @@ def a0009_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a0008 — k-core decomposition by iterative peeling (Seidman 1983; the
 # degeneracy layering every graph-ML sampler uses) on the q128 user
 # co-occurrence graph (same (event_type, hour) buckets, same <= 20-user
-# hub cap — graph.py:114). Peeling removes nodes with degree < k and
+# hub cap). Peeling removes nodes with degree < k and
 # repeats on the induced subgraph; _KC_ROUNDS = 8 unrolled rounds with
 # a FIXPOINT ASSERTION after (the a0002 pattern: raise rather than
 # return a partial core). Each round is one degree aggregate + two
@@ -821,7 +822,6 @@ def a0009_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KC_K = 3
 _KC_ROUNDS = 8
-_KC_CAP = 20  # q128's hub cap (graph.py:114) — same graph, same guard
 
 
 def _kcore_rounds_sql() -> str:
@@ -846,7 +846,7 @@ def _kcore_rounds_sql() -> str:
     WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                 FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_KC_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
     ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
     e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
            FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
@@ -863,48 +863,12 @@ def _kcore_rounds_sql() -> str:
            CAST((SELECT COALESCE(MIN(c), {_KC_K}) FROM fin) >= {_KC_K} AS BIGINT)
              AS converged
     """,
-    description=f"k-core decomposition (k={_KC_K}) by iterative peeling on the q128 user co-occurrence graph (same hub cap {_KC_CAP}): {_KC_ROUNDS} unrolled rounds of degree-filter + induced-subgraph semi-joins on a monotonically shrinking edge frame, fixpoint ASSERTED after the last round (raise, never a partial core) — core size, edges, max degree; the degeneracy layering graph-ML samplers consume",
+    description=f"k-core decomposition (k={_KC_K}) by iterative peeling on the q128 user co-occurrence graph (same hub cap {_HUB_CAP}): {_KC_ROUNDS} unrolled rounds of degree-filter + induced-subgraph semi-joins on a monotonically shrinking edge frame, fixpoint ASSERTED after the last round (raise, never a partial core) — core size, edges, max degree; the degeneracy layering graph-ML samplers consume",
 )
 def a0008_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
-    )
-    ba = ev.groupBy("event_type", "b").agg(
-        F.array_sort(F.collect_set("user_id")).alias("us")
-    )
-    us = F.col("us")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(us) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(us)),
-                lambda j: F.struct(
-                    F.element_at(us, i).alias("u"), F.element_at(us, j).alias("v")
-                ),
-            ),
-        )
-    )
-    guarded = F.when(F.size(us) >= 2, pairs).otherwise(
-        F.array().cast("array<struct<u:bigint,v:bigint>>")
-    )
-    edges = (
-        ba.filter(F.size(us) <= _KC_CAP)
-        .select(F.explode(guarded).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("c"))
-        )
-
+    edges = _cooc_edges(_user_buckets(spark, sf_dir)).localCheckpoint(eager=False)
     for _ in range(_KC_ROUNDS):
-        keep = degrees(edges).filter(F.col("c") >= _KC_K).select("node")
+        keep = _degrees(edges).filter(F.col("c") >= _KC_K).select("node")
         edges = (
             edges.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
@@ -915,7 +879,7 @@ def a0008_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same action via a crossJoin of the two 1-row aggregates — the
     # former separate edges.count() job re-materialized nothing (the
     # checkpointed edge frame feeds both), it just paid one more job floor
-    fin = degrees(edges)
+    fin = _degrees(edges)
     stats = (
         fin.agg(
             F.count("*").cast("long").alias("n_core_nodes"),

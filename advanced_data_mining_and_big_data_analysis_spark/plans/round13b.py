@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources import load_table
+from .graph import _HUB_CAP, _cooc_edges, _frontier_bfs, _lpa_labels, _sym_edges, _user_buckets
 from .registry import query
 from .round12 import _dlh_feats_sql
 from .round13 import _TOKS_SQL
@@ -45,7 +46,6 @@ from .round13 import _TOKS_SQL
 # ---------------------------------------------------------------------------
 
 _LP_ROUNDS = 4
-_LP_CAP = 20  # q128's hub cap (graph.py:114) — same graph, same guard
 
 
 def _lpa_rounds_sql() -> str:
@@ -70,7 +70,7 @@ def _lpa_rounds_sql() -> str:
     WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                 FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_LP_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
     ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
     e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
            FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
@@ -83,54 +83,11 @@ def _lpa_rounds_sql() -> str:
            CAST(COUNT(*) AS BIGINT) AS n_communities
     FROM cs GROUP BY sz ORDER BY size_nodes
     """,
-    description=f"label-propagation community detection (Raghavan 2007, synchronous deterministic variant) on the q128/a0008 user co-occurrence graph (hub cap {_LP_CAP}): every node starts as its own community, {_LP_ROUNDS} unrolled Pregel-shaped rounds each adopt the most frequent neighbor label (count DESC, label ASC tie-break — both engines replay the rule exactly); output the community-size profile (size -> n_communities); each round is one edge-sized join + one node-sized aggregate",
+    description=f"label-propagation community detection (Raghavan 2007, synchronous deterministic variant) on the q128/a0008 user co-occurrence graph (hub cap {_HUB_CAP}): every node starts as its own community, {_LP_ROUNDS} unrolled Pregel-shaped rounds each adopt the most frequent neighbor label (count DESC, label ASC tie-break — both engines replay the rule exactly); output the community-size profile (size -> n_communities); each round is one edge-sized join + one node-sized aggregate",
 )
 def a0012_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
-    )
-    ba = ev.groupBy("event_type", "b").agg(
-        F.array_sort(F.collect_set("user_id")).alias("us")
-    )
-    us = F.col("us")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(us) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(us)),
-                lambda j: F.struct(
-                    F.element_at(us, i).alias("u"), F.element_at(us, j).alias("v")
-                ),
-            ),
-        )
-    )
-    guarded = F.when(F.size(us) >= 2, pairs).otherwise(
-        F.array().cast("array<struct<u:bigint,v:bigint>>")
-    )
-    e0 = (
-        ba.filter(F.size(us) <= _LP_CAP)
-        .select(F.explode(guarded).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    sym = e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).localCheckpoint(
-        eager=False
-    )  # reused every round — materialize the edge build once
-    lbl = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(_LP_ROUNDS):
-        nb = sym.join(lbl.withColumnRenamed("node", "v"), "v").select(
-            F.col("u").alias("node"), "lbl"
-        )
-        ct = nb.groupBy("node", "lbl").agg(F.count("*").alias("c"))
-        w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
-        lbl = (
-            ct.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("node", "lbl")
-            .localCheckpoint(eager=False)  # node-sized; caps plan depth
-        )
+    sym = _sym_edges(_cooc_edges(_user_buckets(spark, sf_dir)))
+    lbl = _lpa_labels(sym, _LP_ROUNDS)
     cs = lbl.groupBy("lbl").agg(F.count("*").alias("sz"))
     return (
         cs.groupBy(F.col("sz").cast("long").alias("size_nodes"))
@@ -1179,7 +1136,6 @@ def a0021_jpeg_arith_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BFS_ROUNDS = 6
-_BFS_CAP = 20  # q128's hub cap — same graph, same guard
 
 
 def _bfs_rounds_sql() -> str:
@@ -1204,7 +1160,7 @@ def _bfs_rounds_sql() -> str:
     WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                 FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_BFS_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
     ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
     e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
            FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
@@ -1222,55 +1178,15 @@ def _bfs_rounds_sql() -> str:
     FROM (SELECT * FROM v{_BFS_ROUNDS} UNION ALL SELECT * FROM unreached)
     GROUP BY layer ORDER BY layer
     """,
-    description=f"BFS hop-distance layers from the highest-degree user (ties to smallest id) on the q128/a0008 co-occurrence graph (hub cap {_BFS_CAP}): {_BFS_ROUNDS} unrolled Pregel frontier rounds, each one frontier-sized edge join + one left-anti against the growing visited set; nodes beyond the budget report layer -1, so the histogram partitions the node set exactly; the hop-profile input to within-k-hops features and sampling fanout estimates",
+    description=f"BFS hop-distance layers from the highest-degree user (ties to smallest id) on the q128/a0008 co-occurrence graph (hub cap {_HUB_CAP}): {_BFS_ROUNDS} unrolled Pregel frontier rounds, each one frontier-sized edge join + one left-anti against the growing visited set; nodes beyond the budget report layer -1, so the histogram partitions the node set exactly; the hop-profile input to within-k-hops features and sampling fanout estimates",
 )
 def a0022_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
-    )
-    ba = ev.groupBy("event_type", "b").agg(
-        F.array_sort(F.collect_set("user_id")).alias("us")
-    )
-    us = F.col("us")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(us) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(us)),
-                lambda j: F.struct(
-                    F.element_at(us, i).alias("u"), F.element_at(us, j).alias("v")
-                ),
-            ),
-        )
-    )
-    guarded = F.when(F.size(us) >= 2, pairs).otherwise(
-        F.array().cast("array<struct<u:bigint,v:bigint>>")
-    )
-    e0 = (
-        ba.filter(F.size(us) <= _BFS_CAP)
-        .select(F.explode(guarded).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    sym = e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).localCheckpoint(
-        eager=False
-    )  # edge build runs once; every round reuses it
+    sym = _sym_edges(_cooc_edges(_user_buckets(spark, sf_dir)))
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("c"))
-    seed = deg.orderBy(F.desc("c"), "node").limit(1).select("node")
-    frontier = seed.localCheckpoint(eager=False)
-    visited = seed.select("node", F.lit(0).alias("layer")).localCheckpoint(eager=False)
-    for r in range(1, _BFS_ROUNDS + 1):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)  # frontier: node-bounded
-        )
-        visited = visited.unionAll(nxt.select("node", F.lit(r).alias("layer"))).localCheckpoint(
-            eager=False
-        )
-        frontier = nxt
+    seed = deg.orderBy(F.desc("c"), "node").limit(1).select(F.col("node").alias("seed"), "node")
+    visited = _frontier_bfs(sym, seed, _BFS_ROUNDS).select(
+        "node", F.col("dist").alias("layer")
+    )
     unreached = deg.select("node").join(visited.select("node"), "node", "left_anti").select(
         "node", F.lit(-1).alias("layer")
     )

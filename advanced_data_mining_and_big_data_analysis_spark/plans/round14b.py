@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources import load_table
+from .graph import _HUB_CAP, _cooc_edges, _frontier_bfs, _lpa_labels, _sym_edges, _user_buckets
 from .registry import query
+from .round13b import _LP_ROUNDS, _lpa_rounds_sql, _round_half_up
 
 # Shared token macro (identical to operators.text.tokens on the Spark
 # side; see round13._TOKS_SQL).
@@ -443,68 +445,12 @@ def a0026_repeated_substring_spans(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-def _lpa_labels_spark(spark: SparkSession, sf_dir: str):
-    """a0012's graph + LPA labels, replayed exactly (same cap, same
-    synchronous rounds, same count-DESC/label-ASC tie rule). Returns
-    (sym_edges, labels) — sym is the direction-doubled edge frame."""
-    from .round13b import _LP_CAP, _LP_ROUNDS
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
-    )
-    ba = ev.groupBy("event_type", "b").agg(
-        F.array_sort(F.collect_set("user_id")).alias("us")
-    )
-    us = F.col("us")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(us) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(us)),
-                lambda j: F.struct(
-                    F.element_at(us, i).alias("u"), F.element_at(us, j).alias("v")
-                ),
-            ),
-        )
-    )
-    guarded = F.when(F.size(us) >= 2, pairs).otherwise(
-        F.array().cast("array<struct<u:bigint,v:bigint>>")
-    )
-    e0 = (
-        ba.filter(F.size(us) <= _LP_CAP)
-        .select(F.explode(guarded).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    sym = e0.unionAll(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
-    lbl = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(_LP_ROUNDS):
-        nb = sym.join(lbl.withColumnRenamed("node", "v"), "v").select(
-            F.col("u").alias("node"), "lbl"
-        )
-        ct = nb.groupBy("node", "lbl").agg(F.count("*").alias("c"))
-        w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
-        lbl = (
-            ct.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("node", "lbl")
-            .localCheckpoint(eager=False)
-        )
-    return sym, lbl
-
-
 def _modularity_oracle() -> str:
-    from .round13b import _LP_CAP, _LP_ROUNDS, _lpa_rounds_sql
-
     return f"""
     WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                 FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_LP_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
     ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
     e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
            FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
@@ -540,7 +486,8 @@ def _modularity_oracle() -> str:
     description="Newman-Girvan modularity (Phys. Rev. E 69, 026113, 2004) of a0012's label-propagation communities on the same co-occurrence graph: Q = within/(2m) - sum_c (d_c/(2m))^2 assembled from three INTEGER aggregates (same-label directed edge count, sum of squared community degree sums, 2m) entering one closed-form double expression — no float summation order exists to diverge; the quality number that says whether LPA found structure (Q >> 0) or noise (Q ~ 0); two edge-sized label-lookup joins + node-sized aggregates on top of a0012's rounds",
 )
 def a0027_modularity_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sym, lbl = _lpa_labels_spark(spark, sf_dir)
+    sym = _sym_edges(_cooc_edges(_user_buckets(spark, sf_dir)))
+    lbl = _lpa_labels(sym, _LP_ROUNDS)
     # ONE action (r14): 2m, the same-label edge count and the node count
     # ride the final select as crossJoined broadcast 1-row aggregates
     # (the oracle's m2/within/nn CTEs) instead of three separate driver
@@ -598,7 +545,6 @@ def a0027_modularity_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CC_ROUNDS = 6
-_CC_CAP = 20  # q128's hub cap — same graph as a0022
 _CC_SEEDS = 8
 _CC_LCM = 60  # lcm(1..6): exact-rational harmonic numerator
 
@@ -626,7 +572,7 @@ def _cc_rounds_sql() -> str:
     WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                 FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_CC_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
     ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
     e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
            FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
@@ -647,63 +593,18 @@ def _cc_rounds_sql() -> str:
            ROUND(h60 * 1.0 / {_CC_LCM}, 6) AS harmonic_closeness
     FROM agg ORDER BY seed
     """,
-    description=f"harmonic closeness centrality (Marchiori-Latora 2000 / Boldi-Vigna 2014) for {_CC_SEEDS} deterministic landmark seeds on the q128/a0022 co-occurrence graph (hub cap {_CC_CAP}): MULTI-source BFS — a0022's Pregel frontier generalized to (seed, node) keys so all seeds ride one join iteration — {_CC_ROUNDS} unrolled rounds; harmonic sum assembled as sum(layer_count * ({_CC_LCM}/dist))/{_CC_LCM} with {_CC_LCM}=lcm(1..{_CC_ROUNDS}), an exact-int64 numerator immune to float summation order; the landmark batching that prices closeness estimation on big graphs",
+    description=f"harmonic closeness centrality (Marchiori-Latora 2000 / Boldi-Vigna 2014) for {_CC_SEEDS} deterministic landmark seeds on the q128/a0022 co-occurrence graph (hub cap {_HUB_CAP}): MULTI-source BFS — a0022's Pregel frontier generalized to (seed, node) keys so all seeds ride one join iteration — {_CC_ROUNDS} unrolled rounds; harmonic sum assembled as sum(layer_count * ({_CC_LCM}/dist))/{_CC_LCM} with {_CC_LCM}=lcm(1..{_CC_ROUNDS}), an exact-int64 numerator immune to float summation order; the landmark batching that prices closeness estimation on big graphs",
 )
 def a0028_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
-    )
-    ba = ev.groupBy("event_type", "b").agg(
-        F.array_sort(F.collect_set("user_id")).alias("us")
-    )
-    us = F.col("us")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(us) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(us)),
-                lambda j: F.struct(
-                    F.element_at(us, i).alias("u"), F.element_at(us, j).alias("v")
-                ),
-            ),
-        )
-    )
-    guarded = F.when(F.size(us) >= 2, pairs).otherwise(
-        F.array().cast("array<struct<u:bigint,v:bigint>>")
-    )
-    e0 = (
-        ba.filter(F.size(us) <= _CC_CAP)
-        .select(F.explode(guarded).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    sym = e0.unionAll(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    sym = _sym_edges(_cooc_edges(_user_buckets(spark, sf_dir)))
     seeds = (
         sym.select(F.col("u").alias("node"))
         .distinct()
         .orderBy("node")
         .limit(_CC_SEEDS)
+        .select(F.col("node").alias("seed"), "node")
     )
-    frontier = seeds.select(F.col("node").alias("seed"), "node").localCheckpoint(
-        eager=False
-    )
-    visited = frontier.select("seed", "node", F.lit(0).alias("dist")).localCheckpoint(
-        eager=False
-    )
-    for r in range(1, _CC_ROUNDS + 1):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select("seed", F.col("v").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .localCheckpoint(eager=False)  # (seeds x node)-bounded
-        )
-        visited = visited.unionAll(
-            nxt.select("seed", "node", F.lit(r).alias("dist"))
-        ).localCheckpoint(eager=False)
-        frontier = nxt
+    visited = _frontier_bfs(sym, seeds, _CC_ROUNDS)
     layers = (
         visited.filter(F.col("dist") > 0)
         .groupBy("seed", "dist")
@@ -1208,7 +1109,6 @@ def _mk_oracle() -> str:
     description=f"Markov-chain removal-effect attribution (Anderl et al. 2016): user journeys (ordered by ts/event_id, truncated at first purchase) -> first-order transition chain over START/channels with absorbing CONV/NULL; channel credit = 1 - P_removed(conv)/P(conv) with into-channel edges redirected to NULL, shares normalized over integer differences; absorption via {_MK_ITERS}-step int64 fixed-point value iteration (SCALE={_MK_SCALE}, per-state SUM(n*val) DIV tot — exact integers end to end); transition matrix bounded by the event-type alphabet, so Spark distributes the journey scan + transition count and iterates driver-side over the bounded matrix (a0089 idiom) while the oracle unrolls the identical iteration as CTEs; the data-driven successor of a0125's first/last-touch",
 )
 def a0032_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .round13b import _round_half_up
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -15,58 +15,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from .graph import _HUB_CAP, _cooc_edges, _triangles, _user_buckets
 from .registry import query
 
-# Shared user co-occurrence graph (q128/a0008/a0013's graph: two users
-# are connected when they act in the same (event_type, hour) bucket;
-# the <= 20-user hub cap bounds the per-bucket pair expansion at
-# O(cap^2) — graph.py:114's skew guard, identical in both engines).
-_G_CAP = 20
-
+# The q128 user co-occurrence graph's edge build, as oracle CTEs.
 _G_EDGES_SQL = f"""ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                 FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_G_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
     ek AS (SELECT ev.user_id, ev.event_type, ev.b
            FROM ev JOIN kept USING (event_type, b)),
     e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
            FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
                              AND a.user_id < k.user_id)"""
-
-
-def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical (u < v) co-occurrence edge frame — the a0008 builder:
-    per-bucket sorted user set, in-row pair expansion under the hub
-    cap, one distinct. Returned frame is lazily checkpointed so the
-    iterative callers' unrolled plans stay shallow."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
-    )
-    ba = ev.groupBy("event_type", "b").agg(
-        F.array_sort(F.collect_set("user_id")).alias("us")
-    )
-    us = F.col("us")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(us) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(us)),
-                lambda j: F.struct(
-                    F.element_at(us, i).alias("u"), F.element_at(us, j).alias("v")
-                ),
-            ),
-        )
-    )
-    guarded = F.when(F.size(us) >= 2, pairs).otherwise(
-        F.array().cast("array<struct<u:bigint,v:bigint>>")
-    )
-    return (
-        ba.filter(F.size(us) <= _G_CAP)
-        .select(F.explode(guarded).alias("p"))
-        .select("p.u", "p.v")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -132,20 +93,17 @@ def _ktruss_rounds_sql() -> str:
            CAST((SELECT COUNT(*) FROM e{_KT_ROUNDS + 1})
                 = (SELECT COUNT(*) FROM fin) AS BIGINT) AS converged
     """,
-    description=f"k-truss decomposition (k={_KT_K}, Cohen 2008 — the edge-level analog of a0008's k-core) on the q128 user co-occurrence graph (hub cap {_G_CAP}): {_KT_ROUNDS} unrolled support-peeling rounds, each one canonical oriented triangle enumeration (u<v<w, every join an equi-join on node ids) + a per-edge support aggregate + a support filter on a monotonically shrinking edge frame, fixpoint ASSERTED after the last round (raise, never a partial truss) — truss size, nodes, max edge support; the cohesion core community miners extract above k-core",
+    description=f"k-truss decomposition (k={_KT_K}, Cohen 2008 — the edge-level analog of a0008's k-core) on the q128 user co-occurrence graph (hub cap {_HUB_CAP}): {_KT_ROUNDS} unrolled support-peeling rounds, each one canonical oriented triangle enumeration (u<v<w, every join an equi-join on node ids) + a per-edge support aggregate + a support filter on a monotonically shrinking edge frame, fixpoint ASSERTED after the last round (raise, never a partial truss) — truss size, nodes, max edge support; the cohesion core community miners extract above k-core",
 )
 def a0036_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _cooc_edges(spark, sf_dir)
+    edges = _cooc_edges(_user_buckets(spark, sf_dir)).localCheckpoint(eager=False)
 
     def support(e: DataFrame) -> DataFrame:
-        e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-        e3 = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-        tri = e1.join(e2, "b").join(e3, ["a", "c"])
+        tri = _triangles(e)
         per = (
-            tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-            .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
+            tri.select("u", "v")
+            .unionAll(tri.select("u", F.col("w").alias("v")))
+            .unionAll(tri.select(F.col("v").alias("u"), F.col("w").alias("v")))
         )
         return per.groupBy("u", "v").agg(F.count("*").alias("sup"))
 
@@ -250,7 +208,7 @@ def _ppr_iters_sql() -> str:
     description=f"personalized PageRank / random walk with restart (Page et al. 1999 §6 personalized teleport; the Pixie-style related-item ranker) from the max-degree user of the q128 co-occurrence graph, in INT64 FIXED POINT: mass starts as 1e12 at the seed, each of {_PPR_ITERS} unrolled iterations moves floor(85%*m/(100*deg)) along every edge (integer division — exact in both engines) and re-injects the constant 15% restart at the seed — every intermediate an exact integer (the a0013 int64-exact device applied to RWR), so the hash pins the mass vector itself; top-{_PPR_TOP} by mass, per-iteration cost is one edge equi-join + one node-keyed sum",
 )
 def a0037_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e0 = _cooc_edges(spark, sf_dir)
+    e0 = _cooc_edges(_user_buckets(spark, sf_dir)).localCheckpoint(eager=False)
     d = e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).localCheckpoint(
         eager=False
     )

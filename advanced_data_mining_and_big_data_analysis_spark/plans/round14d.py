@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources import load_table
+from .graph import _HUB_CAP
 from .registry import query
 
 # Shared token macro (identical to operators.text.tokens on the Spark
@@ -1009,7 +1010,6 @@ def a0045_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MSF_ROUNDS = 12
 _MSF_JUMPS = 3
-_MSF_CAP = 20  # the q128/a0008 hub cap
 _MSF_TOP = 20
 
 
@@ -1063,7 +1063,7 @@ def _msf_rounds_sql() -> str:
     WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
                 FROM events),
     bs AS (SELECT event_type, b, COUNT(*) AS cnt FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE cnt <= {_MSF_CAP}),
+    kept AS (SELECT event_type, b FROM bs WHERE cnt <= {_HUB_CAP}),
     ek AS (SELECT ev.user_id, ev.event_type, ev.b
            FROM ev JOIN kept USING (event_type, b)),
     e0 AS MATERIALIZED (
@@ -1121,7 +1121,7 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
     ).distinct()
     bs = ev.groupBy("event_type", "b").agg(F.count("*").alias("cnt"))
-    kept = bs.filter(F.col("cnt") <= _MSF_CAP).select("event_type", "b")
+    kept = bs.filter(F.col("cnt") <= _HUB_CAP).select("event_type", "b")
     ek = ev.join(kept, ["event_type", "b"])
     e0 = (
         ek.alias("a")

@@ -89,15 +89,8 @@ def get_spark(
         #     interpreted. 1g keeps the JIT on (A/B both fixes together:
         #     pass 53 s, a0089 2.9 s, a0013 2.8 s — fresh-session class).
         # Same knobs apply verbatim on a production driver that submits
-        # thousands of queries per session. The interval is env-overridable
-        # (SPARK_GRAFT_PERIODIC_GC) so cold-profile A/Bs can restore the
-        # 30min Spark default without code edits — r15 A/B (3 cold bench
-        # runs per arm, 32 cores): the 45s knob is neutral-to-positive on
-        # the driver's cold profile too (see OPTIMIZATION_r15.md).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "45s"),
-        )
+        # thousands of queries per session; extra_conf overrides either.
+        .config("spark.cleaner.periodicGC.interval", "45s")
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
     )
     for k, v in (extra_conf or {}).items():

@@ -582,6 +582,21 @@ def write_cdc_snapshot(
     return writer.start()
 
 
+def _persisted(sink):
+    """Wrap a foreachBatch sink that runs several actions over its
+    micro-batch: persisting the batch first makes the source read once
+    per micro-batch instead of once per action."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            sink(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return run
+
+
 def write_dedup_ingest(
     new_docs: DataFrame,
     corpus_dir: str,
@@ -639,7 +654,7 @@ def write_dedup_ingest(
             survivors = survivors.join(flagged, id_col, "left_anti")
         survivors.write.mode("append").parquet(corpus_dir)
 
-    writer = new_docs.writeStream.foreachBatch(sink).option(
+    writer = new_docs.writeStream.foreachBatch(_persisted(sink)).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:
@@ -904,7 +919,7 @@ def write_semdedup_ingest(
         )
         survivors.write.mode("append").partitionBy("cell").parquet(corpus_dir)
 
-    writer = new_vecs.writeStream.foreachBatch(sink).option(
+    writer = new_vecs.writeStream.foreachBatch(_persisted(sink)).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:

@@ -91,13 +91,15 @@ def test_a0028_multisource_bfs_matches_single_source(spark, sf_dir):
         _CC_SEEDS,
         a0028_closeness_centrality,
     )
-    from advanced_data_mining_and_big_data_analysis_spark.plans.round13b import (
-        a0022_bfs_layers,  # noqa: F401  (same graph family; import proves co-location)
+    from advanced_data_mining_and_big_data_analysis_spark.plans.graph import (
+        _HUB_CAP,
+        _cooc_edges,
+        _user_buckets,
     )
 
     got = {r["seed"]: r for r in a0028_closeness_centrality(spark, sf_dir).collect()}
 
-    # rebuild the same capped graph via the a0022 construction
+    # rebuild the capped graph independently, in plain Python
     from advanced_data_mining_and_big_data_analysis_spark.sources import load_table as lt
 
     ev = lt(spark, sf_dir, "events").select(
@@ -107,12 +109,15 @@ def test_a0028_multisource_bfs_matches_single_source(spark, sf_dir):
     adj: dict[int, set[int]] = {}
     for row in grp:
         us = sorted(row["us"])
-        if len(us) < 2 or len(us) > 20:
+        if len(us) < 2 or len(us) > _HUB_CAP:
             continue
         for i, u in enumerate(us):
             for v in us[i + 1 :]:
                 adj.setdefault(u, set()).add(v)
                 adj.setdefault(v, set()).add(u)
+    # the shared builder every graph query runs on yields the same edges
+    shared = [(r["u"], r["v"]) for r in _cooc_edges(_user_buckets(spark, sf_dir)).collect()]
+    assert sorted(shared) == sorted((u, v) for u, vs in adj.items() for v in vs if u < v)
     seeds = sorted(adj)[:_CC_SEEDS]
     for s in seeds:
         dist = {s: 0}

@@ -401,6 +401,9 @@ def test_streaming_dedup_ingest_grows_curated_corpus(spark):
 
     got = sorted(r["doc_id"] for r in spark.read.parquet(f"{tmp}/corpus").collect())
     assert got == [1, 3, 11]
+    # the sink reads each micro-batch from its source once, whatever the
+    # number of actions it runs over the batch
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 5
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -754,6 +757,7 @@ def test_streaming_semdedup_ingest_matches_numpy_replica(spark):
         cos_threshold=thr, target_cell=target, cap=1000,
     )
     q.awaitTermination(180)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows)
 
     got = sorted(r["vec_id"] for r in spark.read.parquet(f"{tmp}/corpus").collect())
     assert got == expected, (got, expected)
