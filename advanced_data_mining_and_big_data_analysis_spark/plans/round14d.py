@@ -1107,15 +1107,7 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncation (two alternating scratch dirs, ~0.3 s/round here; on a
     # cluster this is the standard reliable-checkpoint-to-HDFS). The
     # linear msf chain keeps plain localCheckpoints.
-    import shutil
     import tempfile
-
-    scratch = tempfile.mkdtemp(prefix="boruvka_labels_")
-
-    def truncate(df: DataFrame, slot: int) -> DataFrame:
-        path = f"{scratch}/pp{slot % 2}"
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.date_trunc("hour", "ts").alias("b")
@@ -1146,63 +1138,72 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replica scales (the a0008 empty-graph regime) — the loop then
     # exits on round 1 and the output is the well-typed empty frame.
     msf = spark.createDataFrame([], "u long, v long, n long")
-    for rnd in range(_MSF_ROUNDS):
-        lu = labels.select(F.col("node").alias("u"), F.col("lab").alias("cu"))
-        lv = labels.select(F.col("node").alias("v"), F.col("lab").alias("cv"))
-        x = (
-            e0.join(lu, "u")
-            .join(lv, "v")
-            .filter(F.col("cu") != F.col("cv"))
-            .localCheckpoint()
-        )
-        # EARLY EXIT on convergence: once no crossing edges remain,
-        # every further round is a semantic no-op (empty selection,
-        # stable labels) — the oracle unrolls all rounds and computes
-        # the identical fixpoint, so results match by construction;
-        # small graphs stop at ~log2(n) rounds instead of paying 12.
-        if x.isEmpty():
-            break
-        both = x.select(F.col("cu").alias("comp"), "u", "v", "n").union(
-            x.select(F.col("cv").alias("comp"), "u", "v", "n")
-        )
-        sel = (
-            both.groupBy("comp")
-            .agg(
-                F.min_by(
-                    F.struct("u", "v", "n"), F.struct(-F.col("n"), F.col("u"), F.col("v"))
-                ).alias("e")
+    with tempfile.TemporaryDirectory(prefix="boruvka_labels_") as scratch:
+
+        def truncate(df: DataFrame, slot: int) -> DataFrame:
+            path = f"{scratch}/pp{slot % 2}"
+            df.coalesce(1).write.mode("overwrite").parquet(path)
+            return spark.read.parquet(path)
+
+        for rnd in range(_MSF_ROUNDS):
+            lu = labels.select(F.col("node").alias("u"), F.col("lab").alias("cu"))
+            lv = labels.select(F.col("node").alias("v"), F.col("lab").alias("cv"))
+            x = (
+                e0.join(lu, "u")
+                .join(lv, "v")
+                .filter(F.col("cu") != F.col("cv"))
+                .localCheckpoint()
             )
-            .select("e.u", "e.v", "e.n")
-            .distinct()
-        )
-        msf = msf.union(sel).distinct()
-        # EAGER: 12 unrolled rounds of lazy lineage would hand Catalyst
-        # one ~60-join plan; materializing the (small) forest and label
-        # frames keeps every round's plan shallow (the a0008 discipline).
-        msf = msf.localCheckpoint()
-        # hook the ROOTS (GraphX union-find style): per forest edge,
-        # the larger endpoint-CLASS representative receives the smaller
-        # one — whole classes merge in one step; member pointers catch
-        # up via the doubling jumps (hooking members instead diffuses
-        # the min label one tree hop per round and stalls).
-        lru = labels.select(F.col("node").alias("u"), F.col("lab").alias("ru"))
-        lrv = labels.select(F.col("node").alias("v"), F.col("lab").alias("rv"))
-        g = (
-            msf.join(lru, "u")
-            .join(lrv, "v")
-            .filter(F.col("ru") != F.col("rv"))
-            .groupBy(F.greatest("ru", "rv").alias("gnode"))
-            .agg(F.min(F.least("ru", "rv")).alias("cand"))
-        )
-        labels = (
-            labels.join(g, labels["node"] == g["gnode"], "left")
-            .select("node", F.least("lab", F.coalesce("cand", "lab")).alias("lab"))
-        )
-        # pointer-doubling jumps: lab <- lab's lab
-        for _j in range(_MSF_JUMPS):
-            l2 = labels.select(F.col("node").alias("lab"), F.col("lab").alias("lab2"))
-            labels = labels.join(l2, "lab").select("node", F.col("lab2").alias("lab"))
-        labels = truncate(labels, rnd)
+            # EARLY EXIT on convergence: once no crossing edges remain,
+            # every further round is a semantic no-op (empty selection,
+            # stable labels) — the oracle unrolls all rounds and computes
+            # the identical fixpoint, so results match by construction;
+            # small graphs stop at ~log2(n) rounds instead of paying 12.
+            if x.isEmpty():
+                break
+            both = x.select(F.col("cu").alias("comp"), "u", "v", "n").union(
+                x.select(F.col("cv").alias("comp"), "u", "v", "n")
+            )
+            sel = (
+                both.groupBy("comp")
+                .agg(
+                    F.min_by(
+                        F.struct("u", "v", "n"), F.struct(-F.col("n"), F.col("u"), F.col("v"))
+                    ).alias("e")
+                )
+                .select("e.u", "e.v", "e.n")
+                .distinct()
+            )
+            msf = msf.union(sel).distinct()
+            # EAGER: 12 unrolled rounds of lazy lineage would hand Catalyst
+            # one ~60-join plan; materializing the (small) forest and label
+            # frames keeps every round's plan shallow (the a0008 discipline).
+            msf = msf.localCheckpoint()
+            # hook the ROOTS (GraphX union-find style): per forest edge,
+            # the larger endpoint-CLASS representative receives the smaller
+            # one — whole classes merge in one step; member pointers catch
+            # up via the doubling jumps (hooking members instead diffuses
+            # the min label one tree hop per round and stalls).
+            lru = labels.select(F.col("node").alias("u"), F.col("lab").alias("ru"))
+            lrv = labels.select(F.col("node").alias("v"), F.col("lab").alias("rv"))
+            g = (
+                msf.join(lru, "u")
+                .join(lrv, "v")
+                .filter(F.col("ru") != F.col("rv"))
+                .groupBy(F.greatest("ru", "rv").alias("gnode"))
+                .agg(F.min(F.least("ru", "rv")).alias("cand"))
+            )
+            labels = (
+                labels.join(g, labels["node"] == g["gnode"], "left")
+                .select("node", F.least("lab", F.coalesce("cand", "lab")).alias("lab"))
+            )
+            # pointer-doubling jumps: lab <- lab's lab
+            for _j in range(_MSF_JUMPS):
+                l2 = labels.select(F.col("node").alias("lab"), F.col("lab").alias("lab2"))
+                labels = labels.join(l2, "lab").select("node", F.col("lab2").alias("lab"))
+            labels = truncate(labels, rnd)
+        # the returned frame must not read the scratch dir removed on exit
+        labels = labels.localCheckpoint()
     lu = labels.select(F.col("node").alias("u"), F.col("lab").alias("cu"))
     lv = labels.select(F.col("node").alias("v"), F.col("lab").alias("cv"))
     crossing = (

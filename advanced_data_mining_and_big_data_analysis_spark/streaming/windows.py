@@ -175,81 +175,6 @@ def stateful_running_totals(events: DataFrame, key: str = "user_id") -> DataFram
     )
 
 
-def stateful_running_totals_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """The transformWithStateInPandas twin of stateful_running_totals —
-    Spark 4's arbitrary-state API (StatefulProcessor + typed state
-    handles + timers), the successor to applyInPandasWithState: state
-    is named/typed (ValueState here; ListState/MapState available),
-    TTL and timers are first-class, and the RocksDB state store
-    provider is required.
-
-    ENVIRONMENT GATE: the TWS state-server protocol speaks protobuf
-    from the PYTHON side (pyspark.sql.streaming.proto), so this needs
-    the `protobuf` package on driver and workers — not installed in
-    the test container (observed: the TWS driver worker exits -2 with
-    "cannot import name 'descriptor' from 'google.protobuf'"). The
-    import-try below raises a clear error locally; on a real cluster
-    with protobuf present the operator runs as written, and the
-    stream==batch test (tests/test_streaming.py) un-skips. The
-    applyInPandasWithState twin is the dependency-free path.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark.sql.streaming.proto state-server protocol); install "
-            "protobuf on driver and executors, or use "
-            "stateful_running_totals (applyInPandasWithState) instead"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [T.StructField("n", T.LongType()), T.StructField("total", T.DoubleType())]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            n, total = self._st.get() if self._st.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._st.update((n, total))
-            yield pd.DataFrame(
-                {key: [key_tuple[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def stateful_session_expiry(
     events: DataFrame,
     key: str = "user_id",

@@ -35,9 +35,9 @@ def test_entry_smoke(spark):
 
 
 def test_tool_query_lists_resolve():
-    """bench.py HEADLINE, floor_decomposition WEAK, and explain_all
-    HEADLINE must all reference registered queries — a rename that
-    orphans a tool list would silently shrink the evidence surface."""
+    """bench.py HEADLINE, every named set of tools/profile_queries.py, and
+    explain_all HEADLINE must all reference registered queries — a rename
+    that orphans a tool list would silently shrink the evidence surface."""
     import importlib.util
     import os
 
@@ -46,19 +46,22 @@ def test_tool_query_lists_resolve():
     qs = all_queries()
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-    def names_from(path, attr):
+    def load(path):
         spec = importlib.util.spec_from_file_location("m", path)
         m = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(m)
-        return getattr(m, attr)
+        return m
 
-    for path, attr in [
-        (os.path.join(root, "bench.py"), "HEADLINE"),
-        (os.path.join(root, "tools", "floor_decomposition.py"), "WEAK"),
-        (os.path.join(root, "tools", "explain_all.py"), "HEADLINE"),
-    ]:
-        missing = [n for n in names_from(path, attr) if n not in qs]
-        assert not missing, f"{path} references unregistered queries: {missing}"
+    lists = {
+        "bench.py HEADLINE": load(os.path.join(root, "bench.py")).HEADLINE,
+        "explain_all.py HEADLINE": load(os.path.join(root, "tools", "explain_all.py")).HEADLINE,
+    }
+    sets = load(os.path.join(root, "tools", "profile_queries.py")).SETS
+    assert {"headline", "weak", "sf10", "sf1_mining"} <= set(sets)
+    lists.update({f"profile_queries.py SETS[{k}]": v for k, v in sets.items()})
+    for where, names in lists.items():
+        missing = [n for n in names if n not in qs]
+        assert not missing, f"{where} references unregistered queries: {missing}"
 
 
 def test_driver_window_is_exactly_the_renamed_block():

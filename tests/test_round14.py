@@ -7,7 +7,10 @@ a future edit could break while a small-SF hash stays green.
 
 from __future__ import annotations
 
+import glob
 import math
+import os
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -251,6 +254,16 @@ def test_a0043_spanning_forest_invariants(spark, sf_dir):
         assert r["residual_crossing"] == 0
         assert r["n_msf_edges"] == r["n_nodes"] - 1
         assert r["total_w"] >= r["n_msf_edges"]  # weights are counts >= 1
+
+
+def test_a0043_removes_its_label_scratch_dir(spark, sf_dir):
+    """The ping-pong label truncation writes under a temp dir of its own;
+    the query must remove it and still collect from the returned frame."""
+    pattern = os.path.join(tempfile.gettempdir(), "boruvka_labels_*")
+    before = set(glob.glob(pattern))
+    rows = QUERIES["a0043_boruvka_msf"].fn(spark, sf_dir).collect()
+    assert rows
+    assert set(glob.glob(pattern)) <= before
 
 
 def test_a0044_isotonic_monotone_and_mean_preserving(spark, sf_dir):

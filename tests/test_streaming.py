@@ -573,56 +573,6 @@ def test_streaming_ohlc_equals_batch_q146(spark, event_files, sf_dir):
     assert got == exp
 
 
-def test_stateful_running_totals_tws_gate_or_parity(spark, event_files):
-    """transformWithStateInPandas twin: runs stream==batch parity when
-    protobuf is available; in this container (no protobuf, installs
-    forbidden) it must fail-closed with the documented ImportError —
-    never reach the JVM and crash the TWS driver worker opaquely."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    src = ST.stream_from_directory(
-        spark, f"{event_files}/events", SCHEMAS["events"], max_files_per_trigger=1
-    ).filter(F.col("user_id") <= 5)
-
-    if not have_protobuf:
-        with pytest.raises(ImportError, match="protobuf"):
-            ST.stateful_running_totals_tws(src, key="user_id")
-        return
-
-    totals = ST.stateful_running_totals_tws(src, key="user_id")
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("t_tws")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["user_id"]: (r["mx_n"], r["mx_total"])
-        for r in spark.table("t_tws")
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("mx_n"), F.max("total_value").alias("mx_total"))
-        .collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], r["total"])
-        for r in spark.read.parquet(f"{event_files}/events")
-        .filter(F.col("user_id") <= 5)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(got) == set(batch)
-    for k in batch:
-        assert got[k][0] == batch[k][0]
-        assert abs(got[k][1] - batch[k][1]) < 1e-6
-
-
 def test_streaming_drift_histogram_equals_batch(spark, event_files, sf_dir):
     """The drift monitor's histogram state built over a real stream
     (availableNow) must equal the batch histogram on the same files,
