@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import text as X
+from .fixpoint import fixpoint
 
 
 def lsh_collision_probability(jaccard: float, bands: int, rows: int) -> float:
@@ -506,8 +507,8 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     stop at fixpoint. Rounds needed = component diameter — LSH dup
     clusters are near-cliques (most pairs link directly), so 2-4 rounds
     in practice; each round is two shuffles on (vertex, label) pairs,
-    fully distributed. The driver-side loop only checks a convergence
-    count per round (an aggregate scalar, not data).
+    fully distributed. ``fixpoint`` stops at the first round whose
+    changed-label count (an aggregate scalar, not data) is zero.
 
     Each round's labels are localCheckpoint-ed (not just cached): the
     returned frame's lineage would otherwise chain every round's joins
@@ -537,8 +538,8 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    changed = 0
-    for _ in range(max_iters):
+
+    def propagate(labels: DataFrame) -> tuple[DataFrame, int]:
         neighbor_min = (
             edges.join(labels, edges.b == labels.id)
             .groupBy("a")
@@ -561,19 +562,12 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             )
             .localCheckpoint(eager=False)
         )
-        changed = new_full.filter(F.col("chg")).count()
-        labels = new_full.select("id", "label")
-        if changed == 0:
-            break
-    if changed != 0:
-        # Returning partial labels would silently drop docs to a
-        # non-canonical representative downstream (dedup_survivors);
-        # a component with diameter > max_iters must be surfaced.
-        raise RuntimeError(
-            f"near_dup_clusters did not converge in {max_iters} rounds "
-            f"({changed} labels still changing); raise max_iters — rounds "
-            "needed equals the largest component's diameter"
-        )
+        return new_full.select("id", "label"), new_full.filter(F.col("chg")).count()
+
+    # Returning partial labels would silently drop docs to a
+    # non-canonical representative downstream (dedup_survivors), so a
+    # component whose min label is max_iters or more hops away raises.
+    labels = fixpoint(labels, propagate, max_iters, "near_dup_clusters")
     return labels.select(F.col("id"), F.col("label").alias("cluster"))
 
 

@@ -288,9 +288,10 @@ def q128_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.size("us") > _HUB_CAP).cast("long")).alias("n_buckets_capped"),
     )
     # n_edges = sum(deg)/2 folds the edge count into the wedge pass —
-    # one branch over the edge frame instead of two.
+    # one branch over the edge frame instead of two; an edgeless graph
+    # has no degree rows, so the sum is NULL where the oracle counts 0.
     wedge = _degrees(ed).agg(
-        (F.sum("c") / 2).cast("long").alias("n_edges"),
+        F.coalesce(F.sum("c") / 2, F.lit(0)).cast("long").alias("n_edges"),
         F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("wedges"),
     )
     return (

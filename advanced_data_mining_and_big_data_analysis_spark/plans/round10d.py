@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.fixpoint import fixpoint
 from ..sources import load_table
 from .registry import query
 
@@ -712,7 +713,7 @@ _GRID_MINPTS = 3
     FROM (SELECT * FROM clusters UNION ALL SELECT * FROM noise)
     ORDER BY cluster_cell
     """,
-    description=f"grid-density clustering (DENCLUE mode seeking on a CLIQUE {_GRID}×{_GRID} grid) over the first two embedding coordinates: equal-width cells from a broadcast min/max frame, dense = count ≥ {_GRID_MINPTS}, each dense cell points at its densest 3×3 neighbor (tie → lowest id), attractors resolved by 8 rounds of pointer-DOUBLING self-joins (= next^256, provably past any monotone climb on ≤256 cells); per-cluster cell/point/peak counts plus a noise row — after the single point-level groupBy every operation runs on the bounded cell frame",
+    description=f"grid-density clustering (DENCLUE mode seeking on a CLIQUE {_GRID}×{_GRID} grid) over the first two embedding coordinates: equal-width cells from a broadcast min/max frame, dense = count ≥ {_GRID_MINPTS}, each dense cell points at its densest 3×3 neighbor (tie → lowest id), attractors resolved by pointer-DOUBLING self-joins until no pointer moves (at most 8 doublings = next^256, provably past any monotone climb on ≤256 cells, plus the round that confirms it); per-cluster cell/point/peak counts plus a noise row — after the single point-level groupBy every operation runs on the bounded cell frame",
 )
 def a0100_grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -754,14 +755,23 @@ def a0100_grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c", (-F.col("n")).alias("n"))
         .localCheckpoint(eager=False)
     )
-    f = nxt
-    for _ in range(8):  # next^(2^8): past any monotone climb on <=256 cells
+
+    def double(f: DataFrame) -> tuple[DataFrame, int]:
         l, r = f.alias("l"), f.alias("r")
-        f = (
+        f2 = (
             l.join(r, F.col("l.n") == F.col("r.c"))
-            .select(F.col("l.c").alias("c"), F.col("r.n").alias("n"))
+            .select(
+                F.col("l.c").alias("c"),
+                F.col("r.n").alias("n"),
+                (F.col("r.n") != F.col("l.n")).alias("moved"),
+            )
             .localCheckpoint(eager=False)
         )
+        return f2.select("c", "n"), f2.filter(F.col("moved")).count()
+
+    # next^(2^8) is past any monotone climb on <=256 cells, so the 9th
+    # doubling at the latest moves no pointer
+    f = fixpoint(nxt, double, 9, "grid attractor doubling")
     labeled = dense.join(f, dense["cell_id"] == f["c"]).select(
         F.col("n").alias("cluster"), "cnt"
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as SIM
+from ..operators.fixpoint import fixpoint
 from ..sources import load_table
 from .registry import query
 from .similarity import _DIMS, _PAIR_COS, _SD_PLANT, _SD_THR
@@ -238,9 +239,9 @@ def _ak_salted_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # takes the neighbor minimum, then COMPOSES the label map with itself
 # (label := label-of-label), so convergence needs O(log diameter)
 # rounds instead of O(diameter); _DLH_ROUNDS = 8 covers diameter 2^8 on
-# a graph whose true diameter is bounded by the grid extent, and a
-# final fixpoint assertion raises rather than return partial labels
-# (the near_dup_clusters discipline, dedup.py:470).
+# a graph whose true diameter is bounded by the grid extent. ``fixpoint``
+# stops at the first round that lowers no label (that round is the
+# verification) and raises rather than return partial labels.
 # ---------------------------------------------------------------------------
 
 _DLH_H = 0.05  # grid cell side in feature units
@@ -300,7 +301,7 @@ def _dlh_feats_sql() -> str:
     FROM lv LEFT JOIN lvl l ON l.tau = lv.tau CROSS JOIN tot t
     ORDER BY lv.tau
     """,
-    description=f"HDBSCAN-style density-level hierarchy (condensed-tree profile): customers embed at (ln spend, ln orders) on an h={_DLH_H} grid, and each density level tau in {_DLH_TAUS} reads the DBSCAN* flat clustering — dense cells (>= tau points) merged through 8-way adjacency — reporting n_dense_cells / n_clusters / largest cluster / noise per level; the only data-sized work is ONE groupBy(cell) count (the cell graph is bounded by grid extent, not N), and the CC is hook+jump min-label propagation converging in O(log diameter) rounds with a fixpoint assertion",
+    description=f"HDBSCAN-style density-level hierarchy (condensed-tree profile): customers embed at (ln spend, ln orders) on an h={_DLH_H} grid, and each density level tau in {_DLH_TAUS} reads the DBSCAN* flat clustering — dense cells (>= tau points) merged through 8-way adjacency — reporting n_dense_cells / n_clusters / largest cluster / noise per level; the only data-sized work is ONE groupBy(cell) count (the cell graph is bounded by grid extent, not N), and the CC is hook+jump min-label propagation that stops at the first round lowering no label (O(log diameter) rounds, at most {_DLH_ROUNDS} + 1; raises past that)",
 )
 def a0002_density_level_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
@@ -354,40 +355,28 @@ def a0002_density_level_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame
         edges.select("tau", F.col("cb").alias("ca"), F.col("ca").alias("cb"))
     ).localCheckpoint(eager=False)
     labels = dc.select("tau", F.col("cid").alias("id"), F.col("cid").alias("lab"))
-    for r in range(_DLH_ROUNDS):
+
+    def hook_jump(labels: DataFrame) -> tuple[DataFrame, int]:
         nmin = (
             both.join(labels, (both.tau == labels.tau) & (both.cb == labels.id))
             .groupBy(both.tau.alias("tau"), F.col("ca").alias("id"))
             .agg(F.min("lab").alias("nlab"))
         )
-        hooked = (
-            labels.join(nmin, ["tau", "id"], "left")
-            .select("tau", "id", F.least("lab", "nlab").alias("lab"))
+        hooked = labels.join(nmin, ["tau", "id"], "left").select(
+            "tau", "id", F.col("lab").alias("old"), F.least("lab", "nlab").alias("lab")
         )
         # jump: label := label-of-label (labels are themselves cell ids)
         jm = hooked.select(
             F.col("tau").alias("jtau"), F.col("id").alias("jid"), F.col("lab").alias("jlab")
         )
-        labels = (
-            hooked.join(
-                jm, (hooked.tau == jm.jtau) & (hooked.lab == jm.jid), "left"
-            )
-            .select("tau", "id", F.least("lab", "jlab").alias("lab"))
+        new = (
+            hooked.join(jm, (hooked.tau == jm.jtau) & (hooked.lab == jm.jid), "left")
+            .select("tau", "id", F.least("lab", "jlab").alias("lab"), "old")
             .localCheckpoint(eager=False)
         )
-    # fixpoint assertion: one more hook round must change nothing
-    verify = (
-        both.join(labels, (both.tau == labels.tau) & (both.cb == labels.id))
-        .groupBy(both.tau.alias("tau"), F.col("ca").alias("id"))
-        .agg(F.min("lab").alias("nlab"))
-        .join(labels, ["tau", "id"])
-        .filter(F.col("nlab") < F.col("lab"))
-        .count()
-    )
-    if verify != 0:
-        raise RuntimeError(
-            f"density-level CC did not converge in {_DLH_ROUNDS} hook+jump rounds"
-        )
+        return new.select("tau", "id", "lab"), new.filter(F.col("lab") < F.col("old")).count()
+
+    labels = fixpoint(labels, hook_jump, _DLH_ROUNDS + 1, "density-level CC")
     sizes = (
         labels.join(
             dc.select("tau", F.col("cid").alias("id"), "n"), ["tau", "id"]

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..operators.fixpoint import fixpoint
 from ..sources import load_table
 from .graph import _HUB_CAP, _cooc_edges, _degrees, _user_buckets
 from .registry import query
@@ -809,12 +810,12 @@ def a0009_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a0008 — k-core decomposition by iterative peeling (Seidman 1983; the
 # degeneracy layering every graph-ML sampler uses) on the q128 user
 # co-occurrence graph (same (event_type, hour) buckets, same <= 20-user
-# hub cap). Peeling removes nodes with degree < k and
-# repeats on the induced subgraph; _KC_ROUNDS = 8 unrolled rounds with
-# a FIXPOINT ASSERTION after (the a0002 pattern: raise rather than
-# return a partial core). Each round is one degree aggregate + two
-# node-keyed semi-joins on a frame that only SHRINKS; the oracle
-# replays the identical 8 rounds as unrolled CTEs.
+# hub cap). Peeling removes nodes with degree < k and repeats on the
+# induced subgraph until a round peels nothing, within _KC_ROUNDS + 1
+# rounds (``fixpoint`` raises rather than return a partial core). Each
+# round is one degree aggregate + two node-keyed semi-joins on a frame
+# that only SHRINKS; the oracle replays _KC_ROUNDS = 8 rounds as
+# unrolled CTEs, and every round past the fixpoint is a no-op.
 # Scale rule (100 TB): rounds grow with peel depth, not N — each round
 # is edge-frame-sized and the frame is monotonically shrinking; the
 # hub cap bounds the starting edge count per bucket at cap^2.
@@ -863,53 +864,33 @@ def _kcore_rounds_sql() -> str:
            CAST((SELECT COALESCE(MIN(c), {_KC_K}) FROM fin) >= {_KC_K} AS BIGINT)
              AS converged
     """,
-    description=f"k-core decomposition (k={_KC_K}) by iterative peeling on the q128 user co-occurrence graph (same hub cap {_HUB_CAP}): {_KC_ROUNDS} unrolled rounds of degree-filter + induced-subgraph semi-joins on a monotonically shrinking edge frame, fixpoint ASSERTED after the last round (raise, never a partial core) — core size, edges, max degree; the degeneracy layering graph-ML samplers consume",
+    description=f"k-core decomposition (k={_KC_K}) by iterative peeling on the q128 user co-occurrence graph (same hub cap {_HUB_CAP}): degree-filter + induced-subgraph semi-join rounds on a monotonically shrinking edge frame until a round peels no node (at most {_KC_ROUNDS} + 1 rounds; raise, never a partial core) — core size, edges, max degree; the degeneracy layering graph-ML samplers consume",
 )
 def a0008_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _cooc_edges(_user_buckets(spark, sf_dir)).localCheckpoint(eager=False)
-    for _ in range(_KC_ROUNDS):
-        keep = _degrees(edges).filter(F.col("c") >= _KC_K).select("node")
-        edges = (
+
+    def peel(state: tuple) -> tuple[tuple, int]:
+        edges, _ = state
+        deg = _degrees(edges).withColumn("chg", F.col("c") < _KC_K).localCheckpoint(eager=False)
+        keep = deg.filter(~F.col("chg")).select("node")
+        peeled = (
             edges.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
             .localCheckpoint(eager=False)  # shrinking frame; caps plan depth
         )
-    # ONE collect (r14): the node-stats aggregate and the edge count ride
-    # the same action via a crossJoin of the two 1-row aggregates — the
-    # former separate edges.count() job re-materialized nothing (the
-    # checkpointed edge frame feeds both), it just paid one more job floor
-    fin = _degrees(edges)
-    stats = (
-        fin.agg(
-            F.count("*").cast("long").alias("n_core_nodes"),
-            F.coalesce(F.max("c"), F.lit(0)).cast("long").alias("max_core_degree"),
-            F.coalesce(F.min("c"), F.lit(_KC_K)).alias("min_deg"),
-        )
-        .crossJoin(edges.agg(F.count("*").alias("n_edges")))
-        .collect()[0]
-    )
-    n_edges = stats["n_edges"]
-    # fixpoint assertion (the a0002 discipline): after _KC_ROUNDS peels
-    # every surviving node must already satisfy the core condition —
-    # raise rather than return a partial core
-    converged = int(stats["min_deg"]) >= _KC_K
-    if not converged:
-        raise RuntimeError(
-            f"k-core peeling did not converge in {_KC_ROUNDS} rounds "
-            f"(min surviving degree {stats['min_deg']} < {_KC_K})"
-        )
-    return spark.createDataFrame(
-        [
-            (
-                _KC_K,
-                int(stats["n_core_nodes"]),
-                int(n_edges),
-                int(stats["max_core_degree"]),
-                1,
-            )
-        ],
-        "k long, n_core_nodes long, n_core_edges long, max_core_degree long, converged long",
+        return (peeled, deg), deg.filter(F.col("chg")).count()
+
+    # the round that peels no node leaves every survivor at degree >= k,
+    # so its degree frame is the core's: nodes, max degree, and edges as
+    # sum(deg)/2 come from it in the output's own job
+    _, deg = fixpoint((edges, None), peel, _KC_ROUNDS + 1, "k-core peeling")
+    return deg.agg(
+        F.lit(_KC_K).cast("long").alias("k"),
+        F.count("*").cast("long").alias("n_core_nodes"),
+        F.coalesce(F.sum("c") / 2, F.lit(0)).cast("long").alias("n_core_edges"),
+        F.coalesce(F.max("c"), F.lit(0)).cast("long").alias("max_core_degree"),
+        F.lit(1).cast("long").alias("converged"),
     )
 
 

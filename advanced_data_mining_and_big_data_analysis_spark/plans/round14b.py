@@ -516,10 +516,12 @@ def a0027_modularity_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_comm").alias("n_communities"),
             (F.col("_m2") / 2).cast("long").alias("n_edges"),
             (F.col("_w") / 2).cast("long").alias("within_edges"),
-            F.round(F.col("_w") * 1.0 / F.col("_m2"), 6).alias("coverage"),
+            # try_divide: an edgeless graph (_m2 = 0) gives NULL ratios, as
+            # the oracle does, instead of DIVIDE_BY_ZERO
+            F.round(F.try_divide(F.col("_w") * 1.0, F.col("_m2")), 6).alias("coverage"),
             F.round(
-                F.col("_w") * 1.0 / F.col("_m2")
-                - F.col("s2") * 1.0 / (F.col("_m2").cast("double") * F.col("_m2")),
+                F.try_divide(F.col("_w") * 1.0, F.col("_m2"))
+                - F.try_divide(F.col("s2") * 1.0, F.col("_m2").cast("double") * F.col("_m2")),
                 6,
             ).alias("modularity"),
         )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.fixpoint import fixpoint
 from ..sources import load_table
 from .graph import _HUB_CAP, _cooc_edges, _triangles, _user_buckets
 from .registry import query
@@ -36,10 +37,9 @@ _G_EDGES_SQL = f"""ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour'
 # maximal subgraph in which every edge closes >= k-2 triangles. Each
 # round recomputes per-edge support with the canonical oriented
 # two-join (u < v < w — q128's triangle idiom, each triangle counted
-# once) and drops under-supported edges; edges in zero triangles fall
-# out for free (no support row). _KT_ROUNDS unrolled rounds with a
-# FIXPOINT ASSERTION after (the a0008 discipline: raise, never a
-# partial truss) — the oracle replays the identical rounds as
+# once) and drops under-supported edges, until a round drops none
+# within _KT_ROUNDS + 1 rounds (``fixpoint`` raises, never a partial
+# truss) — the oracle replays _KT_ROUNDS rounds plus a re-peel as
 # unrolled CTEs and pins the converged flag.
 # Scale rule (100 TB): each round is one triangle enumeration on a
 # monotonically SHRINKING edge frame (equi-joins on node ids, no
@@ -93,61 +93,43 @@ def _ktruss_rounds_sql() -> str:
            CAST((SELECT COUNT(*) FROM e{_KT_ROUNDS + 1})
                 = (SELECT COUNT(*) FROM fin) AS BIGINT) AS converged
     """,
-    description=f"k-truss decomposition (k={_KT_K}, Cohen 2008 — the edge-level analog of a0008's k-core) on the q128 user co-occurrence graph (hub cap {_HUB_CAP}): {_KT_ROUNDS} unrolled support-peeling rounds, each one canonical oriented triangle enumeration (u<v<w, every join an equi-join on node ids) + a per-edge support aggregate + a support filter on a monotonically shrinking edge frame, fixpoint ASSERTED after the last round (raise, never a partial truss) — truss size, nodes, max edge support; the cohesion core community miners extract above k-core",
+    description=f"k-truss decomposition (k={_KT_K}, Cohen 2008 — the edge-level analog of a0008's k-core) on the q128 user co-occurrence graph (hub cap {_HUB_CAP}): support-peeling rounds, each one canonical oriented triangle enumeration (u<v<w, every join an equi-join on node ids) + a per-edge support aggregate + a support filter on a monotonically shrinking edge frame, until a round drops no edge (at most {_KT_ROUNDS} + 1 rounds; raise, never a partial truss) — truss size, nodes, max edge support; the cohesion core community miners extract above k-core",
 )
 def a0036_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _cooc_edges(_user_buckets(spark, sf_dir)).localCheckpoint(eager=False)
 
-    def support(e: DataFrame) -> DataFrame:
-        tri = _triangles(e)
+    def peel(state: tuple) -> tuple[tuple, int]:
+        edges, _ = state
+        tri = _triangles(edges)
+        # every edge enters the support aggregate with weight 0, so an
+        # edge in no triangle keeps a row (support 0) and its drop is
+        # counted like any other under-supported edge
         per = (
-            tri.select("u", "v")
-            .unionAll(tri.select("u", F.col("w").alias("v")))
-            .unionAll(tri.select(F.col("v").alias("u"), F.col("w").alias("v")))
+            edges.select("u", "v", F.lit(0).alias("t"))
+            .unionAll(tri.select("u", "v", F.lit(1).alias("t")))
+            .unionAll(tri.select("u", F.col("w").alias("v"), F.lit(1).alias("t")))
+            .unionAll(tri.select(F.col("v").alias("u"), F.col("w").alias("v"), F.lit(1).alias("t")))
         )
-        return per.groupBy("u", "v").agg(F.count("*").alias("sup"))
+        sv = (
+            per.groupBy("u", "v")
+            .agg(F.sum("t").alias("sup"))
+            .withColumn("chg", F.col("sup") < _KT_K - 2)
+            .localCheckpoint(eager=False)  # shrinking frame; caps plan depth
+        )
+        kept = sv.filter(~F.col("chg")).select("u", "v")
+        return (kept, sv), sv.filter(F.col("chg")).count()
 
-    for _ in range(_KT_ROUNDS):
-        kept = support(edges).filter(F.col("sup") >= _KT_K - 2)
-        edges = kept.select("u", "v").localCheckpoint(eager=False)
-    # verification pass (the fixpoint assertion, a0008 discipline):
-    # support of the final frame WITHIN itself; an edge in zero
-    # triangles has no support row, so convergence is the count
-    # comparison "re-peeling drops nothing", never a MIN over rows
-    # ONE collect (r14): edge count, re-peel survivor count, max support
-    # and node count ride one action as crossJoined 1-row aggregates —
-    # the former FOUR sequential driver jobs re-materialized nothing (the
-    # checkpointed edge frame feeds every subtree), they just paid four
-    # job floors; the fixpoint assertion below is unchanged
-    sv = support(edges).localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    stats = (
-        edges.agg(F.count("*").alias("ne"))
-        .crossJoin(
-            sv.agg(
-                F.sum((F.col("sup") >= _KT_K - 2).cast("long")).alias("nr"),
-                F.coalesce(F.max("sup"), F.lit(0)).cast("long").alias("ms"),
-            )
-        )
-        .crossJoin(nodes.agg(F.count("*").alias("nn")))
-        .collect()[0]
-    )
-    n_edges = int(stats["ne"])
-    n_repeel = int(stats["nr"] if stats["nr"] is not None else 0)
-    if n_repeel != n_edges:
-        raise RuntimeError(
-            f"k-truss peeling did not converge in {_KT_ROUNDS} rounds "
-            f"({n_edges - n_repeel} edges still under-supported)"
-        )
-    max_sup = stats["ms"]
-    n_nodes = int(stats["nn"])
-    return spark.createDataFrame(
-        [(_KT_K, int(n_edges), int(n_nodes), int(max_sup), 1)],
-        "k long, n_truss_edges long, n_truss_nodes long, max_support long, converged long",
+    # the round that drops no edge is the truss: its support frame has
+    # one row per truss edge, and its max support is the truss's
+    _, sv = fixpoint((edges, None), peel, _KT_ROUNDS + 1, "k-truss peeling")
+    nodes = sv.select(F.col("u").alias("node")).unionAll(sv.select("v")).distinct()
+    return sv.agg(
+        F.lit(_KT_K).cast("long").alias("k"),
+        F.count("*").cast("long").alias("n_truss_edges"),
+        F.coalesce(F.max("sup"), F.lit(0)).cast("long").alias("max_support"),
+        F.lit(1).cast("long").alias("converged"),
+    ).crossJoin(nodes.agg(F.count("*").alias("n_truss_nodes"))).select(
+        "k", "n_truss_edges", "n_truss_nodes", "max_support", "converged"
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..operators.fixpoint import fixpoint
 from ..sources import load_table
 from .graph import _HUB_CAP
 from .registry import query
@@ -1107,6 +1108,7 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncation (two alternating scratch dirs, ~0.3 s/round here; on a
     # cluster this is the standard reliable-checkpoint-to-HDFS). The
     # linear msf chain keeps plain localCheckpoints.
+    import itertools
     import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1139,28 +1141,23 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exits on round 1 and the output is the well-typed empty frame.
     msf = spark.createDataFrame([], "u long, v long, n long")
     with tempfile.TemporaryDirectory(prefix="boruvka_labels_") as scratch:
+        slots = itertools.cycle((f"{scratch}/pp0", f"{scratch}/pp1"))
 
-        def truncate(df: DataFrame, slot: int) -> DataFrame:
-            path = f"{scratch}/pp{slot % 2}"
-            df.coalesce(1).write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-
-        for rnd in range(_MSF_ROUNDS):
+        def merge(state: tuple) -> tuple[tuple, int]:
+            labels, msf = state
             lu = labels.select(F.col("node").alias("u"), F.col("lab").alias("cu"))
             lv = labels.select(F.col("node").alias("v"), F.col("lab").alias("cv"))
             x = (
                 e0.join(lu, "u")
                 .join(lv, "v")
                 .filter(F.col("cu") != F.col("cv"))
-                .localCheckpoint()
+                .localCheckpoint(eager=False)
             )
-            # EARLY EXIT on convergence: once no crossing edges remain,
-            # every further round is a semantic no-op (empty selection,
-            # stable labels) — the oracle unrolls all rounds and computes
-            # the identical fixpoint, so results match by construction;
-            # small graphs stop at ~log2(n) rounds instead of paying 12.
-            if x.isEmpty():
-                break
+            # a round merges only while crossing edges remain; the count
+            # materializes x, and a zero ends the loop with labels stable
+            crossing = x.count()
+            if crossing == 0:
+                return state, 0
             both = x.select(F.col("cu").alias("comp"), "u", "v", "n").union(
                 x.select(F.col("cv").alias("comp"), "u", "v", "n")
             )
@@ -1174,11 +1171,10 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("e.u", "e.v", "e.n")
                 .distinct()
             )
-            msf = msf.union(sel).distinct()
             # EAGER: 12 unrolled rounds of lazy lineage would hand Catalyst
             # one ~60-join plan; materializing the (small) forest and label
             # frames keeps every round's plan shallow (the a0008 discipline).
-            msf = msf.localCheckpoint()
+            msf = msf.union(sel).distinct().localCheckpoint()
             # hook the ROOTS (GraphX union-find style): per forest edge,
             # the larger endpoint-CLASS representative receives the smaller
             # one — whole classes merge in one step; member pointers catch
@@ -1201,19 +1197,13 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
             for _j in range(_MSF_JUMPS):
                 l2 = labels.select(F.col("node").alias("lab"), F.col("lab").alias("lab2"))
                 labels = labels.join(l2, "lab").select("node", F.col("lab2").alias("lab"))
-            labels = truncate(labels, rnd)
+            path = next(slots)
+            labels.coalesce(1).write.mode("overwrite").parquet(path)
+            return (spark.read.parquet(path), msf), crossing
+
+        labels, msf = fixpoint((labels, msf), merge, _MSF_ROUNDS + 1, "Boruvka MSF")
         # the returned frame must not read the scratch dir removed on exit
         labels = labels.localCheckpoint()
-    lu = labels.select(F.col("node").alias("u"), F.col("lab").alias("cu"))
-    lv = labels.select(F.col("node").alias("v"), F.col("lab").alias("cv"))
-    crossing = (
-        e0.join(lu, "u").join(lv, "v").filter(F.col("cu") != F.col("cv")).count()
-    )
-    if crossing != 0:
-        raise ValueError(
-            f"Boruvka MSF did not converge in {_MSF_ROUNDS} rounds: "
-            f"{crossing} crossing edges remain (raise _MSF_ROUNDS/_MSF_JUMPS)"
-        )
     comp = labels.groupBy("lab").agg(F.count("*").alias("n_nodes"))
     fedge = (
         msf.join(labels.select(F.col("node").alias("u"), F.col("lab").alias("elab")), "u")
@@ -1227,7 +1217,7 @@ def a0043_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_nodes").cast("long").alias("n_nodes"),
             F.coalesce("n_edges", F.lit(0)).cast("long").alias("n_msf_edges"),
             F.coalesce("total_w", F.lit(0)).cast("long").alias("total_w"),
-            F.lit(crossing).cast("long").alias("residual_crossing"),
+            F.lit(0).cast("long").alias("residual_crossing"),
         )
         .orderBy(F.desc("n_nodes"), "component")
         .limit(_MSF_TOP)

@@ -124,3 +124,45 @@ def test_driver_window_is_exactly_the_renamed_block():
     assert all(n.startswith("a") for n in window)
     # every oracle key resolves to a query key
     assert set(o) <= set(q)
+
+
+# The user co-occurrence graph of a one-user events table has no edges:
+# every graph query must still run and match its oracle there, and the
+# fixpoint loops stop on their first round over the empty frames.
+EMPTY_GRAPH_QUERIES = [
+    "q128_triangle_count",
+    "a0008_kcore_peeling",
+    "a0012_label_propagation",
+    "a0022_bfs_layers",
+    "a0027_modularity_communities",
+    "a0028_closeness_centrality",
+    "a0036_ktruss_edges",
+    "a0037_personalized_pagerank",
+    "a0043_boruvka_msf",
+    "a0077_clustering_coeff",
+]
+
+
+@pytest.fixture(scope="module")
+def one_user_dir(tmp_path_factory, sf_dir):
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    first = events["user_id"][0]
+    d = tmp_path_factory.mktemp("one_user")
+    pq.write_table(events.filter(pc.equal(events["user_id"], first)), d / "events.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", EMPTY_GRAPH_QUERIES)
+def test_graph_query_matches_oracle_on_empty_graph(name, spark, one_user_dir):
+    import duckdb
+
+    qd = QUERIES[name]
+    sdf = qd.fn(spark, one_user_dir).toPandas()
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{one_user_dir}/events.parquet'")
+        odf = con.execute(qd.oracle).df()
+    problems = compare(sdf, odf)
+    assert not problems, f"{name}: {problems}"

@@ -35,6 +35,7 @@ def test_profile_one_query_records_layers(sf_dir, tmp_path):
         assert key in row["layers"], key
     assert set(row["catalyst"]) == {"analysis_s", "optimization_s", "planning_s"}
     assert row["build_s"] >= 0 and row["rows"] > 0
+    assert row["rounds"] == []  # q05 runs no fixpoint loop
     assert isinstance(row["duckdb_s"], float)
     assert doc["peak_rss_mb"] > 0
 

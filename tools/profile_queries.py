@@ -7,7 +7,8 @@ Each ``--sf`` directory is named ``sf<scale>``. One session runs each
 query of the set at each SF into the noop sink, so no rows reach the
 driver: a cold run, then warm fresh-plan runs, each in a job group of
 its own. The median warm run gives the row's output rows, build time,
-eager jobs, Catalyst phases and the ``tracing.job_layers`` split of its
+eager jobs, Catalyst phases, the ``(what, round, changed)`` records of
+its ``fixpoint`` loops and the ``tracing.job_layers`` split of its
 jobs. The event log is parsed after the session stops; a run on whose
 jobs it and ``StatusTracker`` disagree goes into ``errors`` and makes the
 tool exit 1. DuckDB times each oracle (``DuckTimer``), and several SFs
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import multiprocessing
 import os
 import shutil
@@ -37,6 +39,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
+from advanced_data_mining_and_big_data_analysis_spark.operators import fixpoint  # noqa: E402
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries  # noqa: E402
 from advanced_data_mining_and_big_data_analysis_spark.sources import TABLES  # noqa: E402
 from perfbench import run as perfbench  # noqa: E402
@@ -268,6 +271,22 @@ DUCK_REPEAT_S = 2.0
 JOB_EVENTS = tuple(f'{{"Event":"SparkListener{k}"' for k in ("JobStart", "JobEnd", "StageSubmitted", "TaskEnd"))
 
 
+class Rounds(logging.Handler):
+    """Keeps the fixpoint driver's ``(what, round, changed)`` records."""
+
+    def __init__(self):
+        super().__init__()
+        self.seen: list[list] = []
+
+    def emit(self, record: logging.LogRecord) -> None:
+        self.seen.append(list(record.args))
+
+
+ROUNDS = Rounds()
+fixpoint.log.addHandler(ROUNDS)
+fixpoint.log.setLevel(logging.INFO)
+
+
 def sf_label(sf_dir: str) -> str:
     return os.path.basename(os.path.normpath(sf_dir)).rsplit("sf", 1)[-1]
 
@@ -285,6 +304,7 @@ def run_once(spark, qd, sf_dir: str, group: str) -> dict:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     seen = Observation(group)
+    ROUNDS.seen = []
     sc.setJobGroup(group, group)
     try:
         t0 = time.perf_counter()
@@ -308,6 +328,7 @@ def run_once(spark, qd, sf_dir: str, group: str) -> dict:
         "rows": seen.get["rows"],
         "catalyst": {f"{k}_s": round(end - start, 3) for k, (start, end) in phases.items()},
         "status_jobs": sorted(tracker.getJobIdsForGroup(group)),
+        "rounds": ROUNDS.seen,
     }
 
 
@@ -317,7 +338,7 @@ def measure(spark, name: str, qd, sf_dir: str) -> tuple[dict, list[dict]]:
     runs = [run_once(spark, qd, sf_dir, f"{name}@{sf_label(sf_dir)}#{i}") for i in range(1 + reps)]
     med = sorted(runs[1:], key=lambda r: r["wall_s"])[reps // 2]
     row = {"cold_s": runs[0]["wall_s"], "warm_s": med["wall_s"], "warm_reps_s": [r["wall_s"] for r in runs[1:]]}
-    row.update((k, med[k]) for k in ("group", "rows", "build_s", "eager_jobs", "catalyst"))
+    row.update((k, med[k]) for k in ("group", "rows", "build_s", "eager_jobs", "catalyst", "rounds"))
     return row, runs
 
 
