@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.fixpoint import fixpoint
+from ..operators.grid import equal_width_cells, neighbor_cells
 from ..sources import load_table
 from .registry import query
 
@@ -719,39 +720,24 @@ def a0100_grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding")[0].alias("e0"), F.col("embedding")[1].alias("e1")
     )
-    rng = emb.agg(
-        F.min("e0").alias("mn0"), F.max("e0").alias("mx0"),
-        F.min("e1").alias("mn1"), F.max("e1").alias("mx1"),
-    )
-    g = float(_GRID)
     cells = (
-        emb.crossJoin(F.broadcast(rng))
-        .groupBy(
-            F.least(
-                F.lit(_GRID - 1),
-                F.floor((F.col("e0") - F.col("mn0")) / ((F.col("mx0") - F.col("mn0")) / g)),
-            ).cast("long").alias("gx"),
-            F.least(
-                F.lit(_GRID - 1),
-                F.floor((F.col("e1") - F.col("mn1")) / ((F.col("mx1") - F.col("mn1")) / g)),
-            ).cast("long").alias("gy"),
-        )
+        equal_width_cells(emb, _GRID)
+        .groupBy("cx", "cy")
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint(eager=False)
     )
     dense = cells.filter(F.col("cnt") >= _GRID_MINPTS).select(
-        (F.col("gx") * _GRID + F.col("gy")).alias("cell_id"), "gx", "gy", "cnt"
+        (F.col("cx") * _GRID + F.col("cy")).alias("cell_id"), "cx", "cy", "cnt"
     ).localCheckpoint(eager=False)
-    a, b = dense.alias("a"), dense.alias("b")
+    # a bounded build: <= 9 rows per cell of the 16x16 grid
+    nb = neighbor_cells(dense).select(
+        "cx", "cy", F.col("cell_id").alias("b_id"), F.col("cnt").alias("b_cnt")
+    )
     nxt = (
-        a.join(
-            b,
-            (F.abs(F.col("a.gx") - F.col("b.gx")) <= 1)
-            & (F.abs(F.col("a.gy") - F.col("b.gy")) <= 1),
-        )
-        .groupBy(F.col("a.cell_id").alias("c"))
+        dense.join(F.broadcast(nb), ["cx", "cy"])
+        .groupBy(F.col("cell_id").alias("c"))
         # lexicographic max of (cnt, -cell_id) = densest neighbor, tie -> lowest id
-        .agg(F.max(F.struct(F.col("b.cnt"), (-F.col("b.cell_id")).alias("neg")))["neg"].alias("n"))
+        .agg(F.max(F.struct("b_cnt", (-F.col("b_id")).alias("neg")))["neg"].alias("n"))
         .select("c", (-F.col("n")).alias("n"))
         .localCheckpoint(eager=False)
     )

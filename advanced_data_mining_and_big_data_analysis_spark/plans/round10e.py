@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.grid import equal_width_cells, neighbor_cells
 from ..sources import load_table
 from .registry import query
 
@@ -1534,7 +1535,7 @@ _DO_TOP = 20
 
 
 # Scale rule (100 TB): the grid width bounds each point's candidate
-# neighborhood (27 cells) — the knob is cell width ~ eps, and the per-
+# neighborhood (9 cells) — the knob is cell width ~ eps, and the per-
 # cell count cap is the skew guard; never all-pairs.
 @query(
     "a0062_distance_outliers",
@@ -1579,49 +1580,24 @@ def a0062_distance_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding")[0].alias("e0"), F.col("embedding")[1].alias("e1")
     )
-    g = float(_DO_GRID)
-    rng = pts.agg(
-        F.min("e0").alias("mn0"),
-        F.max("e0").alias("mx0"),
-        F.min("e1").alias("mn1"),
-        F.max("e1").alias("mx1"),
-        F.least(
-            (F.max("e0") - F.min("e0")) / g, (F.max("e1") - F.min("e1")) / g
-        ).alias("eps"),
+    cells = equal_width_cells(pts, _DO_GRID).localCheckpoint(eager=False)
+    # the neighbour side is data-sized (9 rows per point): no broadcast
+    b = neighbor_cells(cells).select(
+        "cx", "cy", F.col("vec_id").alias("b_id"), F.col("e0").alias("b0"), F.col("e1").alias("b1")
     )
-    cells = (
-        pts.crossJoin(F.broadcast(rng))
-        .select(
-            "vec_id",
-            "e0",
-            "e1",
-            "eps",
-            F.least(
-                F.lit(_DO_GRID - 1),
-                F.floor((F.col("e0") - F.col("mn0")) / ((F.col("mx0") - F.col("mn0")) / g)),
-            ).cast("long").alias("gx"),
-            F.least(
-                F.lit(_DO_GRID - 1),
-                F.floor((F.col("e1") - F.col("mn1")) / ((F.col("mx1") - F.col("mn1")) / g)),
-            ).cast("long").alias("gy"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    a, b = cells.alias("a"), cells.alias("b")
-    d2 = (F.col("a.e0") - F.col("b.e0")) * (F.col("a.e0") - F.col("b.e0")) + (
-        F.col("a.e1") - F.col("b.e1")
-    ) * (F.col("a.e1") - F.col("b.e1"))
+    d2 = (F.col("e0") - F.col("b0")) * (F.col("e0") - F.col("b0")) + (
+        F.col("e1") - F.col("b1")
+    ) * (F.col("e1") - F.col("b1"))
+    # every point meets itself in its own cell, so the LEFT join keeps
+    # each point and the count alone decides who is a neighbour
     nbr = (
-        a.join(
-            b,
-            (F.abs(F.col("a.gx") - F.col("b.gx")) <= 1)
-            & (F.abs(F.col("a.gy") - F.col("b.gy")) <= 1)
-            & (F.col("a.vec_id") != F.col("b.vec_id"))
-            & (d2 <= F.col("a.eps") * F.col("a.eps")),
-            "left",
+        cells.join(b, ["cx", "cy"], "left")
+        .groupBy("vec_id")
+        .agg(
+            F.count(
+                F.when((F.col("b_id") != F.col("vec_id")) & (d2 <= F.col("eps") * F.col("eps")), 1)
+            ).alias("n_neighbors")
         )
-        .groupBy(F.col("a.vec_id").alias("vec_id"))
-        .agg(F.count(F.col("b.vec_id")).alias("n_neighbors"))
     )
     return (
         nbr.select(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as SIM
 from ..operators.fixpoint import fixpoint
+from ..operators.grid import neighbor_cells
 from ..sources import load_table
 from .registry import query
 from .similarity import _DIMS, _PAIR_COS, _SD_PLANT, _SD_THR
@@ -249,6 +250,19 @@ _DLH_TAUS = (4, 16, 64, 256)
 _DLH_ROUNDS = 8
 
 
+def _dlh_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of ``_dlh_feats_sql``: the customer feature plane
+    ``(id, x, y)`` = (custkey, ln(1 + spend), ln(1 + orders))."""
+    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    return orders.groupBy(F.col("o_custkey").alias("id")).agg(
+        F.round(
+            F.log(1.0 + F.round(F.sum("o_totalprice") * 100, 0).cast("long") / 100.0),
+            6,
+        ).alias("x"),
+        F.round(F.log(1.0 + F.count("*")), 6).alias("y"),
+    )
+
+
 def _dlh_feats_sql() -> str:
     return f"""
       SELECT o_custkey AS id,
@@ -304,16 +318,7 @@ def _dlh_feats_sql() -> str:
     description=f"HDBSCAN-style density-level hierarchy (condensed-tree profile): customers embed at (ln spend, ln orders) on an h={_DLH_H} grid, and each density level tau in {_DLH_TAUS} reads the DBSCAN* flat clustering — dense cells (>= tau points) merged through 8-way adjacency — reporting n_dense_cells / n_clusters / largest cluster / noise per level; the only data-sized work is ONE groupBy(cell) count (the cell graph is bounded by grid extent, not N), and the CC is hook+jump min-label propagation that stops at the first round lowering no label (O(log diameter) rounds, at most {_DLH_ROUNDS} + 1; raises past that)",
 )
 def a0002_density_level_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    feats = orders.groupBy("o_custkey").agg(
-        F.round(
-            F.log(
-                1.0 + F.round(F.sum("o_totalprice") * 100, 0).cast("long") / 100.0
-            ),
-            6,
-        ).alias("x"),
-        F.round(F.log(1.0 + F.count("*")), 6).alias("y"),
-    )
+    feats = _dlh_feats(spark, sf_dir)
     cells = (
         feats.groupBy(
             F.floor(F.col("x") / _DLH_H).cast("long").alias("cx"),
@@ -330,36 +335,21 @@ def a0002_density_level_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("n") >= F.col("tau"))
         .localCheckpoint(eager=False)  # edges + sizes + CC reuse it
     )
-    # 8-way adjacency as an equi-join: each dense cell probes its 9-cell
-    # neighborhood (cell frame is grid-extent-bounded, never data-sized)
-    nine = F.array(*[F.lit(d) for d in range(-1, 2)])
-    probes = dc.select(
-        "tau",
-        F.col("cid").alias("ca"),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    nine,
-                    lambda dx: F.transform(
-                        nine, lambda dy: (F.col("cx") + dx) * 100000 + F.col("cy") + dy
-                    ),
-                )
-            )
-        ).alias("nk"),
-    ).filter(F.col("nk") != F.col("ca"))
-    dcb = dc.select(F.col("tau").alias("tb"), F.col("cid").alias("cb"))
-    edges = probes.join(
-        dcb, (F.col("nk") == F.col("cb")) & (F.col("tau") == F.col("tb"))
-    ).select("tau", "ca", "cb")
-    both = edges.unionAll(
-        edges.select("tau", F.col("cb").alias("ca"), F.col("ca").alias("cb"))
-    ).localCheckpoint(eager=False)
+    # 8-way adjacency; symmetric, so each pair is already in both directions
+    cell = dc.select("tau", "cx", "cy", "cid")
+    edges = (
+        cell.withColumnRenamed("cid", "ca")
+        .join(neighbor_cells(cell.withColumnRenamed("cid", "cb")), ["tau", "cx", "cy"])
+        .filter(F.col("ca") != F.col("cb"))
+        .select("tau", "ca", "cb")
+        .localCheckpoint(eager=False)
+    )
     labels = dc.select("tau", F.col("cid").alias("id"), F.col("cid").alias("lab"))
 
     def hook_jump(labels: DataFrame) -> tuple[DataFrame, int]:
         nmin = (
-            both.join(labels, (both.tau == labels.tau) & (both.cb == labels.id))
-            .groupBy(both.tau.alias("tau"), F.col("ca").alias("id"))
+            edges.join(labels, (edges.tau == labels.tau) & (edges.cb == labels.id))
+            .groupBy(edges.tau.alias("tau"), F.col("ca").alias("id"))
             .agg(F.min("lab").alias("nlab"))
         )
         hooked = labels.join(nmin, ["tau", "id"], "left").select(

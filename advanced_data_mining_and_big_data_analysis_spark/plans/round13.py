@@ -19,10 +19,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..operators.fixpoint import fixpoint
+from ..operators.grid import cap_per_cell, neighbor_cells
 from ..sources import load_table
 from .graph import _HUB_CAP, _cooc_edges, _degrees, _user_buckets
 from .registry import query
-from .round12 import _dlh_feats_sql
+from .round12 import _dlh_feats, _dlh_feats_sql
 from .similarity import _DIMS, _SD_PLANT, _SD_THR
 
 # ---------------------------------------------------------------------------
@@ -513,18 +514,8 @@ _KNN_CAP = 32  # per-cell train cap (md5-ranked deterministic subsample)
     description=f"grid-blocked kNN classification of customer market segment on the (ln spend, ln orders) plane: md5-ranked per-cell train cap ({_KNN_CAP} — the LSH/SemDeDup salted-cap guard, both engines replay it) then train points explode into their 3x3 neighbor cells so candidates equi-join on the shared cell (<= 9*cap per test point, no cross join); k={_KNN_K} nearest by (d2 rounded 9, custkey), majority vote with label tie-break, '(none)' for empty neighborhoods; output the |segments|^2-bounded confusion matrix",
 )
 def a0004_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    f = orders.groupBy(F.col("o_custkey").alias("id")).agg(
-        F.round(
-            F.log(
-                1.0
-                + F.round(F.sum("o_totalprice") * 100, 0).cast("long") / 100.0
-            ),
-            6,
-        ).alias("x"),
-        F.round(F.log(1.0 + F.count("*")), 6).alias("y"),
-    )
+    f = _dlh_feats(spark, sf_dir)
     pts = f.join(cust, f.id == cust.c_custkey).select(
         "id",
         "x",
@@ -541,36 +532,13 @@ def a0004_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("tid"), F.col("x").alias("tx"), F.col("y").alias("ty"),
         "cx", "cy", F.col("seg").alias("tseg"),
     )
-    offs = F.expr(
-        "explode(flatten(transform(sequence(-1,1), dx -> "
-        "transform(sequence(-1,1), dy -> struct(dx, dy)))))"
-    )
     # salted per-cell train cap BEFORE the 9-cell explode (see oracle
     # note): candidates per test point are bounded at 9 * cap whatever
     # the cell density — without it the sf0.1 run measured 24.6 s of
     # near-cartesian candidate explosion (max cell 2187 points)
-    wcap = Window.partitionBy("cx", "cy").orderBy(
-        F.md5(
-            F.concat_ws(
-                "_",
-                F.col("cx").cast("string"),
-                F.col("cy").cast("string"),
-                F.col("id").cast("string"),
-            )
-        ),
-        "id",
-    )
-    tr9 = (
-        pts.filter(~F.col("is_test"))
-        .withColumn("crk", F.row_number().over(wcap))
-        .filter(F.col("crk") <= _KNN_CAP)
-        .select("id", "x", "y", "cx", "cy", "seg", offs.alias("o"))
-        .select(
-            F.col("id").alias("rid"), F.col("x").alias("rx"), F.col("y").alias("ry"),
-            (F.col("cx") + F.col("o.dx")).alias("cx"),
-            (F.col("cy") + F.col("o.dy")).alias("cy"),
-            F.col("seg").alias("rseg"),
-        )
+    tr9 = neighbor_cells(cap_per_cell(pts.filter(~F.col("is_test")), _KNN_CAP)).select(
+        F.col("id").alias("rid"), F.col("x").alias("rx"), F.col("y").alias("ry"),
+        "cx", "cy", F.col("seg").alias("rseg"),
     )
     d2 = F.round(
         (F.col("tx") - F.col("rx")) * (F.col("tx") - F.col("rx"))

@@ -21,10 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..operators.grid import cap_per_cell, neighbor_cells
 from ..sources import load_table
 from .graph import _HUB_CAP, _cooc_edges, _frontier_bfs, _lpa_labels, _sym_edges, _user_buckets
 from .registry import query
-from .round12 import _dlh_feats_sql
+from .round12 import _dlh_feats, _dlh_feats_sql
 from .round13 import _TOKS_SQL
 
 # ---------------------------------------------------------------------------
@@ -478,44 +479,15 @@ _LOF_TOP = 20
     description=f"grid-blocked Local Outlier Factor (Breunig 2000, k={_LOF_K}) on the customer (ln spend, ln orders) plane: md5-ranked per-cell cap {_LOF_CAP} (sampled LOF — both engines replay the subsample), 3x3-cell equi-join candidates (<= 9*cap per point), then k-distance -> reachability -> local reachability density -> LOF as three node-sized aggregates over the kNN frame; density-RELATIVE outliers a global cutoff misses; top-{_LOF_TOP} by (LOF desc, id)",
 )
 def a0014_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    f = orders.groupBy(F.col("o_custkey").alias("id")).agg(
-        F.round(
-            F.log(1.0 + F.round(F.sum("o_totalprice") * 100, 0).cast("long") / 100.0),
-            6,
-        ).alias("x"),
-        F.round(F.log(1.0 + F.count("*")), 6).alias("y"),
-    )
-    pts0 = f.select(
+    pts0 = _dlh_feats(spark, sf_dir).select(
         "id", "x", "y",
         F.floor(F.col("x") * _LOF_H4).cast("long").alias("cx"),
         F.floor(F.col("y") * _LOF_H4).cast("long").alias("cy"),
     )
-    wcap = Window.partitionBy("cx", "cy").orderBy(
-        F.md5(
-            F.concat_ws(
-                "_",
-                F.col("cx").cast("string"),
-                F.col("cy").cast("string"),
-                F.col("id").cast("string"),
-            )
-        ),
-        "id",
-    )
-    pts = (
-        pts0.withColumn("crk", F.row_number().over(wcap))
-        .filter(F.col("crk") <= _LOF_CAP)
-        .select("id", "x", "y", "cx", "cy")
-        .localCheckpoint(eager=False)  # one capped subsample feeds both join sides
-    )
-    offs = F.expr(
-        "explode(flatten(transform(sequence(-1,1), dx -> "
-        "transform(sequence(-1,1), dy -> struct(dx, dy)))))"
-    )
-    nbr = pts.select("id", "x", "y", "cx", "cy", offs.alias("o")).select(
-        F.col("id").alias("bid"), F.col("x").alias("bx"), F.col("y").alias("by"),
-        (F.col("cx") + F.col("o.dx")).alias("cx"),
-        (F.col("cy") + F.col("o.dy")).alias("cy"),
+    # one capped subsample feeds both join sides
+    pts = cap_per_cell(pts0, _LOF_CAP).localCheckpoint(eager=False)
+    nbr = neighbor_cells(pts).select(
+        F.col("id").alias("bid"), F.col("x").alias("bx"), F.col("y").alias("by"), "cx", "cy"
     )
     d2 = F.round(
         (F.col("x") - F.col("bx")) * (F.col("x") - F.col("bx"))

@@ -5,6 +5,8 @@ TakeOrderedAndProject, no accidental cartesian products."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
@@ -242,3 +244,40 @@ def test_q130_no_static_broadcast_of_data_grown_frames(spark, sf_dir):
     plan = plan_of("q130_prefix_filter_simjoin", spark, sf_dir)
     assert "BroadcastExchange" not in plan, "static broadcast crept back into q130"
     assert "SortMergeJoin" in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "a0002_density_level_hierarchy",
+        "a0004_knn_classify",
+        "a0014_lof_outliers",
+        "a0062_distance_outliers",
+        "a0100_grid_density_clusters",
+    ],
+)
+def test_grid_neighbour_joins_are_equi_joins(name, spark, sf_dir, monkeypatch):
+    """The spatial family joins 3x3 cell neighbourhoods as equi hash
+    joins (operators/grid.py), never as a nested loop over all pairs. A
+    nested loop may only cross every row with a condition-free one-row
+    frame (the grid's min/max, a total). A checkpointed frame hides its
+    plan from the returned frame's, so every frame the query checkpoints
+    is audited too."""
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    frame = type(spark.range(1))
+    checkpoint = frame.localCheckpoint
+    plans = []
+
+    def audited(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().explainString(jmode))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", audited)
+    df = QUERIES[name].fn(spark, sf_dir)
+    df.collect()
+    plans.append(df._jdf.queryExecution().explainString(jmode))
+    for plan in plans:
+        loops = re.findall(r"\) BroadcastNestedLoopJoin\nJoin type: (\w+)\nJoin condition: (.*)", plan)
+        assert bool(loops) == ("BroadcastNestedLoopJoin" in plan)
+        assert all(loop == ("Cross", "None") for loop in loops), loops
+        assert "CartesianProduct" not in plan
