@@ -28,40 +28,6 @@ from . import text as X
 from .fixpoint import fixpoint
 
 
-def lsh_collision_probability(jaccard: float, bands: int, rows: int) -> float:
-    """S-curve: P(two docs with this jaccard share >=1 LSH bucket)
-    = 1 - (1 - s^rows)^bands."""
-    return 1.0 - (1.0 - jaccard**rows) ** bands
-
-
-def lsh_params(num_hashes: int, jaccard_threshold: float) -> tuple[int, int]:
-    """Auto-pick (bands, rows) with bands*rows <= num_hashes whose
-    S-curve inflection (1/bands)^(1/rows) — the similarity at ~50%
-    collision probability — lands closest to the target threshold.
-
-    The solve: for each per-band row count r, the ideal band count is
-    b = t^(-r) (where the inflection equals t exactly); we round it,
-    clamp to the hash budget, and keep the closest fit, preferring the
-    banding that uses more of the budget on ties (sharper S-curve).
-    More bands => catches lower similarity; more rows => stricter. This
-    is the standard MMDS ch.3 tuning rule, made exact: 'near-dups above
-    jaccard t' becomes concrete banding without hand-tuning."""
-    if num_hashes < 1:
-        raise ValueError("num_hashes must be >= 1")
-    if not 0.0 < jaccard_threshold < 1.0:
-        raise ValueError("jaccard_threshold must be in (0, 1)")
-    best: tuple[float, int, int, int] | None = None
-    for rows in range(1, num_hashes + 1):
-        ideal = jaccard_threshold ** (-rows)
-        for bands in {int(ideal), int(ideal) + 1}:
-            bands = max(1, min(bands, num_hashes // rows))
-            inflection = (1.0 / bands) ** (1.0 / rows)
-            cand = (abs(inflection - jaccard_threshold), -bands * rows, bands, rows)
-            if best is None or cand < best:
-                best = cand
-    return best[2], best[3]
-
-
 def exact_dup_stats(docs: DataFrame, text_col: str = "text", by: str = "source") -> DataFrame:
     """Per-group exact / fingerprint duplicate statistics.
 
@@ -80,15 +46,6 @@ def exact_dup_stats(docs: DataFrame, text_col: str = "text", by: str = "source")
         F.countDistinct("exact_hash").alias("n_unique_exact"),
         F.countDistinct("fp_hash").alias("n_unique_fingerprint"),
     )
-
-
-def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Keep one row per exact text (lowest doc_id wins — deterministic,
-    unlike dropDuplicates which keeps an arbitrary row)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(F.md5(F.col(text_col))).orderBy("doc_id")
-    return docs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def shingle_rows(

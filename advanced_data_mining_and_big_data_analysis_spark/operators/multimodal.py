@@ -26,7 +26,6 @@ from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import jpeg as _jpeg
@@ -451,35 +450,6 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
             )
 
     return media.mapInPandas(per_batch, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 16, max_frames: int = 4) -> DataFrame:
-    """STUB-backed video frame sampling: 1→N rows per media item via
-    mapInPandas (a flat-map over Arrow batches). The fake treats each
-    ``every_n_bytes`` slice as a 'frame'; a real decoder would demux the
-    container and decode key frames — same plumbing, same schema."""
-
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(content) if content is not None else b""
-                for i in range(min(max_frames, max(len(b) // every_n_bytes, 0))):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(b[i * every_n_bytes : (i + 1) * every_n_bytes])
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return media.mapInPandas(per_batch, schema=FRAME_SCHEMA)
 
 
 AUDIO_FRAME_SCHEMA = T.StructType(

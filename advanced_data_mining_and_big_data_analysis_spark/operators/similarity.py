@@ -91,107 +91,3 @@ def topk_cosine_bucketed(
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)
     )
-
-
-def quantize_int8(
-    embeddings: DataFrame,
-    id_cols: tuple = ("vec_id",),
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-vector int8 scalar quantization: (ids..., mn, scale, q) where
-    q[i] = floor((v[i] - mn) / scale + 0.5) in 0..255 — 4x smaller than
-    float32, the storage format big ANN indexes actually serve from.
-
-    min/scale come from array_min/array_max (flat codegen); the
-    per-element map is a transform HOF, consistent with the rest of this
-    module's vector math (an index-BUILD-time op that runs once per
-    vector, embarrassingly parallel — not a per-query hot path).
-    q111's oracle pins the identical floor(x+0.5) half-rule."""
-    v = as_double(vec_col)
-    mn = F.array_min(v)
-    scale = (F.array_max(v) - mn) / 255.0
-    base = embeddings.select(
-        *[F.col(c) for c in id_cols], v.alias("_v"), mn.alias("mn"), scale.alias("scale")
-    )
-    q = F.when(
-        F.col("scale") == 0, F.transform(F.col("_v"), lambda x: F.lit(0))
-    ).otherwise(
-        F.transform(
-            F.col("_v"),
-            lambda x: F.floor((x - F.col("mn")) / F.col("scale") + 0.5).cast("int"),
-        )
-    )
-    return base.select(*[F.col(c) for c in id_cols], "mn", "scale", q.alias("q"))
-
-
-def dequantize(q: Column, mn: Column, scale: Column) -> Column:
-    """Reconstruct array<double> from an int8-quantized vector."""
-    return F.transform(q, lambda e: mn + e.cast("double") * scale)
-
-
-# ---------------------------------------------------------------------------
-# Trained PQ codebooks (the production upgrade over q120's deterministic
-# sample codebook): per-subspace Lloyd's k-means via Spark ML. The
-# assignment/audit PLAN is identical either way — the codebook is just
-# an input — which is exactly why q120 could pin the plan with a
-# deterministic codebook while this trainer supplies the learned one.
-# ---------------------------------------------------------------------------
-
-
-def train_pq_codebooks(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    m: int = 4,
-    sub: int = 16,
-    k: int = 8,
-    seed: int = 42,
-    max_iter: int = 10,
-) -> list[list[list[float]]]:
-    """Per-subspace k-means codebooks: ``m`` independent KMeans fits on
-    the 16-dim subvector slices. Returns m codebooks of k centroids
-    each (driver-side — the codebook is k*sub floats, a broadcast-sized
-    model, never data-sized). Seeded, so results are reproducible."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    v = F.col(vec_col).cast("array<double>")
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        sliced = emb.select(array_to_vector(F.slice(v, j * sub + 1, sub)).alias("features"))
-        model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(sliced)
-        books.append([[float(x) for x in c] for c in model.clusterCenters()])
-    return books
-
-
-def pq_reconstruction_error(
-    emb: DataFrame, codebooks: list[list[list[float]]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Mean squared reconstruction error of a PQ codebook set over the
-    corpus: per subspace, distance to the NEAREST codeword, summed.
-    Codebooks enter the plan as literal arrays (the broadcast-variable
-    pattern) — the embedding table is scanned once, map-only, and only
-    a scalar aggregate returns."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-
-    def min_d2(j: int) -> Column:
-        sub_v = F.slice(v, j * sub + 1, sub)
-        dists = [
-            F.aggregate(
-                F.zip_with(
-                    sub_v,
-                    F.array(*[F.lit(x) for x in code]),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for code in codebooks[j]
-        ]
-        return F.least(*dists)
-
-    total = sum(min_d2(j) for j in range(m))
-    return emb.select(total.alias("err2")).agg(
-        F.avg("err2").alias("avg_err2"), F.count("*").alias("n_vecs")
-    )

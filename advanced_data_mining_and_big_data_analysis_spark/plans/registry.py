@@ -54,30 +54,13 @@ def all_queries() -> dict[str, QueryDef]:
         dedup_text,
         features,
         graph,
+        mining,
         pipeline_ops,
-        pipeline_ops2,
-        pipeline_ops3,
         relational,
-        relational2,
-        relational3,
-        round10,
-        round10b,
-        round10c,
-        round10d,
-        round10e,
-        round11,
-        round12,
-        round13,
-        round13b,
-        round14,
-        round14b,
-        round14c,
-        round14d,
         sessions,
         similarity,
-        sources_ext,
+        sources,
         stats,
-        temporal,
     )
 
     return dict(sorted(REGISTRY.items()))

@@ -1,4 +1,6 @@
-"""Similarity-search declared queries over the ``embeddings`` table.
+"""Similarity-search declared queries over the ``embeddings`` table:
+exact and approximate top-k, IVF, quantization, k-means, SemDeDup,
+retrieval fusion and re-ranking.
 
 Spark side: operators/similarity.py (double-cast vectors, sequential-fold
 dot products). Oracle side recomputes the identical IEEE operation sequence
@@ -8,12 +10,17 @@ with DuckDB list lambdas, so cosine values match bit-for-bit before the
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+import hashlib
+import math
 
-from ..operators import similarity as SIM
+from pyspark.sql import Column, DataFrame, SparkSession, Window, Window as W, functions as F
+
+from ..operators import dedup as D, similarity as SIM, text as X
 from ..sources import load_table
+from .dedup_text import _TOKS
+from .mining import _round_half_up
 from .registry import query
+
 
 _DIMS = 64
 
@@ -163,8 +170,6 @@ def a054_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="IVF coarse-quantizer / k-means assignment step: per-label centroids (64 dims), nearest-centroid argmin per vector, confusion counts (north-star similarity scale path)",
 )
 def a055_ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
         "vec_id", F.col("label").alias("true_label"), SIM.as_double("embedding").alias("v")
@@ -302,8 +307,6 @@ def _ivf_assign_frames(x: DataFrame):
     description="multi-probe IVF ANN (nprobe=2): clusters ranked by query-to-centroid distance, the 2 nearest probed, cosine top-k over the union — the recall-vs-cost knob of the coarse quantizer (q56 is nprobe=1); probe cost is bounded by nprobe/k_clusters of the corpus",
 )
 def a096_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     assign, dims, cent = _ivf_assign(spark, sf_dir)
     qdist = (
         dims.filter(F.col("vec_id") == 0)
@@ -491,8 +494,6 @@ def q114_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..operators import dedup as D
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", SIM.as_double("embedding").alias("v"), "label")
     planted = base.filter(F.col("vec_id") < _SD_PLANT).select(
@@ -579,8 +580,6 @@ _BA_NPROBE = 2  # clusters probed per query
     description="batched ANN retrieval JOIN: a batch of query vectors (broadcast dim) against the IVF-indexed corpus — per query, rank clusters by query-to-centroid distance, probe the nprobe=2 nearest, cosine-score only the probed clusters' members, per-query top-k via a qid-partitioned window. The retrieval-join shape an LLM-data pipeline uses for similarity decontamination / RAG indexing at corpus scale: cost is batch x nprobe/k_clusters of the corpus, never batch x corpus; the query batch and probe map ride as broadcasts so the corpus side is scanned once with zero data-sized shuffles before the bounded per-query top-k. Decision quantities (d2, cosine rank order) rounded to 9 dp on both engines",
 )
 def q118_batch_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select("vec_id", SIM.as_double("embedding").alias("v"), "label")
     corpus = x.filter(F.col("vec_id") >= _BA_NQ)
@@ -810,8 +809,6 @@ def _lut_column(j: int) -> Column:
     description="IVF-PQ search with asymmetric distance computation, end-to-end (the FAISS IVFPQ composition closing the ANN ladder): per-label IVF centroids + nearest-centroid assignment, m=4x16-dim PQ encoding against the deterministic k=8 low-vec_id codebook, then per query (vec_id 0-2): rank centroids, probe the 2 nearest clusters, and score candidates via a broadcast query->codeword lookup table folded over the 4 stored code ids — candidates are scanned as codes, never as vectors; exact L2^2 per hit audits the ADC approximation; every distance 9-dp-rounded before argmin/rank with lowest-id tie-breaks, so both engines produce the identical top-5",
 )
 def a0164_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -940,14 +937,14 @@ def a0164_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compose (a production loop localCheckpoints between rounds).
 # ---------------------------------------------------------------------------
 
-_KM_K = 5
+_KM_UNROLL_K = 5
 
 
 @query(
     "a0166_kmeans_lloyd",
     oracle=f"""
     WITH x AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    c0 AS (SELECT vec_id AS cl, v AS cv FROM x WHERE vec_id < {_KM_K}),
+    c0 AS (SELECT vec_id AS cl, v AS cv FROM x WHERE vec_id < {_KM_UNROLL_K}),
     d1 AS (SELECT x.vec_id, c0.cl,
                   ROUND(list_reduce(list_transform(range(1, 65),
                         i -> (x.v[i] - c0.cv[i]) * (x.v[i] - c0.cv[i])),
@@ -978,7 +975,7 @@ def a0166_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    c0 = emb.filter(F.col("vec_id") < _KM_K).select(
+    c0 = emb.filter(F.col("vec_id") < _KM_UNROLL_K).select(
         F.col("vec_id").alias("cl"), F.col("v").alias("cv")
     )
     a1 = (
@@ -1010,3 +1007,1501 @@ def a0166_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("cl").cast("int").alias("cluster"), "n_members", "inertia")
         .orderBy("cluster")
     )
+
+
+# ---------------------------------------------------------------------------
+# q120 — product quantization: split the 64-dim embedding into m=4
+# subspaces of 16 dims, assign each subvector to its nearest of k=8
+# codewords, and audit the reconstruction error PQ would pay at ADC
+# time. The codebook is deterministic for oracle parity — the 8
+# lowest-vec_id vectors (production would train per-subspace KMeans;
+# the assignment/audit plan is identical either way, the codebook is
+# just an input). Distances are rounded to 9 dp BEFORE every argmin on
+# both engines (float-tie rule, ADVICE r5), ties broken by lowest
+# code_id via min(struct(d2, code_id)).
+#
+# Scale shape: the codebook is k rows — broadcast — so assignment is a
+# broadcast nested-loop producing N*k rows that collapse back to N via
+# a map-side-combined min aggregate; the embedding table itself is
+# never shuffled at full width.
+# ---------------------------------------------------------------------------
+
+_PQ_M = 4  # subspaces
+_PQ_SUB = 16  # dims per subspace
+_PQ_K = 8  # codewords per subspace
+
+
+def _pq_d2_sql(j: int) -> str:
+    lo = j * _PQ_SUB + 1
+    return (
+        f"round(list_reduce(list_transform(range({lo}, {lo + _PQ_SUB}), "
+        f"i -> (e.v[i] - cb.cv[i]) * (e.v[i] - cb.cv[i])), (a, b) -> a + b), 9)"
+    )
+
+
+@query(
+    "q120_product_quantization",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    cb AS (SELECT vec_id AS code_id, v AS cv FROM e WHERE vec_id < {_PQ_K}),
+    pairs AS (SELECT e.vec_id, e.label, cb.code_id,
+                     {', '.join(f'{_pq_d2_sql(j)} AS d{j}' for j in range(_PQ_M))}
+              FROM e CROSS JOIN cb),
+    mins AS (SELECT vec_id, label,
+                    {', '.join(f'MIN(d{j}) AS m{j}' for j in range(_PQ_M))}
+             FROM pairs GROUP BY vec_id, label),
+    assign AS (SELECT p.vec_id, m.label,
+                      {', '.join(f'm.m{j} AS m{j}' for j in range(_PQ_M))},
+                      MIN(CASE WHEN p.d0 = m.m0 THEN p.code_id END) AS c0,
+                      MIN(CASE WHEN p.d3 = m.m3 THEN p.code_id END) AS c3
+               FROM pairs p JOIN mins m ON p.vec_id = m.vec_id
+               GROUP BY p.vec_id, m.label, {', '.join(f'm.m{j}' for j in range(_PQ_M))})
+    SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           ROUND(AVG(m0 + m1 + m2 + m3), 6) AS avg_err2,
+           {', '.join(f'ROUND(AVG(m{j}), 6) AS err_s{j}' for j in range(_PQ_M))},
+           CAST(COUNT(DISTINCT c0) AS BIGINT) AS codes_used_s0,
+           CAST(COUNT(DISTINCT c3) AS BIGINT) AS codes_used_s3
+    FROM assign GROUP BY label ORDER BY label
+    """,
+    description="product quantization (m=4 subspaces x 16 dims, k=8 codewords): deterministic low-vec_id codebook broadcast against the corpus, per-subspace nearest-codeword assignment (9-dp-rounded distances, lowest-code_id tie-break via min(struct)), per-label reconstruction-error audit + codeword-usage counts — the PQ step between q111's flat int8 quantization and q114's IVF coarse clustering; N*k expansion collapses map-side, the embedding table is never shuffled at full width",
+)
+def q120_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+    )
+    # codebook = k bounded rows, collected once and closed over by the
+    # kernel (the a0018/a0001 BLAS idiom) — at production scale this is
+    # the trained per-subspace codebook shipped to every executor
+    cb_rows = sorted(
+        emb.filter(F.col("vec_id") < _PQ_K).select("vec_id", "v").collect(),
+        key=lambda r: r["vec_id"],
+    )
+    code_ids = np.array([int(r["vec_id"]) for r in cb_rows], dtype=np.int64)
+    C = np.array([r["v"] for r in cb_rows], dtype=np.float64)  # k x 64
+
+    # ONE Arrow mapInPandas pass replaces the r11 broadcast cross join +
+    # 512-term unrolled codegen expression (whose one-time analysis/
+    # codegen cost WAS the sf0.1 floor: 1.75 s of the 1.47 s warm wall,
+    # data_fraction 0.0 in BENCH_FLOOR). The kernel is the same math —
+    # per-subspace squared distance to all k codewords, rounded 9 BEFORE
+    # argmin, np.argmin's first-occurrence = lowest code_id tie-break —
+    # vectorized (n x k x 16 einsum-free broadcasting) instead of
+    # per-row codegen; per-row cost drops as well, so it wins at every
+    # SF, not just at the floor.
+    def kernel(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            X = np.vstack(pdf["v"].to_numpy()).astype(np.float64)  # n x 64
+            out = {"vec_id": pdf["vec_id"], "label": pdf["label"]}
+            for j in range(_PQ_M):
+                s = slice(j * _PQ_SUB, (j + 1) * _PQ_SUB)
+                d = X[:, None, s] - C[None, :, s]  # n x k x 16
+                d2 = np.round((d * d).sum(axis=2), 9)  # n x k
+                am = np.argmin(d2, axis=1)
+                out[f"d{j}"] = d2[np.arange(len(am)), am]
+                out[f"c{j}"] = code_ids[am]
+            yield pd.DataFrame(out)
+
+    assign = emb.mapInPandas(
+        kernel,
+        "vec_id long, label int, "
+        + ", ".join(f"d{j} double, c{j} long" for j in range(_PQ_M)),
+    )
+    return (
+        assign.groupBy("label")
+        .agg(
+            F.count("*").alias("n_vecs"),
+            F.round(F.avg(sum(F.col(f"d{j}") for j in range(_PQ_M))), 6).alias("avg_err2"),
+            *[F.round(F.avg(F.col(f"d{j}")), 6).alias(f"err_s{j}") for j in range(_PQ_M)],
+            F.countDistinct("c0").alias("codes_used_s0"),
+            F.countDistinct("c3").alias("codes_used_s3"),
+        )
+        .orderBy("label")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0141 — int4 embedding quantization: per-dimension min/max scale to
+# 4-bit codes, two codes packed per byte (the 8x compression layout
+# vector stores ship), dequantized at bin centers for the
+# reconstruction-error audit. Binning is floor((v-mn)/width) — integer
+# boundary math, no round() (engine-ambiguous at .5) — and a
+# zero-width guard handles constant dimensions. The per-dim stats
+# frame is 64 rows (broadcast); codes/packing/error are one exploded
+# pass with two map-side-combined aggregates; the packed bytes are
+# pinned by a positional checksum.
+# ---------------------------------------------------------------------------
+
+_I4_LEVELS = 16
+
+
+@query(
+    "a0141_int4_quantization",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    x AS (SELECT vec_id, label, CAST(p AS INT) AS pos, v[CAST(p AS INT) + 1] AS val
+          FROM e, unnest(range(len(v))) t(p)),
+    st AS (SELECT pos, MIN(val) AS mn, MAX(val) AS mx FROM x GROUP BY pos),
+    c AS (SELECT vec_id, label, x.pos, val, mn, mx,
+                 CASE WHEN mx = mn THEN 0
+                      ELSE LEAST({_I4_LEVELS - 1}, CAST(FLOOR((val - mn) / ((mx - mn) / {_I4_LEVELS}.0)) AS BIGINT))
+                 END AS code
+          FROM x JOIN st ON x.pos = st.pos),
+    r AS (SELECT vec_id, label, pos, val, code,
+                 mn + (code + 0.5) * ((mx - mn) / {_I4_LEVELS}.0) AS recon
+          FROM c),
+    pk AS (SELECT vec_id, label, pos // 2 AS bpos,
+                  SUM(CASE WHEN pos % 2 = 0 THEN code * 16 ELSE code END) AS byte
+           FROM c GROUP BY vec_id, label, pos // 2),
+    ck AS (SELECT label, SUM(byte * (bpos + 1)) AS checksum, COUNT(*) AS n_bytes FROM pk GROUP BY label),
+    er AS (SELECT label, COUNT(DISTINCT vec_id) AS n_vecs,
+                  ROUND(AVG((val - recon) * (val - recon)), 6) AS mse,
+                  ROUND(MAX(ABS(val - recon)), 6) AS max_abs_err
+           FROM r GROUP BY label)
+    SELECT er.label, CAST(n_vecs AS BIGINT) AS n_vecs, mse, max_abs_err,
+           CAST(ck.checksum % 1000000007 AS BIGINT) AS packed_checksum,
+           CAST(ck.n_bytes AS BIGINT) AS n_bytes
+    FROM er JOIN ck ON er.label = ck.label ORDER BY er.label
+    """,
+    description="int4 embedding quantization (the 8x-compression layout vector stores ship): per-dimension min/max scaling to 4-bit codes via floor boundary math (no round() — engine-ambiguous at .5; constant dims guarded to code 0), two codes packed per byte with the packing pinned by a positional checksum, dequantization at bin centers with per-label reconstruction MSE / max-abs-error audited; the 64-row per-dim stats frame broadcasts, everything else is one exploded pass with map-side-combined aggregates",
+)
+def a0141_int4_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    x = emb.select(
+        "vec_id",
+        "label",
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
+    )
+    st = x.groupBy("pos").agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
+    width = (F.col("mx") - F.col("mn")) / _I4_LEVELS
+    code = F.when(F.col("mx") == F.col("mn"), F.lit(0)).otherwise(
+        F.least(F.lit(_I4_LEVELS - 1), F.floor((F.col("val") - F.col("mn")) / width))
+    )
+    c = x.join(F.broadcast(st), "pos").select(
+        "vec_id", "label", "pos", "val", "mn", "mx", code.alias("code")
+    )
+    r = c.select(
+        "vec_id",
+        "label",
+        "val",
+        (F.col("mn") + (F.col("code") + 0.5) * ((F.col("mx") - F.col("mn")) / _I4_LEVELS)).alias(
+            "recon"
+        ),
+    )
+    pk = c.groupBy("vec_id", "label", (F.col("pos") / 2).cast("long").alias("bpos")).agg(
+        F.sum(
+            F.when(F.col("pos") % 2 == 0, F.col("code") * 16).otherwise(F.col("code"))
+        ).alias("byte")
+    )
+    ck = pk.groupBy("label").agg(
+        F.sum(F.col("byte") * (F.col("bpos") + 1)).alias("checksum"),
+        F.count("*").alias("n_bytes"),
+    )
+    er = r.groupBy("label").agg(
+        F.countDistinct("vec_id").alias("n_vecs"),
+        F.round(F.avg((F.col("val") - F.col("recon")) * (F.col("val") - F.col("recon"))), 6).alias(
+            "mse"
+        ),
+        F.round(F.max(F.abs(F.col("val") - F.col("recon"))), 6).alias("max_abs_err"),
+    )
+    return (
+        er.join(ck, "label")
+        .select(
+            "label",
+            F.col("n_vecs").cast("long").alias("n_vecs"),
+            "mse",
+            "max_abs_err",
+            (F.col("checksum") % 1000000007).cast("long").alias("packed_checksum"),
+            F.col("n_bytes").cast("long").alias("n_bytes"),
+        )
+        .orderBy("label")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0070 — Lloyd k-means (k=8, 2 iterations) over the 64-dim embedding
+# table, deterministic init = the 8 lowest-vec_id vectors (production
+# would use k-means||; the ITERATION plan is identical, init is an
+# input). Scale shape: assignment is a ROW-LOCAL argmin against a
+# 1-row broadcast carrying all k centroids as array<struct> — zero
+# shuffle of the corpus; the centroid update is a k-key groupBy whose
+# partial aggregation reduces each task to k×64 sums before the
+# exchange. Nothing full-width ever shuffles; per-iteration cost is
+# one corpus scan. Centroid means are rounded to 6 dp on BOTH engines
+# before the next distance pass (engine-stable across partial-agg
+# orders); distances rounded to 9 dp before every argmin, ties by
+# lowest cluster id.
+# ---------------------------------------------------------------------------
+
+_KM_K = 8
+_KM_DIMS = 64
+
+
+def _km_d2_duck(v: str, cv: str) -> str:
+    return (
+        f"round(list_reduce(list_transform(range(1, {_KM_DIMS + 1}), "
+        f"i -> ({v}[i] - {cv}[i]) * ({v}[i] - {cv}[i])), (x, y) -> x + y), 9)"
+    )
+
+
+def _km_assign_duck(src: str, cb: str) -> str:
+    """CTE text: nearest-centroid assignment of e-rows in `src` to `cb`."""
+    return f"""
+      SELECT vec_id, v, cid, d2 FROM (
+        SELECT s.vec_id, s.v, c.cid, {_km_d2_duck('s.v', 'c.cv')} AS d2,
+               ROW_NUMBER() OVER (PARTITION BY s.vec_id
+                                  ORDER BY {_km_d2_duck('s.v', 'c.cv')}, c.cid) AS rn
+        FROM {src} s CROSS JOIN {cb} c
+      ) WHERE rn = 1
+    """
+
+
+_KM_CV = ", ".join(f"round(avg(v[{i}]), 6)" for i in range(1, _KM_DIMS + 1))
+
+
+def _km_d2_spark(v: Column, cv: Column) -> Column:
+    # unrolled static sum (q120 A/B: interpreted HOF folds lose 1.7x at
+    # sf1.0; the static tree is what survives scale-up)
+    terms: Column | None = None
+    for i in range(1, _KM_DIMS + 1):
+        t = F.element_at(v, i) - F.element_at(cv, i)
+        t = t * t
+        terms = t if terms is None else terms + t
+    return F.round(terms, 9)
+
+
+def _km_assign_spark(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment via the a0001 BLAS kernel.
+
+    The k-row collect is bounded by the k = _KM_K literal (the Lloyd
+    loop materializes each 8-row centroid frame eagerly anyway); the
+    collected codebook rides into one Arrow-batched dgemm per batch —
+    |x|^2 - 2 xC' + |c|^2, rounded to 9 dp like the oracle's d2, with
+    np.argmin's first-minimum tie matching ORDER BY d2, cid (codebook
+    rows sorted by cid). The r11 variant broadcast a 1-row struct array
+    and ran the unrolled d2 inside a transform() lambda — higher-order
+    lambdas evaluate INTERPRETED per row x centroid (12.9 s warm at
+    sf1.0); a literal-unrolled 8x64 expression tree was A/B'd too and
+    is ANALYSIS-bound (1.8 MiB task binaries, 17.5 s). Round-9 absorbs
+    the dgemm reassociation exactly as in a0001, and the downstream
+    inertia/mean aggregates round at 4/6 dp — far above ulp noise."""
+    import numpy as np
+    import pandas as pd
+
+    cents = sorted((r["cid"], list(r["cv"])) for r in cb.collect())
+    sids = np.array([c for c, _ in cents], dtype=np.int64)
+    cmat = np.array([v for _, v in cents], dtype=np.float64)
+    c2 = (cmat * cmat).sum(axis=1)[None, :]
+
+    def assign(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            x2 = (xm * xm).sum(axis=1, keepdims=True)
+            acc = np.round(x2 - 2.0 * (xm @ cmat.T) + c2, 9)
+            best = np.argmin(acc, axis=1)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "v": pdf["v"],
+                    "cid": sids[best],
+                    "d2": acc[np.arange(len(best)), best],
+                }
+            )
+
+    return emb.mapInPandas(assign, "vec_id long, v array<double>, cid long, d2 double")
+
+
+def _km_update_spark(assigned: DataFrame) -> DataFrame:
+    cents = assigned.groupBy("cid").agg(
+        *[
+            F.round(F.avg(F.element_at("v", i)), 6).alias(f"c{i}")
+            for i in range(1, _KM_DIMS + 1)
+        ]
+    )
+    # No checkpoint (r14): the ONLY consumer is _km_assign_spark's k-row
+    # cb.collect(), which itself truncates lineage (the next iteration's
+    # plan starts from the collected numpy codebook, not this frame) —
+    # the former eager localCheckpoint here was a second job per Lloyd
+    # iteration doing the same materialization the collect repeats.
+    return cents.select(
+        "cid", F.array(*[F.col(f"c{i}") for i in range(1, _KM_DIMS + 1)]).alias("cv")
+    )
+
+
+# Scale rule (100 TB): k is fixed at 8 for oracle parity; in production k
+# is set by domain (clusters wanted), NOT by N — assignment stays one
+# dgemm per Arrow batch (cost ~ N*k*d) and the update a k x d aggregate,
+# so the plan SHAPE is k-invariant (no twin needed; the only k-sized
+# artifact is the collected codebook, the same documented bound as
+# a0001's).
+@query(
+    "a0070_kmeans_lloyd",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    cb0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_KM_K}),
+    a1 AS ({_km_assign_duck('e', 'cb0')}),
+    cb1 AS (SELECT cid, [{_KM_CV}] AS cv FROM a1 GROUP BY cid),
+    a2 AS ({_km_assign_duck('e', 'cb1')}),
+    cb2 AS (SELECT cid, [{_KM_CV}] AS cv FROM a2 GROUP BY cid),
+    a3 AS ({_km_assign_duck('e', 'cb2')})
+    SELECT CAST(cid AS BIGINT) AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           ROUND(SUM(d2), 4) AS inertia, ROUND(AVG(d2), 6) AS mean_d2
+    FROM a3 GROUP BY cid ORDER BY cluster_id
+    """,
+    description=f"Lloyd k-means (k={_KM_K}, 2 update iterations + final assignment) over the {_KM_DIMS}-dim embeddings: row-local argmin against a 1-row broadcast of all centroids (ZERO corpus shuffle per assignment), k-key map-side-combined mean update, 6-dp-rounded centroids / 9-dp-rounded distances / lowest-cid ties for engine parity; per-cluster size, inertia and mean squared distance — the canonical clustering loop, one corpus scan per iteration",
+)
+def a0070_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    cb = emb.filter(F.col("vec_id") < _KM_K).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+    for _ in range(2):
+        cb = _km_update_spark(_km_assign_spark(emb, cb))
+    final = _km_assign_spark(emb, cb)
+    return (
+        final.groupBy(F.col("cid").cast("long").alias("cluster_id"))
+        .agg(
+            F.count("*").alias("n_vecs"),
+            F.round(F.sum("d2"), 4).alias("inertia"),
+            F.round(F.avg("d2"), 6).alias("mean_d2"),
+        )
+        .orderBy("cluster_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0071 — centroid silhouette audit of the deterministic k=8 seeding
+# (the cluster-quality diagnostic that decides k): per vector, a = the
+# Euclidean distance to its own (nearest) centroid and b = the distance
+# to the second-nearest, s = (b − a) / max(a, b) — the simplified
+# (centroid-based) silhouette that stays LINEAR in the corpus where the
+# classic pairwise formula is quadratic. Row-local: the per-vector
+# distance list is k structs sorted in-row; no window, no shuffle until
+# the per-cluster rollup. Distances rounded to 9 dp before the sort
+# (ties by cid), silhouettes to 6.
+# ---------------------------------------------------------------------------
+
+
+# Scale rule (100 TB): inherits a0070's k rule — the per-point work is
+# one k-row distance fold against the broadcast centroid frame;
+# simplified silhouette (centroid form) is chosen precisely because the
+# pairwise form is O(N^2) and this is O(N*k).
+@query(
+    "a0071_centroid_silhouette",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    cb AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_KM_K}),
+    pairs AS (
+      SELECT e.vec_id, c.cid,
+             round(sqrt({_km_d2_duck('e.v', 'c.cv')}), 9) AS d,
+             ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                                ORDER BY round(sqrt({_km_d2_duck('e.v', 'c.cv')}), 9), c.cid) AS rn
+      FROM e CROSS JOIN cb c
+    ),
+    ab AS (
+      SELECT vec_id,
+             MAX(CASE WHEN rn = 1 THEN cid END) AS cid,
+             MAX(CASE WHEN rn = 1 THEN d END) AS a,
+             MAX(CASE WHEN rn = 2 THEN d END) AS b
+      FROM pairs WHERE rn <= 2 GROUP BY vec_id
+    ),
+    sil AS (
+      SELECT cid, CASE WHEN GREATEST(a, b) = 0 THEN 0.0
+                       ELSE (b - a) / GREATEST(a, b) END AS s
+      FROM ab
+    )
+    SELECT CAST(cid AS BIGINT) AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           ROUND(AVG(s), 6) AS avg_sil, ROUND(MIN(s), 6) AS min_sil,
+           ROUND(MAX(s), 6) AS max_sil
+    FROM sil GROUP BY cid ORDER BY cluster_id
+    """,
+    description=f"centroid-based silhouette audit of the deterministic k={_KM_K} seeding: per vector a = distance to nearest centroid, b = second-nearest, s = (b−a)/max(a,b) — the LINEAR cluster-quality diagnostic (classic silhouette is quadratic in the corpus); the k-struct distance list sorts in-row (no window, no corpus shuffle before the per-cluster rollup), 9-dp distances / cid ties / 6-dp silhouettes for engine parity",
+)
+def a0071_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    cb = emb.filter(F.col("vec_id") < _KM_K).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+    cb_row = cb.agg(F.collect_list(F.struct("cid", "cv")).alias("cbs"))
+    ds = emb.crossJoin(F.broadcast(cb_row)).select(
+        "vec_id",
+        F.array_sort(
+            F.transform(
+                F.col("cbs"),
+                lambda c: F.struct(
+                    F.round(F.sqrt(_km_d2_spark(F.col("v"), c["cv"])), 9).alias("d"),
+                    c["cid"].alias("cid"),
+                ),
+            )
+        ).alias("sd"),
+    )
+    ab = ds.select(
+        F.col("sd")[0]["cid"].alias("cid"),
+        F.col("sd")[0]["d"].alias("a"),
+        F.col("sd")[1]["d"].alias("b"),
+    )
+    s = F.when(F.greatest("a", "b") == 0, F.lit(0.0)).otherwise(
+        (F.col("b") - F.col("a")) / F.greatest("a", "b")
+    )
+    return (
+        ab.select(F.col("cid").cast("long").alias("cluster_id"), s.alias("s"))
+        .groupBy("cluster_id")
+        .agg(
+            F.count("*").alias("n_vecs"),
+            F.round(F.avg("s"), 6).alias("avg_sil"),
+            F.round(F.min("s"), 6).alias("min_sil"),
+            F.round(F.max("s"), 6).alias("max_sil"),
+        )
+        .orderBy("cluster_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0001 — SemDeDup with the PRODUCTION k rule (the q114 scale twin,
+# VERDICT r11 item 2). q114 fixes k to the 10 data labels for oracle
+# parity, so its per-cluster blocked matmul grows QUADRATICALLY per
+# decade (sf10 measured 501 s warm — the fixed-k regime). This twin
+# applies the rule q114's docstring states in prose: pick
+# k = ceil(N / target_cluster_size), so cluster size stays ~constant and
+# total matmul work is k * target^2 = N * target — LINEAR in N.
+#
+# The coarse quantizer is deterministic and SQL-replayable: seeds are
+# the corpus vectors with vec_id % step == 0 (step = ceil(N/k), dense
+# vec_ids), every vector assigns to its nearest seed (d2 rounded to
+# 9 dp, ties to the lowest seed id — both engines replay the exact
+# rule), then the within-cell epsilon-ball pairs + connected
+# components proceed exactly as q114. Seeding from a fixed stride is
+# the standard cheap coarse quantizer (IVF does not need trained
+# centroids to bound memory — it needs BALANCED BUCKETS). The collected
+# codebook is k x 64 doubles = N/target rows — at 100 TB you cap the
+# codebook with the two-level build a0023 implements (below:
+# sqrt(N)-sized L1 collect + distributed per-cell refine); the
+# mechanism under test HERE is the k ∝ N rule that keeps the per-task
+# matrix at target^2.
+#
+# k ∝ N alone is NOT enough under adversarial duplication — measured,
+# not theorized: the sf10 corpus is the sf0.1 corpus 100x-replicated,
+# so every stride seed is a copy of one of only 10 distinct patterns,
+# the 9-dp d2 ties collapse all 1000 seeds onto 10, and the "balanced"
+# cells come back as 10 cells of 20k vectors whose 3.2 GB matmuls OOM
+# the workers. The production guard is the same salted per-bucket cap
+# the LSH family uses (operators/dedup.py salt_buckets, a083): within
+# each cell, rank members by md5(cell || vec_id) and shard at
+# salt = (rank-1) div cap, so per-task work is capped at cap^2 whatever
+# the data multiplicity. Within an oversized cell the shards only see
+# their own members' pairs — the documented recall trade of every
+# capped SemDeDup (the un-capped alternative is the OOM above); the
+# oracle replays the identical salting, so the driver hash pins the
+# exact capped semantics.
+#
+# Fixture: same planted near-dups as q114 (vec_id < 10 re-appear
+# rescaled x1.01 at vec_id+100000); whether a planted pair is caught
+# depends on both copies landing in the same cell — the oracle replays
+# the identical rule, so the driver hash pins whatever the rule yields.
+# ---------------------------------------------------------------------------
+
+_AK_TARGET = 200  # target cluster size at bench SFs (production: a few thousand)
+_AK_CAP = 200  # salted per-cell cap: per-task matmul never exceeds cap^2
+
+
+@query(
+    "a0001_semdedup_autok",
+    oracle=f"""
+    WITH RECURSIVE base AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    nk AS (SELECT COUNT(*) AS n,
+                  CAST(CEIL(COUNT(*) / {_AK_TARGET}.0) AS BIGINT) AS k
+           FROM base),
+    st AS (SELECT CAST(CEIL(n / (k * 1.0)) AS BIGINT) AS step FROM nk),
+    x AS (
+      SELECT vec_id, v FROM base
+      UNION ALL
+      SELECT vec_id + 100000, list_transform(v, e -> e * 1.01)
+      FROM base WHERE vec_id < {_SD_PLANT}),
+    seeds AS (SELECT vec_id AS sid, v AS sv FROM base, st WHERE vec_id % step = 0),
+    dist AS (
+      SELECT x.vec_id, s.sid,
+             ROUND(SUM((x.v[r.dim] - s.sv[r.dim]) * (x.v[r.dim] - s.sv[r.dim])), 9) AS d2
+      FROM x CROSS JOIN range(1, {_DIMS + 1}) r(dim) CROSS JOIN seeds s
+      GROUP BY x.vec_id, s.sid),
+    best AS (
+      SELECT vec_id, sid AS cluster,
+             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, sid) AS rn
+      FROM dist),
+    assign AS (
+      SELECT x.vec_id, x.v, b.cluster
+      FROM x JOIN best b ON b.vec_id = x.vec_id AND b.rn = 1),
+    sal AS (
+      SELECT vec_id, v, cluster,
+             CAST(FLOOR((ROW_NUMBER() OVER (
+               PARTITION BY cluster
+               ORDER BY md5(CAST(cluster AS VARCHAR) || CAST(vec_id AS VARCHAR)),
+                        vec_id) - 1) / {_AK_CAP}) AS BIGINT) AS salt
+      FROM assign),
+    p AS (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      FROM sal a JOIN sal b
+        ON a.cluster = b.cluster AND a.salt = b.salt AND a.vec_id < b.vec_id
+      WHERE ROUND({_PAIR_COS}, 9) >= {_SD_THR}),
+    ed AS (SELECT id_a AS a, id_b AS b FROM p UNION SELECT id_b, id_a FROM p),
+    reach(id, lab) AS (
+      SELECT DISTINCT a, a FROM ed
+      UNION
+      SELECT ed.a, reach.lab FROM ed JOIN reach ON ed.b = reach.id),
+    labels AS (SELECT id, MIN(lab) AS cluster FROM reach GROUP BY id)
+    SELECT id AS removed_id, cluster AS kept_id
+    FROM labels WHERE id <> cluster ORDER BY removed_id
+    """,
+    description=f"SemDeDup at the PRODUCTION scaling rules (q114's scale twin): k = ceil(N/{_AK_TARGET}) stride-seeded coarse cells, broadcast-codebook nearest-seed assignment (one Arrow-batched pass, d2 rounded 9 with ties to the lowest seed id), PLUS the salted per-cell cap (rank by md5(cell||id), salt = (rank-1) div {_AK_CAP} — the a083/LSH guard, both engines replay it) so a 100x-replicated duplicate clique can never re-inflate a cell past cap^2, then q114's blocked-matmul epsilon-ball pairs + connected components — total cost LINEAR in N per decade, the measured fix for q114's fixed-k quadratic regime at sf10",
+)
+def a0001_semdedup_autok(spark: SparkSession, sf_dir: str) -> DataFrame:
+    salted = _ak_salted_assign(spark, sf_dir)
+    thr = _SD_THR
+
+    import numpy as np
+    import pandas as pd
+
+    def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        # one dense matmul per ~target-sized cell (the q114 kernel,
+        # similarity.py:447): n x 64 -> n x n cosines, float64 so
+        # round(cos, 9) agrees with the SQL oracle
+        ids = pdf["vec_id"].to_numpy()
+        xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+        norms = np.linalg.norm(xm, axis=1)
+        norms[norms == 0.0] = 1.0
+        cos = (xm @ xm.T) / np.outer(norms, norms)
+        iu, ju = np.triu_indices(len(ids), k=1)
+        keep = np.round(cos[iu, ju], 9) >= thr
+        a, b = ids[iu[keep]], ids[ju[keep]]
+        return pd.DataFrame({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b)})
+
+    pairs = salted.groupBy("cluster", "salt").applyInPandas(
+        cluster_pairs, "id_a long, id_b long"
+    )
+    labels = D.near_dup_clusters(pairs)
+    return (
+        labels.filter(F.col("id") != F.col("cluster"))
+        .select(F.col("id").alias("removed_id"), F.col("cluster").alias("kept_id"))
+        .orderBy("removed_id")
+    )
+
+
+def _ak_salted_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The a0001 coarse-quantize + salted-cap frame (vec_id, cluster, v,
+    salt), exposed separately so tests can pin the OOM-guard invariant —
+    max per-(cluster, salt) group size <= _AK_CAP — on the REAL frame
+    (planted rows included) rather than re-deriving it."""
+    import numpy as np
+    import pandas as pd
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.select("vec_id", SIM.as_double("embedding").alias("v"))
+    # two driver scalars + the k x 64 coarse codebook (k = N/target —
+    # bounded for any bench SF; at extreme scale swap in a0023's
+    # two-level build: O(sqrt N) driver traffic, same cell semantics)
+    n = base.count()
+    k = -(-n // _AK_TARGET)
+    step = -(-n // k)
+    seed_rows = base.filter(F.col("vec_id") % step == 0).orderBy("vec_id").collect()
+    sids = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
+    cmat = np.array([r["v"] for r in seed_rows], dtype=np.float64)
+
+    planted = base.filter(F.col("vec_id") < _SD_PLANT).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.transform("v", lambda e: e * F.lit(1.01)).alias("v"),
+    )
+    x = base.unionAll(planted)
+
+    c2 = (cmat * cmat).sum(axis=1)[None, :]
+
+    def assign_batches(it):
+        # nearest stride-seed per vector, BLAS expansion form
+        # |x|^2 - 2 xC' + |c|^2 (one dgemm per Arrow batch — the dim
+        # loop measured 40+ s of the sf10 wall): ROUND(d2, 9) absorbs
+        # the float reassociation vs the oracle's SUM, the same round-9
+        # argument the q114 cosine kernel rests on, and exact-duplicate
+        # seeds produce bitwise-equal d2 so ties still break to the
+        # lowest seed id (np.argmin returns the FIRST minimum; codebook
+        # rows are sorted by vec_id), matching ORDER BY d2, sid
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            x2 = (xm * xm).sum(axis=1, keepdims=True)
+            acc = x2 - 2.0 * (xm @ cmat.T) + c2
+            cl = sids[np.argmin(np.round(acc, 9), axis=1)]
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cluster": cl, "v": pdf["v"]})
+
+    assign = x.mapInPandas(assign_batches, "vec_id long, cluster long, v array<double>")
+
+    # salted per-cell cap (operators/dedup.py salt_buckets idiom): rank
+    # members by a deterministic pseudo-random order inside each cell —
+    # a PARTITIONED window, never a global sort — and shard at the cap
+
+    wc = W.partitionBy("cluster").orderBy(
+        F.md5(F.concat(F.col("cluster").cast("string"), F.col("vec_id").cast("string"))),
+        "vec_id",
+    )
+    return assign.withColumn(
+        "salt", F.floor((F.row_number().over(wc) - 1) / _AK_CAP).cast("long")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0003 — INCREMENTAL SemDeDup (the q108 bucket-probe idiom lifted to
+# the embedding space — VERDICT r12 item 8): the corpus has already
+# been deduplicated once ("old" = 80% of vectors); a growth batch
+# arrives ("new" = vec_id % 5 == 3, plus the planted 1.01-rescaled
+# copies of vec_id < _SD_PLANT at +100000). The coarse codebook was
+# built when the OLD corpus was deduped — stride seeds over old ids
+# only — and new vectors are assigned into the EXISTING cells, so the
+# only pair work is new x cell-members: each new vector compares
+# against its cell's occupants (old members and earlier-priority new
+# members), never old x old again. Priority is (is_new, vec_id)
+# lexicographic — old corpus always wins a tie, matching what a
+# production incremental dedup does (the kept id is stable across
+# growth batches).
+#
+# Scale shape (why this is "corpus growth nearly free"): per growth
+# batch the matmul work is n_new * cell_size, not cell_size^2 — q108
+# measured the relational version of this 170x faster than recompute
+# at sf10; the salted per-cell cap (a0001's guard, replayed by the
+# oracle) bounds every task at cap * cap whatever the duplicate
+# multiplicity. In production old assignments are CACHED (the
+# assignment pass here re-derives them only so the oracle can replay
+# the rule end-to-end; the docstring contract is that old cell ids are
+# a stored column at 100 TB).
+# ---------------------------------------------------------------------------
+
+_INC_TARGET = 200  # target cell size (a0001's rule, applied to the OLD corpus)
+_INC_CAP = 200  # salted per-cell cap
+
+
+@query(
+    "a0003_semdedup_incremental",
+    oracle=f"""
+    WITH base AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+             CASE WHEN vec_id % 5 = 3 THEN 1 ELSE 0 END AS is_new
+      FROM embeddings),
+    x AS (
+      SELECT vec_id, v, is_new FROM base
+      UNION ALL
+      SELECT vec_id + 100000, list_transform(v, e -> e * 1.01), 1
+      FROM base WHERE vec_id < {_SD_PLANT}),
+    old_n AS (SELECT COUNT(*) AS n,
+                     CAST(CEIL(COUNT(*) / {_INC_TARGET}.0) AS BIGINT) AS k
+              FROM base WHERE is_new = 0),
+    st AS (SELECT CAST(CEIL(n / (k * 1.0)) AS BIGINT) AS step FROM old_n),
+    seeds AS (SELECT vec_id AS sid, v AS sv
+              FROM base, st WHERE is_new = 0 AND vec_id % step = 0),
+    dist AS (
+      SELECT x.vec_id, s.sid,
+             ROUND(SUM((x.v[r.dim] - s.sv[r.dim]) * (x.v[r.dim] - s.sv[r.dim])), 9) AS d2
+      FROM x CROSS JOIN range(1, {_DIMS + 1}) r(dim) CROSS JOIN seeds s
+      GROUP BY x.vec_id, s.sid),
+    best AS (
+      SELECT vec_id, sid AS cluster,
+             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, sid) AS rn
+      FROM dist),
+    assign AS (
+      SELECT x.vec_id, x.v, x.is_new, b.cluster
+      FROM x JOIN best b ON b.vec_id = x.vec_id AND b.rn = 1),
+    sal AS (
+      SELECT vec_id, v, is_new, cluster,
+             CAST(FLOOR((ROW_NUMBER() OVER (
+               PARTITION BY cluster
+               ORDER BY md5(CAST(cluster AS VARCHAR) || CAST(vec_id AS VARCHAR)),
+                        vec_id) - 1) / {_INC_CAP}) AS BIGINT) AS salt
+      FROM assign),
+    p AS (
+      SELECT a.vec_id AS removed_id, b.vec_id AS cand_id, b.is_new AS cand_new,
+             ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                                ORDER BY b.is_new, b.vec_id) AS rk
+      FROM sal a JOIN sal b
+        ON a.cluster = b.cluster AND a.salt = b.salt
+       AND a.is_new = 1
+       AND (b.is_new < a.is_new OR (b.is_new = a.is_new AND b.vec_id < a.vec_id))
+      WHERE ROUND(
+        list_reduce(list_transform(range(1, {_DIMS + 1}), i -> a.v[i] * b.v[i]), (s, t) -> s + t)
+        / (sqrt(list_reduce(list_transform(range(1, {_DIMS + 1}), i -> a.v[i] * a.v[i]), (s, t) -> s + t))
+           * sqrt(list_reduce(list_transform(range(1, {_DIMS + 1}), i -> b.v[i] * b.v[i]), (s, t) -> s + t))), 9)
+        >= {_SD_THR})
+    SELECT removed_id, cand_id AS kept_id,
+           CAST(1 - cand_new AS BIGINT) AS kept_is_old
+    FROM p WHERE rk = 1 ORDER BY removed_id
+    """,
+    description=f"INCREMENTAL SemDeDup (q108's bucket-probe idiom in embedding space): the codebook is stride-seeded from the OLD corpus only, the growth batch (20% natural + planted 1.01-rescaled copies) assigns into the EXISTING cells, and pair work is new x cell-members with priority (is_new, vec_id) — old keeps always win, removed new vectors report their kept occupant and whether it is old; the salted per-cell cap (rank by md5(cell||id), shard at {_INC_CAP}) bounds every task at cap^2 under any duplicate multiplicity — corpus growth costs n_new * cell, never cell^2",
+)
+def a0003_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.select(
+        "vec_id",
+        SIM.as_double("embedding").alias("v"),
+        F.when(F.col("vec_id") % 5 == 3, 1).otherwise(0).alias("is_new"),
+    )
+    # codebook from the OLD corpus only — the cells predate the growth
+    # batch (bounded driver collect; at 100 TB use a0023's two-level
+    # build in this module, whose driver traffic is O(sqrt N))
+    old = base.filter(F.col("is_new") == 0)
+    n_old = old.count()
+    k = -(-n_old // _INC_TARGET)
+    step = -(-n_old // k)
+    seed_rows = old.filter(F.col("vec_id") % step == 0).orderBy("vec_id").collect()
+    sids = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
+    cmat = np.array([r["v"] for r in seed_rows], dtype=np.float64)
+
+    planted = base.filter(F.col("vec_id") < _SD_PLANT).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.transform("v", lambda e: e * F.lit(1.01)).alias("v"),
+        F.lit(1).alias("is_new"),
+    )
+    x = base.unionAll(planted)
+
+    c2 = (cmat * cmat).sum(axis=1)[None, :]
+
+    def assign_batches(it):
+        # nearest old-corpus seed, BLAS expansion form (a0001's kernel):
+        # round-9 absorbs reassociation; ties break to the lowest seed id
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            x2 = (xm * xm).sum(axis=1, keepdims=True)
+            acc = x2 - 2.0 * (xm @ cmat.T) + c2
+            cl = sids[np.argmin(np.round(acc, 9), axis=1)]
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "cluster": cl, "v": pdf["v"], "is_new": pdf["is_new"]}
+            )
+
+    assign = x.mapInPandas(
+        assign_batches, "vec_id long, cluster long, v array<double>, is_new int"
+    )
+    wc = Window.partitionBy("cluster").orderBy(
+        F.md5(F.concat(F.col("cluster").cast("string"), F.col("vec_id").cast("string"))),
+        "vec_id",
+    )
+    salted = assign.withColumn(
+        "salt", F.floor((F.row_number().over(wc) - 1) / _INC_CAP).cast("long")
+    )
+
+    thr = _SD_THR
+
+    def probe_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        # new x cell-members matmul (n_new rows against ALL members in
+        # priority order) — the incremental cost shape; float64 so
+        # round(cos, 9) agrees with the SQL oracle
+        pdf = pdf.sort_values(["is_new", "vec_id"]).reset_index(drop=True)
+        newsel = pdf["is_new"].to_numpy() == 1
+        if not newsel.any():
+            return pd.DataFrame({"removed_id": [], "kept_id": [], "kept_is_old": []}).astype(
+                {"removed_id": "int64", "kept_id": "int64", "kept_is_old": "int64"}
+            )
+        xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+        norms = np.linalg.norm(xm, axis=1)
+        norms[norms == 0.0] = 1.0
+        ids = pdf["vec_id"].to_numpy()
+        isnew = pdf["is_new"].to_numpy()
+        new_idx = np.nonzero(newsel)[0]
+        # dot first, divide after — the exact float order of the a0001
+        # kernel and the oracle's sum/(sqrt*sqrt), so round-9 agrees
+        cos = np.round(
+            (xm[new_idx] @ xm.T) / np.outer(norms[new_idx], norms), 9
+        )
+        out = []
+        for row, ia in enumerate(new_idx):
+            if ia == 0:
+                continue
+            hits = np.nonzero(cos[row, :ia] >= thr)[0]
+            if len(hits):
+                j = hits[0]  # min (is_new, vec_id) == first in sorted order
+                out.append((int(ids[ia]), int(ids[j]), int(1 - isnew[j])))
+        return pd.DataFrame(out, columns=["removed_id", "kept_id", "kept_is_old"]).astype(
+            {"removed_id": "int64", "kept_id": "int64", "kept_is_old": "int64"}
+        )
+
+    return (
+        salted.groupBy("cluster", "salt")
+        .applyInPandas(probe_pairs, "removed_id long, kept_id long, kept_is_old long")
+        .orderBy("removed_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0018 — Johnson-Lindenstrauss sign-projection audit (Achlioptas 2003:
+# database-friendly +-1 projections): embeddings project 64 -> 16 dims
+# through a DETERMINISTIC md5-derived sign matrix (both engines derive
+# the identical matrix), y = S^T x / sqrt(16), and the audit reports
+# the norm-preservation ratio ||y||/||x|| histogram (0.1-wide buckets)
+# — the cheap-ANN pre-filter tier: candidate generation in 16 dims at
+# 1/4 the FLOPs, exact re-rank in 64. Spark side is ONE Arrow
+# mapInPandas batch kernel (numpy matmul, the a0001 BLAS idiom); the
+# sign matrix is a 64x16 constant, never a data-sized frame.
+# Scale rule (100 TB): embarrassingly parallel scan; k=16 is the
+# recall/FLOPs knob; the bucket rollup is ~10 rows.
+# ---------------------------------------------------------------------------
+
+_JL_IN, _JL_OUT = 64, 16
+
+
+def _jl_sign(i: int, j: int) -> int:
+    """+-1 from md5('jl_i_j') parity — hashlib here, md5() in SQL."""
+
+    h = hashlib.md5(f"jl_{i}_{j}".encode()).hexdigest()[:4]
+    return 1 if int(h, 16) % 2 == 0 else -1
+
+
+@query(
+    "a0018_jl_projection_audit",
+    oracle=f"""
+    WITH x AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    sm AS (
+      SELECT i, j,
+             CASE WHEN CAST(CONCAT('0x', substr(md5('jl_' || i || '_' || j), 1, 4))
+                       AS BIGINT) % 2 = 0 THEN 1 ELSE -1 END AS s
+      FROM range(1, {_JL_IN + 1}) r1(i) CROSS JOIN range(1, {_JL_OUT + 1}) r2(j)),
+    comp AS (
+      SELECT x.vec_id, r.dim AS i, x.v[r.dim] AS xv
+      FROM x CROSS JOIN range(1, {_JL_IN + 1}) r(dim)),
+    y AS (
+      SELECT comp.vec_id, sm.j, SUM(comp.xv * sm.s) / 4.0 AS yj
+      FROM comp JOIN sm ON sm.i = comp.i GROUP BY comp.vec_id, sm.j),
+    ny AS (SELECT vec_id, sqrt(SUM(yj * yj)) AS ny FROM y GROUP BY vec_id),
+    nx AS (
+      SELECT vec_id,
+             sqrt(list_reduce(list_transform(v, e -> e * e), (a, b) -> a + b)) AS nx
+      FROM x),
+    r AS (
+      SELECT ROUND(ny.ny / nx.nx, 9) AS ratio
+      FROM ny JOIN nx ON nx.vec_id = ny.vec_id WHERE nx.nx > 0)
+    SELECT CAST(FLOOR(ratio * 10) AS BIGINT) AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           ROUND(AVG(ratio), 6) AS avg_ratio
+    FROM r GROUP BY 1 ORDER BY bucket
+    """,
+    description=f"Johnson-Lindenstrauss sign-projection audit (Achlioptas 2003): embeddings project {_JL_IN}->{_JL_OUT} dims through a deterministic md5-derived +-1 matrix (y = S^T x / sqrt({_JL_OUT}), both engines derive the identical matrix), reporting the norm-preservation ratio ||y||/||x|| histogram in 0.1 buckets — the cheap-ANN pre-filter tier (candidates in {_JL_OUT} dims, exact re-rank in {_JL_IN}); Spark side is one Arrow mapInPandas numpy-matmul kernel, the sign matrix a 64x16 constant",
+)
+def a0018_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    S = np.array(
+        [[_jl_sign(i, j) for j in range(1, _JL_OUT + 1)] for i in range(1, _JL_IN + 1)],
+        dtype=np.float64,
+    )
+    emb = load_table(spark, sf_dir, "embeddings").select("embedding")
+
+    def kernel(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            X = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+            Y = X @ S / 4.0
+            nx = np.sqrt((X * X).sum(axis=1))
+            ny = np.sqrt((Y * Y).sum(axis=1))
+            m = nx > 0
+            yield pd.DataFrame({"ratio": np.round(ny[m] / nx[m], 9)})
+
+    r = emb.mapInPandas(kernel, "ratio double")
+    return (
+        r.groupBy(F.floor(F.col("ratio") * 10).cast("long").alias("bucket"))
+        .agg(
+            F.count("*").cast("long").alias("n_vecs"),
+            F.round(F.avg("ratio"), 6).alias("avg_ratio"),
+        )
+        .orderBy("bucket")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0023 — two-level codebook build (sampled coarse + per-cell refine).
+#
+# WHY: every SemDeDup-family query so far (a0001 auto-k, a0003
+# incremental, the streaming ingest loop) bootstraps its codebook with
+# a DRIVER COLLECT of ~N/target seed vectors — bounded at every bench
+# SF, but the one stage of the family that does not scale to 100 TB
+# (N/200 seeds at N = 1e11 is 5e8 vectors on the driver). The two-level
+# build caps driver traffic at the LEVEL-1 seed set only:
+#
+#   level 1  k1 = ceil(sqrt(N / T2)) stride seeds  -> the ONLY collect,
+#            O(sqrt(N)) rows (1e11 vectors, T2=64 -> ~40k seeds);
+#   assign 1 every vector to its nearest L1 seed — one Arrow BLAS scan
+#            against the broadcast-sized L1 matrix (the a0001 kernel);
+#   level 2  per-L1-cell stride refine: rank members by vec_id inside
+#            the cell, keep every ceil(cell_n/T2)-th — a window + filter
+#            that stays DISTRIBUTED (the seeds never leave executors);
+#   assign 2 members meet ONLY their own cell's L2 seeds (role-tagged
+#            union + one grouped kernel per cell — the equi-join-on-cell
+#            shape every family member uses), nearest by round-9 d2.
+#
+# The output audits the build: fine-cell occupancy + mean squared
+# distance per (l1, l2) cell, bounded at ~N/T2 rows of which the demo
+# keeps all (sf0.01: ~30). Determinism: stride rules on dense vec_id,
+# round-9 distances before every argmin, ties to the lowest seed id —
+# both engines replay the identical codebook, so the driver value-hash
+# pins the BUILD, not just the stats.
+# Scale rule (100 TB): T2 is the cell-size knob (k1 tracks sqrt(N/T2));
+# a viral L1 cell bounds its kernel by the same salted cap the family
+# uses (not needed at stride-seeded uniformity — stride cells are
+# +-1 seed of uniform by construction).
+# ---------------------------------------------------------------------------
+
+_CB2_T2 = 64  # target fine-cell size (both levels derive from it)
+
+
+@query(
+    "a0023_semdedup_twolevel_codebook",
+    oracle=f"""
+    WITH x AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    n AS (SELECT COUNT(*) AS n FROM x),
+    k1 AS (SELECT CAST(CEIL(SQRT(n / {_CB2_T2}.0)) AS BIGINT) AS k FROM n),
+    st1 AS (SELECT CAST(CEIL(n.n * 1.0 / k1.k) AS BIGINT) AS step FROM n, k1),
+    s1 AS (SELECT vec_id AS sid, v AS sv FROM x, st1 WHERE vec_id % st1.step = 0),
+    d1 AS (
+      SELECT x.vec_id, s1.sid,
+             ROUND(list_reduce(list_transform(range(1, {_DIMS + 1}),
+               i -> (x.v[i] - s1.sv[i]) * (x.v[i] - s1.sv[i])), (a, b) -> a + b), 9) AS d2
+      FROM x CROSS JOIN s1),
+    a1 AS (
+      SELECT vec_id, sid AS l1,
+             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, sid) AS rn
+      FROM d1),
+    m AS (SELECT x.vec_id, x.v, a1.l1
+          FROM x JOIN a1 ON a1.vec_id = x.vec_id AND a1.rn = 1),
+    r AS (SELECT vec_id, v, l1,
+                 ROW_NUMBER() OVER (PARTITION BY l1 ORDER BY vec_id) AS r,
+                 COUNT(*) OVER (PARTITION BY l1) AS cn
+          FROM m),
+    s2 AS (SELECT l1, vec_id AS sid2, v AS sv
+           FROM r WHERE (r - 1) % CAST(CEIL(cn * 1.0 / {_CB2_T2}) AS BIGINT) = 0),
+    d2t AS (
+      SELECT m.vec_id, s2.sid2,
+             ROUND(list_reduce(list_transform(range(1, {_DIMS + 1}),
+               i -> (m.v[i] - s2.sv[i]) * (m.v[i] - s2.sv[i])), (a, b) -> a + b), 9) AS d2
+      FROM m JOIN s2 ON s2.l1 = m.l1),
+    a2 AS (
+      SELECT vec_id, sid2, d2,
+             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, sid2) AS rn
+      FROM d2t),
+    f AS (SELECT m.l1, a2.sid2 AS l2, a2.d2
+          FROM m JOIN a2 ON a2.vec_id = m.vec_id AND a2.rn = 1)
+    SELECT l1 AS l1_seed, l2 AS l2_seed,
+           CAST(COUNT(*) AS BIGINT) AS n_members,
+           ROUND(AVG(d2), 6) AS avg_d2
+    FROM f GROUP BY l1, l2 ORDER BY l1_seed, l2_seed
+    """,
+    description=f"two-level SemDeDup/IVF codebook build (sampled coarse + per-cell refine — the 100 TB codebook rule of a0001/a0003/the streaming ingest, as code): level-1 = ceil(sqrt(N/{_CB2_T2})) stride seeds (the ONLY driver collect, O(sqrt N)); every vector BLAS-assigns to its nearest L1 seed; level-2 seeds are a per-cell vec_id-rank stride (every ceil(cell_n/{_CB2_T2})-th member) that never leaves the executors; members meet only their own cell's L2 seeds via a role-tagged grouped kernel; output = fine-cell occupancy + round-6 mean squared distance per (l1, l2) — round-9 distances and lowest-seed-id ties make both engines replay the identical codebook",
+)
+def a0023_semdedup_twolevel_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    x = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", SIM.as_double("embedding").alias("v")
+    )
+    n = x.count()
+    k1 = math.ceil(math.sqrt(n / float(_CB2_T2)))
+    step1 = -(-n // k1)
+    # THE only driver collect of the build: the level-1 seed set,
+    # O(sqrt(N/T2)) rows (a0001/a0003 collect N/target — this is the
+    # scale fix their docstrings point to)
+    seed_rows = x.filter(F.col("vec_id") % step1 == 0).orderBy("vec_id").collect()
+    sids = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
+    cmat = np.array([r["v"] for r in seed_rows], dtype=np.float64)
+    c2 = (cmat * cmat).sum(axis=1)[None, :]
+
+    def assign1(it):
+        # nearest L1 seed, BLAS expansion form (the a0001 kernel):
+        # round-9 absorbs reassociation; ties to the lowest seed id
+        for pdf in it:
+            if not len(pdf):
+                continue
+            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            x2 = (xm * xm).sum(axis=1, keepdims=True)
+            acc = x2 - 2.0 * (xm @ cmat.T) + c2
+            cl = sids[np.argmin(np.round(acc, 9), axis=1)]
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "l1": cl, "v": pdf["v"]})
+
+    m = x.mapInPandas(assign1, "vec_id long, l1 long, v array<double>")
+    wr = Window.partitionBy("l1").orderBy("vec_id")
+    wn = Window.partitionBy("l1")
+    ranked = m.select(
+        "vec_id", "l1", "v",
+        F.row_number().over(wr).alias("r"),
+        F.count("*").over(wn).alias("cn"),
+    )
+    step2 = F.ceil(F.col("cn") * 1.0 / _CB2_T2).cast("long")
+    # level-2 seeds: distributed stride inside each cell — NO collect
+    seeds2 = ranked.filter((F.col("r") - 1) % step2 == 0).select(
+        "l1", "vec_id", "v", F.lit(1).alias("role")
+    )
+    members = ranked.select("l1", "vec_id", "v", F.lit(0).alias("role"))
+    # role-tagged union (the union-shaped lineage that avoids an
+    # ambiguous self-join) + ONE grouped kernel per L1 cell: members
+    # meet only their own cell's seeds
+    tagged = members.unionByName(seeds2)
+
+    def refine(pdf: pd.DataFrame) -> pd.DataFrame:
+        t = pdf[pdf["role"] == 1].sort_values("vec_id")
+        p = pdf[pdf["role"] == 0]
+        if not len(t) or not len(p):
+            return pd.DataFrame({"l1": [], "l2": [], "d2": []}).astype(
+                {"l1": "int64", "l2": "int64", "d2": "float64"}
+            )
+        sm = np.vstack(t["v"].to_numpy()).astype(np.float64)
+        s2v = (sm * sm).sum(axis=1)[None, :]
+        xm = np.vstack(p["v"].to_numpy()).astype(np.float64)
+        x2 = (xm * xm).sum(axis=1, keepdims=True)
+        acc = np.round(x2 - 2.0 * (xm @ sm.T) + s2v, 9)
+        am = np.argmin(acc, axis=1)  # first occurrence = lowest sid2
+        return pd.DataFrame(
+            {
+                "l1": p["l1"].to_numpy(),
+                "l2": t["vec_id"].to_numpy()[am],
+                "d2": acc[np.arange(len(am)), am],
+            }
+        )
+
+    fine = tagged.groupBy("l1").applyInPandas(refine, "l1 long, l2 long, d2 double")
+    return (
+        fine.groupBy(F.col("l1").alias("l1_seed"), F.col("l2").alias("l2_seed"))
+        .agg(
+            F.count("*").cast("long").alias("n_members"),
+            F.round(F.avg("d2"), 6).alias("avg_d2"),
+        )
+        .orderBy("l1_seed", "l2_seed")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0024 — reciprocal-rank fusion of lexical (BM25) and dense (cosine)
+# retrieval (Cormack, Clarke & Buettcher, SIGIR 2009): the standard
+# hybrid-search combiner, score(d) = sum over lists of 1/(K + rank_d).
+# The lexical list is a0165's Okapi BM25 ranking (k1=1.2, b=0.75,
+# Lucene idf) for the same fixed 3-term query; the dense list is
+# corpus-wide cosine to a fixed query document's embedding (the
+# embeddings table is doc-aligned: vec_id == doc_id). Both lists are
+# truncated to depth L before fusion — RRF is rank-only, so the two
+# scores never need calibrating against each other (that robustness is
+# the paper's point).
+#
+# Scale shape: BM25 side is posting-list shaped (explode filtered to 3
+# terms immediately); dense side is one corpus scan against a single
+# broadcast query vector; each list's rank is a TOP-L TakeOrdered
+# (never a global sort), and the fusion is an L-bounded full outer
+# join. Determinism: ranks are assigned over 6-dp (lexical) / 9-dp
+# (dense) rounded scores with doc_id ties, so both engines replay the
+# identical permutation.
+# Scale rule (100 TB): depth L and the query workload are resolution
+# constants; the corpus-proportional stages are one token scan and one
+# embedding scan. The batched-workload form is a0168 (lexical) x q118
+# (dense) feeding the same fusion join.
+# ---------------------------------------------------------------------------
+
+_RRF_TERMS = ["hash", "join", "vector"]
+_RRF_K1, _RRF_B = 1.2, 0.75
+_RRF_QVEC = 42  # query document (vec_id == doc_id in the synthetic corpus)
+_RRF_K = 60  # the paper's constant
+_RRF_DEPTH = 50
+_RRF_TOP = 15
+
+
+@query(
+    "a0024_rrf_fusion",
+    oracle=f"""
+    WITH base AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    stats AS (SELECT COUNT(*) AS n_docs, AVG(len(toks)) AS avgdl FROM base),
+    dl AS (SELECT doc_id, len(toks) AS dl FROM base),
+    tf AS (SELECT doc_id, term, COUNT(*) AS tf
+           FROM (SELECT doc_id, unnest(toks) AS term FROM base)
+           WHERE term IN ({", ".join(f"'{t}'" for t in _RRF_TERMS)})
+           GROUP BY doc_id, term),
+    df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+    lex AS (SELECT tf.doc_id, ROUND(SUM(
+              ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
+              * (tf.tf * ({_RRF_K1} + 1))
+              / (tf.tf + {_RRF_K1} * (1 - {_RRF_B} + {_RRF_B} * dl.dl / stats.avgdl))), 6) AS bm25
+            FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN stats
+            GROUP BY tf.doc_id),
+    lexrk AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS r
+              FROM lex),
+    qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings
+           WHERE vec_id = {_RRF_QVEC}),
+    dense AS (SELECT e.vec_id AS doc_id,
+                     ROUND({_DOT_VQ} / ({_NORM_V} * {_NORM_Q}), 9) AS cos
+              FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+                    FROM embeddings WHERE vec_id <> {_RRF_QVEC}) e
+              CROSS JOIN qv),
+    denrk AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY cos DESC, doc_id) AS r
+              FROM dense),
+    l AS (SELECT doc_id, r FROM lexrk WHERE r <= {_RRF_DEPTH}),
+    d AS (SELECT doc_id, r FROM denrk WHERE r <= {_RRF_DEPTH}),
+    fused AS (
+      SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id,
+             COALESCE(l.r, 0) AS lex_rank, COALESCE(d.r, 0) AS dense_rank,
+             ROUND(COALESCE(1.0 / ({_RRF_K} + l.r), 0)
+                   + COALESCE(1.0 / ({_RRF_K} + d.r), 0), 9) AS rrf
+      FROM l FULL OUTER JOIN d ON d.doc_id = l.doc_id)
+    SELECT doc_id, CAST(lex_rank AS BIGINT) AS lex_rank,
+           CAST(dense_rank AS BIGINT) AS dense_rank,
+           ROUND(rrf, 6) AS rrf_score
+    FROM fused ORDER BY rrf DESC, doc_id LIMIT {_RRF_TOP}
+    """,
+    description=f"reciprocal-rank fusion of BM25 lexical and cosine dense retrieval (Cormack-Clarke-Buettcher SIGIR 2009, K={_RRF_K}): a0165's Okapi BM25 ranking for a fixed 3-term query fused with corpus-wide cosine to a fixed query document's embedding (vec_id==doc_id alignment), both lists truncated to depth {_RRF_DEPTH}, score = sum 1/(K+rank) over an L-bounded full outer join — rank-only fusion never calibrates the two score scales (the paper's robustness claim); posting-list lexical side + one-broadcast-vector dense scan + TakeOrdered ranks keep every stage scale-safe; ranks assigned over rounded scores with doc_id ties so both engines replay the identical permutation",
+)
+def a0024_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", X.tokens("text").alias("toks"))
+    stats = base.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
+    )
+    dl = base.select("doc_id", F.size("toks").alias("dl"))
+    tf = (
+        base.select("doc_id", F.explode("toks").alias("term"))
+        .filter(F.col("term").isin(_RRF_TERMS))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+    denom = F.col("tf") + _RRF_K1 * (1 - _RRF_B + _RRF_B * F.col("dl") / F.col("avgdl"))
+    lex = (
+        tf.join(dl, "doc_id")
+        .join(F.broadcast(df_), "term")
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", (idf * (F.col("tf") * (_RRF_K1 + 1)) / denom).alias("c"))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum("c"), 6).alias("bm25"))
+    )
+    # TakeOrderedAndProject truncation FIRST (top-DEPTH, never a global
+    # sort of the per-doc frame), then rank assignment over the
+    # DEPTH-row frame — the a0013 window discipline
+    lexrk = (
+        lex.orderBy(F.desc("bm25"), "doc_id")
+        .limit(_RRF_DEPTH)
+        .select(
+            "doc_id",
+            F.row_number().over(Window.orderBy(F.desc("bm25"), "doc_id")).alias("r"),
+        )
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", SIM.as_double("embedding").alias("v")
+    )
+    qv = emb.filter(F.col("vec_id") == _RRF_QVEC).select(F.col("v").alias("q"))
+    dense = (
+        emb.filter(F.col("vec_id") != _RRF_QVEC)
+        .crossJoin(F.broadcast(qv))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            F.round(SIM.cosine(F.col("v"), F.col("q")), 9).alias("cos"),
+        )
+    )
+    denrk = (
+        dense.orderBy(F.desc("cos"), "doc_id")
+        .limit(_RRF_DEPTH)
+        .select(
+            "doc_id",
+            F.row_number().over(Window.orderBy(F.desc("cos"), "doc_id")).alias("r"),
+        )
+    )
+
+    fused = (
+        lexrk.withColumnRenamed("r", "lr")
+        .join(denrk.withColumnRenamed("r", "dr"), "doc_id", "full_outer")
+        .select(
+            "doc_id",
+            F.coalesce("lr", F.lit(0)).alias("lex_rank"),
+            F.coalesce("dr", F.lit(0)).alias("dense_rank"),
+            F.round(
+                F.coalesce(1.0 / (_RRF_K + F.col("lr")), F.lit(0.0))
+                + F.coalesce(1.0 / (_RRF_K + F.col("dr")), F.lit(0.0)),
+                9,
+            ).alias("rrf"),
+        )
+    )
+    return (
+        fused.orderBy(F.desc("rrf"), "doc_id")
+        .limit(_RRF_TOP)
+        .select(
+            "doc_id",
+            F.col("lex_rank").cast("long").alias("lex_rank"),
+            F.col("dense_rank").cast("long").alias("dense_rank"),
+            F.round("rrf", 6).alias("rrf_score"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0025 — Matryoshka-truncation recall audit (Kusupati et al., NeurIPS
+# 2022): how much ANN quality survives when the 64-d embedding is
+# truncated to its first p dims (the MRL trick that cuts index size and
+# distance FLOPs by 64/p at serving time). For a deterministic bounded
+# query set, top-10 by squared L2 over the p-dim prefix is compared to
+# the full-width top-10; recall@10 per prefix width is the shipping
+# decision number.
+#
+# Scale shape: the query workload is bounded (vec_id % 73 == 0 below a
+# fixed vec_id ceiling, so it does NOT grow with the corpus) and
+# broadcast; each (query, prefix) candidate list is a per-partition
+# TopK over ONE corpus scan (the prefix widths ride the same scan via a
+# posexploded constant array — no re-read per width). Distances are
+# 9-dp-rounded before ranking with vec_id ties, so both engines pick
+# identical neighbor sets. Production path at 100 TB: the p-dim prefix
+# feeds the IVF ladder (q96/a0164) — this audit prices that switch.
+# ---------------------------------------------------------------------------
+
+_MRL_PREFIXES = [8, 16, 32, 64]
+_MRL_QMOD = 73
+_MRL_QCAP = 4096  # workload ceiling: the query set must NOT grow with the corpus
+_MRL_TOPK = 10
+
+
+def _mrl_d2_sql(p: int) -> str:
+    return (
+        f"ROUND(list_reduce(list_transform(range(1, {p + 1}),"
+        " i -> (v[i] - q[i]) * (v[i] - q[i])), (a, b) -> a + b), 9)"
+    )
+
+
+@query(
+    "a0025_matryoshka_recall",
+    oracle=f"""
+    WITH x AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    qs AS (SELECT vec_id AS qid, v AS q FROM x
+           WHERE vec_id % {_MRL_QMOD} = 0 AND vec_id < {_MRL_QCAP}),
+    pd AS (SELECT qs.qid, x.vec_id, p.p,
+                  CASE {" ".join(f"WHEN p.p = {p} THEN {_mrl_d2_sql(p)}" for p in _MRL_PREFIXES)}
+                  END AS d2
+           FROM x JOIN qs ON x.vec_id <> qs.qid
+           CROSS JOIN (SELECT unnest([{", ".join(str(p) for p in _MRL_PREFIXES)}]) AS p) p),
+    rk AS (SELECT qid, vec_id, p,
+                  ROW_NUMBER() OVER (PARTITION BY qid, p ORDER BY d2, vec_id) AS r
+           FROM pd),
+    top AS (SELECT qid, vec_id, p FROM rk WHERE r <= {_MRL_TOPK}),
+    truth AS (SELECT qid, vec_id FROM top WHERE p = {_DIMS}),
+    hits AS (SELECT t.p, t.qid, COUNT(*) AS h
+             FROM top t JOIN truth USING (qid, vec_id)
+             GROUP BY t.p, t.qid)
+    SELECT CAST(p AS BIGINT) AS prefix_dims,
+           ROUND(AVG(h * 1.0 / {_MRL_TOPK}), 6) AS avg_recall10,
+           CAST(COUNT(*) AS BIGINT) AS n_queries
+    FROM hits GROUP BY p ORDER BY prefix_dims
+    """,
+    description=f"Matryoshka-truncation recall audit (Kusupati et al. NeurIPS 2022): top-{_MRL_TOPK} by squared L2 over the first p of {_DIMS} embedding dims (p in {_MRL_PREFIXES}) vs the full-width ground truth, recall@{_MRL_TOPK} averaged over a bounded deterministic query set (vec_id % {_MRL_QMOD} = 0 AND vec_id < {_MRL_QCAP} — the ceiling keeps the workload scale-invariant) — the number that prices truncating an index to 1/8 the FLOPs; one corpus scan carries all prefix widths via a posexploded constant array, queries broadcast, 9-dp-rounded distances with vec_id ties make both engines pick identical neighbor sets",
+)
+def a0025_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    x = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", SIM.as_double("embedding").alias("v")
+    )
+    qs = x.filter(
+        (F.col("vec_id") % _MRL_QMOD == 0) & (F.col("vec_id") < _MRL_QCAP)
+    ).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("q")
+    )
+    pref = F.array([F.lit(p) for p in _MRL_PREFIXES])
+
+    def d2_prefix(p: int):
+        return F.round(
+            F.aggregate(
+                F.zip_with(
+                    F.slice("v", 1, p), F.slice("q", 1, p), lambda a, b: (a - b) * (a - b)
+                ),
+                F.lit(0.0),
+                lambda acc, z: acc + z,
+            ),
+            9,
+        )
+
+    d2 = F.lit(None).cast("double")
+    for p in _MRL_PREFIXES:
+        d2 = F.when(F.col("p") == p, d2_prefix(p)).otherwise(d2)
+    pd_ = (
+        x.join(F.broadcast(qs), F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", F.explode(pref).alias("p"), "v", "q")
+        .select("qid", "vec_id", "p", d2.alias("d2"))
+    )
+    w = Window.partitionBy("qid", "p").orderBy("d2", "vec_id")
+    top = pd_.select("qid", "vec_id", "p", F.row_number().over(w).alias("r")).filter(
+        F.col("r") <= _MRL_TOPK
+    )
+    truth = top.filter(F.col("p") == _DIMS).select("qid", "vec_id")
+    hits = top.join(truth, ["qid", "vec_id"]).groupBy("p", "qid").agg(
+        F.count(F.lit(1)).alias("h")
+    )
+    return (
+        hits.groupBy(F.col("p").cast("long").alias("prefix_dims"))
+        .agg(
+            F.round(F.avg(F.col("h") * 1.0 / _MRL_TOPK), 6).alias("avg_recall10"),
+            F.count(F.lit(1)).cast("long").alias("n_queries"),
+        )
+        .orderBy("prefix_dims")
+    )
+
+
+# ---------------------------------------------------------------------------
+# a0039 — maximal marginal relevance re-ranking (Carbonell & Goldstein,
+# SIGIR 1998): the diversified top-k every RAG retrieval layer ships —
+# greedily pick argmax of lambda*rel(d) - (1-lambda)*max_{s in S}
+# sim(d, s), so near-duplicate hits can't crowd the context window.
+# The corpus-proportional stage is ONE embedding scan scoring cosine
+# relevance against a single broadcast query vector (a0024's dense
+# side); the greedy runs over the TakeOrdered top-L candidate pool — an
+# L-bounded frame (L=30) whose pairwise-similarity matrix and selection
+# loop are resolution constants, executed driver-side over the bounded
+# collect (the a0089 bounded-collect discipline) with fold-order dot
+# products and half-up rounding that replay DuckDB's list_reduce +
+# ROUND bit-for-bit.
+# Scale rule (100 TB): L and k are resolution constants; the corpus
+# stage is embarrassingly parallel and the pool collect is L rows
+# regardless of corpus size. Batched query workloads reuse q118's
+# batch-ANN join for the relevance stage.
+# ---------------------------------------------------------------------------
+
+_MMR_QVEC = 7
+_MMR_L = 30
+_MMR_K = 8
+_MMR_LAM = 0.7
+
+_MMR_DIMS = 64
+_MMR_DOT = (
+    f"list_reduce(list_transform(range(1, {_MMR_DIMS + 1}), i -> a.v[i] * b.v[i]),"
+    " (x, y) -> x + y)"
+)
+_MMR_NA = (
+    f"sqrt(list_reduce(list_transform(range(1, {_MMR_DIMS + 1}), i -> a.v[i] * a.v[i]),"
+    " (x, y) -> x + y))"
+)
+_MMR_NB = (
+    f"sqrt(list_reduce(list_transform(range(1, {_MMR_DIMS + 1}), i -> b.v[i] * b.v[i]),"
+    " (x, y) -> x + y))"
+)
+_MMR_QDOT = (
+    f"list_reduce(list_transform(range(1, {_MMR_DIMS + 1}), i -> e.v[i] * qv.q[i]),"
+    " (x, y) -> x + y)"
+)
+_MMR_QNV = (
+    f"sqrt(list_reduce(list_transform(range(1, {_MMR_DIMS + 1}), i -> e.v[i] * e.v[i]),"
+    " (x, y) -> x + y))"
+)
+_MMR_QNQ = (
+    f"sqrt(list_reduce(list_transform(range(1, {_MMR_DIMS + 1}), i -> qv.q[i] * qv.q[i]),"
+    " (x, y) -> x + y))"
+)
+
+
+def _mmr_rounds_sql() -> str:
+    lam, mu = _MMR_LAM, round(1 - _MMR_LAM, 6)
+    parts = []
+    for r in range(2, _MMR_K + 1):
+        prev = f"sel{r - 1}"
+        parts.append(
+            f"""
+    c{r} AS MATERIALIZED (SELECT c.doc_id, ROUND({lam} * c.rel - {mu} * MAX(p.sim), 9) AS sc
+             FROM cand c JOIN pair p ON p.da = c.doc_id
+                         JOIN {prev} s ON s.doc_id = p.db
+             WHERE c.doc_id NOT IN (SELECT doc_id FROM {prev})
+             GROUP BY c.doc_id, c.rel),
+    pick{r} AS MATERIALIZED (SELECT doc_id, {r} AS rank, sc AS mmr FROM c{r}
+                ORDER BY sc DESC, doc_id LIMIT 1),
+    sel{r} AS MATERIALIZED (SELECT * FROM {prev} UNION ALL SELECT * FROM pick{r})"""
+        )
+    return ",".join(parts)
+
+
+@query(
+    "a0039_mmr_rerank",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    qv AS (SELECT v AS q FROM e WHERE vec_id = {_MMR_QVEC}),
+    rel AS MATERIALIZED (SELECT e.vec_id AS doc_id,
+                   ROUND({_MMR_QDOT} / ({_MMR_QNV} * {_MMR_QNQ}), 9) AS rel
+            FROM e CROSS JOIN qv WHERE e.vec_id <> {_MMR_QVEC}),
+    cand AS MATERIALIZED (SELECT doc_id, rel FROM
+             (SELECT doc_id, rel, ROW_NUMBER() OVER (ORDER BY rel DESC, doc_id) AS rn
+              FROM rel) x WHERE rn <= {_MMR_L}),
+    cv AS MATERIALIZED (SELECT c.doc_id, c.rel, e.v FROM cand c JOIN e ON e.vec_id = c.doc_id),
+    pair AS MATERIALIZED (SELECT a.doc_id AS da, b.doc_id AS db,
+                    ROUND({_MMR_DOT} / ({_MMR_NA} * {_MMR_NB}), 9) AS sim
+             FROM cv a JOIN cv b ON a.doc_id <> b.doc_id),
+    sel1 AS MATERIALIZED (SELECT doc_id, 1 AS rank, rel AS mmr FROM cand
+             ORDER BY rel DESC, doc_id LIMIT 1),
+    {_mmr_rounds_sql()}
+    SELECT CAST(s.rank AS BIGINT) AS rank, s.doc_id,
+           ROUND(c.rel, 6) AS relevance, ROUND(s.mmr, 6) AS mmr_score
+    FROM sel{_MMR_K} s JOIN cand c ON c.doc_id = s.doc_id
+    ORDER BY s.rank
+    """,
+    description=f"maximal marginal relevance re-ranking (Carbonell-Goldstein SIGIR 1998, lambda={_MMR_LAM}): greedy diversified top-{_MMR_K} from the TakeOrdered top-{_MMR_L} cosine candidate pool of a fixed query embedding — each round picks argmax of lambda*rel - (1-lambda)*max-sim-to-selected, so near-duplicates can't crowd a RAG context window; the corpus-proportional stage is ONE embedding scan against a broadcast query vector, the pool's pairwise-sim matrix and {_MMR_K}-round greedy are L-bounded resolution constants run over a bounded collect with fold-order dots + half-up rounding replaying DuckDB's list_reduce/ROUND bit-for-bit; 9-dp scores with doc_id ties make the selection order engine-identical",
+)
+def a0039_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", SIM.as_double("embedding").alias("v")
+    )
+    qv = emb.filter(F.col("vec_id") == _MMR_QVEC).select(F.col("v").alias("q"))
+    rel = (
+        emb.filter(F.col("vec_id") != _MMR_QVEC)
+        .crossJoin(F.broadcast(qv))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            F.round(SIM.cosine(F.col("v"), F.col("q")), 9).alias("rel"),
+            "v",
+        )
+    )
+    # TakeOrderedAndProject top-L (no window), vectors ride along: the
+    # ONLY driver materialization is this L-row bounded pool
+    pool = rel.orderBy(F.desc("rel"), "doc_id").limit(_MMR_L).collect()
+    cand = [(int(r["doc_id"]), float(r["rel"]), [float(x) for x in r["v"]]) for r in pool]
+
+    def _dot(a: list[float], b: list[float]) -> float:
+        # sequential left-to-right fold — DuckDB list_reduce order
+        s = 0.0
+        for x, y in zip(a, b):
+            s = s + x * y
+        return s
+
+    sims: dict[tuple[int, int], float] = {}
+    for i, (di, _, vi) in enumerate(cand):
+        for j, (dj, _, vj) in enumerate(cand):
+            if i != j:
+                sims[(di, dj)] = _round_half_up(
+                    _dot(vi, vj) / (math.sqrt(_dot(vi, vi)) * math.sqrt(_dot(vj, vj))), 9
+                )
+
+    lam, mu = _MMR_LAM, round(1 - _MMR_LAM, 6)
+    remaining = {d: r for d, r, _ in cand}
+    first = min(cand, key=lambda t: (-t[1], t[0]))
+    selected = [(first[0], 1, first[1])]
+    del remaining[first[0]]
+    for rank in range(2, _MMR_K + 1):
+        best = None
+        for d, r in remaining.items():
+            maxsim = max(sims[(d, s)] for s, _, _ in selected)
+            sc = _round_half_up(lam * r - mu * maxsim, 9)
+            if best is None or sc > best[1] or (sc == best[1] and d < best[0]):
+                best = (d, sc)
+        selected.append((best[0], rank, best[1]))
+        del remaining[best[0]]
+
+    rels = {d: r for d, r, _ in cand}
+    rows = [
+        (rank, d, _round_half_up(rels[d], 6), _round_half_up(mmr, 6))
+        for d, rank, mmr in selected
+    ]
+    return spark.createDataFrame(
+        rows, "rank long, doc_id long, relevance double, mmr_score double"
+    ).orderBy("rank")

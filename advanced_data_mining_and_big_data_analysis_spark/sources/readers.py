@@ -84,30 +84,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 16,
-    sort_col: str | None = None,
-    path: str | None = None,
-) -> None:
-    """Bucketed managed table (SURVEY §2.13 / 100 TB co-location).
-
-    Both sides of a recurring equi-join written with the same bucketing
-    (count + column) join WITHOUT a shuffle: the SortMergeJoin reads
-    bucket i of each table directly — the Exchange disappears from the
-    plan (asserted in tests/test_scale_patterns.py). This is THE lever
-    for repeated fact-fact joins at 100 TB; the write pays one shuffle
-    once, every downstream join rides it for free."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    if path:
-        writer = writer.option("path", path)  # external table
-    writer.saveAsTable(table)
-
-
 def write_csv_single(df: DataFrame, path: str, header: bool = True) -> None:
     """Single-file CSV sink (reference ``to_csv`` parity,
     kaggle/kaggle.py:859). ``coalesce(1)`` funnels through one task —

@@ -587,28 +587,6 @@ def write_dedup_ingest(
     return writer.start()
 
 
-def read_state_store(spark: SparkSession, checkpoint_dir: str, **options) -> DataFrame:
-    """Read a streaming query's STATE STORE as a batch DataFrame (Spark 4
-    `statestore` source) — the observability/debug surface for stateful
-    streams: inspect live aggregation state, audit watermark-driven
-    evictions, or bootstrap a migration without replaying the stream.
-    Rows are (key struct, value struct, partition_id); options pass
-    through (e.g. batchId=N for time travel to an earlier micro-batch,
-    operatorId / storeName for multi-operator queries)."""
-    reader = spark.read.format("statestore")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(checkpoint_dir)
-
-
-def read_state_metadata(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """The checkpoint's operator/state-store metadata (Spark 4
-    `state-metadata` source): operator ids/names, store names, partition
-    counts, and the committed batch-id range — what an ops runbook
-    checks before a stateful upgrade."""
-    return spark.read.format("state-metadata").load(checkpoint_dir)
-
-
 def streaming_drift_histogram(
     events: DataFrame,
     type_a: str = "view",
@@ -710,7 +688,7 @@ def write_semdedup_ingest(
     a corpus occupant from a probe.
 
     At 100 TB the codebook becomes the two-level structure a0023
-    implements as code (plans/round14.py — sqrt(N)-sized L1 driver
+    implements as code (plans/similarity.py — sqrt(N)-sized L1 driver
     collect, per-cell L2 refine that never leaves the executors; swap
     the bootstrap below for that build at scale), and the corpus store
     becomes a MERGE-capable

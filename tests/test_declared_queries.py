@@ -14,10 +14,32 @@ from advanced_data_mining_and_big_data_analysis_spark.testing import compare
 QUERIES = all_queries()
 
 
+@pytest.fixture(scope="module")
+def column_warnings(spark):
+    """A StringWriter fed by a log4j2 appender on Spark's ``Column`` logger,
+    which warns when a join condition compares one attribute with itself
+    (``'tau == tau'``): Spark then rewrites the predicate, so the result
+    hides the mistake."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    writer = spark._jvm.java.io.StringWriter()
+    layout = log4j.core.layout.PatternLayout.newBuilder().withPattern("%m%n").build()
+    appender = log4j.core.appender.WriterAppender.createAppender(layout, None, writer, "column-warnings", False, True)
+    appender.start()
+    logger = log4j.core.config.LoggerConfig("org.apache.spark.sql.Column", log4j.Level.WARN, True)
+    logger.addAppender(appender, None, None)
+    ctx.getConfiguration().addLogger("org.apache.spark.sql.Column", logger)
+    ctx.updateLoggers()
+    return writer
+
+
 @pytest.mark.parametrize("name", list(QUERIES))
-def test_query_matches_oracle(name, spark, sf_dir, duck):
+def test_query_matches_oracle(name, spark, sf_dir, duck, column_warnings):
     qd = QUERIES[name]
-    sdf = qd.fn(spark, sf_dir).toPandas()
+    seen = len(column_warnings.toString())
+    df = qd.fn(spark, sf_dir)
+    assert "trivially true equals predicate" not in column_warnings.toString()[seen:], name
+    sdf = df.toPandas()
     if qd.oracle is None:
         assert len(sdf) >= 0  # rows-only contract: must run and be stable
         return

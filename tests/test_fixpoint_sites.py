@@ -53,7 +53,7 @@ def line_dir(tmp_path_factory, sf_dir):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from advanced_data_mining_and_big_data_analysis_spark.plans.round12 import _DLH_H, _DLH_TAUS
+    from advanced_data_mining_and_big_data_analysis_spark.plans.mining import _DLH_H, _DLH_TAUS
 
     # one order per customer, so every customer sits at y = ln 2 and its
     # spend picks its x cell: _DLH_TAUS[0] customers in each of 24 cells
@@ -98,10 +98,10 @@ def test_multi_round_fixpoint_matches_oracle(name, data, table, spark, request, 
 @pytest.mark.parametrize(
     "module, const, name, data",
     [
-        ("round12", "_DLH_ROUNDS", "a0002_density_level_hierarchy", "line_dir"),
-        ("round13", "_KC_ROUNDS", "a0008_kcore_peeling", "strip_dir"),
-        ("round14c", "_KT_ROUNDS", "a0036_ktruss_edges", "strip_dir"),
-        ("round14d", "_MSF_ROUNDS", "a0043_boruvka_msf", "sf_dir"),
+        ("mining", "_DLH_ROUNDS", "a0002_density_level_hierarchy", "line_dir"),
+        ("graph", "_KC_ROUNDS", "a0008_kcore_peeling", "strip_dir"),
+        ("graph", "_KT_ROUNDS", "a0036_ktruss_edges", "strip_dir"),
+        ("graph", "_MSF_ROUNDS", "a0043_boruvka_msf", "sf_dir"),
     ],
 )
 def test_budget_is_round_constant_plus_confirming_round(

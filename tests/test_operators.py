@@ -111,29 +111,6 @@ def test_near_dup_pairs_planted_duplicate(spark):
     assert all(3 not in pair for pair in pairs)
 
 
-def test_lsh_params_s_curve_brackets_threshold():
-    # For each target threshold, the auto-picked banding's collision
-    # curve must cross 50% inside a +/-0.2 bracket around the target:
-    # clearly-below-threshold pairs are unlikely candidates, clearly-above
-    # pairs are likely.
-    for t in (0.3, 0.5, 0.7, 0.9):
-        bands, rows = D.lsh_params(128, t)
-        assert 1 <= bands * rows <= 128
-        p_lo = D.lsh_collision_probability(max(t - 0.2, 0.02), bands, rows)
-        p_hi = D.lsh_collision_probability(min(t + 0.2, 0.98), bands, rows)
-        assert p_lo < 0.5 < p_hi, (t, bands, rows, p_lo, p_hi)
-        # inflection point lands near the target
-        assert abs((1.0 / bands) ** (1.0 / rows) - t) < 0.1
-    # threshold 0.5, budget 16: picks a banding whose inflection is ~0.5
-    b16, r16 = D.lsh_params(16, 0.5)
-    assert b16 * r16 <= 16
-    assert abs((1.0 / b16) ** (1.0 / r16) - 0.5) < 0.1
-    # curve is monotone increasing in similarity
-    bands, rows = D.lsh_params(64, 0.6)
-    probs = [D.lsh_collision_probability(s / 20, bands, rows) for s in range(1, 20)]
-    assert probs == sorted(probs)
-
-
 def test_lsh_bucket_cap_enforced(spark):
     # Adversarial bucket: 60 identical boilerplate docs land in ONE bucket
     # per band. salt_buckets must split it into sub-buckets of <= cap, and
@@ -264,14 +241,6 @@ def test_apply_cdc_latest_wins_and_delete(spark):
     assert got == {1: "x2", 3: "z", 9: "new"}
 
 
-def test_dedup_exact_keeps_lowest_id(spark):
-    docs = spark.createDataFrame(
-        [(5, "same text"), (2, "same text"), (9, "unique")], "doc_id long, text string"
-    )
-    kept = sorted(r["doc_id"] for r in D.dedup_exact(docs).collect())
-    assert kept == [2, 9]
-
-
 def test_ann_recall_ladder(spark, sf_dir):
     """Quantify ANN recall@10 against the brute-force truth (VERDICT r1:
     'recall unquantified'). IVF multi-probe (nprobe=2) must recall at
@@ -392,11 +361,10 @@ def test_png_codec_rejects_corruption():
 
 def test_multimodal_golden_pin(spark):
     """Golden-file pin for the deterministic fake decoders (VERDICT r1
-    item 10): the byte-level outputs of extract_features / resize_images /
-    sample_frames on the 6-row fixture are frozen here, so any change to
-    the mapInPandas plumbing (batch shape, truncation rule, frame
-    slicing) that alters bytes is caught even if a codec
-    or the batch plumbing changes."""
+    item 10): the byte-level outputs of extract_features / resize_images
+    on the 6-row fixture are frozen here, so any change to the mapInPandas
+    plumbing (batch shape, truncation rule) that alters bytes is caught
+    even if a codec or the batch plumbing changes."""
     media = MM.synthetic_media_df(spark, 6)
 
     feats = sorted(
@@ -424,17 +392,6 @@ def test_multimodal_golden_pin(spark):
         (4, 4, 4, "1c1d1e1f20212223", 16),
         (5, 4, 4, "232425262728292a", 16),
     ]
-
-    frames = sorted(
-        (r["media_id"], r["frame_idx"], bytes(r["frame"]).hex())
-        for r in MM.sample_frames(media, 16, 2).collect()
-    )
-    assert frames[:2] == [
-        (0, 0, "000102030405060708090a0b0c0d0e0f"),
-        (0, 1, "101112131415161718191a1b1c1d1e1f"),
-    ]
-    assert len(frames) == 12
-    assert frames[-1] == (5, 1, "333435363738393a3b3c3d3e3f404142")
 
 
 def test_multimodal_feature_extraction(spark):
@@ -474,15 +431,6 @@ def test_multimodal_resize_and_frame_sample(spark):
     resized = MM.resize_images(media, width=4, height=4).collect()
     assert all(len(r["content"]) == 16 for r in resized)
     assert {r["media_id"] for r in resized} == set(range(8))
-
-    frames = MM.sample_frames(media, every_n_bytes=8, max_frames=3).collect()
-    assert len(frames) > 8  # 1->N flat map
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r["frame_idx"])
-    for idxs in by_media.values():
-        assert sorted(idxs) == list(range(len(idxs)))  # contiguous frame indices
-        assert len(idxs) <= 3
 
 
 def test_weighted_sample_excludes_nonpositive_weights(spark):
@@ -543,42 +491,6 @@ def test_incremental_dup_ids_cross_side_only(spark):
         for r in D.incremental_dup_ids(new, corpus, jaccard_threshold=0.5).collect()
     )
     assert got == [1]
-
-
-def test_quantized_search_recall(spark, sf_dir):
-    """int8 quantization wired into search: cosine top-10 over
-    DEQUANTIZED vectors must recall >= 0.8 of the full-precision top-10
-    (measured, not assumed), and each vector must reconstruct within its
-    own quantization step (scale/2 per element)."""
-    from advanced_data_mining_and_big_data_analysis_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    truth = {r["vec_id"] for r in SIM.topk_cosine(emb, query_id=0, k=10).collect()}
-
-    qz = SIM.quantize_int8(emb, id_cols=("vec_id",))
-    deq = qz.select(
-        "vec_id", SIM.dequantize(F.col("q"), F.col("mn"), F.col("scale")).alias("embedding")
-    )
-    got = {r["vec_id"] for r in SIM.topk_cosine(deq, query_id=0, k=10).collect()}
-    assert len(got & truth) / 10 >= 0.8, f"quantized recall too low: {got & truth}"
-
-    # reconstruction bound: |v - deq(q(v))| <= scale/2 element-wise
-    joined = emb.select("vec_id", SIM.as_double("embedding").alias("v")).join(
-        deq.withColumnRenamed("embedding", "r"), "vec_id"
-    )
-    worst = (
-        joined.join(qz.select("vec_id", "scale"), "vec_id")
-        .select(
-            F.aggregate(
-                F.zip_with(F.col("v"), F.col("r"), lambda a, b: F.abs(a - b) - F.col("scale") / 2 - 1e-9),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x),
-            ).alias("excess")
-        )
-        .agg(F.max("excess").alias("m"))
-        .collect()[0]["m"]
-    )
-    assert worst <= 0.0, f"reconstruction exceeded scale/2 by {worst}"
 
 
 def test_pack_assignments_invariants(spark):

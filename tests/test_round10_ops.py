@@ -11,7 +11,7 @@ def test_hilbert_adjacency_property(spark):
     256x256 grid the index is a bijection and consecutive indices are
     grid neighbors (unit Manhattan step) — the locality property the
     layout claim rests on."""
-    from advanced_data_mining_and_big_data_analysis_spark.plans.round10b import (
+    from advanced_data_mining_and_big_data_analysis_spark.plans.pipeline_ops import (
         _H_N,
         hilbert_stages,
     )
@@ -93,7 +93,7 @@ def test_isotonic_matches_reference_pav(spark, sf_dir):
     sequential PAV on the fixture — fitted value at every training x
     within 1e-9 — and the step function must be monotone."""
     from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
-    from advanced_data_mining_and_big_data_analysis_spark.plans.round10c import (
+    from advanced_data_mining_and_big_data_analysis_spark.plans.stats import (
         _iso_fixture_rows,
     )
 

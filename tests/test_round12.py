@@ -42,7 +42,7 @@ def test_a0001_cells_respect_salted_cap(spark, sf_dir):
     import hashlib
     from collections import Counter, defaultdict
 
-    from advanced_data_mining_and_big_data_analysis_spark.plans import round12 as R
+    from advanced_data_mining_and_big_data_analysis_spark.plans import similarity as R
 
     rows = (
         R._ak_salted_assign(spark, sf_dir)

@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
-from advanced_data_mining_and_big_data_analysis_spark.plans.round14 import _CB2_T2
+from advanced_data_mining_and_big_data_analysis_spark.plans.similarity import _CB2_T2
 from advanced_data_mining_and_big_data_analysis_spark.sources import load_table
 
 QUERIES = all_queries()
@@ -72,7 +72,7 @@ def test_a0025_full_width_recall_is_one(spark, sf_dir):
 def test_a0026_span_merge_invariants(spark, sf_dir):
     """Spans cover at least one shingle length each, and the duplicated
     fraction is a true fraction of the per-source character mass."""
-    from advanced_data_mining_and_big_data_analysis_spark.plans.round14b import _SPAN_L
+    from advanced_data_mining_and_big_data_analysis_spark.plans.dedup_text import _SPAN_L
 
     rows = QUERIES["a0026_repeated_substring_spans"].fn(spark, sf_dir).collect()
     assert rows
@@ -88,16 +88,14 @@ def test_a0028_multisource_bfs_matches_single_source(spark, sf_dir):
     independent per-seed BFS run over the collected edge list (numpy-
     free python replica) — distances, reach and the exact-rational
     harmonic sum."""
-    from advanced_data_mining_and_big_data_analysis_spark.plans.round14b import (
+    from advanced_data_mining_and_big_data_analysis_spark.plans.graph import (
         _CC_LCM,
         _CC_ROUNDS,
         _CC_SEEDS,
-        a0028_closeness_centrality,
-    )
-    from advanced_data_mining_and_big_data_analysis_spark.plans.graph import (
         _HUB_CAP,
         _cooc_edges,
         _user_buckets,
+        a0028_closeness_centrality,
     )
 
     got = {r["seed"]: r for r in a0028_closeness_centrality(spark, sf_dir).collect()}
@@ -145,7 +143,7 @@ def test_a0029_textrank_mass_and_float_agreement(spark, sf_dir):
     PageRank on the same collected graph to ~1e-5 of score (floor
     error is < 1 scale unit per state per round), and scores stay
     inside the damping bounds (>= 0.15)."""
-    from advanced_data_mining_and_big_data_analysis_spark.plans.round14b import (
+    from advanced_data_mining_and_big_data_analysis_spark.plans.dedup_text import (
         _TR_ITERS,
         _TR_MIN,
         _TR_SCALE,

@@ -11,30 +11,14 @@ from pyspark.sql import functions as F
 
 from advanced_data_mining_and_big_data_analysis_spark.operators import text as X
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
-from advanced_data_mining_and_big_data_analysis_spark.plans.pipeline_ops3 import (
-    _PQ_K,
-    cms_estimate,
-    cms_table,
-    zorder_value,
-)
+from advanced_data_mining_and_big_data_analysis_spark.plans.pipeline_ops import cms_table, zorder_value
+from advanced_data_mining_and_big_data_analysis_spark.plans.similarity import _PQ_K
 from advanced_data_mining_and_big_data_analysis_spark.sources import load_table
 
 QUERIES = all_queries()
 
 
 # ---------------------------------------------------------------- q119 CMS
-
-
-def test_cms_never_undercounts_any_token(spark, sf_dir):
-    """The no-undercount guarantee must hold for EVERY token, not just
-    the top-20 the query reports."""
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    toks = docs.select("source", F.explode(X.tokens("text")).alias("token"))
-    sketch = cms_table(toks, "token", [])
-    exact = toks.groupBy("token").agg(F.count("*").alias("exact"))
-    est = cms_estimate(sketch, exact.select("token"), "token")
-    bad = exact.join(est, "token").filter(F.col("cms_est") < F.col("exact")).count()
-    assert bad == 0
 
 
 def test_cms_shard_merge_is_exact(spark, sf_dir):
@@ -591,32 +575,6 @@ def test_q123_files_bound_both_dimensions(spark, sf_dir):
     if len(rows) >= 16:
         worst = max(max(r["pk_max"] - r["pk_min"], r["sk_max"] - r["sk_min"]) for r in rows)
         assert worst <= 65535 / 4 + 1
-
-
-def test_trained_pq_codebooks_beat_sample_codebook(spark, sf_dir):
-    """Lloyd's-trained per-subspace codebooks must reconstruct the
-    corpus strictly better than q120's deterministic low-vec_id sample
-    codebook (same k, same subspaces)."""
-    from advanced_data_mining_and_big_data_analysis_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    trained = S.train_pq_codebooks(emb, m=4, sub=16, k=8, seed=42, max_iter=10)
-    assert len(trained) == 4 and all(len(b) == 8 for b in trained)
-
-    sample_rows = (
-        emb.filter(F.col("vec_id") < 8)
-        .orderBy("vec_id")
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .collect()
-    )
-    sample = [
-        [list(r["v"])[j * 16 : (j + 1) * 16] for r in sample_rows] for j in range(4)
-    ]
-
-    e_trained = S.pq_reconstruction_error(emb, trained).collect()[0]
-    e_sample = S.pq_reconstruction_error(emb, sample).collect()[0]
-    assert e_trained["n_vecs"] == e_sample["n_vecs"] > 0
-    assert e_trained["avg_err2"] < e_sample["avg_err2"]
 
 
 def test_q134_skyline_is_exactly_the_nondominated_set(spark, sf_dir):

@@ -110,7 +110,7 @@ def test_classifier_score_shared_helper(name):
     so the scoring rule cannot silently diverge."""
     import inspect
 
-    from advanced_data_mining_and_big_data_analysis_spark.plans import pipeline_ops3 as P
+    from advanced_data_mining_and_big_data_analysis_spark.plans import pipeline_ops as P
 
     src = inspect.getsource(getattr(P, name))
     assert "_scored_docs(" in src

@@ -183,43 +183,6 @@ def test_jpeg_color_progressive_equivalence(w, h, seed):
     assert J.decode_jpeg(J.make_jpeg_color(w, h, px, restart_interval=3)) == ref
 
 
-def test_state_store_reader_matches_batch_state(spark, sf_dir, tmp_path):
-    """Spark 4 statestore source: after an availableNow run of a
-    streaming aggregation, reading the checkpoint's state store must
-    reproduce the batch aggregation exactly, and state-metadata must
-    describe the operator and its committed batch range."""
-    from pyspark.sql import functions as F
-
-    from advanced_data_mining_and_big_data_analysis_spark import streaming as ST
-    from advanced_data_mining_and_big_data_analysis_spark.sources import SCHEMAS, load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    ev.repartition(2).write.mode("overwrite").parquet(str(tmp_path / "src"))
-    src = spark.readStream.schema(SCHEMAS["events"]).parquet(str(tmp_path / "src"))
-    agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_ssr")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    state = ST.read_state_store(spark, str(tmp_path / "ckpt"))
-    got = sorted((r.key.event_type, r.value["count"]) for r in state.collect())
-    want = sorted(
-        (r.event_type, r.n)
-        for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    assert got == want
-
-    md = ST.read_state_metadata(spark, str(tmp_path / "ckpt")).collect()
-    assert len(md) == 1
-    assert md[0].operatorId == 0 and md[0].minBatchId == 0
-
-
 # ---------------------------------------------------------------- a0177 BPE encode
 
 

@@ -17,16 +17,14 @@ from advanced_data_mining_and_big_data_analysis_spark.sources import load_table
 def bucketed_tables(spark, sf_dir):
     """lineitem + orders written bucketed by the join key. At 100 TB this
     is done once at ingest; every subsequent orderkey join is shuffle-free."""
-    from advanced_data_mining_and_big_data_analysis_spark.sources.readers import (
-        write_bucketed_table,
-    )
-
     tmp = tempfile.mkdtemp(prefix="buckets_")
     # explicit path option -> external tables; warehouse dir untouched
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    write_bucketed_table(li, "li_bucketed", "l_orderkey", 8, "l_orderkey", f"{tmp}/li_b")
-    write_bucketed_table(orders, "ord_bucketed", "o_orderkey", 8, "o_orderkey", f"{tmp}/ord_b")
+    for df, table, key in ((li, "li_bucketed", "l_orderkey"), (orders, "ord_bucketed", "o_orderkey")):
+        df.write.mode("overwrite").format("parquet").bucketBy(8, key).sortBy(key).option(
+            "path", f"{tmp}/{table}"
+        ).saveAsTable(table)
     yield "li_bucketed", "ord_bucketed"
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS ord_bucketed")

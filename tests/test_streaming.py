@@ -412,7 +412,7 @@ def test_streaming_cms_equals_batch_sketch(spark, event_files, sf_dir):
     must converge to exactly the batch-built sketch over the same data —
     the stream==batch contract for the q119 sketch family. State is
     bounded by depth*width cells, never the token cardinality."""
-    from advanced_data_mining_and_big_data_analysis_spark.plans.pipeline_ops3 import cms_table
+    from advanced_data_mining_and_big_data_analysis_spark.plans.pipeline_ops import cms_table
 
     schema = SCHEMAS["events"]
     src = ST.stream_from_directory(spark, f"{event_files}/events", schema)
@@ -436,7 +436,7 @@ def test_streaming_cms_equals_batch_sketch(spark, event_files, sf_dir):
     }
 
     ev = load_table(spark, sf_dir, "events").select(F.col("event_type").alias("token"))
-    import advanced_data_mining_and_big_data_analysis_spark.plans.pipeline_ops3 as P3
+    import advanced_data_mining_and_big_data_analysis_spark.plans.pipeline_ops as P3
 
     orig_w = P3._CMS_WIDTH
     P3._CMS_WIDTH = 64

@@ -139,7 +139,7 @@ HEADLINE = [
     "a0129_inbatch_negatives",
     "a0130_fellegi_sunter",
     "a0131_curriculum_shards",
-    # round-10 final wave (round10d)
+    # round-10 final wave (a0093-a0105)
     "a0093_association_rules",
     "a0094_weighted_reservoir",
     "a0095_psi_drift",
@@ -153,7 +153,7 @@ HEADLINE = [
     "a0103_adamic_adar",
     "a0104_sax_motifs",
     "a0105_range_partition_plan",
-    # round-10 post-window wave (round10e, window fodder for r11)
+    # round-10 post-window wave (a0050-a0069, window fodder for r11)
     "a0050_acf_ljung_box",
     "a0051_zonemap_pruning",
     "a0052_haar_energy",
@@ -174,7 +174,7 @@ HEADLINE = [
     "a0067_roc_auc",
     "a0068_lift_gains",
     "a0069_skipgram_pairs",
-    # round-11 wave (round11.py)
+    # round-11 wave (a0070-a0092)
     "a0070_kmeans_lloyd",
     "a0071_centroid_silhouette",
     "a0072_chi2_cramers",
