@@ -153,24 +153,29 @@ def minhash_buckets(
 
 
 def salt_buckets(
-    buckets: DataFrame, id_col: str = "doc_id", max_bucket_size: int = 64
+    buckets: DataFrame,
+    id_col: str = "doc_id",
+    max_bucket_size: int = 64,
+    keys: tuple[str, ...] = ("band", "bucket"),
 ) -> DataFrame:
-    """Split oversized LSH buckets into capped, salted sub-buckets.
+    """Split oversized buckets into capped, salted sub-buckets.
 
-    Members of each (band, bucket) are ranked by a deterministic
-    pseudo-random order (md5 of bucket||id — reproducible across engines,
-    uncorrelated with id order) and assigned ``salt = (rank-1) div cap``.
-    Candidate joins then key on (band, bucket, salt): an n-member
-    boilerplate bucket becomes n/cap independent sub-buckets of at most
-    cap members each — per-task work is bounded by cap^2 and the bucket's
-    total cost drops from O(n^2) to O(n*cap). The within-bucket sort is a
-    single sort-within-partition, not a quadratic step."""
+    A bucket is one value of ``keys``: an LSH (band, bucket) by default,
+    or an embedding cell such as ``("cluster",)``. Its members are
+    ranked by a deterministic pseudo-random order (md5 of the last key
+    || id, then id — reproducible across engines, uncorrelated with id
+    order) and assigned ``salt = (rank-1) div cap``. Candidate joins or
+    grouped kernels then key on (keys, salt): an n-member boilerplate
+    bucket becomes n/cap independent sub-buckets of at most cap members
+    each — per-task work is bounded by cap^2 and the bucket's total cost
+    drops from O(n^2) to O(n*cap). The rank is a window partitioned by
+    ``keys`` (a sort within each partition, never a global sort)."""
     return buckets.withColumn(
         "salt",
         F.expr(
-            f"CAST(FLOOR((ROW_NUMBER() OVER (PARTITION BY band, bucket "
-            f"ORDER BY md5(concat(bucket, CAST({id_col} AS STRING))), {id_col}) - 1) "
-            f"/ {max_bucket_size}) AS BIGINT)"
+            f"CAST(FLOOR((ROW_NUMBER() OVER (PARTITION BY {', '.join(keys)} "
+            f"ORDER BY md5(concat(CAST({keys[-1]} AS STRING), CAST({id_col} AS STRING))), "
+            f"{id_col}) - 1) / {max_bucket_size}) AS BIGINT)"
         ),
     )
 

@@ -744,9 +744,12 @@ def _parse_baseline(content: bytes) -> tuple[int, int, list[np.ndarray]]:
     return width, height, out
 
 
-def _sof_marker(content: bytes) -> int:
-    """Frame type of the stream (first SOFn marker): 0xC0 baseline,
-    0xC2 progressive, ..."""
+def _frame_header(content: bytes) -> tuple[int, int]:
+    """(marker, precision) of the stream's frame header, the first SOFn
+    segment before the first scan: marker 0xC0 baseline, 0xC2
+    progressive, 0xC3 lossless, 0xC9 arithmetic, ...; precision P is
+    the first byte of its payload — 8 for every DCT mode here, 8 or 12
+    for lossless."""
     import struct
 
     pos = 2
@@ -758,7 +761,9 @@ def _sof_marker(content: bytes) -> int:
             pos += 1
             continue
         if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            return marker
+            if pos + 4 >= len(content):
+                raise ValueError("JPEG SOF segment truncated")
+            return marker, content[pos + 4]
         if marker == 0xDA:
             break
         (length,) = struct.unpack_from(">H", content, pos + 2)
@@ -766,10 +771,12 @@ def _sof_marker(content: bytes) -> int:
     raise ValueError("JPEG missing SOF")
 
 
-def _parse(content: bytes) -> tuple[int, int, list[np.ndarray]]:
-    """Dispatch on frame type: baseline SOF0, progressive SOF2, or
-    lossless SOF3 (Annex H DPCM — see the lossless section below)."""
-    sof = _sof_marker(content)
+def _parse(content: bytes, sof: int | None = None) -> tuple[int, int, list[np.ndarray]]:
+    """Dispatch on frame type ``sof`` (read from the frame header when
+    None): baseline SOF0, progressive SOF2, or lossless SOF3 (Annex H
+    DPCM — see the lossless section below)."""
+    if sof is None:
+        sof = _frame_header(content)[0]
     if sof == 0xC2:
         return _parse_progressive(content)
     if sof == 0xC3:
@@ -781,38 +788,23 @@ def _parse(content: bytes) -> tuple[int, int, list[np.ndarray]]:
     return _parse_baseline(content)
 
 
-def _sof_precision(content: bytes) -> int:
-    """Sample precision P from the frame header (first byte of the SOF
-    payload) — 8 for every DCT mode here, 8 or 12 for lossless."""
-    import struct
-
-    pos = 2
-    while pos + 4 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = content[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        (length,) = struct.unpack_from(">H", content, pos + 2)
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9):
-            return content[pos + 4]
-        pos += 2 + length
-    raise ValueError("JPEG missing SOF")
+def _gray_features(width: int, height: int, plane: np.ndarray, precision: int) -> list[float]:
+    """[width, height, mean, mean, mean, topleft] of one rounded plane,
+    clipped to the frame precision — r=g=b=luma."""
+    img = np.clip(np.rint(plane), 0, (1 << precision) - 1)
+    mean = float(img.mean())
+    return [float(width), float(height), mean, mean, mean, float(img[0, 0])]
 
 
 def decode_jpeg_gray(content: bytes) -> list[float]:
     """REAL JPEG decode (grayscale; baseline, progressive, or lossless):
-    [width, height, mean, mean, mean, topleft] — the image feature
-    shape of decode_bmp/decode_png with r=g=b=luma. Tables come from
-    the stream (DQT/DHT); the clip bound follows the frame precision
-    (8-bit DCT modes, 8/12-bit lossless)."""
-    width, height, planes = _parse(content)
+    decode_jpeg's one-plane features, [width, height, mean, mean, mean,
+    topleft]; a multi-component stream is a ValueError."""
+    sof, precision = _frame_header(content)
+    width, height, planes = _parse(content, sof)
     if len(planes) != 1:
         raise ValueError("decode_jpeg_gray handles single-component JPEGs")
-    img = np.clip(np.rint(planes[0]), 0, (1 << _sof_precision(content)) - 1)
-    mean = float(img.mean())
-    return [float(width), float(height), mean, mean, mean, float(img[0, 0])]
+    return _gray_features(width, height, planes[0], precision)
 
 
 def decode_jpeg(content: bytes) -> list[float]:
@@ -822,11 +814,10 @@ def decode_jpeg(content: bytes) -> list[float]:
     color converts YCbCr->RGB with the standard JFIF matrix
     (R = Y + 1.402 Cr', G = Y - 0.344136 Cb' - 0.714136 Cr',
     B = Y + 1.772 Cb'; primed = centered), rounded then clipped."""
-    width, height, planes = _parse(content)
+    sof, precision = _frame_header(content)
+    width, height, planes = _parse(content, sof)
     if len(planes) == 1:
-        img = np.clip(np.rint(planes[0]), 0, (1 << _sof_precision(content)) - 1)
-        mean = float(img.mean())
-        return [float(width), float(height), mean, mean, mean, float(img[0, 0])]
+        return _gray_features(width, height, planes[0], precision)
     y, cb, cr = planes
     r = np.clip(np.rint(y + 1.402 * (cr - 128.0)), 0, 255)
     g = np.clip(np.rint(y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)), 0, 255)

@@ -329,7 +329,7 @@ def q128_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Σ deg²/2 with deg ≤ 50 — never an all-pairs blowup — and in TPC-H-like
 # data part degree is scale-invariant (~30 buyers/part at every SF), so
 # the per-row basket stays bounded at 100 TB; a heavy-tailed catalog
-# would reuse the salted per-bucket cap (operators/dedup.py:172).
+# would reuse the salted per-bucket cap (operators/dedup.py salt_buckets).
 # Ordering is by the ROUNDED score + key tiebreaks on BOTH sides: raw
 # float sums differ in final ulps across summation orders, flipping
 # equal-rounded ties at the LIMIT boundary (the a0229 lesson).

@@ -215,22 +215,6 @@ def _pack_centroids(cent: DataFrame) -> DataFrame:
     )
 
 
-def _d2_arr(vcol, carr):
-    """round(sum_dim (v[d]-c[d])^2, 9) as a row-local array expression.
-    The aggregate() fold adds in dim order — the same order the explode
-    path accumulated (a vector's posexploded rows stay contiguous in
-    one task, so its partial sum also ran dim 1..n), keeping the 9-dp
-    rounded d2 bit-identical to the former join+sum plan."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(vcol, carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, e: acc + e,
-        ),
-        9,
-    )
-
-
 def _ivf_assign_frames(x: DataFrame):
     """Shared IVF plumbing: (assign, dims, cent) frames — per-vector
     nearest-centroid cluster, exploded dimensions, per-label centroids.
@@ -245,7 +229,7 @@ def _ivf_assign_frames(x: DataFrame):
     zero data-sized exchanges, no explode. array_min over
     struct(d2, c_label) reproduces ROW_NUMBER() ORDER BY (d2, c_label)
     = 1 exactly (lexicographic struct compare, 9-dp pre-rounded d2 —
-    see _d2_arr for the summation-order argument). q118 A/B: jobs
+    see SIM.sq_dist for the summation-order argument). q118 A/B: jobs
     13 -> 10, cold 6.6 -> 2.6 s, rows byte-identical; oracle-verified at
     3 SFs for all four consumers (q114/q118/a096/a056)."""
     dims = x.select("vec_id", F.posexplode("v").alias("dim0", "comp")).withColumn(
@@ -262,7 +246,7 @@ def _ivf_assign_frames(x: DataFrame):
         F.transform(
             F.col("cents"),
             lambda ct: F.struct(
-                _d2_arr(F.col("v"), ct["carr"]).alias("d2"),
+                SIM.sq_dist(F.col("v"), ct["carr"]).alias("d2"),
                 ct["c_label"].alias("c_label"),
             ),
         )
@@ -454,6 +438,35 @@ _PAIR_COS = (
 )
 
 
+def _planted(base: DataFrame, *extra) -> DataFrame:
+    """The planted near-duplicates of the SemDeDup fixture: every
+    ``base`` row (vec_id, v, ...) with vec_id < _SD_PLANT again at
+    vec_id + 100000, its vector rescaled x1.01 (cosine exactly 1 to the
+    original); ``extra`` columns ride along."""
+    return base.filter(F.col("vec_id") < _SD_PLANT).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.transform("v", lambda e: e * F.lit(1.01)).alias("v"),
+        *extra,
+    )
+
+
+def _cluster_pairs(pdf):
+    """applyInPandas kernel: the id pairs (id_a < id_b) of one cell whose
+    9-dp cosine is >= _SD_THR, from one dense cosine block over the
+    cell (n x 64 -> n x n). Memory is bounded by the cell size the
+    coarse step was tuned for; float64 throughout so round(cos, 9)
+    agrees with the SQL oracle's double arithmetic."""
+    import numpy as np
+    import pandas as pd
+
+    ids = pdf["vec_id"].to_numpy()
+    x = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+    iu, ju = np.triu_indices(len(ids), k=1)
+    keep = SIM.cosine_block(x, x)[iu, ju] >= _SD_THR
+    a, b = ids[iu[keep]], ids[ju[keep]]
+    return pd.DataFrame({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b)})
+
+
 @query(
     "q114_semdedup",
     oracle=f"""
@@ -488,41 +501,13 @@ _PAIR_COS = (
     SELECT id AS removed_id, cluster AS kept_id
     FROM labels WHERE id <> cluster ORDER BY removed_id
     """,
-    description="SemDeDup-style embedding-space dedup (VERDICT r3 item 7): IVF/k-means cluster assignment -> WITHIN-cluster cosine pairs at an epsilon-ball threshold -> connected components -> drop all but the canonical member. Planted fixture: vec_id<10 re-appear rescaled x1.01 (cosine exactly 1) and must be removed in favor of their originals. Never all-pairs: pair generation is a CLUSTER-LOCAL blocked matmul (applyInPandas per cluster, normalized X @ X.T, emit only above-threshold id pairs) — the canonical SemDeDup execution; the r5 self-join + per-pair interpreted HOF cosine cost 64 interpreted evals per pair and was the single most expensive headline plan. Decision parity with the SQL oracle via round(cos, 9) on both engines. At 100 TB pick k_clusters ~ N/target_cluster_size so the per-cluster matrix stays memory-bounded (and the salted per-bucket cap of operators/dedup.py:172 is the drop-in guard for skewed clusters)",
+    description="SemDeDup-style embedding-space dedup (VERDICT r3 item 7): IVF/k-means cluster assignment -> WITHIN-cluster cosine pairs at an epsilon-ball threshold -> connected components -> drop all but the canonical member. Planted fixture: vec_id<10 re-appear rescaled x1.01 (cosine exactly 1) and must be removed in favor of their originals. Never all-pairs: pair generation is a CLUSTER-LOCAL blocked matmul (applyInPandas per cluster, normalized X @ X.T, emit only above-threshold id pairs) — the canonical SemDeDup execution; the r5 self-join + per-pair interpreted HOF cosine cost 64 interpreted evals per pair and was the single most expensive headline plan. Decision parity with the SQL oracle via round(cos, 9) on both engines. At 100 TB pick k_clusters ~ N/target_cluster_size so the per-cluster matrix stays memory-bounded (and the salted per-bucket cap, operators/dedup.py salt_buckets, is the drop-in guard for skewed clusters)",
 )
 def q114_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", SIM.as_double("embedding").alias("v"), "label")
-    planted = base.filter(F.col("vec_id") < _SD_PLANT).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("v", lambda e: e * F.lit(1.01)).alias("v"),
-        "label",
-    )
-    assign, _, _ = _ivf_assign_frames(base.unionAll(planted))
-
-    thr = _SD_THR
-
-    def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one dense matmul per cluster: n x 64 -> n x n cosines. Memory
-        # is bounded by the cluster size the IVF step was tuned for;
-        # float64 throughout so round(cos, 9) agrees with the SQL
-        # oracle's double arithmetic.
-        ids = pdf["vec_id"].to_numpy()
-        x = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(x, axis=1)
-        norms[norms == 0.0] = 1.0
-        cos = (x @ x.T) / np.outer(norms, norms)
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = np.round(cos[iu, ju], 9) >= thr
-        a, b = ids[iu[keep]], ids[ju[keep]]
-        return pd.DataFrame(
-            {"id_a": np.minimum(a, b), "id_b": np.maximum(a, b)}
-        )
-
-    pairs = assign.groupBy("cluster").applyInPandas(cluster_pairs, "id_a long, id_b long")
+    assign, _, _ = _ivf_assign_frames(base.unionAll(_planted(base, "label")))
+    pairs = assign.groupBy("cluster").applyInPandas(_cluster_pairs, "id_a long, id_b long")
     labels = D.near_dup_clusters(pairs)
     return (
         labels.filter(F.col("id") != F.col("cluster"))
@@ -598,7 +583,7 @@ def q118_batch_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             F.col("cents"),
             lambda ct: F.struct(
-                _d2_arr(F.col("q"), ct["carr"]).alias("d2"),
+                SIM.sq_dist(F.col("q"), ct["carr"]).alias("d2"),
                 ct["c_label"].alias("c_label"),
             ),
         )
@@ -715,18 +700,6 @@ def a0161_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ADC_M, _ADC_SUB, _ADC_K, _ADC_NPROBE, _ADC_TOPK = 4, 16, 8, 2, 5
 
 
-def _l2sq9(a: Column, b: Column) -> Column:
-    """9-dp-rounded squared L2 between two equal-length double arrays."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        ),
-        9,
-    )
-
-
 def _adc_sub(col: Column, j: int) -> Column:
     return F.slice(col, j * _ADC_SUB + 1, _ADC_SUB)
 
@@ -831,7 +804,7 @@ def a0164_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assign = (
         db.crossJoin(F.broadcast(cent_arr))
-        .select("vec_id", "v", "c_label", _l2sq9(F.col("v"), F.col("cv_full")).alias("d2"))
+        .select("vec_id", "v", "c_label", SIM.sq_dist(F.col("v"), F.col("cv_full")).alias("d2"))
         .groupBy("vec_id")
         .agg(F.min(F.struct(F.col("d2"), F.col("c_label"))).alias("m"))
         .select("vec_id", F.col("m.c_label").alias("cluster"))
@@ -847,7 +820,7 @@ def a0164_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster",
         "code_id",
         *[
-            _l2sq9(_adc_sub(F.col("v"), j), _adc_sub(F.col("cv"), j)).alias(f"d{j}")
+            SIM.sq_dist(_adc_sub(F.col("v"), j), _adc_sub(F.col("cv"), j)).alias(f"d{j}")
             for j in range(_ADC_M)
         ],
     )
@@ -874,7 +847,7 @@ def a0164_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "code_id",
             *[
-                _l2sq9(_adc_sub(F.col("qv"), j), _adc_sub(F.col("cv"), j)).alias(f"l{j}")
+                SIM.sq_dist(_adc_sub(F.col("qv"), j), _adc_sub(F.col("cv"), j)).alias(f"l{j}")
                 for j in range(_ADC_M)
             ],
         )
@@ -884,7 +857,7 @@ def a0164_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     wprobe = W.partitionBy("query_id").orderBy("d2", "c_label")
     probes = (
         qs.crossJoin(F.broadcast(cent_arr))
-        .select("query_id", "c_label", _l2sq9(F.col("qv"), F.col("cv_full")).alias("d2"))
+        .select("query_id", "c_label", SIM.sq_dist(F.col("qv"), F.col("cv_full")).alias("d2"))
         .withColumn("pr", F.row_number().over(wprobe))
         .filter(F.col("pr") <= _ADC_NPROBE)
         .select("query_id", F.col("c_label").alias("cluster"))
@@ -903,7 +876,7 @@ def a0164_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.join(db.select("vec_id", "v"), "vec_id")
         .join(F.broadcast(qs), "query_id")
-        .withColumn("true_d2", _l2sq9(F.col("qv"), F.col("v")))
+        .withColumn("true_d2", SIM.sq_dist(F.col("qv"), F.col("v")))
         .withColumn("rnk", F.row_number().over(wtop))
         .filter(F.col("rnk") <= _ADC_TOPK)
         .select(
@@ -980,7 +953,7 @@ def a0166_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a1 = (
         emb.crossJoin(F.broadcast(c0))
-        .select("vec_id", "cl", _l2sq9(F.col("v"), F.col("cv")).alias("d2"))
+        .select("vec_id", "cl", SIM.sq_dist(F.col("v"), F.col("cv")).alias("d2"))
         .groupBy("vec_id")
         .agg(F.min(F.struct(F.col("d2"), F.col("cl"))).alias("m"))
         .select("vec_id", F.col("m.cl").alias("cl"))
@@ -1275,7 +1248,8 @@ def _km_d2_spark(v: Column, cv: Column) -> Column:
 
 
 def _km_assign_spark(emb: DataFrame, cb: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment via the a0001 BLAS kernel.
+    """Nearest-centroid assignment via the shared BLAS kernel
+    (SIM.assign_nearest_seed).
 
     The k-row collect is bounded by the k = _KM_K literal (the Lloyd
     loop materializes each 8-row centroid frame eagerly anyway); the
@@ -1289,32 +1263,11 @@ def _km_assign_spark(emb: DataFrame, cb: DataFrame) -> DataFrame:
     is ANALYSIS-bound (1.8 MiB task binaries, 17.5 s). Round-9 absorbs
     the dgemm reassociation exactly as in a0001, and the downstream
     inertia/mean aggregates round at 4/6 dp — far above ulp noise."""
-    import numpy as np
-    import pandas as pd
-
     cents = sorted((r["cid"], list(r["cv"])) for r in cb.collect())
-    sids = np.array([c for c, _ in cents], dtype=np.int64)
-    cmat = np.array([v for _, v in cents], dtype=np.float64)
-    c2 = (cmat * cmat).sum(axis=1)[None, :]
-
-    def assign(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            x2 = (xm * xm).sum(axis=1, keepdims=True)
-            acc = np.round(x2 - 2.0 * (xm @ cmat.T) + c2, 9)
-            best = np.argmin(acc, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["v"],
-                    "cid": sids[best],
-                    "d2": acc[np.arange(len(best)), best],
-                }
-            )
-
-    return emb.mapInPandas(assign, "vec_id long, v array<double>, cid long, d2 double")
+    return SIM.assign_nearest_seed(
+        emb, [c for c, _ in cents], [v for _, v in cents],
+        "vec_id long, v array<double>, cid long, d2 double", "cid",
+    )
 
 
 def _km_update_spark(assigned: DataFrame) -> DataFrame:
@@ -1565,28 +1518,8 @@ _AK_CAP = 200  # salted per-cell cap: per-task matmul never exceeds cap^2
     description=f"SemDeDup at the PRODUCTION scaling rules (q114's scale twin): k = ceil(N/{_AK_TARGET}) stride-seeded coarse cells, broadcast-codebook nearest-seed assignment (one Arrow-batched pass, d2 rounded 9 with ties to the lowest seed id), PLUS the salted per-cell cap (rank by md5(cell||id), salt = (rank-1) div {_AK_CAP} — the a083/LSH guard, both engines replay it) so a 100x-replicated duplicate clique can never re-inflate a cell past cap^2, then q114's blocked-matmul epsilon-ball pairs + connected components — total cost LINEAR in N per decade, the measured fix for q114's fixed-k quadratic regime at sf10",
 )
 def a0001_semdedup_autok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    salted = _ak_salted_assign(spark, sf_dir)
-    thr = _SD_THR
-
-    import numpy as np
-    import pandas as pd
-
-    def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one dense matmul per ~target-sized cell (the q114 kernel,
-        # similarity.py:447): n x 64 -> n x n cosines, float64 so
-        # round(cos, 9) agrees with the SQL oracle
-        ids = pdf["vec_id"].to_numpy()
-        xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(xm, axis=1)
-        norms[norms == 0.0] = 1.0
-        cos = (xm @ xm.T) / np.outer(norms, norms)
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = np.round(cos[iu, ju], 9) >= thr
-        a, b = ids[iu[keep]], ids[ju[keep]]
-        return pd.DataFrame({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b)})
-
-    pairs = salted.groupBy("cluster", "salt").applyInPandas(
-        cluster_pairs, "id_a long, id_b long"
+    pairs = _ak_salted_assign(spark, sf_dir).groupBy("cluster", "salt").applyInPandas(
+        _cluster_pairs, "id_a long, id_b long"
     )
     labels = D.near_dup_clusters(pairs)
     return (
@@ -1601,60 +1534,20 @@ def _ak_salted_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt), exposed separately so tests can pin the OOM-guard invariant —
     max per-(cluster, salt) group size <= _AK_CAP — on the REAL frame
     (planted rows included) rather than re-deriving it."""
-    import numpy as np
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", SIM.as_double("embedding").alias("v"))
     # two driver scalars + the k x 64 coarse codebook (k = N/target —
     # bounded for any bench SF; at extreme scale swap in a0023's
     # two-level build: O(sqrt N) driver traffic, same cell semantics)
-    n = base.count()
-    k = -(-n // _AK_TARGET)
-    step = -(-n // k)
-    seed_rows = base.filter(F.col("vec_id") % step == 0).orderBy("vec_id").collect()
-    sids = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
-    cmat = np.array([r["v"] for r in seed_rows], dtype=np.float64)
-
-    planted = base.filter(F.col("vec_id") < _SD_PLANT).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("v", lambda e: e * F.lit(1.01)).alias("v"),
+    sids, cmat = SIM.stride_codebook(base, lambda n: -(-n // _AK_TARGET))
+    # nearest stride seed per vector (one dgemm per Arrow batch — the
+    # dim loop measured 40+ s of the sf10 wall), then the salted
+    # per-cell cap: a partitioned window rank, never a global sort
+    assign = SIM.assign_nearest_seed(
+        base.unionAll(_planted(base)), sids, cmat,
+        "vec_id long, cluster long, v array<double>", "cluster",
     )
-    x = base.unionAll(planted)
-
-    c2 = (cmat * cmat).sum(axis=1)[None, :]
-
-    def assign_batches(it):
-        # nearest stride-seed per vector, BLAS expansion form
-        # |x|^2 - 2 xC' + |c|^2 (one dgemm per Arrow batch — the dim
-        # loop measured 40+ s of the sf10 wall): ROUND(d2, 9) absorbs
-        # the float reassociation vs the oracle's SUM, the same round-9
-        # argument the q114 cosine kernel rests on, and exact-duplicate
-        # seeds produce bitwise-equal d2 so ties still break to the
-        # lowest seed id (np.argmin returns the FIRST minimum; codebook
-        # rows are sorted by vec_id), matching ORDER BY d2, sid
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            x2 = (xm * xm).sum(axis=1, keepdims=True)
-            acc = x2 - 2.0 * (xm @ cmat.T) + c2
-            cl = sids[np.argmin(np.round(acc, 9), axis=1)]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cluster": cl, "v": pdf["v"]})
-
-    assign = x.mapInPandas(assign_batches, "vec_id long, cluster long, v array<double>")
-
-    # salted per-cell cap (operators/dedup.py salt_buckets idiom): rank
-    # members by a deterministic pseudo-random order inside each cell —
-    # a PARTITIONED window, never a global sort — and shard at the cap
-
-    wc = W.partitionBy("cluster").orderBy(
-        F.md5(F.concat(F.col("cluster").cast("string"), F.col("vec_id").cast("string"))),
-        "vec_id",
-    )
-    return assign.withColumn(
-        "salt", F.floor((F.row_number().over(wc) - 1) / _AK_CAP).cast("long")
-    )
+    return D.salt_buckets(assign, "vec_id", _AK_CAP, keys=("cluster",))
 
 
 # ---------------------------------------------------------------------------
@@ -1756,47 +1649,15 @@ def a0003_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codebook from the OLD corpus only — the cells predate the growth
     # batch (bounded driver collect; at 100 TB use a0023's two-level
     # build in this module, whose driver traffic is O(sqrt N))
-    old = base.filter(F.col("is_new") == 0)
-    n_old = old.count()
-    k = -(-n_old // _INC_TARGET)
-    step = -(-n_old // k)
-    seed_rows = old.filter(F.col("vec_id") % step == 0).orderBy("vec_id").collect()
-    sids = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
-    cmat = np.array([r["v"] for r in seed_rows], dtype=np.float64)
-
-    planted = base.filter(F.col("vec_id") < _SD_PLANT).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("v", lambda e: e * F.lit(1.01)).alias("v"),
-        F.lit(1).alias("is_new"),
+    sids, cmat = SIM.stride_codebook(
+        base.filter(F.col("is_new") == 0), lambda n: -(-n // _INC_TARGET)
     )
-    x = base.unionAll(planted)
-
-    c2 = (cmat * cmat).sum(axis=1)[None, :]
-
-    def assign_batches(it):
-        # nearest old-corpus seed, BLAS expansion form (a0001's kernel):
-        # round-9 absorbs reassociation; ties break to the lowest seed id
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            x2 = (xm * xm).sum(axis=1, keepdims=True)
-            acc = x2 - 2.0 * (xm @ cmat.T) + c2
-            cl = sids[np.argmin(np.round(acc, 9), axis=1)]
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cluster": cl, "v": pdf["v"], "is_new": pdf["is_new"]}
-            )
-
-    assign = x.mapInPandas(
-        assign_batches, "vec_id long, cluster long, v array<double>, is_new int"
+    # new and old vectors assign to the nearest old-corpus seed
+    assign = SIM.assign_nearest_seed(
+        base.unionAll(_planted(base, F.lit(1).alias("is_new"))), sids, cmat,
+        "vec_id long, cluster long, v array<double>, is_new int", "cluster",
     )
-    wc = Window.partitionBy("cluster").orderBy(
-        F.md5(F.concat(F.col("cluster").cast("string"), F.col("vec_id").cast("string"))),
-        "vec_id",
-    )
-    salted = assign.withColumn(
-        "salt", F.floor((F.row_number().over(wc) - 1) / _INC_CAP).cast("long")
-    )
+    salted = D.salt_buckets(assign, "vec_id", _INC_CAP, keys=("cluster",))
 
     thr = _SD_THR
 
@@ -1811,16 +1672,10 @@ def a0003_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"removed_id": "int64", "kept_id": "int64", "kept_is_old": "int64"}
             )
         xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(xm, axis=1)
-        norms[norms == 0.0] = 1.0
         ids = pdf["vec_id"].to_numpy()
         isnew = pdf["is_new"].to_numpy()
         new_idx = np.nonzero(newsel)[0]
-        # dot first, divide after — the exact float order of the a0001
-        # kernel and the oracle's sum/(sqrt*sqrt), so round-9 agrees
-        cos = np.round(
-            (xm[new_idx] @ xm.T) / np.outer(norms[new_idx], norms), 9
-        )
+        cos = SIM.cosine_block(xm[new_idx], xm)
         out = []
         for row, ia in enumerate(new_idx):
             if ia == 0:
@@ -1940,7 +1795,8 @@ def a0018_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   level 1  k1 = ceil(sqrt(N / T2)) stride seeds  -> the ONLY collect,
 #            O(sqrt(N)) rows (1e11 vectors, T2=64 -> ~40k seeds);
 #   assign 1 every vector to its nearest L1 seed — one Arrow BLAS scan
-#            against the broadcast-sized L1 matrix (the a0001 kernel);
+#            against the broadcast-sized L1 matrix
+#            (SIM.assign_nearest_seed);
 #   level 2  per-L1-cell stride refine: rank members by vec_id inside
 #            the cell, keep every ceil(cell_n/T2)-th — a window + filter
 #            that stays DISTRIBUTED (the seeds never leave executors);
@@ -2013,30 +1869,11 @@ def a0023_semdedup_twolevel_codebook(spark: SparkSession, sf_dir: str) -> DataFr
     x = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", SIM.as_double("embedding").alias("v")
     )
-    n = x.count()
-    k1 = math.ceil(math.sqrt(n / float(_CB2_T2)))
-    step1 = -(-n // k1)
     # THE only driver collect of the build: the level-1 seed set,
     # O(sqrt(N/T2)) rows (a0001/a0003 collect N/target — this is the
     # scale fix their docstrings point to)
-    seed_rows = x.filter(F.col("vec_id") % step1 == 0).orderBy("vec_id").collect()
-    sids = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
-    cmat = np.array([r["v"] for r in seed_rows], dtype=np.float64)
-    c2 = (cmat * cmat).sum(axis=1)[None, :]
-
-    def assign1(it):
-        # nearest L1 seed, BLAS expansion form (the a0001 kernel):
-        # round-9 absorbs reassociation; ties to the lowest seed id
-        for pdf in it:
-            if not len(pdf):
-                continue
-            xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            x2 = (xm * xm).sum(axis=1, keepdims=True)
-            acc = x2 - 2.0 * (xm @ cmat.T) + c2
-            cl = sids[np.argmin(np.round(acc, 9), axis=1)]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "l1": cl, "v": pdf["v"]})
-
-    m = x.mapInPandas(assign1, "vec_id long, l1 long, v array<double>")
+    sids, cmat = SIM.stride_codebook(x, lambda n: math.ceil(math.sqrt(n / float(_CB2_T2))))
+    m = SIM.assign_nearest_seed(x, sids, cmat, "vec_id long, l1 long, v array<double>", "l1")
     wr = Window.partitionBy("l1").orderBy("vec_id")
     wn = Window.partitionBy("l1")
     ranked = m.select(
@@ -2062,19 +1899,11 @@ def a0023_semdedup_twolevel_codebook(spark: SparkSession, sf_dir: str) -> DataFr
             return pd.DataFrame({"l1": [], "l2": [], "d2": []}).astype(
                 {"l1": "int64", "l2": "int64", "d2": "float64"}
             )
-        sm = np.vstack(t["v"].to_numpy()).astype(np.float64)
-        s2v = (sm * sm).sum(axis=1)[None, :]
-        xm = np.vstack(p["v"].to_numpy()).astype(np.float64)
-        x2 = (xm * xm).sum(axis=1, keepdims=True)
-        acc = np.round(x2 - 2.0 * (xm @ sm.T) + s2v, 9)
-        am = np.argmin(acc, axis=1)  # first occurrence = lowest sid2
-        return pd.DataFrame(
-            {
-                "l1": p["l1"].to_numpy(),
-                "l2": t["vec_id"].to_numpy()[am],
-                "d2": acc[np.arange(len(am)), am],
-            }
+        am, d2 = SIM.nearest_seed(
+            np.vstack(p["v"].to_numpy()).astype(np.float64),
+            np.vstack(t["v"].to_numpy()).astype(np.float64),
         )
+        return pd.DataFrame({"l1": p["l1"].to_numpy(), "l2": t["vec_id"].to_numpy()[am], "d2": d2})
 
     fine = tagged.groupBy("l1").applyInPandas(refine, "l1 long, l2 long, d2 double")
     return (

@@ -664,8 +664,8 @@ def write_semdedup_ingest(
     as a continuous corpus loop (VERDICT r12 item 8's streaming twin):
     each micro-batch of embedding vectors is (a) assigned to the
     EXISTING coarse cells (BLAS nearest-seed kernel against the stored
-    codebook — built once from the bootstrap batch by rank-stride, the
-    same ceil(N/target) rule as a0001), (b) compared ONLY against the
+    codebook — built once from the bootstrap batch by rank-stride, with
+    a0001's k = ceil(N/target)), (b) compared ONLY against the
     occupants of its own cells — the corpus is stored partitioned by
     cell, so the probe reads just the touched partitions (the q108
     bucket-probe shape in embedding space; partition pruning does the
@@ -704,7 +704,7 @@ def write_semdedup_ingest(
     import pandas as pd
     from pyspark.sql import Window
 
-    from ..operators import similarity as SIM
+    from ..operators import dedup as D, similarity as SIM
 
     codebook_dir = corpus_dir.rstrip("/") + "_codebook"
 
@@ -714,8 +714,9 @@ def write_semdedup_ingest(
             F.col(id_col).alias("vec_id"), SIM.as_double(vec_col).alias("v")
         )
         if not os.path.exists(codebook_dir):
-            # bootstrap: rank-stride codebook over the first batch,
-            # ceil(n/target) seeds (the a0001 rule); bounded collect
+            # bootstrap: every step-th row of the first batch in vec_id
+            # order, k = ceil(n/target) seeds (a0001's k rule; a0001
+            # strides by vec_id value, this by rank); bounded collect
             n = b.count()
             if n == 0:
                 return
@@ -729,21 +730,10 @@ def write_semdedup_ingest(
             )
             seeds.coalesce(1).write.parquet(codebook_dir)
         cb = spark.read.parquet(codebook_dir).orderBy("seed_id").collect()
-        sids = np.array([r["seed_id"] for r in cb], dtype=np.int64)
-        cmat = np.array([r["sv"] for r in cb], dtype=np.float64)
-        c2 = (cmat * cmat).sum(axis=1)[None, :]
-
-        def assign_batches(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                xm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-                x2 = (xm * xm).sum(axis=1, keepdims=True)
-                acc = x2 - 2.0 * (xm @ cmat.T) + c2
-                cl = sids[np.argmin(np.round(acc, 9), axis=1)]
-                yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cl, "v": pdf["v"]})
-
-        assigned = b.mapInPandas(assign_batches, "vec_id long, cell long, v array<double>")
+        assigned = SIM.assign_nearest_seed(
+            b, [r["seed_id"] for r in cb], [r["sv"] for r in cb],
+            "vec_id long, cell long, v array<double>", "cell",
+        )
         touched = [r["cell"] for r in assigned.select("cell").distinct().collect()]
         if not touched:
             return
@@ -761,13 +751,7 @@ def write_semdedup_ingest(
         # the split is deterministic); every new vector probes EVERY shard
         # of its cell, so an over-cap cell bounds task size without ever
         # dropping a corpus occupant from the probe's view
-        wc = Window.partitionBy("cell").orderBy(
-            F.md5(F.concat(F.col("cell").cast("string"), F.col("vec_id").cast("string"))),
-            "vec_id",
-        )
-        targets = pool.withColumn(
-            "salt", F.floor((F.row_number().over(wc) - 1) / cap).cast("long")
-        )
+        targets = D.salt_buckets(pool, "vec_id", cap, keys=("cell",))
         # bounded collect: one row per touched cell (the `touched` list is
         # already driver-side); avoids a self-join on the targets lineage
         mx_rows = targets.groupBy("cell").agg(F.max("salt").alias("mx")).collect()
@@ -798,13 +782,10 @@ def write_semdedup_ingest(
             pdf = pdf[pdf["role"] == 1]
             if not len(tdf) or not len(pdf):
                 return pd.DataFrame({"removed_id": []}).astype({"removed_id": "int64"})
-            tm = np.vstack(tdf["v"].to_numpy()).astype(np.float64)
-            pm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            tn = np.linalg.norm(tm, axis=1)
-            pn = np.linalg.norm(pm, axis=1)
-            tn[tn == 0.0] = 1.0
-            pn[pn == 0.0] = 1.0
-            cos = np.round((pm @ tm.T) / np.outer(pn, tn), 9)
+            cos = SIM.cosine_block(
+                np.vstack(pdf["v"].to_numpy()).astype(np.float64),
+                np.vstack(tdf["v"].to_numpy()).astype(np.float64),
+            )
             t_old = tdf["is_new"].to_numpy() == 0
             t_ids = tdf["vec_id"].to_numpy()
             p_ids = pdf["vec_id"].to_numpy()

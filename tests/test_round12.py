@@ -30,18 +30,38 @@ def test_a0001_removed_always_to_smaller_keeper(spark, sf_dir):
     assert all(r["kept_id"] < 100000 for r in planted)
 
 
+def _assert_salted_cap(rows, cell: str, cap: int) -> None:
+    """(a) no (cell, salt) group of ``rows`` (vec_id, <cell>, salt) holds
+    more than ``cap`` rows, and a salt above 0 appears exactly when some
+    cell outgrows the cap; (b) the salts replay in pure Python: rank by
+    (md5(cell||vec_id), vec_id) within each cell, salt = (rank-1) // cap
+    — so a broken window spec (wrong partitionBy, wrong order keys,
+    off-by-one in the floor) fails even while an oracle hash is green."""
+    import hashlib
+    from collections import Counter, defaultdict
+
+    sizes = Counter((r[cell], r["salt"]) for r in rows)
+    assert max(sizes.values()) <= cap
+    per_cell = Counter(r[cell] for r in rows)
+    assert any(s > cap for s in per_cell.values()) == any(r["salt"] > 0 for r in rows)
+
+    by_cell = defaultdict(list)
+    for r in rows:
+        key = hashlib.md5(f"{r[cell]}{r['vec_id']}".encode()).hexdigest()
+        by_cell[r[cell]].append((key, r["vec_id"], r["salt"]))
+    for members in by_cell.values():
+        members.sort(key=lambda t: (t[0], t[1]))
+        for rank0, (_, vid, got_salt) in enumerate(members):
+            assert got_salt == rank0 // cap, (vid, got_salt, rank0)
+
+
 def test_a0001_cells_respect_salted_cap(spark, sf_dir):
     """No (cluster, salt) cell may exceed the cap — the property that
     kept sf10's 100x-replicated corpus from OOMing the matmul workers.
     Collects the REAL salted frame (planted +100000 copies included)
-    and (a) checks every (cluster, salt) group size directly, (b)
-    replays the md5-ranked salting in pure Python and asserts the
-    query's salts match — so a broken window spec (wrong partitionBy,
-    wrong order keys, off-by-one in the floor) fails here even while
-    the small-SF oracle hash stays green."""
-    import hashlib
-    from collections import Counter, defaultdict
-
+    and checks it with ``_assert_salted_cap``; at least one cluster
+    must actually be sharded at bench SFs (otherwise the cap is untested
+    dead code at this SF)."""
     from advanced_data_mining_and_big_data_analysis_spark.plans import similarity as R
 
     rows = (
@@ -51,27 +71,27 @@ def test_a0001_cells_respect_salted_cap(spark, sf_dir):
     )
     n_base = load_table(spark, sf_dir, "embeddings").count()
     assert len(rows) > n_base, "planted +100000 copies must be in the frame"
+    _assert_salted_cap(rows, "cluster", R._AK_CAP)
 
-    # (a) the OOM guard itself, on the actual frame
-    sizes = Counter((r["cluster"], r["salt"]) for r in rows)
-    assert max(sizes.values()) <= R._AK_CAP
-    # at least one cluster must actually have been sharded at bench SFs
-    # (otherwise the cap is untested dead code at this SF)
-    per_cluster = Counter(r["cluster"] for r in rows)
-    assert any(s > R._AK_CAP for s in per_cluster.values()) == any(
-        r["salt"] > 0 for r in rows
+
+def test_salt_buckets_caps_embedding_cells(spark):
+    """``salt_buckets`` keyed by one cell column: a 23-member cell, a
+    cell of exactly the cap, a singleton and a negative cell id, capped
+    at 5 — the salted rule a0001, a0003 and the streaming ingest share."""
+    from advanced_data_mining_and_big_data_analysis_spark.operators import dedup as D
+
+    data = (
+        [(i, 7) for i in range(23)]
+        + [(100 + i, 8) for i in range(5)]
+        + [(200, 9), (300, -4), (301, -4)]
     )
-
-    # (b) replay the salt rule: rank by (md5(cluster||vec_id), vec_id)
-    # within each cluster, salt = (rank-1) // cap
-    by_cluster = defaultdict(list)
-    for r in rows:
-        key = hashlib.md5(f"{r['cluster']}{r['vec_id']}".encode()).hexdigest()
-        by_cluster[r["cluster"]].append((key, r["vec_id"], r["salt"]))
-    for members in by_cluster.values():
-        members.sort(key=lambda t: (t[0], t[1]))
-        for rank0, (_, vid, got_salt) in enumerate(members):
-            assert got_salt == rank0 // R._AK_CAP, (vid, got_salt, rank0)
+    df = spark.createDataFrame(data, "vec_id long, cell long")
+    out = D.salt_buckets(df, "vec_id", 5, keys=("cell",))
+    assert out.columns == ["vec_id", "cell", "salt"]
+    rows = out.collect()
+    assert len(rows) == len(data)
+    _assert_salted_cap(rows, "cell", 5)
+    assert max(r["salt"] for r in rows if r["cell"] == 7) == 4
 
 
 def test_a0002_level_monotonicity(spark, sf_dir):

@@ -1,8 +1,9 @@
-"""Dump formatted physical plans for the headline queries to PLANS.md —
-reviewable evidence that filters push down, dims broadcast, and top-k
-avoids global sorts. Regenerate after plan-affecting changes:
+"""Dump formatted physical plans for the headline queries (or the named
+ones) to PLANS.md — reviewable evidence that filters push down, dims
+broadcast, and top-k avoids global sorts. Regenerate after
+plan-affecting changes:
 
-    python tools/explain_all.py [--sf /root/testdata/sf0.01]
+    python tools/explain_all.py [--sf SF_DIR] [--out PLANS.md] [query ...]
 """
 
 from __future__ import annotations
@@ -230,6 +231,7 @@ HEADLINE = [
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*", default=HEADLINE)
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default="PLANS.md")
     args = ap.parse_args()
@@ -247,7 +249,7 @@ def main() -> None:
         "",
     ]
     cap = 600  # wide expression trees (64-dim vectors) explode the dump
-    for name in HEADLINE:
+    for name in args.names:
         df = qs[name].fn(spark, args.sf)
         plan = df._jdf.queryExecution().explainString(jmode)
         plines = plan.rstrip().splitlines()
@@ -256,7 +258,7 @@ def main() -> None:
         lines += [f"## {name}", "", f"{qs[name].description}", "", "```", *plines, "```", ""]
     with open(args.out, "w") as f:
         f.write("\n".join(lines))
-    print(f"wrote {args.out} ({len(HEADLINE)} plans)")
+    print(f"wrote {args.out} ({len(args.names)} plans)")
 
 
 if __name__ == "__main__":
