@@ -1,29 +1,31 @@
-"""Baseline JPEG codec (grayscale + YCbCr 4:4:4 color, stdlib + numpy).
+"""JPEG codec (ITU T.81, stdlib + numpy): baseline, progressive,
+lossless and arithmetic-coded streams, 1- or 3-component, 4:4:4 and
+4:2:0.
 
-Closes the last multimodal stub (VERDICT r5 left image/jpeg as the one
-documented fake): a real ITU T.81 baseline-sequential codec for 8-bit
-JFIF — forward/inverse DCT, Annex-K quantization (K.1 luminance + K.2
+Encoders: baseline sequential (SOF0) for grayscale, YCbCr 4:4:4 and
+4:2:0 — forward DCT, Annex-K quantization (K.1 luminance + K.2
 chrominance), zigzag, per-component DC prediction, run-length +
-canonical Huffman entropy coding (K.3 luma + chroma tables), 0xFF byte
-stuffing, interleaved MCUs for 3-component color — 4:4:4
-(one-block-per-component MCUs, VERDICT r6 item 6) and 4:2:0 (16x16
-MCUs: four Y blocks + box-averaged Cb/Cr, VERDICT r7 item 7, the
-layout of nearly all real-world JPEGs). The decoder is
-self-describing (it reads DQT/DHT/SOF0/SOS from the stream, not from
-shared constants) and handles arbitrary integral sampling factors
-(4:4:4 / 4:2:0 / 4:2:2) plus restart intervals (DRI / RST0-7 with
-byte-alignment and DC-predictor reset at each boundary, ADVICE r8 —
-the error-resilience framing most camera/libjpeg streams carry) AND
-progressive (SOF2) streams (r9: spectral selection + successive
-approximation with DC/AC first + refinement scans, EOB runs, and
-restarts within any scan — T.81 Annex G), so it decodes any
-conforming baseline or progressive 1- or 3-component JPEG, not just
-this encoder's output; subsampled planes upsample by replication.
-Arithmetic-coded sequential (SOF9) streams dispatch to the Annex D
-QM-coder decoder in ``jpeg_arith.py`` (r13); hierarchical and 12-bit
-DCT streams raise, and an out-of-order or missing restart marker
-raises rather than resyncing — a poisoned blob should fail the task,
-not skew the corpus (same policy as decode_png).
+canonical Huffman coding (K.3 tables), 0xFF byte stuffing, interleaved
+MCUs (4:2:0: four Y blocks + box-averaged Cb/Cr per 16x16 MCU), and
+optional restart intervals (DRI / RST0-7); progressive (SOF2) with
+spectral selection + successive approximation; lossless DPCM (SOF3,
+8- and 12-bit); arithmetic-coded sequential (SOF9, in
+``jpeg_arith.py``).
+
+Decoder: self-describing — one marker walk (``_scans``) reads the
+frame header and every DQT/DHT/DAC/DRI table from the stream and hands
+each scan to the mode's entropy decoder; the DCT modes then share one
+plane finish (dequantize + IDCT, replication upsample of subsampled
+components, crop). It handles arbitrary integral sampling factors
+(4:4:4 / 4:2:0 / 4:2:2), restart intervals (byte-alignment and
+DC-predictor reset at each boundary) and progressive streams
+(spectral selection + successive approximation with DC/AC first +
+refinement scans, EOB runs, restarts within any scan — T.81 Annex G).
+Hierarchical and 12-bit DCT streams raise, and so does every malformed
+header (truncated segment, bad precision, component count or sampling
+factor, missing table) and an out-of-order or missing restart marker
+— a poisoned blob should fail the task with a ValueError, not skew the
+corpus (same policy as decode_png).
 
 Exactness note for closed-form oracles (q124): a block that is CONSTANT
 with an even offset from 128 survives the codec bit-exactly — its DCT
@@ -35,7 +37,9 @@ lossy AC path is exercised by pytest error-bound tests instead.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import itertools
+import struct
+from collections.abc import Callable, Iterator
 
 import numpy as np
 
@@ -211,6 +215,12 @@ def _magnitude(v: int) -> tuple[int, int]:
     return size, bits
 
 
+def _quantize(block: np.ndarray, quant: np.ndarray) -> np.ndarray:
+    """FDCT + quantize one 8x8 block: its 64 coefficients in zigzag order."""
+    coeff = _M @ (block - 128.0) @ _M.T
+    return np.rint(coeff / quant).astype(np.int64).reshape(64)[ZIGZAG]
+
+
 def _encode_block(
     bw: _BitWriter,
     block: np.ndarray,
@@ -221,9 +231,7 @@ def _encode_block(
 ) -> int:
     """FDCT + quantize + entropy-code one 8x8 block; returns its DC
     term (the caller threads per-component DC predictors)."""
-    coeff = _M @ (block - 128.0) @ _M.T
-    q = np.rint(coeff / quant).astype(np.int64)
-    zz = q.reshape(64)[ZIGZAG]
+    zz = _quantize(block, quant)
     diff = int(zz[0]) - prev_dc
     size, bits = _magnitude(diff)
     code, ln = dc_codes[size]
@@ -253,21 +261,53 @@ def _encode_block(
 
 
 def _seg(marker: int, payload: bytes) -> bytes:
-    import struct
-
     return struct.pack(">HH", marker, len(payload) + 2) + payload
 
 
 _APP0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
 
 
+def _jfif(body: bytes) -> bytes:
+    """SOI + JFIF APP0 + ``body`` (table, frame and scan segments with
+    their entropy data) + EOI."""
+    return b"\xff\xd8" + _seg(0xFFE0, _APP0) + body + b"\xff\xd9"
+
+
 def _zz_table(q: np.ndarray) -> bytes:
     return bytes(int(q.reshape(64)[ZIGZAG][k]) for k in range(64))
 
 
-def _pad8(img: np.ndarray, height: int, width: int) -> np.ndarray:
-    h8, w8 = -(-height // 8) * 8, -(-width // 8) * 8
-    return np.pad(img, ((0, h8 - height), (0, w8 - width)), mode="edge")
+def _dqt_seg(ncomp: int) -> bytes:
+    """DQT carrying K.1 as table 0 and, for color, K.2 as table 1."""
+    payload = b"\x00" + _zz_table(QUANT)
+    if ncomp == 3:
+        payload += b"\x01" + _zz_table(QUANT_C)
+    return _seg(0xFFDB, payload)
+
+
+def _dht_seg(tc_th: int, bits: list[int], values: list[int]) -> bytes:
+    return _seg(0xFFC4, bytes([tc_th]) + bytes(bits[1:]) + bytes(values))
+
+
+def _sof_seg(marker: int, precision: int, width: int, height: int, ncomp: int, luma_hv: int = 1) -> bytes:
+    """SOFn: Y (id 1, ``luma_hv`` x ``luma_hv`` sampling, quant table
+    0) and, for color, Cb/Cr (ids 2, 3, 1x1 sampling, quant table 1)."""
+    comps = bytes([1, 0x11 * luma_hv, 0])
+    if ncomp == 3:
+        comps += bytes([2, 0x11, 1, 3, 0x11, 1])
+    return _seg(marker, struct.pack(">BHHB", precision, height, width, ncomp) + comps)
+
+
+def _sos_seg(scan_comps: list[tuple[int, int, int]], ss: int, se: int, ah: int, al: int) -> bytes:
+    body = bytes([len(scan_comps)])
+    for cid, dc_id, ac_id in scan_comps:
+        body += bytes([cid, (dc_id << 4) | ac_id])
+    return _seg(0xFFDA, body + bytes([ss, se, (ah << 4) | al]))
+
+
+# (component id, DC table, AC table) of a sequential scan: luma on
+# tables 0, both chromas on tables 1.
+_SCAN_COMPS = [(1, 0, 0), (2, 1, 1), (3, 1, 1)]
 
 
 def _pad_mult(img: np.ndarray, mult: int) -> np.ndarray:
@@ -282,6 +322,83 @@ def _box2(plane: np.ndarray) -> np.ndarray:
     return (plane[0::2, 0::2] + plane[1::2, 0::2] + plane[0::2, 1::2] + plane[1::2, 1::2]) / 4.0
 
 
+def _pixel_planes(
+    width: int, height: int, pixel_fn: Callable, colorspace: str | None = None
+) -> list[np.ndarray]:
+    """Sample ``pixel_fn(x, y)`` over the frame, row-major, as float
+    planes: one plane for a grayscale fn (``colorspace`` None), else
+    (Y, Cb, Cr) — converted from (r, g, b) with the standard JFIF
+    matrix in float (no pre-DCT rounding) when ``colorspace='rgb'``,
+    used verbatim when 'ycbcr'."""
+    if colorspace not in (None, "rgb", "ycbcr"):
+        raise ValueError("colorspace must be 'rgb' or 'ycbcr'")
+    px = np.array(
+        [[pixel_fn(x, y) for x in range(width)] for y in range(height)], dtype=np.float64
+    )
+    if colorspace is None:
+        return [px]
+    if colorspace == "rgb":
+        r, g, b = px[..., 0], px[..., 1], px[..., 2]
+        return [
+            0.299 * r + 0.587 * g + 0.114 * b,
+            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
+            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
+        ]
+    return [px[..., 0], px[..., 1], px[..., 2]]
+
+
+def _make_baseline(
+    width: int, height: int, planes: list[np.ndarray], luma_hv: int, restart_interval: int
+) -> bytes:
+    """Baseline (SOF0) encoder for 1 or 3 full-resolution planes. Y is
+    sampled ``luma_hv`` x ``luma_hv`` (1: 4:4:4, 2: 4:2:0 with Cb/Cr
+    2x2 box-averaged); an MCU interleaves each component's h*v blocks
+    in raster order, DC prediction is per component (threading across
+    the Y blocks of an MCU, T.81 F.1.1.5.1), and edges pad by
+    replication to an MCU multiple. A nonzero ``restart_interval``
+    writes DRI and emits RST0-7 every that many MCUs (byte-aligned, DC
+    predictors reset)."""
+    mcu = 8 * luma_hv
+    luma = (_canonical_codes(DC_BITS, DC_VALUES), _canonical_codes(AC_BITS, AC_VALUES))
+    chroma = (_canonical_codes(DC_C_BITS, DC_C_VALUES), _canonical_codes(AC_C_BITS, AC_C_VALUES))
+    padded = [_pad_mult(p, mcu) for p in planes]
+    comps = [(padded[0], luma_hv, QUANT, luma)]
+    for p in padded[1:]:
+        comps.append((_box2(p) if luma_hv == 2 else p, 1, QUANT_C, chroma))
+    bw = _BitWriter()
+    prev_dc = [0] * len(comps)
+    mcu_i = 0
+    rst_m = 0
+    for my in range(padded[0].shape[0] // mcu):
+        for mx in range(padded[0].shape[1] // mcu):
+            if restart_interval and mcu_i and mcu_i % restart_interval == 0:
+                rst_m = _emit_restart(bw, rst_m)
+                prev_dc = [0] * len(comps)
+            mcu_i += 1
+            for ci, (plane, hv, quant, (dc_codes, ac_codes)) in enumerate(comps):
+                for vy in range(hv):
+                    for vx in range(hv):
+                        y0, x0 = (my * hv + vy) * 8, (mx * hv + vx) * 8
+                        prev_dc[ci] = _encode_block(
+                            bw, plane[y0 : y0 + 8, x0 : x0 + 8], quant, dc_codes, ac_codes, prev_dc[ci]
+                        )
+    bw.flush()
+
+    n = len(comps)
+    dri = _seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
+    dht = _dht_seg(0x00, DC_BITS, DC_VALUES) + _dht_seg(0x10, AC_BITS, AC_VALUES)
+    if n == 3:
+        dht += _dht_seg(0x01, DC_C_BITS, DC_C_VALUES) + _dht_seg(0x11, AC_C_BITS, AC_C_VALUES)
+    return _jfif(
+        _dqt_seg(n)
+        + dri
+        + _sof_seg(0xFFC0, 8, width, height, n, luma_hv)
+        + dht
+        + _sos_seg(_SCAN_COMPS[:n], 0, 63, 0, 0)
+        + bytes(bw.out)
+    )
+
+
 def make_jpeg_gray(
     width: int, height: int, pixel_fn: Callable[[int, int], int], restart_interval: int = 0
 ) -> bytes:
@@ -290,42 +407,7 @@ def make_jpeg_gray(
     ``restart_interval`` writes a DRI segment and emits RST0-7 markers
     every that many MCUs (byte-aligned, DC predictor reset) — the
     error-resilience framing most real-world encoders produce."""
-    import struct
-
-    img = _pad8(
-        np.array(
-            [[pixel_fn(x, y) for x in range(width)] for y in range(height)], dtype=np.float64
-        ),
-        height,
-        width,
-    )
-    dc_codes = _canonical_codes(DC_BITS, DC_VALUES)
-    ac_codes = _canonical_codes(AC_BITS, AC_VALUES)
-    bw = _BitWriter()
-    prev_dc = 0
-    mcu_i = 0
-    rst_m = 0
-    for by in range(img.shape[0] // 8):
-        for bx in range(img.shape[1] // 8):
-            if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                rst_m = _emit_restart(bw, rst_m)
-                prev_dc = 0
-            mcu_i += 1
-            prev_dc = _encode_block(
-                bw, img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8], QUANT, dc_codes, ac_codes, prev_dc
-            )
-    bw.flush()
-
-    dri = _seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    dqt = _seg(0xFFDB, b"\x00" + _zz_table(QUANT))
-    sof = _seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    dht_dc = _seg(0xFFC4, b"\x00" + bytes(DC_BITS[1:]) + bytes(DC_VALUES))
-    dht_ac = _seg(0xFFC4, b"\x10" + bytes(AC_BITS[1:]) + bytes(AC_VALUES))
-    sos = _seg(0xFFDA, b"\x01" + bytes([1, 0x00]) + b"\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return (
-        b"\xff\xd8" + app0 + dqt + dri + sof + dht_dc + dht_ac + sos + bytes(bw.out) + b"\xff\xd9"
-    )
+    return _make_baseline(width, height, _pixel_planes(width, height, pixel_fn), 1, restart_interval)
 
 
 def make_jpeg_color(
@@ -346,69 +428,8 @@ def make_jpeg_color(
     used verbatim — the closed-form fixture path, where block-constant
     values with quant-divisible DC terms survive the codec bit-exactly
     (see formula_jpeg_color_ycbcr)."""
-    import struct
-
-    if colorspace not in ("rgb", "ycbcr"):
-        raise ValueError("colorspace must be 'rgb' or 'ycbcr'")
-    px = np.array(
-        [[pixel_fn(x, y) for x in range(width)] for y in range(height)], dtype=np.float64
-    )
-    if colorspace == "rgb":
-        r, g, b = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        planes = [y, cb, cr]
-    else:
-        planes = [px[..., 0], px[..., 1], px[..., 2]]
-    planes = [_pad8(p, height, width) for p in planes]
-
-    luma = (_canonical_codes(DC_BITS, DC_VALUES), _canonical_codes(AC_BITS, AC_VALUES))
-    chroma = (
-        _canonical_codes(DC_C_BITS, DC_C_VALUES),
-        _canonical_codes(AC_C_BITS, AC_C_VALUES),
-    )
-    comp_tables = [(QUANT, *luma), (QUANT_C, *chroma), (QUANT_C, *chroma)]
-    bw = _BitWriter()
-    prev_dc = [0, 0, 0]
-    mcu_i = 0
-    rst_m = 0
-    for by in range(planes[0].shape[0] // 8):
-        for bx in range(planes[0].shape[1] // 8):  # one MCU = Y, Cb, Cr blocks
-            if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                rst_m = _emit_restart(bw, rst_m)
-                prev_dc = [0, 0, 0]
-            mcu_i += 1
-            for ci in range(3):
-                quant, dc_codes, ac_codes = comp_tables[ci]
-                prev_dc[ci] = _encode_block(
-                    bw,
-                    planes[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8],
-                    quant,
-                    dc_codes,
-                    ac_codes,
-                    prev_dc[ci],
-                )
-    bw.flush()
-
-    dri = _seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    dqt = _seg(0xFFDB, b"\x00" + _zz_table(QUANT) + b"\x01" + _zz_table(QUANT_C))
-    sof = _seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x11, 0])  # Y: 1x1, quant table 0
-        + bytes([2, 0x11, 1])  # Cb: 1x1, quant table 1
-        + bytes([3, 0x11, 1]),  # Cr: 1x1, quant table 1
-    )
-    dht = (
-        _seg(0xFFC4, b"\x00" + bytes(DC_BITS[1:]) + bytes(DC_VALUES))
-        + _seg(0xFFC4, b"\x10" + bytes(AC_BITS[1:]) + bytes(AC_VALUES))
-        + _seg(0xFFC4, b"\x01" + bytes(DC_C_BITS[1:]) + bytes(DC_C_VALUES))
-        + _seg(0xFFC4, b"\x11" + bytes(AC_C_BITS[1:]) + bytes(AC_C_VALUES))
-    )
-    sos = _seg(0xFFDA, b"\x03" + bytes([1, 0x00, 2, 0x11, 3, 0x11]) + b"\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return b"\xff\xd8" + app0 + dqt + dri + sof + dht + sos + bytes(bw.out) + b"\xff\xd9"
+    planes = _pixel_planes(width, height, pixel_fn, colorspace)
+    return _make_baseline(width, height, planes, 1, restart_interval)
 
 
 def make_jpeg_color_420(
@@ -431,71 +452,17 @@ def make_jpeg_color_420(
     MCU survives the box downsample, the DCT (DC term only), and the
     replication upsample bit-exactly when the Annex K.2 DC step 17
     divides 8*(C-128) (see formula_jpeg_color_420_ycbcr)."""
-    import struct
+    planes = _pixel_planes(width, height, pixel_fn, colorspace)
+    return _make_baseline(width, height, planes, 2, 0)
 
-    if colorspace not in ("rgb", "ycbcr"):
-        raise ValueError("colorspace must be 'rgb' or 'ycbcr'")
-    px = np.array(
-        [[pixel_fn(x, y) for x in range(width)] for y in range(height)], dtype=np.float64
-    )
-    if colorspace == "rgb":
-        r, g, b = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    else:
-        y, cb, cr = px[..., 0], px[..., 1], px[..., 2]
-    y16 = _pad_mult(y, 16)
-    cbs, crs = _box2(_pad_mult(cb, 16)), _box2(_pad_mult(cr, 16))
 
-    luma = (_canonical_codes(DC_BITS, DC_VALUES), _canonical_codes(AC_BITS, AC_VALUES))
-    chroma = (
-        _canonical_codes(DC_C_BITS, DC_C_VALUES),
-        _canonical_codes(AC_C_BITS, AC_C_VALUES),
-    )
-    bw = _BitWriter()
-    prev_dc = [0, 0, 0]
-    for my in range(y16.shape[0] // 16):
-        for mx in range(y16.shape[1] // 16):  # one MCU = 4 Y + 1 Cb + 1 Cr
-            for vy in range(2):
-                for vx in range(2):
-                    prev_dc[0] = _encode_block(
-                        bw,
-                        y16[
-                            my * 16 + vy * 8 : my * 16 + vy * 8 + 8,
-                            mx * 16 + vx * 8 : mx * 16 + vx * 8 + 8,
-                        ],
-                        QUANT,
-                        *luma,
-                        prev_dc[0],
-                    )
-            for ci, plane in ((1, cbs), (2, crs)):
-                prev_dc[ci] = _encode_block(
-                    bw,
-                    plane[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8],
-                    QUANT_C,
-                    *chroma,
-                    prev_dc[ci],
-                )
-    bw.flush()
-
-    dqt = _seg(0xFFDB, b"\x00" + _zz_table(QUANT) + b"\x01" + _zz_table(QUANT_C))
-    sof = _seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x22, 0])  # Y: 2x2 sampling, quant table 0
-        + bytes([2, 0x11, 1])  # Cb: 1x1, quant table 1
-        + bytes([3, 0x11, 1]),  # Cr: 1x1, quant table 1
-    )
-    dht = (
-        _seg(0xFFC4, b"\x00" + bytes(DC_BITS[1:]) + bytes(DC_VALUES))
-        + _seg(0xFFC4, b"\x10" + bytes(AC_BITS[1:]) + bytes(AC_VALUES))
-        + _seg(0xFFC4, b"\x01" + bytes(DC_C_BITS[1:]) + bytes(DC_C_VALUES))
-        + _seg(0xFFC4, b"\x11" + bytes(AC_C_BITS[1:]) + bytes(AC_C_VALUES))
-    )
-    sos = _seg(0xFFDA, b"\x03" + bytes([1, 0x00, 2, 0x11, 3, 0x11]) + b"\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return b"\xff\xd8" + app0 + dqt + sof + dht + sos + bytes(bw.out) + b"\xff\xd9"
+# ---------------------------------------------------------------------------
+# Decoder. ``_scans`` is the one marker walk: it keeps the frame header
+# and the tables in force in a ``_Frame`` and yields every scan with its
+# entropy-coded bytes; each mode decodes its scans into per-component
+# zigzag coefficient grids (DCT modes) that ``_finish`` turns into
+# pixel planes, or into samples directly (lossless).
+# ---------------------------------------------------------------------------
 
 
 class _BitReader:
@@ -561,14 +528,224 @@ def _extend(bits: int, size: int) -> int:
     return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
 
 
+# Frame types this codec decodes: baseline, progressive, lossless and
+# arithmetic-coded sequential. Every other SOFn (0xC0-0xCF except DHT
+# 0xC4, JPG 0xC8 and DAC 0xCC) is rejected.
+_MODES = (0xC0, 0xC2, 0xC3, 0xC9)
+
+
+class _Frame:
+    """What the marker walk has read so far: the frame header (SOFn)
+    and the tables in force — quantization (DQT), Huffman (DHT) and
+    arithmetic conditioning (DAC) — plus the restart interval (DRI).
+    Tables may be redefined between scans; each scan sees the state at
+    its SOS."""
+
+    def __init__(self) -> None:
+        self.sof = 0  # frame marker low byte (0xC0, 0xC2, ...); 0 before the SOFn
+        self.precision = self.width = self.height = 0
+        self.comps: list[tuple[int, int, int, int]] = []  # (cid, h, v, tq), SOF order
+        self.hmax = self.vmax = self.mcus_x = self.mcus_y = 0
+        self.quant: dict[int, np.ndarray] = {}
+        self.huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}  # (class, id)
+        self.dac: dict[tuple[int, int], int] = {}  # (class, id) -> conditioning byte Cs
+        self.restart_interval = 0
+
+    def table_segment(self, marker: int, p: bytes) -> None:
+        """Apply one DQT/DHT/DAC/DRI/SOFn segment; others are skipped."""
+        if marker == 0xDB:  # DQT
+            i = 0
+            while i < len(p):
+                if p[i] >> 4:
+                    raise ValueError("only 8-bit quantization tables supported")
+                if i + 65 > len(p):
+                    raise ValueError("JPEG DQT segment truncated")
+                tbl = np.zeros(64)
+                tbl[ZIGZAG] = np.frombuffer(p[i + 1 : i + 65], dtype=np.uint8)
+                self.quant[p[i] & 0x0F] = tbl.reshape(8, 8)
+                i += 65
+        elif marker == 0xC4:  # DHT
+            i = 0
+            while i < len(p):
+                bits = [0] + list(p[i + 1 : i + 17])
+                n = sum(bits)
+                if len(bits) != 17 or i + 17 + n > len(p):
+                    raise ValueError("JPEG DHT segment truncated")
+                codes = _canonical_codes(bits, list(p[i + 17 : i + 17 + n]))
+                # keyed by (class, id): a DC and an AC table may share
+                # Th (T.81 B.2.4.2), so neither may overwrite the other
+                self.huff[(p[i] >> 4, p[i] & 0x0F)] = {(ln, c): s for s, (c, ln) in codes.items()}
+                i += 17 + n
+        elif marker == 0xCC:  # DAC
+            if len(p) % 2:
+                raise ValueError("JPEG DAC segment truncated")
+            for i in range(0, len(p), 2):
+                self.dac[(p[i] >> 4, p[i] & 0x0F)] = p[i + 1]
+        elif marker == 0xDD:  # DRI — restart interval in MCUs
+            if len(p) < 2:
+                raise ValueError("JPEG DRI segment truncated")
+            (self.restart_interval,) = struct.unpack_from(">H", p, 0)
+        elif 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            self._frame_header(marker, p)
+
+    def _frame_header(self, marker: int, p: bytes) -> None:
+        if self.sof:
+            raise ValueError("JPEG stream has more than one frame header")
+        if marker not in _MODES:
+            raise ValueError("unsupported JPEG frame type SOF%d" % (marker - 0xC0))
+        if len(p) < 6:
+            raise ValueError("JPEG SOF segment truncated")
+        precision, height, width, ncomp = struct.unpack_from(">BHHB", p, 0)
+        lossless = marker == 0xC3
+        if precision not in ((8, 12) if lossless else (8,)):
+            raise ValueError(f"unsupported JPEG sample precision {precision}")
+        if ncomp not in ((1,) if lossless else (1, 3)):
+            raise ValueError(f"unsupported JPEG component count {ncomp}")
+        if len(p) < 6 + 3 * ncomp:
+            raise ValueError("JPEG SOF segment truncated")
+        if not width or not height:
+            raise ValueError("JPEG frame without width or height (DNL) is not supported")
+        comps = []
+        for i in range(ncomp):
+            cid, sampling, tq = p[6 + 3 * i : 9 + 3 * i]
+            h, v = sampling >> 4, sampling & 0x0F
+            if not (1 <= h <= 4 and 1 <= v <= 4):
+                raise ValueError("JPEG sampling factors out of range")
+            comps.append((cid, h, v, tq))
+        if ncomp == 1:
+            # one component is coded non-interleaved at full resolution
+            # whatever its declared factors (T.81 A.2.2)
+            comps = [(comps[0][0], 1, 1, comps[0][3])]
+        hmax = max(h for _, h, _, _ in comps)
+        vmax = max(v for _, _, v, _ in comps)
+        if any(hmax % h or vmax % v for _, h, v, _ in comps):
+            raise ValueError("non-integral JPEG sampling ratio not supported")
+        self.sof, self.precision, self.width, self.height = marker, precision, width, height
+        self.comps, self.hmax, self.vmax = comps, hmax, vmax
+        self.mcus_x, self.mcus_y = -(-width // (8 * hmax)), -(-height // (8 * vmax))
+
+    def scan_header(self, p: bytes) -> tuple[list[tuple[int, int, int]], int, int, int, int]:
+        """Parse an SOS payload: ([(cid, Td, Ta)], Ss, Se, Ah, Al)."""
+        if not self.sof:
+            raise ValueError("JPEG SOS before SOF")
+        if not p or not p[0] or len(p) < 4 + 2 * p[0]:
+            raise ValueError("JPEG SOS segment truncated")
+        ns = p[0]
+        cids = {c[0] for c in self.comps}
+        comps = []
+        for i in range(ns):
+            cid, tbls = p[1 + 2 * i], p[2 + 2 * i]
+            if cid not in cids:
+                raise ValueError(f"JPEG scan names unknown component {cid}")
+            comps.append((cid, tbls >> 4, tbls & 0x0F))
+        ss, se, a = p[1 + 2 * ns : 4 + 2 * ns]
+        return comps, ss, se, a >> 4, a & 0x0F
+
+    def huffman(self, tc: int, th: int) -> dict[tuple[int, int], int]:
+        """The Huffman table a scan names — missing is a ValueError at
+        scan start (T.81 B.2.4.2), not a KeyError mid-MCU, and an AC
+        table with the same id never stands in for a DC one."""
+        table = self.huff.get((tc, th))
+        if table is None:
+            raise ValueError(f"missing {'AC' if tc else 'DC'} Huffman table {th}")
+        return table
+
+    def coef_grid(self) -> dict[int, np.ndarray]:
+        """Zeroed (blocks_y, blocks_x, 64) zigzag coefficient grid per
+        component, sized for interleaved MCU padding."""
+        return {
+            cid: np.zeros((self.mcus_y * v, self.mcus_x * h, 64), dtype=np.int64)
+            for cid, h, v, _ in self.comps
+        }
+
+
+def _entropy_end(content: bytes, pos: int) -> int:
+    """End of an entropy-coded segment: the next 0xFF not followed by a
+    stuffed 0x00 or a restart marker."""
+    i = pos
+    n = len(content)
+    while i < n - 1:
+        if content[i] == 0xFF and content[i + 1] != 0x00 and not (0xD0 <= content[i + 1] <= 0xD7):
+            return i
+        i += 2 if content[i] == 0xFF else 1
+    return n
+
+
+_Scan = tuple[_Frame, tuple[list[tuple[int, int, int]], int, int, int, int], bytes]
+
+
+def _scans(content: bytes) -> Iterator[_Scan]:
+    """The marker walk of a JPEG stream: check SOI, skip 0xFF fill bytes
+    (T.81 B.1.1.2), bound every segment, apply table segments to one
+    ``_Frame``, and yield (frame, scan header, entropy-coded bytes) at
+    each SOS, until EOI. An entropy segment that no marker ends means
+    the stream lost its tail."""
+    if content[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG file")
+    fr = _Frame()
+    pos, n = 2, len(content)
+    while pos + 2 <= n:
+        if content[pos] != 0xFF:
+            raise ValueError("JPEG marker expected")
+        marker = content[pos + 1]
+        if marker == 0xFF:
+            pos += 1
+            continue
+        if marker == 0xD9:  # EOI
+            return
+        if pos + 4 > n:
+            raise ValueError("JPEG segment truncated")
+        (length,) = struct.unpack_from(">H", content, pos + 2)
+        end = pos + 2 + length
+        if length < 2 or end > n:
+            raise ValueError("JPEG segment truncated")
+        if marker == 0xDA:
+            scan = fr.scan_header(content[pos + 4 : end])
+            pos = _entropy_end(content, end)
+            if pos == n:
+                raise ValueError("JPEG missing EOI")
+            yield fr, scan, content[end:pos]
+        else:
+            fr.table_segment(marker, content[pos + 4 : end])
+            pos = end
+    raise ValueError("JPEG missing EOI")
+
+
+def _finish(fr: _Frame, coef: dict[int, np.ndarray]) -> list[np.ndarray]:
+    """Per-component pixel planes from zigzag coefficient grids:
+    dequantize + inverse-DCT every block, upsample subsampled
+    components to full resolution by pixel replication (the box-filter
+    inverse; libjpeg's default "fancy" triangular upsample differs by
+    <=1 LSB on gradients and not at all on MCU-constant chroma), crop
+    to (height, width). Un-rounded floats in SOF order; callers
+    round/clip."""
+    out = []
+    for cid, h, v, tq in fr.comps:
+        if tq not in fr.quant:
+            raise ValueError(f"missing quantization table {tq}")
+        q = fr.quant[tq]
+        arr = coef[cid]
+        plane = np.zeros((arr.shape[0] * 8, arr.shape[1] * 8))
+        c = np.zeros(64)
+        for by in range(arr.shape[0]):
+            for bx in range(arr.shape[1]):
+                c[ZIGZAG] = arr[by, bx]
+                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                    _M.T @ (c.reshape(8, 8) * q) @ _M + 128.0
+                )
+        if (h, v) != (fr.hmax, fr.vmax):
+            plane = np.repeat(np.repeat(plane, fr.vmax // v, axis=0), fr.hmax // h, axis=1)
+        out.append(plane[: fr.height, : fr.width])
+    return out
+
+
 def _decode_block(
     br: _BitReader,
     dc_tbl: dict[tuple[int, int], int],
     ac_tbl: dict[tuple[int, int], int],
-    q: np.ndarray,
     prev_dc: int,
 ) -> tuple[np.ndarray, int]:
-    """Entropy-decode + dequantize + IDCT one 8x8 block."""
+    """Entropy-decode one baseline 8x8 block: (zigzag coefficients, DC)."""
     zz = np.zeros(64, dtype=np.int64)
     size = _decode_huffman(br, dc_tbl)
     prev_dc += _extend(br.bits(size), size)
@@ -587,205 +764,70 @@ def _decode_block(
             raise ValueError("AC run overflows block")
         zz[k] = _extend(br.bits(size), size)
         k += 1
-    coeff = np.zeros(64)
-    coeff[ZIGZAG] = zz
-    return _M.T @ (coeff.reshape(8, 8) * q) @ _M + 128.0, prev_dc
+    return zz, prev_dc
 
 
-def _parse_baseline(content: bytes) -> tuple[int, int, list[np.ndarray]]:
-    """Parse a baseline-sequential JFIF stream into per-component pixel
-    planes (1 or 3 components, arbitrary integral sampling factors —
-    4:4:4, 4:2:0, 4:2:2, ...). Subsampled components decode at their own
-    resolution from interleaved MCUs (T.81 A.2.3: each component
-    contributes h_i x v_i blocks per MCU, raster order) and are
-    upsampled to full resolution by pixel replication (the box-filter
-    inverse; libjpeg's default "fancy" triangular upsample differs by
-    <=1 LSB on gradients and not at all on MCU-constant chroma).
-    Planes are cropped to (height, width), un-rounded floats; callers
-    round/clip. Tables come from the stream (DQT/DHT)."""
-    import struct
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG file")
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []  # (cid, h, v, tq), SOF order
-    scan: list[tuple[int, int, int]] = []  # (component id, dc table, ac table), SOS order
-    data_start = None
-    restart_interval = 0
-    while pos + 4 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = content[pos + 1]
-        if marker == 0xFF:  # T.81 B.1.1.2: optional 0xFF fill before a marker
-            pos += 1
-            continue
-        (length,) = struct.unpack_from(">H", content, pos + 2)
-        payload = content[pos + 4 : pos + 2 + length]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0x0F
-                if pq != 0:
-                    raise ValueError("only 8-bit quantization tables supported")
-                tbl = np.zeros(64)
-                tbl[ZIGZAG] = np.frombuffer(payload[p + 1 : p + 65], dtype=np.uint8)
-                quant[tq] = tbl.reshape(8, 8)
-                p += 65
-        elif marker == 0xC4:  # DHT
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0x0F
-                bits = [0] + list(payload[p + 1 : p + 17])
-                n = sum(bits)
-                if len(bits) != 17 or p + 17 + n > len(payload):
-                    raise ValueError("JPEG DHT segment truncated")
-                values = list(payload[p + 17 : p + 17 + n])
-                codes = _canonical_codes(bits, values)
-                huff[(tc, th)] = {(ln, code): sym for sym, (code, ln) in codes.items()}
-                p += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
-            if len(payload) < 6:
-                raise ValueError("JPEG SOF0 segment truncated")
-            precision, height, width, ncomp = struct.unpack_from(">BHHB", payload, 0)
-            if precision != 8 or ncomp not in (1, 3):
-                raise ValueError("only 8-bit 1- or 3-component baseline JPEG is supported")
-            if len(payload) < 6 + 3 * ncomp:
-                raise ValueError("JPEG SOF0 segment truncated")
-            for ci in range(ncomp):
-                cid, sampling, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                h, v = sampling >> 4, sampling & 0x0F
-                if not (1 <= h <= 4 and 1 <= v <= 4):
-                    raise ValueError("JPEG sampling factors out of range")
-                comps.append((cid, h, v, tq))
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("only baseline sequential (SOF0) JPEG is supported")
-        elif marker == 0xDD:  # DRI — restart interval in MCUs
-            if len(payload) < 2:
-                raise ValueError("JPEG DRI segment truncated")
-            (restart_interval,) = struct.unpack_from(">H", payload, 0)
-        elif marker == 0xDA:  # SOS
-            if not payload:
-                raise ValueError("JPEG SOS segment truncated")
-            ns = payload[0]
-            if ns != len(comps):
-                raise ValueError("single-scan (interleaved) JPEG expected")
-            if len(payload) < 1 + 2 * ns + 3:
-                raise ValueError("JPEG SOS segment truncated")
-            for si in range(ns):
-                cid = payload[1 + 2 * si]
-                tbls = payload[2 + 2 * si]
-                scan.append((cid, tbls >> 4, tbls & 0x0F))
-            # validate table references at parse time (T.81 B.2.4.2):
-            # an AC table sharing the same Th must not satisfy a DC
-            # lookup, so a missing class/id pair is a ValueError here,
-            # not a KeyError deep inside the MCU loop
-            for cid, dc_id, ac_id in scan:
-                if (0, dc_id) not in huff:
-                    raise ValueError(f"missing DC Huffman table {dc_id}")
-                if (1, ac_id) not in huff:
-                    raise ValueError(f"missing AC Huffman table {ac_id}")
-            data_start = pos + 2 + length
-            break
-        pos += 2 + length
-    if width is None or data_start is None or not scan:
-        raise ValueError("JPEG missing SOF0/SOS")
-
-    end = content.rfind(b"\xff\xd9")
-    if end < 0:
-        raise ValueError("JPEG missing EOI")
-    br = _BitReader(content[data_start:end])
-    hv_of = {cid: (h, v) for cid, h, v, _ in comps}
-    tq_of = {cid: tq for cid, _, _, tq in comps}
-    if len(scan) == 1:
-        # Non-interleaved single-component scan (T.81 A.2.2): one data
-        # unit per MCU at the component's own resolution — the component
-        # of a 1-component JPEG is full-res regardless of its declared
-        # sampling factors.
-        hv_of = {scan[0][0]: (1, 1)}
-    hmax = max(h for h, _ in hv_of.values())
-    vmax = max(v for _, v in hv_of.values())
-    mcus_x, mcus_y = -(-width // (8 * hmax)), -(-height // (8 * vmax))
-    planes = {cid: np.zeros((mcus_y * v * 8, mcus_x * h * 8)) for cid, (h, v) in hv_of.items()}
-    prev_dc = {cid: 0 for cid in hv_of}
+def _baseline_coefs(fr: _Frame, scan_comps: list[tuple[int, int, int]], data: bytes) -> dict[int, np.ndarray]:
+    """Huffman-decode the one interleaved scan of a baseline stream:
+    each MCU carries h_i x v_i blocks per component in raster order
+    (T.81 A.2.3); at every restart boundary the reader byte-aligns,
+    consumes RSTm (sequence number cycling 0-7) and every DC predictor
+    resets (T.81 E.2.4)."""
+    tables = [(cid, fr.huffman(0, td), fr.huffman(1, ta)) for cid, td, ta in scan_comps]
+    hv_of = {cid: (h, v) for cid, h, v, _ in fr.comps}
+    coef = fr.coef_grid()
+    br = _BitReader(data)
+    ri = fr.restart_interval
+    prev_dc = dict.fromkeys(hv_of, 0)
     mcu_i = 0
     rst_m = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            # Restart boundary (DRI): byte-align, consume RSTm (sequence
-            # number cycling 0-7), reset every DC predictor (T.81 E.2.4).
-            if restart_interval and mcu_i and mcu_i % restart_interval == 0:
+    for my in range(fr.mcus_y):
+        for mx in range(fr.mcus_x):
+            if ri and mcu_i and mcu_i % ri == 0:
                 br.restart(rst_m)
                 rst_m = (rst_m + 1) & 7
-                prev_dc = {cid: 0 for cid in hv_of}
+                prev_dc = dict.fromkeys(hv_of, 0)
             mcu_i += 1
-            for cid, dc_id, ac_id in scan:  # h*v blocks per component, raster order
+            for cid, dc_tbl, ac_tbl in tables:
                 h, v = hv_of[cid]
                 for vy in range(v):
                     for vx in range(h):
-                        block, prev_dc[cid] = _decode_block(
-                            br, huff[(0, dc_id)], huff[(1, ac_id)], quant[tq_of[cid]], prev_dc[cid]
+                        coef[cid][my * v + vy, mx * h + vx], prev_dc[cid] = _decode_block(
+                            br, dc_tbl, ac_tbl, prev_dc[cid]
                         )
-                        planes[cid][
-                            (my * v + vy) * 8 : (my * v + vy) * 8 + 8,
-                            (mx * h + vx) * 8 : (mx * h + vx) * 8 + 8,
-                        ] = block
-    out = []
-    for cid, _, _, _ in comps:
-        h, v = hv_of[cid]
-        p = planes[cid]
-        if (h, v) != (hmax, vmax):  # replication upsample to full res
-            if hmax % h or vmax % v:
-                raise ValueError("non-integral JPEG sampling ratio not supported")
-            p = np.repeat(np.repeat(p, vmax // v, axis=0), hmax // h, axis=1)
-        out.append(p[:height, :width])
-    return width, height, out
+    return coef
 
 
-def _frame_header(content: bytes) -> tuple[int, int]:
-    """(marker, precision) of the stream's frame header, the first SOFn
-    segment before the first scan: marker 0xC0 baseline, 0xC2
-    progressive, 0xC3 lossless, 0xC9 arithmetic, ...; precision P is
-    the first byte of its payload — 8 for every DCT mode here, 8 or 12
-    for lossless."""
-    import struct
+def _decode(content: bytes, sof: int | None = None) -> tuple[_Frame, list[np.ndarray]]:
+    """Walk ``content`` once and decode it: (frame, per-component
+    planes). Dispatches on the frame type — baseline SOF0, progressive
+    SOF2, lossless SOF3 or arithmetic SOF9 — which must equal ``sof``
+    when one is given. The sequential modes decode the first scan,
+    which must interleave every component."""
+    scans = _scans(content)
+    first = next(scans, None)
+    if first is None:
+        raise ValueError("JPEG missing SOF/SOS")
+    fr, scan, data = first
+    if sof is not None and fr.sof != sof:
+        raise ValueError("expected a SOF%d stream, got SOF%d" % (sof - 0xC0, fr.sof - 0xC0))
+    if fr.sof == 0xC2:
+        return fr, _finish(fr, _progressive_coefs(itertools.chain([first], scans)))
+    if len(scan[0]) != len(fr.comps):
+        raise ValueError("single-scan (interleaved) JPEG expected")
+    if fr.sof == 0xC3:
+        return fr, _lossless_planes(fr, scan, data)
+    if fr.sof == 0xC9:  # arithmetic-coded sequential (Annex D QM-coder)
+        from .jpeg_arith import _arith_coefs
 
-    pos = 2
-    while pos + 4 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = content[pos + 1]
-        if marker == 0xFF:  # T.81 B.1.1.2: optional 0xFF fill before a marker
-            pos += 1
-            continue
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            if pos + 4 >= len(content):
-                raise ValueError("JPEG SOF segment truncated")
-            return marker, content[pos + 4]
-        if marker == 0xDA:
-            break
-        (length,) = struct.unpack_from(">H", content, pos + 2)
-        pos += 2 + length
-    raise ValueError("JPEG missing SOF")
+        return fr, _finish(fr, _arith_coefs(fr, scan[0], data))
+    return fr, _finish(fr, _baseline_coefs(fr, scan[0], data))
 
 
 def _parse(content: bytes, sof: int | None = None) -> tuple[int, int, list[np.ndarray]]:
-    """Dispatch on frame type ``sof`` (read from the frame header when
-    None): baseline SOF0, progressive SOF2, or lossless SOF3 (Annex H
-    DPCM — see the lossless section below)."""
-    if sof is None:
-        sof = _frame_header(content)[0]
-    if sof == 0xC2:
-        return _parse_progressive(content)
-    if sof == 0xC3:
-        return _parse_lossless(content)
-    if sof == 0xC9:  # arithmetic-coded sequential (Annex D QM-coder)
-        from .jpeg_arith import _parse_arith
-
-        return _parse_arith(content)
-    return _parse_baseline(content)
+    """(width, height, planes) of any supported stream (see _decode)."""
+    fr, planes = _decode(content, sof)
+    return fr.width, fr.height, planes
 
 
 def _gray_features(width: int, height: int, plane: np.ndarray, precision: int) -> list[float]:
@@ -797,34 +839,34 @@ def _gray_features(width: int, height: int, plane: np.ndarray, precision: int) -
 
 
 def decode_jpeg_gray(content: bytes) -> list[float]:
-    """REAL JPEG decode (grayscale; baseline, progressive, or lossless):
-    decode_jpeg's one-plane features, [width, height, mean, mean, mean,
-    topleft]; a multi-component stream is a ValueError."""
-    sof, precision = _frame_header(content)
-    width, height, planes = _parse(content, sof)
+    """REAL JPEG decode (grayscale; baseline, progressive, lossless or
+    arithmetic): decode_jpeg's one-plane features, [width, height,
+    mean, mean, mean, topleft]; a multi-component stream is a
+    ValueError."""
+    fr, planes = _decode(content)
     if len(planes) != 1:
         raise ValueError("decode_jpeg_gray handles single-component JPEGs")
-    return _gray_features(width, height, planes[0], precision)
+    return _gray_features(fr.width, fr.height, planes[0], fr.precision)
 
 
 def decode_jpeg(content: bytes) -> list[float]:
-    """REAL JPEG decode, 1- or 3-component, baseline or progressive:
+    """REAL JPEG decode, 1- or 3-component (4:4:4 or subsampled, e.g.
+    4:2:0), baseline, progressive, lossless or arithmetic-coded:
     [width, height, mean_r, mean_g, mean_b, topleft_r] — the feature
     shape of decode_bmp/decode_png. Grayscale decodes with r=g=b=luma;
     color converts YCbCr->RGB with the standard JFIF matrix
     (R = Y + 1.402 Cr', G = Y - 0.344136 Cb' - 0.714136 Cr',
     B = Y + 1.772 Cb'; primed = centered), rounded then clipped."""
-    sof, precision = _frame_header(content)
-    width, height, planes = _parse(content, sof)
+    fr, planes = _decode(content)
     if len(planes) == 1:
-        return _gray_features(width, height, planes[0], precision)
+        return _gray_features(fr.width, fr.height, planes[0], fr.precision)
     y, cb, cr = planes
     r = np.clip(np.rint(y + 1.402 * (cr - 128.0)), 0, 255)
     g = np.clip(np.rint(y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)), 0, 255)
     b = np.clip(np.rint(y + 1.772 * (cb - 128.0)), 0, 255)
     return [
-        float(width),
-        float(height),
+        float(fr.width),
+        float(fr.height),
         float(r.mean()),
         float(g.mean()),
         float(b.mean()),
@@ -847,67 +889,48 @@ def decode_jpeg(content: bytes) -> list[float]:
 # ---------------------------------------------------------------------------
 
 
-def _entropy_end(content: bytes, pos: int) -> int:
-    """End of an entropy-coded segment: the next 0xFF not followed by a
-    stuffed 0x00 or a restart marker."""
-    i = pos
-    n = len(content)
-    while i < n - 1:
-        if content[i] == 0xFF and content[i + 1] != 0x00 and not (0xD0 <= content[i + 1] <= 0xD7):
-            return i
-        i += 2 if content[i] == 0xFF else 1
-    return n
-
-
-def _comp_blocks(width: int, height: int, h: int, v: int, hmax: int, vmax: int) -> tuple[int, int]:
+def _comp_blocks(fr: _Frame, h: int, v: int) -> tuple[int, int]:
     """Non-interleaved block grid of one component (T.81 A.1.1): the
     component's own sample dims, ceil-divided into 8x8 blocks."""
-    cw = -(-width * h // hmax)
-    ch = -(-height * v // vmax)
+    cw = -(-fr.width * h // fr.hmax)
+    ch = -(-fr.height * v // fr.vmax)
     return -(-cw // 8), -(-ch // 8)
 
 
 def _decode_dc_scan(
     br: _BitReader,
-    scan_comps: list[tuple[int, int]],  # (cid, dc table id)
+    fr: _Frame,
+    scan_comps: list[tuple[int, dict | None]],  # (cid, DC table; None in refinement)
     coef: dict[int, np.ndarray],
-    hv_of: dict[int, tuple[int, int]],
-    huff: dict,
-    dims: tuple[int, int, int, int, int, int],
     ah: int,
     al: int,
-    restart_interval: int,
 ) -> None:
-    width, height, hmax, vmax, mcus_x, mcus_y = dims
+    hv_of = {cid: (h, v) for cid, h, v, _ in fr.comps}
     prev_dc = {cid: 0 for cid, _ in scan_comps}
     if len(scan_comps) == 1:
-        cid, dc_id = scan_comps[0]
-        h, v = hv_of[cid]
-        bw_, bh_ = _comp_blocks(width, height, h, v, hmax, vmax)
-        units = [(cid, dc_id, by, bx) for by in range(bh_) for bx in range(bw_)]
+        cid, tbl = scan_comps[0]
+        bw_, bh_ = _comp_blocks(fr, *hv_of[cid])
+        units = [(cid, tbl, by, bx) for by in range(bh_) for bx in range(bw_)]
         per_ri = 1  # restart interval counts data units in non-interleaved scans
     else:
         units = []
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for cid, dc_id in scan_comps:
+        for my in range(fr.mcus_y):
+            for mx in range(fr.mcus_x):
+                for cid, tbl in scan_comps:
                     h, v = hv_of[cid]
                     for vy in range(v):
                         for vx in range(h):
-                            units.append((cid, dc_id, my * v + vy, mx * h + vx))
+                            units.append((cid, tbl, my * v + vy, mx * h + vx))
         per_ri = sum(h * v for cid, _ in scan_comps for h, v in [hv_of[cid]])
+    ri = fr.restart_interval
     rst_m = 0
-    for i, (cid, dc_id, by, bx) in enumerate(units):
-        if (
-            restart_interval
-            and i
-            and i % (restart_interval * per_ri) == 0
-        ):
+    for i, (cid, tbl, by, bx) in enumerate(units):
+        if ri and i and i % (ri * per_ri) == 0:
             br.restart(rst_m)
             rst_m = (rst_m + 1) & 7
             prev_dc = {c: 0 for c, _ in scan_comps}
         if ah == 0:
-            size = _decode_huffman(br, huff[(0, dc_id)])
+            size = _decode_huffman(br, tbl)
             prev_dc[cid] += _extend(br.bits(size), size)
             coef[cid][by, bx, 0] = prev_dc[cid] << al
         else:
@@ -929,28 +952,24 @@ def _refine_nonzero(br: _BitReader, block: np.ndarray, k: int, se: int, al: int)
 
 def _decode_ac_scan(
     br: _BitReader,
+    fr: _Frame,
     cid: int,
-    ac_id: int,
+    table: dict[tuple[int, int], int],
     coef: dict[int, np.ndarray],
-    hv_of: dict[int, tuple[int, int]],
-    huff: dict,
-    dims: tuple[int, int, int, int, int, int],
     ss: int,
     se: int,
     ah: int,
     al: int,
-    restart_interval: int,
 ) -> None:
-    width, height, hmax, vmax, _, _ = dims
-    h, v = hv_of[cid]
-    bw_, bh_ = _comp_blocks(width, height, h, v, hmax, vmax)
-    table = huff[(1, ac_id)]
+    h, v = next((h, v) for c, h, v, _ in fr.comps if c == cid)
+    bw_, bh_ = _comp_blocks(fr, h, v)
+    ri = fr.restart_interval
     eobrun = 0
     rst_m = 0
     unit = 0
     for by in range(bh_):
         for bx in range(bw_):
-            if restart_interval and unit and unit % restart_interval == 0:
+            if ri and unit and unit % ri == 0:
                 br.restart(rst_m)
                 rst_m = (rst_m + 1) & 7
                 eobrun = 0
@@ -1014,154 +1033,31 @@ def _decode_ac_scan(
                     eobrun -= 1
 
 
-def _parse_progressive(content: bytes) -> tuple[int, int, list[np.ndarray]]:
-    """Parse a progressive (SOF2) JFIF stream into per-component pixel
-    planes, accumulating quantized coefficients across every scan, then
-    dequantizing + inverse-DCT-ing once at the end. Supports spectral
-    selection, successive approximation (DC and AC first + refinement
-    scans), interleaved and single-component DC scans, EOB runs, and
-    restart intervals within any scan. Same upsample/crop contract as
-    _parse_baseline."""
-    import struct
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG file")
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []
-    restart_interval = 0
+def _progressive_coefs(scans: Iterator[_Scan]) -> dict[int, np.ndarray]:
+    """Accumulate the quantized coefficients of every progressive scan:
+    spectral selection, successive approximation (DC and AC first +
+    refinement scans), interleaved and single-component DC scans, EOB
+    runs, restart intervals within any scan. Each scan decodes with the
+    tables and restart interval in force at its SOS."""
     coef: dict[int, np.ndarray] = {}
-    hv_of: dict[int, tuple[int, int]] = {}
-    tq_of: dict[int, int] = {}
-    dims = None
-    while pos + 2 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = content[pos + 1]
-        if marker == 0xFF:  # T.81 B.1.1.2: optional 0xFF fill before a marker
-            pos += 1
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        (length,) = struct.unpack_from(">H", content, pos + 2)
-        payload = content[pos + 4 : pos + 2 + length]
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0x0F
-                if pq != 0:
-                    raise ValueError("only 8-bit quantization tables supported")
-                tbl = np.zeros(64)
-                tbl[ZIGZAG] = np.frombuffer(payload[p + 1 : p + 65], dtype=np.uint8)
-                quant[tq] = tbl.reshape(8, 8)
-                p += 65
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0x0F
-                bits = [0] + list(payload[p + 1 : p + 17])
-                n = sum(bits)
-                if len(bits) != 17 or p + 17 + n > len(payload):
-                    raise ValueError("JPEG DHT segment truncated")
-                values = list(payload[p + 17 : p + 17 + n])
-                codes = _canonical_codes(bits, values)
-                huff[(tc, th)] = {(ln, code): sym for sym, (code, ln) in codes.items()}
-                p += 17 + n
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack_from(">H", payload, 0)
-        elif marker == 0xC2:  # SOF2 progressive
-            precision, height, width, ncomp = struct.unpack_from(">BHHB", payload, 0)
-            if precision != 8 or ncomp not in (1, 3):
-                raise ValueError("only 8-bit 1- or 3-component progressive JPEG is supported")
-            for ci in range(ncomp):
-                cid, sampling, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                h, v = sampling >> 4, sampling & 0x0F
-                comps.append((cid, h, v, tq))
-            hv_of = {cid: (h, v) for cid, h, v, _ in comps}
-            tq_of = {cid: tq for cid, _, _, tq in comps}
-            hmax = max(h for h, _ in hv_of.values())
-            vmax = max(v for _, v in hv_of.values())
-            mcus_x, mcus_y = -(-width // (8 * hmax)), -(-height // (8 * vmax))
-            dims = (width, height, hmax, vmax, mcus_x, mcus_y)
-            for cid, (h, v) in hv_of.items():
-                # sized for interleaved padding; non-interleaved scans
-                # touch the [0:bh, 0:bw] prefix
-                coef[cid] = np.zeros((mcus_y * v, mcus_x * h, 64), dtype=np.int64)
-        elif marker == 0xC0:
-            raise ValueError("baseline SOF0 stream passed to the progressive parser")
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("unsupported JPEG SOF type")
-        elif marker == 0xDA:  # SOS — one scan
-            if dims is None:
-                raise ValueError("JPEG SOS before SOF2")
-            ns = payload[0]
-            scan_comps = []
-            for si in range(ns):
-                cid = payload[1 + 2 * si]
-                tbls = payload[2 + 2 * si]
-                scan_comps.append((cid, tbls >> 4, tbls & 0x0F))
-            ss, se, a = payload[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = a >> 4, a & 0x0F
-            # parse-time table validation (T.81 B.2.4.2): only the scans
-            # that consult a table need it defined — first DC scans read
-            # (0, Td); AC scans (first and refinement) read (1, Ta)
-            for cid, dc_id, ac_id in scan_comps:
-                if ss == 0 and ah == 0 and (0, dc_id) not in huff:
-                    raise ValueError(f"missing DC Huffman table {dc_id}")
-                if ss != 0 and (1, ac_id) not in huff:
-                    raise ValueError(f"missing AC Huffman table {ac_id}")
-            data_start = pos + 2 + length
-            data_end = _entropy_end(content, data_start)
-            br = _BitReader(content[data_start:data_end])
-            if ss == 0:
-                if se != 0:
-                    raise ValueError("progressive DC scan must have Se=0")
-                _decode_dc_scan(
-                    br,
-                    [(cid, dc) for cid, dc, _ in scan_comps],
-                    coef,
-                    hv_of,
-                    huff,
-                    dims,
-                    ah,
-                    al,
-                    restart_interval,
-                )
-            else:
-                if ns != 1:
-                    raise ValueError("progressive AC scan must be single-component")
-                cid, _, ac_id = scan_comps[0]
-                _decode_ac_scan(
-                    br, cid, ac_id, coef, hv_of, huff, dims, ss, se, ah, al, restart_interval
-                )
-            pos = data_end
-            continue
-        pos += 2 + length
-    if dims is None:
-        raise ValueError("JPEG missing SOF2/SOS")
-    width, height, hmax, vmax, _, _ = dims
-    out = []
-    for cid, _, _, _ in comps:
-        h, v = hv_of[cid]
-        arr = coef[cid]
-        bh_, bw_ = arr.shape[0], arr.shape[1]
-        plane = np.zeros((bh_ * 8, bw_ * 8))
-        q = quant[tq_of[cid]]
-        for by in range(bh_):
-            for bx in range(bw_):
-                c = np.zeros(64)
-                c[ZIGZAG] = arr[by, bx]
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    _M.T @ (c.reshape(8, 8) * q) @ _M + 128.0
-                )
-        if (h, v) != (hmax, vmax):
-            if hmax % h or vmax % v:
-                raise ValueError("non-integral JPEG sampling ratio not supported")
-            plane = np.repeat(np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1)
-        out.append(plane[:height, :width])
-    return width, height, out
+    for fr, (scan_comps, ss, se, ah, al), data in scans:
+        if not coef:
+            coef = fr.coef_grid()
+        br = _BitReader(data)
+        if ss == 0:
+            if se != 0:
+                raise ValueError("progressive DC scan must have Se=0")
+            # only first DC scans read a table; refinement bits are raw
+            tables = [(cid, fr.huffman(0, td) if ah == 0 else None) for cid, td, _ in scan_comps]
+            _decode_dc_scan(br, fr, tables, coef, ah, al)
+        else:
+            if len(scan_comps) != 1:
+                raise ValueError("progressive AC scan must be single-component")
+            if ss > se or se > 63:
+                raise ValueError("progressive AC scan band out of range")
+            cid, _, ta = scan_comps[0]
+            _decode_ac_scan(br, fr, cid, fr.huffman(1, ta), coef, ss, se, ah, al)
+    return coef
 
 
 # --------------------------- progressive encoder ---------------------------
@@ -1190,8 +1086,7 @@ def _quantized_blocks(plane: np.ndarray, quant: np.ndarray) -> np.ndarray:
     out = np.zeros((bh, bw, 64), dtype=np.int64)
     for by in range(bh):
         for bx in range(bw):
-            c = _M @ (plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0) @ _M.T
-            out[by, bx] = np.rint(c / quant).astype(np.int64).reshape(64)[ZIGZAG]
+            out[by, bx] = _quantize(plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8], quant)
     return out
 
 
@@ -1279,13 +1174,6 @@ def _encode_ac_refine(enc: _ProgAcEncoder, block: np.ndarray, ss: int, se: int, 
     enc.end_block(pend, r > 0)
 
 
-def _sos_seg(scan_comps: list[tuple[int, int, int]], ss: int, se: int, ah: int, al: int) -> bytes:
-    body = bytes([len(scan_comps)])
-    for cid, dc_id, ac_id in scan_comps:
-        body += bytes([cid, (dc_id << 4) | ac_id])
-    return _seg(0xFFDA, body + bytes([ss, se, (ah << 4) | al]))
-
-
 def make_jpeg_progressive(
     width: int,
     height: int,
@@ -1299,30 +1187,9 @@ def make_jpeg_progressive(
     Al=1, DC refinement (raw bits), then AC refinement scans to Al=0.
     ``components`` is 1 (grayscale, pixel_fn -> int) or 3 (4:4:4;
     pixel_fn -> (r,g,b) or (y,cb,cr) per ``colorspace``)."""
-    import struct
-
-    if components == 1:
-        img = np.array(
-            [[pixel_fn(x, y) for x in range(width)] for y in range(height)], dtype=np.float64
-        )
-        planes = [_pad8(img, height, width)]
-        quants = [QUANT]
-    else:
-        px = np.array(
-            [[pixel_fn(x, y) for x in range(width)] for y in range(height)], dtype=np.float64
-        )
-        if colorspace == "rgb":
-            r, g, b = px[..., 0], px[..., 1], px[..., 2]
-            y = 0.299 * r + 0.587 * g + 0.114 * b
-            cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-            cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-            raw = [y, cb, cr]
-        else:
-            raw = [px[..., 0], px[..., 1], px[..., 2]]
-        planes = [_pad8(p, height, width) for p in raw]
-        quants = [QUANT, QUANT_C, QUANT_C]
-
-    coef = [_quantized_blocks(p, q) for p, q in zip(planes, quants)]
+    planes = _pixel_planes(width, height, pixel_fn, None if components == 1 else colorspace)
+    quants = [QUANT, QUANT_C, QUANT_C]
+    coef = [_quantized_blocks(_pad_mult(p, 8), q) for p, q in zip(planes, quants)]
     bh, bw_ = coef[0].shape[0], coef[0].shape[1]
 
     dc_codes = _canonical_codes(DC_BITS, DC_VALUES)
@@ -1377,21 +1244,13 @@ def make_jpeg_progressive(
             w.flush()
             scans.append((_sos_seg([(ci + 1, 0, 0)], ss, se, 1, 0), w))
 
-    if components == 1:
-        dqt = _seg(0xFFDB, b"\x00" + _zz_table(QUANT))
-        sof_comps = bytes([1, 0x11, 0])
-    else:
-        dqt = _seg(0xFFDB, b"\x00" + _zz_table(QUANT) + b"\x01" + _zz_table(QUANT_C))
-        sof_comps = bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1])
-    sof = _seg(0xFFC2, struct.pack(">BHHB", 8, height, width, components) + sof_comps)
-    dht = (
-        _seg(0xFFC4, b"\x00" + bytes(DC_BITS[1:]) + bytes(DC_VALUES))
-        + _seg(0xFFC4, b"\x10" + bytes(PROG_AC_BITS[1:]) + bytes(PROG_AC_VALUES))
+    return _jfif(
+        _dqt_seg(components)
+        + _sof_seg(0xFFC2, 8, width, height, components)
+        + _dht_seg(0x00, DC_BITS, DC_VALUES)
+        + _dht_seg(0x10, PROG_AC_BITS, PROG_AC_VALUES)
+        + b"".join(sos + bytes(w.out) for sos, w in scans)
     )
-    out = b"\xff\xd8" + _seg(0xFFE0, _APP0) + dqt + sof + dht
-    for sos, w in scans:
-        out += sos + bytes(w.out)
-    return out + b"\xff\xd9"
 
 
 # ---------------------------------------------------------------------------
@@ -1460,15 +1319,9 @@ def make_jpeg_lossless(
     Annex K.3 luminance DC table (diff categories 0..8); 12-bit uses a
     13-category canonical table — either way the table rides in the DHT
     segment, so decoder interop does not depend on the constants."""
-    import struct
-
     if precision not in (8, 12):
         raise ValueError("lossless encoder supports precision 8 or 12")
-    mask = (1 << precision) - 1
-    img = np.zeros((height, width), dtype=np.int64)
-    for y in range(height):
-        for x in range(width):
-            img[y, x] = int(pixel(x, y)) & mask
+    img = _pixel_planes(width, height, pixel)[0].astype(np.int64) & ((1 << precision) - 1)
     bits_t, vals_t = (
         (DC_BITS, DC_VALUES) if precision == 8 else (DC_L12_BITS, DC_L12_VALUES)
     )
@@ -1489,91 +1342,29 @@ def make_jpeg_lossless(
             bw.put(code, ln)
             bw.put(bits, size)
     bw.flush()
-    dht = bytes([0x00] + bits_t[1:] + vals_t)
-    sof = struct.pack(">BHHB", precision, height, width, 1) + bytes((1, 0x11, 0))
-    sos = bytes((1, 1, 0x00, predictor, 0, 0))
-    return (
-        b"\xff\xd8"
-        + _seg(0xFFE0, _APP0)
-        + _seg(0xFFC4, dht)
-        + _seg(0xFFC3, sof)
-        + _seg(0xFFDA, sos)
+    return _jfif(
+        _dht_seg(0x00, bits_t, vals_t)
+        + _sof_seg(0xFFC3, precision, width, height, 1)
+        + _sos_seg([(1, 0, 0)], predictor, 0, 0, 0)
         + bytes(bw.out)
-        + b"\xff\xd9"
     )
 
 
-def _parse_lossless(content: bytes) -> tuple[int, int, list[np.ndarray]]:
-    """Decode a single-component 8-bit lossless (SOF3) stream: DHT-driven
-    SSSS decode + EXTEND + causal prediction, raster order (the lossless
-    MCU is one sample). Returns the plane un-rounded like the DCT-mode
-    parsers (values are already exact integers here)."""
-    import struct
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG file")
-    pos = 2
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = 0
-    psel = 0
-    data_start = -1
-    while pos + 4 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = content[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        (length,) = struct.unpack_from(">H", content, pos + 2)
-        seg = content[pos + 4 : pos + 2 + length]
-        if marker == 0xC4:  # DHT
-            off = 0
-            while off < len(seg):
-                tc_th = seg[off]
-                bits = [0] + list(seg[off + 1 : off + 17])
-                n = sum(bits)
-                vals = list(seg[off + 17 : off + 17 + n])
-                codes: dict[tuple[int, int], int] = {}
-                code = 0
-                k = 0
-                for ln in range(1, 17):
-                    for _ in range(bits[ln]):
-                        codes[(ln, code)] = vals[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                # key by (table class, id): a stream may carry a DC and an
-                # AC table with the same Th (legal per T.81 B.2.4.2) — a
-                # Th-only key would let the AC table overwrite the DC one
-                huff[(tc_th >> 4, tc_th & 0x0F)] = codes
-                off += 17 + n
-        elif marker == 0xC3:  # SOF3
-            precision, height, width, nf = struct.unpack_from(">BHHB", seg, 0)
-            if precision not in (8, 12) or nf != 1:
-                raise ValueError("lossless decoder handles 8/12-bit single-component")
-        elif marker == 0xDA:  # SOS
-            ns = seg[0]
-            if ns != 1:
-                raise ValueError("lossless decoder handles one-component scans")
-            td = seg[2] >> 4
-            psel = seg[1 + 2 * ns]
-            data_start = pos + 2 + length
-            # lossless scans use DC-class tables; an SOS naming a table
-            # id never defined as DC class is malformed (T.81 B.2.4.2) —
-            # raise the module's ValueError convention, not a KeyError
-            # (an AC table with the same Th must NOT satisfy the lookup)
-            if (0, td) not in huff:
-                raise ValueError(f"missing DC Huffman table {td}")
-            dc_tbl = huff[(0, td)]
-            break
-        pos += 2 + length
-    if data_start < 0:
-        raise ValueError("JPEG missing SOS")
-    end = _entropy_end(content, data_start)
-    br = _BitReader(content[data_start:end])
-    img = np.zeros((height, width), dtype=np.int64)
-    for y in range(height):
-        for x in range(width):
+def _lossless_planes(fr: _Frame, scan: tuple, data: bytes) -> list[np.ndarray]:
+    """Decode the one-component lossless (SOF3) scan: DHT-driven SSSS
+    decode + EXTEND + causal prediction (selector in Ss), raster order
+    (the lossless MCU is one sample). Returns the plane un-rounded like
+    the DCT modes (values are already exact integers here). Restart
+    intervals are not supported (DRI > 0 raises; the encoder never
+    writes one)."""
+    if fr.restart_interval:
+        raise ValueError("restart intervals not supported in lossless scans")
+    (scan_comps, psel, _, _, _) = scan
+    dc_tbl = fr.huffman(0, scan_comps[0][1])
+    br = _BitReader(data)
+    img = np.zeros((fr.height, fr.width), dtype=np.int64)
+    for y in range(fr.height):
+        for x in range(fr.width):
             size = _decode_huffman(br, dc_tbl)
             # SSSS=16 carries no appended bits and means 32768 (H.2)
             diff = 32768 if size == 16 else _extend(br.bits(size), size)
@@ -1581,6 +1372,6 @@ def _parse_lossless(content: bytes) -> tuple[int, int, list[np.ndarray]]:
             # representative of sample mod 2^16 in [0, 65535] IS the
             # sample for any precision <= 16
             img[y, x] = (
-                _lossless_predict(img, x, y, psel, precision) + diff
+                _lossless_predict(img, x, y, psel, fr.precision) + diff
             ) & 0xFFFF
-    return width, height, [img.astype(np.float64)]
+    return [img.astype(np.float64)]

@@ -43,7 +43,21 @@ from collections.abc import Callable
 
 import numpy as np
 
-from .jpeg import _APP0, _M, _pad8, _quantized_blocks, _seg, _zz_table, QUANT_C, QUANT, ZIGZAG
+from .jpeg import (
+    QUANT,
+    QUANT_C,
+    _SCAN_COMPS,
+    _dqt_seg,
+    _Frame,
+    _jfif,
+    _parse,
+    _pad_mult,
+    _pixel_planes,
+    _quantized_blocks,
+    _seg,
+    _sof_seg,
+    _sos_seg,
+)
 
 # ---------------------------------------------------------------------------
 # Table D.3 — Qe values and probability estimation state machine.
@@ -451,19 +465,26 @@ def _dac_seg(ncomp: int) -> bytes:
     return _seg(0xFFCC, payload)
 
 
-def _encode_arith_scan(planes: list[np.ndarray], quants: list[np.ndarray], tbls: list[int]) -> bytes:
-    """Interleaved 4:4:4 scan: one block per component per MCU."""
-    blocks = [_quantized_blocks(p, q) for p, q in zip(planes, quants)]
+def _make_arith(width: int, height: int, planes: list[np.ndarray]) -> bytes:
+    """SOF9 stream of 1 or 3 planes in one interleaved 4:4:4 scan (one
+    block per component per MCU): luma on conditioning/stats table 0
+    with the K.1 quant table, chromas sharing table 1 with K.2, default
+    DAC conditioning."""
+    n = len(planes)
+    blocks = [
+        _quantized_blocks(_pad_mult(p, 8), q) for p, q in zip(planes, [QUANT, QUANT_C, QUANT_C])
+    ]
+    tbls = [0, 1, 1][:n]
     bh, bw = blocks[0].shape[0], blocks[0].shape[1]
     enc = _ArithEncoder()
     fixed = [_FIXED, 0]
     dc_stats = {t: _new_stats(_DC_BINS) for t in set(tbls)}
     ac_stats = {t: _new_stats(_AC_BINS) for t in set(tbls)}
-    dc_ctx = [0] * len(planes)
-    last_dc = [0] * len(planes)
+    dc_ctx = [0] * n
+    last_dc = [0] * n
     for by in range(bh):
         for bx in range(bw):
-            for ci in range(len(planes)):
+            for ci in range(n):
                 zz = blocks[ci][by, bx]
                 diff = int(zz[0]) - last_dc[ci]
                 last_dc[ci] = int(zz[0])
@@ -471,7 +492,13 @@ def _encode_arith_scan(planes: list[np.ndarray], quants: list[np.ndarray], tbls:
                     enc, dc_stats[tbls[ci]], dc_ctx[ci], diff, _DC_L, _DC_U
                 )
                 _encode_ac(enc, ac_stats[tbls[ci]], fixed, zz, _AC_KX)
-    return enc.flush()
+    return _jfif(
+        _dqt_seg(n)
+        + _dac_seg(n)
+        + _sof_seg(0xFFC9, 8, width, height, n)
+        + _sos_seg(_SCAN_COMPS[:n], 0, 63, 0, 0)
+        + enc.flush()
+    )
 
 
 def make_jpeg_arith_gray(
@@ -479,21 +506,7 @@ def make_jpeg_arith_gray(
 ) -> bytes:
     """Encode an 8-bit grayscale ARITHMETIC-coded sequential JPEG
     (SOF9, Annex-K luma quantization, default DAC conditioning)."""
-    import struct
-
-    img = _pad8(
-        np.array(
-            [[pixel_fn(x, y) for x in range(width)] for y in range(height)], dtype=np.float64
-        ),
-        height,
-        width,
-    )
-    data = _encode_arith_scan([img], [QUANT], [0])
-    dqt = _seg(0xFFDB, b"\x00" + _zz_table(QUANT))
-    sof = _seg(0xFFC9, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    sos = _seg(0xFFDA, b"\x01" + bytes([1, 0x00]) + b"\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return b"\xff\xd8" + app0 + dqt + _dac_seg(1) + sof + sos + data + b"\xff\xd9"
+    return _make_arith(width, height, _pixel_planes(width, height, pixel_fn))
 
 
 def make_jpeg_arith_color(
@@ -503,37 +516,50 @@ def make_jpeg_arith_color(
     JPEG (SOF9): ``pixel_fn`` returns (Y, Cb, Cr) directly so fixtures
     stay closed-form; luma uses conditioning/stats table 0 with the
     K.1 quant table, both chromas share table 1 with K.2."""
-    import struct
-
-    ys = np.zeros((height, width))
-    cbs = np.zeros((height, width))
-    crs = np.zeros((height, width))
-    for y in range(height):
-        for x in range(width):
-            ys[y, x], cbs[y, x], crs[y, x] = pixel_fn(x, y)
-    planes = [_pad8(p, height, width) for p in (ys, cbs, crs)]
-    data = _encode_arith_scan(planes, [QUANT, QUANT_C, QUANT_C], [0, 1, 1])
-    dqt = _seg(0xFFDB, b"\x00" + _zz_table(QUANT) + b"\x01" + _zz_table(QUANT_C))
-    sof = _seg(
-        0xFFC9,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    sos = _seg(0xFFDA, b"\x03" + bytes([1, 0x00, 2, 0x11, 3, 0x11]) + b"\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return b"\xff\xd8" + app0 + dqt + _dac_seg(3) + sof + sos + data + b"\xff\xd9"
+    return _make_arith(width, height, _pixel_planes(width, height, pixel_fn, "ycbcr"))
 
 
 # ---------------------------------------------------------------------------
-# Decoder (dispatched from jpeg._parse on SOF9).
+# Decoder: jpeg._decode walks the stream and hands the SOF9 scan here.
 # ---------------------------------------------------------------------------
+
+
+def _arith_coefs(
+    fr: _Frame, scan_comps: list[tuple[int, int, int]], data: bytes
+) -> dict[int, np.ndarray]:
+    """Decode the interleaved 4:4:4 arithmetic scan into zigzag
+    coefficient grids (jpeg._finish dequantizes + IDCTs them). Every
+    component must be 1x1 sampled; DRI/RST raise (the poisoned-blob
+    policy — this decoder never emits them)."""
+    if fr.restart_interval:
+        raise ValueError("restart intervals not supported in arithmetic scans")
+    if any((h, v) != (1, 1) for _, h, v, _ in fr.comps):
+        raise ValueError("arithmetic decoder supports 4:4:4 sampling only")
+    dec = _ArithDecoder(data)
+    fixed = [_FIXED, 0]
+    dc_stats = {t: _new_stats(_DC_BINS) for _, t, _ in scan_comps}
+    ac_stats = {t: _new_stats(_AC_BINS) for _, _, t in scan_comps}
+    dc_ctx = {cid: 0 for cid, _, _ in scan_comps}
+    last_dc = {cid: 0 for cid, _, _ in scan_comps}
+    coef = fr.coef_grid()
+    for by in range(fr.mcus_y):
+        for bx in range(fr.mcus_x):
+            for cid, dc_t, ac_t in scan_comps:
+                cs = fr.dac.get((0, dc_t))
+                lo, up = (cs & 0x0F, cs >> 4) if cs is not None else (_DC_L, _DC_U)
+                kx = fr.dac.get((1, ac_t), _AC_KX)
+                diff, dc_ctx[cid] = _decode_dc(dec, dc_stats[dc_t], dc_ctx[cid], lo, up)
+                last_dc[cid] += diff
+                zz = _decode_ac(dec, ac_stats[ac_t], fixed, kx)
+                zz[0] = last_dc[cid]
+                coef[cid][by, bx] = zz
+    return coef
 
 
 def _parse_arith(content: bytes) -> tuple[int, int, list[np.ndarray]]:
     """Parse an arithmetic-coded sequential (SOF9) JFIF stream into
-    per-component full-resolution pixel planes. 4:4:4 only (every
-    component 1x1 sampling); DRI/RST raise (the poisoned-blob policy —
-    this decoder never emits them).
+    per-component full-resolution pixel planes; any other frame type
+    raises.
 
     INTEROP LIMITATION (applies to every SOF9 stream routed here): the
     decoder's register initialization deviates from T.81 INITDEC
@@ -545,97 +571,4 @@ def _parse_arith(content: bytes) -> tuple[int, int, list[np.ndarray]]:
     arithmetic output) is unverified and could silently mis-decode
     rather than raise. Validate against a known external conformance
     vector before trusting foreign SOF9 input."""
-    import struct
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG file")
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []  # (cid, h, v, tq)
-    scan: list[tuple[int, int, int]] = []  # (cid, dc table, ac table)
-    data_start = None
-    while pos + 4 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = content[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        (length,) = struct.unpack_from(">H", content, pos + 2)
-        payload = content[pos + 4 : pos + 2 + length]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0x0F
-                if pq != 0:
-                    raise ValueError("only 8-bit quantization tables supported")
-                tbl = np.zeros(64)
-                tbl[ZIGZAG] = np.frombuffer(payload[p + 1 : p + 65], dtype=np.uint8)
-                quant[tq] = tbl.reshape(8, 8)
-                p += 65
-        elif marker == 0xCC:  # DAC — arithmetic conditioning
-            p = 0
-            while p + 1 < len(payload):
-                tc, tb = payload[p] >> 4, payload[p] & 0x0F
-                cs = payload[p + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0x0F, cs >> 4)  # (L, U)
-                else:
-                    ac_cond[tb] = cs  # Kx
-                p += 2
-        elif marker == 0xDD:  # DRI
-            (ri,) = struct.unpack_from(">H", payload, 0)
-            if ri:
-                raise ValueError("restart intervals not supported in arithmetic scans")
-        elif marker == 0xC9:  # SOF9
-            precision, height, width, ncomp = struct.unpack_from(">BHHB", payload, 0)
-            if precision != 8:
-                raise ValueError("only 8-bit arithmetic DCT supported")
-            for i in range(ncomp):
-                cid, hv, tq = payload[6 + 3 * i], payload[7 + 3 * i], payload[8 + 3 * i]
-                h, v = hv >> 4, hv & 0x0F
-                if (h, v) != (1, 1):
-                    raise ValueError("arithmetic decoder supports 4:4:4 sampling only")
-                comps.append((cid, h, v, tq))
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("not an arithmetic sequential (SOF9) stream")
-        elif marker == 0xDA:  # SOS
-            ns = payload[0]
-            for i in range(ns):
-                cid, tt = payload[1 + 2 * i], payload[2 + 2 * i]
-                scan.append((cid, tt >> 4, tt & 0x0F))
-            data_start = pos + 2 + length
-            break
-        pos += 2 + length
-    if width is None or data_start is None or not scan:
-        raise ValueError("JPEG missing SOF9/SOS")
-    end = content.rfind(b"\xff\xd9")
-    if end < 0:
-        raise ValueError("JPEG missing EOI")
-
-    dec = _ArithDecoder(content[data_start:end])
-    fixed = [_FIXED, 0]
-    tq_of = {cid: tq for cid, _, _, tq in comps}
-    dc_stats = {t: _new_stats(_DC_BINS) for _, t, _ in scan}
-    ac_stats = {t: _new_stats(_AC_BINS) for _, _, t in scan}
-    dc_ctx = {cid: 0 for cid, _, _ in scan}
-    last_dc = {cid: 0 for cid, _, _ in scan}
-    bh, bw = -(-height // 8), -(-width // 8)
-    planes = {cid: np.zeros((bh * 8, bw * 8)) for cid, _, _ in scan}
-    for by in range(bh):
-        for bx in range(bw):
-            for cid, dc_t, ac_t in scan:
-                lo, up = dc_cond.get(dc_t, (_DC_L, _DC_U))
-                kx = ac_cond.get(ac_t, _AC_KX)
-                diff, dc_ctx[cid] = _decode_dc(dec, dc_stats[dc_t], dc_ctx[cid], lo, up)
-                last_dc[cid] += diff
-                zz = _decode_ac(dec, ac_stats[ac_t], fixed, kx)
-                zz[0] = last_dc[cid]
-                coefs = np.zeros(64)
-                coefs[ZIGZAG] = zz
-                block = _M.T @ (coefs.reshape(8, 8) * quant[tq_of[cid]]) @ _M + 128.0
-                planes[cid][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = block
-    return width, height, [planes[cid][:height, :width] for cid, _, _, _ in comps]
+    return _parse(content, 0xC9)

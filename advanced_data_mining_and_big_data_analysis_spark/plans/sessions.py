@@ -32,6 +32,53 @@ def _gap_exceeded(cur, prev):
     return (cur - prev) > F.expr("INTERVAL 30 MINUTES")
 
 
+def _sessionize(ev: DataFrame, name: str) -> DataFrame:
+    """``ev`` plus column ``name``: each user's 30-minute gap-session
+    number (1, 2, ...) — a session starts at the user's first event and
+    after every gap over 30 minutes, in (ts, event_id) order."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag("ts").over(w)
+    is_new = F.when(prev.isNull() | _gap_exceeded(F.col("ts"), prev), 1).otherwise(0)
+    return ev.withColumn(name, F.sum(is_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow)))
+
+
+def _transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cur, nxt, n): counts of adjacent event-type transitions inside
+    gap-sessions — the session Markov chain of a0116 and a0064, which
+    both read it twice (hence the checkpoint)."""
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    tr = _sessionize(ev, "sess").select(
+        F.col("event_type").alias("cur"),
+        F.lead("event_type")
+        .over(W.partitionBy("user_id", "sess").orderBy("ts", "event_id"))
+        .alias("nxt"),
+    )
+    return (
+        tr.filter(F.col("nxt").isNotNull())
+        .groupBy("cur", "nxt")
+        .agg(F.count("*").alias("n"))
+        .localCheckpoint(eager=False)
+    )
+
+
+# The oracle twin of _sessionize (events -> o -> s with column sess)
+# and of _transition_counts (s -> tr -> c), as WITH-clause members.
+_SESSIONS_SQL = """o AS (SELECT user_id, ts, event_type,
+                      CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                                > INTERVAL 30 MINUTES
+                           OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                           THEN 1 ELSE 0 END AS new_s,
+                      event_id
+               FROM events),
+    s AS (SELECT user_id, ts, event_id, event_type,
+                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
+          FROM o)"""
+_TRANSITIONS_SQL = """tr AS (SELECT event_type AS cur,
+                  LEAD(event_type) OVER (PARTITION BY user_id, sess ORDER BY ts, event_id) AS nxt
+           FROM s),
+    c AS (SELECT cur, nxt, COUNT(*) AS n FROM tr WHERE nxt IS NOT NULL GROUP BY cur, nxt)"""
+
+
 @query(
     "a060_sessionization",
     oracle=f"""
@@ -60,13 +107,7 @@ def _gap_exceeded(cur, prev):
 )
 def a060_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 30)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    is_new = F.when(prev.isNull() | _gap_exceeded(F.col("ts"), prev), 1).otherwise(0)
-    with_sid = ev.withColumn(
-        "session_id",
-        F.sum(is_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow)).cast("long"),
-    )
+    with_sid = _sessionize(ev, "session_id")
     return (
         with_sid.groupBy("user_id", "session_id")
         .agg(
@@ -224,13 +265,7 @@ def a063_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="sessionized funnel analysis: gap-sessions (q60's rule) x ordered-event conversion — a session converts when a 'view' precedes (or ties) a 'click' inside it, tested as min(view ts) <= max(click ts); per-cohort session/conversion counts (composition of sessionization + conditional aggregation)",
 )
 def q104_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    is_new = F.when(prev.isNull() | _gap_exceeded(F.col("ts"), prev), 1).otherwise(0)
-    with_sid = ev.withColumn(
-        "sess", F.sum(is_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-    )
+    with_sid = _sessionize(load_table(spark, sf_dir, "events"), "sess")
     g = with_sid.groupBy("user_id", "sess").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("first_view"),
         F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias("last_click"),
@@ -292,14 +327,7 @@ def q104_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="session path mining (clickstream entry-path analysis): sessions via the q60 30-minute gap rule, each reduced to its first-3-event-type path string by an ordered fold over the session's OWN rows (array_sort(collect_list(struct)) + slice — state bounded by the session, never the user history), paths ranked by frequency with average session length — top-15 via bounded TakeOrdered; the path table is path-cardinality-sized after a map-side-combined aggregate",
 )
 def a0157_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    is_new = F.when(prev.isNull() | _gap_exceeded(F.col("ts"), prev), 1).otherwise(0)
-    s = ev.withColumn(
-        "sid",
-        F.sum(is_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow)).cast("long"),
-    )
+    s = _sessionize(load_table(spark, sf_dir, "events"), "sid")
     per = s.groupBy("user_id", "sid").agg(
         F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))).alias("a"),
         F.count("*").alias("n_events"),
@@ -457,21 +485,9 @@ def q127_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "a0116_markov_transitions",
-    oracle="""
-    WITH o AS (SELECT user_id, ts, event_type,
-                      CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                                > INTERVAL 30 MINUTES
-                           OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                           THEN 1 ELSE 0 END AS new_s,
-                      event_id
-               FROM events),
-    s AS (SELECT user_id, ts, event_id, event_type,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-          FROM o),
-    tr AS (SELECT event_type AS cur,
-                  LEAD(event_type) OVER (PARTITION BY user_id, sess ORDER BY ts, event_id) AS nxt
-           FROM s),
-    c AS (SELECT cur, nxt, COUNT(*) AS n FROM tr WHERE nxt IS NOT NULL GROUP BY cur, nxt),
+    oracle=f"""
+    WITH {_SESSIONS_SQL},
+    {_TRANSITIONS_SQL},
     tot AS (SELECT cur, SUM(n) AS n_out FROM c GROUP BY cur),
     e AS (SELECT c.cur, SUM(-(n * 1.0 / n_out) * ln(n * 1.0 / n_out)) AS h
           FROM c JOIN tot ON c.cur = tot.cur GROUP BY c.cur)
@@ -484,30 +500,7 @@ def q127_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="session Markov chain: first-order event-type transition counts/probabilities within 30-minute gap-sessions (the q60 rule) plus per-state outgoing entropy — the clickstream model behind next-action prediction; transitions from ONE lead window PARTITIONED by (user, session), probabilities and entropy from grouped aggregates over the |types|^2 transition frame",
 )
 def a0116_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    o = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.lag("ts").over(wo).isNull()
-            | (F.col("ts") - F.lag("ts").over(wo) > F.expr("INTERVAL 30 MINUTES")),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_s"),
-    )
-    s = o.withColumn("sess", F.sum("new_s").over(wo.rowsBetween(Window.unboundedPreceding, 0)))
-    tr = s.select(
-        F.col("event_type").alias("cur"),
-        F.lead("event_type")
-        .over(Window.partitionBy("user_id", "sess").orderBy("ts", "event_id"))
-        .alias("nxt"),
-    )
-    c = tr.filter(F.col("nxt").isNotNull()).groupBy("cur", "nxt").agg(F.count("*").alias("n"))
-    c = c.localCheckpoint(eager=False)
+    c = _transition_counts(spark, sf_dir)
     tot = c.groupBy("cur").agg(F.sum("n").alias("n_out"))
     p = F.col("n") / F.col("n_out")
     e = (
@@ -770,20 +763,8 @@ def _stationary_oracle() -> str:
         )
         prev = cur
     return f"""
-    WITH o AS (SELECT user_id, ts, event_type,
-                      CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                                > INTERVAL 30 MINUTES
-                           OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                           THEN 1 ELSE 0 END AS new_s,
-                      event_id
-               FROM events),
-    s AS (SELECT user_id, ts, event_id, event_type,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-          FROM o),
-    tr AS (SELECT event_type AS cur,
-                  LEAD(event_type) OVER (PARTITION BY user_id, sess ORDER BY ts, event_id) AS nxt
-           FROM s),
-    c AS (SELECT cur, nxt, COUNT(*) AS n FROM tr WHERE nxt IS NOT NULL GROUP BY cur, nxt),
+    WITH {_SESSIONS_SQL},
+    {_TRANSITIONS_SQL},
     t1 AS (
       SELECT c.cur AS i, c.nxt AS j, c.n * 1.0 / t.n_out AS p
       FROM c JOIN (SELECT cur, SUM(n) AS n_out FROM c GROUP BY cur) t ON c.cur = t.cur
@@ -807,34 +788,7 @@ def _stationary_oracle() -> str:
     description=f"stationary distribution of the session Markov chain via matrix squaring: the a0116 row-stochastic transition matrix (30-min gap sessions, lead window partitioned by user×session) raised to 2^{_MK_SQUARINGS} with {_MK_SQUARINGS} T→T² joins on the bounded |types|² frame, π = uniform·T³² — the long-run next-action mix; horizon doubles per join, so convergence costs log₂ rounds over bounded state, never extra passes over events",
 )
 def a0064_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    o = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.lag("ts").over(wo).isNull()
-            | (F.col("ts") - F.lag("ts").over(wo) > F.expr("INTERVAL 30 MINUTES")),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_s"),
-    )
-    s = o.withColumn("sess", F.sum("new_s").over(wo.rowsBetween(Window.unboundedPreceding, 0)))
-    tr = s.select(
-        F.col("event_type").alias("cur"),
-        F.lead("event_type")
-        .over(Window.partitionBy("user_id", "sess").orderBy("ts", "event_id"))
-        .alias("nxt"),
-    )
-    c = (
-        tr.filter(F.col("nxt").isNotNull())
-        .groupBy("cur", "nxt")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
-    )
+    c = _transition_counts(spark, sf_dir)
     tot = c.groupBy("cur").agg(F.sum("n").alias("n_out"))
     t = (
         c.join(tot, "cur")
@@ -874,17 +828,8 @@ _SP_TOP = 15
 
 @query(
     "a0065_sequence_patterns",
-    oracle="""
-    WITH o AS (SELECT user_id, ts, event_type,
-                      CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                                > INTERVAL 30 MINUTES
-                           OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                           THEN 1 ELSE 0 END AS new_s,
-                      event_id
-               FROM events),
-    s AS (SELECT user_id, ts, event_id, event_type,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-          FROM o),
+    oracle=f"""
+    WITH {_SESSIONS_SQL},
     tot AS (SELECT COUNT(*) AS n_sessions FROM (SELECT DISTINCT user_id, sess FROM s)),
     pat AS (
       SELECT DISTINCT a.user_id, a.sess, a.event_type AS t1, b.event_type AS t2
@@ -902,24 +847,8 @@ _SP_TOP = 15
     description="frequent 2-sequences (GSP/PrefixSpan level 2) over 30-minute gap-sessions: pattern 'a … then later b' counts once per session when ANY ordered occurrence exists (subsequence semantics, not a0116's adjacent transitions), support = containing sessions / total sessions; ordered pairs from a session-keyed self-join bounded by session length², deduplicated per session — top-15 patterns with tie-free order",
 )
 def a0065_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    o = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.lag("ts").over(wo).isNull()
-            | (F.col("ts") - F.lag("ts").over(wo) > F.expr("INTERVAL 30 MINUTES")),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_s"),
-    )
-    s = o.withColumn(
-        "sess", F.sum("new_s").over(wo.rowsBetween(Window.unboundedPreceding, 0))
-    ).localCheckpoint(eager=False)
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    s = _sessionize(ev, "sess").localCheckpoint(eager=False)
     tot = s.select("user_id", "sess").distinct().agg(F.count("*").alias("n_sessions"))
     a, b = s.alias("a"), s.alias("b")
     pat = (

@@ -142,6 +142,36 @@ def q113_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_JPEG = 8
 
 
+def _jpeg_columns(feats: DataFrame, kind: str, means: tuple[str, ...], topleft: str, *extra) -> DataFrame:
+    """media_id, ``kind``, n_units (width * height), the rounded channel
+    means named ``means`` (features 3..), the raw top-left feature and
+    any ``extra`` columns of decoded JPEG features."""
+    el = F.element_at
+    return feats.select(
+        "media_id",
+        F.lit(kind).alias("kind"),
+        (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
+        *[F.round(el("feature", 3 + i), 6).alias(c) for i, c in enumerate(means)],
+        el("feature", 6).alias(topleft),
+        *extra,
+    )
+
+
+def _jpeg_decode(spark: SparkSession, kind: str, n: int, means: tuple[str, ...], topleft: str) -> DataFrame:
+    """The JPEG decode queries' shared body: ``n`` closed-form fixtures
+    of ``kind`` decoded in the mapInPandas extractor, one row each."""
+    feats = MM.extract_features(
+        MM.formula_media_df(spark, n_audio=0, n_image=0, n_png=0, **{f"n_{kind}": n})
+    )
+    return _jpeg_columns(
+        feats.filter(F.col("mime") == "image/jpeg"), kind, means, topleft
+    ).orderBy("media_id")
+
+
+_GRAY = ("mean_gray",)
+_RGB = ("mean_r", "mean_g", "mean_b")
+
+
 @query(
     "q124_jpeg_decode",
     oracle=f"""
@@ -158,21 +188,7 @@ _N_JPEG = 8
     description="REAL baseline JPEG decode, hash-checked (closes the last multimodal stub): the from-scratch T.81 grayscale codec (operators/jpeg.py — forward/inverse DCT, Annex-K quantization, zigzag, DC prediction, run-length + canonical Huffman, 0xFF stuffing) runs inside the mapInPandas extractor over fixture JPEGs whose 8x8-constant even-offset blocks survive the codec bit-exactly (DC-only DCT, quant step divides the coefficient), so the oracle recomputes decoded mean/top-left from the generating formula; the lossy AC path is pinned by error-bound pytest cases",
 )
 def q124_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = MM.extract_features(
-        MM.formula_media_df(spark, n_audio=0, n_image=0, n_png=0, n_jpeg=_N_JPEG)
-    )
-    el = F.element_at
-    return (
-        feats.filter(F.col("mime") == "image/jpeg")
-        .select(
-            "media_id",
-            F.lit("jpeg").alias("kind"),
-            (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-            F.round(el("feature", 3), 6).alias("mean_gray"),
-            el("feature", 6).alias("topleft"),
-        )
-        .orderBy("media_id")
-    )
+    return _jpeg_decode(spark, "jpeg", _N_JPEG, _GRAY, "topleft")
 
 
 _N_JPEG_C = 8
@@ -204,23 +220,7 @@ _N_JPEG_C = 8
     description="REAL baseline COLOR JPEG decode, hash-checked (completes ITU T.81 baseline parity over the grayscale q124): the from-scratch 3-component YCbCr 4:4:4 codec (operators/jpeg.py — interleaved one-block-per-component MCUs, Annex K.1 luma + K.2 chroma quantization, K.3 luma + chroma Huffman tables, per-component DC prediction) runs inside the mapInPandas extractor over fixture JPEGs whose block-constant (Y, Cb, Cr) values have quant-divisible DC terms (luma step 16 | 8*(Y-128), chroma step 17 | 8*17k) so the planes survive bit-exactly; the oracle recomputes the decoded RGB (JFIF matrix, round-without-ties by construction) from the generating formula — a wrong MCU interleave, chroma table mixup, DC predictor leak across components, or color-matrix error skips the hash",
 )
 def a0163_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = MM.extract_features(
-        MM.formula_media_df(spark, n_audio=0, n_image=0, n_png=0, n_jpeg_color=_N_JPEG_C)
-    )
-    el = F.element_at
-    return (
-        feats.filter(F.col("mime") == "image/jpeg")
-        .select(
-            "media_id",
-            F.lit("jpeg_color").alias("kind"),
-            (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-            F.round(el("feature", 3), 6).alias("mean_r"),
-            F.round(el("feature", 4), 6).alias("mean_g"),
-            F.round(el("feature", 5), 6).alias("mean_b"),
-            el("feature", 6).alias("topleft_r"),
-        )
-        .orderBy("media_id")
-    )
+    return _jpeg_decode(spark, "jpeg_color", _N_JPEG_C, _RGB, "topleft_r")
 
 
 _N_JPEG_420 = 8
@@ -252,23 +252,7 @@ _N_JPEG_420 = 8
     description="REAL 4:2:0 baseline JPEG decode, hash-checked (closes the last distance from real-world JPEG files — 4:4:4 is rare in the wild): the codec encodes 16x16 MCUs of four Y blocks plus 2x2-box-averaged Cb/Cr (sampling factors 0x22/0x11), and the self-describing decoder reconstructs subsampled planes from interleaved MCUs and replication-upsamples them; fixtures keep luma per-8x8-block constant (even offsets, exercising DC prediction across the 4 Y blocks per MCU) and chroma per-16x16-MCU constant in 17-multiples, so downsample, DCT, and upsample are all bit-exact and the oracle recomputes decoded RGB from the generating formula — a wrong Y-block raster order, chroma/luma table mixup, MCU geometry error, or upsample misalignment skips the hash",
 )
 def a0167_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = MM.extract_features(
-        MM.formula_media_df(spark, n_audio=0, n_image=0, n_png=0, n_jpeg_420=_N_JPEG_420)
-    )
-    el = F.element_at
-    return (
-        feats.filter(F.col("mime") == "image/jpeg")
-        .select(
-            "media_id",
-            F.lit("jpeg_420").alias("kind"),
-            (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-            F.round(el("feature", 3), 6).alias("mean_r"),
-            F.round(el("feature", 4), 6).alias("mean_g"),
-            F.round(el("feature", 5), 6).alias("mean_b"),
-            el("feature", 6).alias("topleft_r"),
-        )
-        .orderBy("media_id")
-    )
+    return _jpeg_decode(spark, "jpeg_420", _N_JPEG_420, _RGB, "topleft_r")
 
 
 _RS_W, _RS_H, _N_RS_BMP = 6, 4, 12
@@ -374,23 +358,7 @@ _N_JPEG_P = 8
     description="REAL progressive (SOF2) JPEG decode, hash-checked (r9 — completes T.81 coverage next to baseline q124/a0163/a0167 and restart intervals): the decoder accumulates quantized coefficients across a 9-scan schedule (interleaved DC first at Al=1, per-component spectral-band AC first scans, DC refinement bits, AC refinement to Al=0 with EOB-run correction-bit buffering per Annex G.1.2.3) and IDCTs once at the end; progressive transmits the SAME coefficients as baseline, so the block-constant 4:4:4 fixture survives bit-exactly and the oracle recomputes the decoded RGB from the generating formula — a broken scan scheduler, EOB-run miscount, refinement-bit misassociation, or spectral-band bookkeeping error skips the hash",
 )
 def a0171_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = MM.extract_features(
-        MM.formula_media_df(spark, n_audio=0, n_image=0, n_png=0, n_jpeg_prog=_N_JPEG_P)
-    )
-    el = F.element_at
-    return (
-        feats.filter(F.col("mime") == "image/jpeg")
-        .select(
-            "media_id",
-            F.lit("jpeg_prog").alias("kind"),
-            (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-            F.round(el("feature", 3), 6).alias("mean_r"),
-            F.round(el("feature", 4), 6).alias("mean_g"),
-            F.round(el("feature", 5), 6).alias("mean_b"),
-            el("feature", 6).alias("topleft_r"),
-        )
-        .orderBy("media_id")
-    )
+    return _jpeg_decode(spark, "jpeg_prog", _N_JPEG_P, _RGB, "topleft_r")
 
 
 @query(
@@ -956,23 +924,7 @@ _N_JPEG_LL = 14  # 2 fixtures per predictor
     description=f"REAL lossless JPEG decode (SOF3, T.81 Annex H DPCM): causal prediction + SSSS-category Huffman differences, {_N_JPEG_LL} fixtures cycling ALL 7 Annex-H predictors with the H.1.1 boundary rules (first sample 2^(P−1), first line→A, first column→B); decode runs in the mapInPandas extractor and the oracle recomputes the EXACT decoded plane stats from the generating formula — lossless means any fixture pins the full codec path, completing T.81 mode coverage next to baseline/progressive/restart/4:2:0",
 )
 def a0090_jpeg_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = MM.extract_features(
-        MM.formula_media_df(
-            spark, n_audio=0, n_image=0, n_png=0, n_jpeg_lossless=_N_JPEG_LL
-        )
-    )
-    el = F.element_at
-    return (
-        feats.filter(F.col("mime") == "image/jpeg")
-        .select(
-            "media_id",
-            F.lit("jpeg_lossless").alias("kind"),
-            (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-            F.round(el("feature", 3), 6).alias("mean_gray"),
-            el("feature", 6).alias("topleft"),
-        )
-        .orderBy("media_id")
-    )
+    return _jpeg_decode(spark, "jpeg_lossless", _N_JPEG_LL, _GRAY, "topleft")
 
 
 # ---------------------------------------------------------------------------
@@ -1005,23 +957,7 @@ _N_JPEG_L12 = 14
     description=f"REAL 12-bit lossless JPEG decode (SOF3, precision 12): differences coded MODULO 65536 with SSSS categories to 16 per T.81 H.1.2.3/H.2 — the overshoot path (predictors 4-7 past the sample range) an 8-bit codec never exercises; {_N_JPEG_L12} fixtures cycle all 7 predictors, precision-aware clip bound, oracle recomputes the exact decoded 0..4095 plane stats from the generating formula",
 )
 def a0091_jpeg_lossless12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = MM.extract_features(
-        MM.formula_media_df(
-            spark, n_audio=0, n_image=0, n_png=0, n_jpeg_lossless12=_N_JPEG_L12
-        )
-    )
-    el = F.element_at
-    return (
-        feats.filter(F.col("mime") == "image/jpeg")
-        .select(
-            "media_id",
-            F.lit("jpeg_lossless12").alias("kind"),
-            (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-            F.round(el("feature", 3), 6).alias("mean_gray"),
-            el("feature", 6).alias("topleft"),
-        )
-        .orderBy("media_id")
-    )
+    return _jpeg_decode(spark, "jpeg_lossless12", _N_JPEG_L12, _GRAY, "topleft")
 
 
 # ---------------------------------------------------------------------------
@@ -1089,23 +1025,15 @@ def a0021_jpeg_arith_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, n_audio=0, n_image=0, n_png=0, n_jpeg_arith=_N_JA, n_jpeg_arith_color=_N_JA
         )
     )
-    el = F.element_at
-    gray = feats.filter(F.col("media_id") < 9500).select(
-        "media_id",
-        F.lit("jpeg_arith").alias("kind"),
-        (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-        F.round(el("feature", 3), 6).alias("f1"),
-        el("feature", 6).alias("f2"),
+    gray = _jpeg_columns(
+        feats.filter(F.col("media_id") < 9500),
+        "jpeg_arith",
+        ("f1",),
+        "f2",
         F.lit(0.0).alias("f3"),
         F.lit(0.0).alias("f4"),
     )
-    color = feats.filter(F.col("media_id") >= 9500).select(
-        "media_id",
-        F.lit("jpeg_arith_color").alias("kind"),
-        (el("feature", 1) * el("feature", 2)).cast("long").alias("n_units"),
-        F.round(el("feature", 3), 6).alias("f1"),
-        F.round(el("feature", 4), 6).alias("f2"),
-        F.round(el("feature", 5), 6).alias("f3"),
-        el("feature", 6).alias("f4"),
+    color = _jpeg_columns(
+        feats.filter(F.col("media_id") >= 9500), "jpeg_arith_color", ("f1", "f2", "f3"), "f4"
     )
     return gray.unionAll(color).orderBy("media_id")

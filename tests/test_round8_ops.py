@@ -23,7 +23,7 @@ def test_jpeg_420_exact_fixture_roundtrip():
         blob = J.make_jpeg_color_420(
             32, 32, lambda x, y, m=m: formula_jpeg_color_420_ycbcr(m, x, y), colorspace="ycbcr"
         )
-        w, h, planes = J._parse_baseline(blob)
+        w, h, planes = J._parse(blob)
         assert (w, h) == (32, 32)
         exp = np.array(
             [[formula_jpeg_color_420_ycbcr(m, x, y) for x in range(32)] for y in range(32)],
@@ -61,7 +61,7 @@ def test_jpeg_420_dc_prediction_threads_across_y_blocks():
         return (128 + 2 * ((bx * 9 + by * 4) % 40 - 20), 128, 128)
 
     blob = J.make_jpeg_color_420(32, 32, yc, colorspace="ycbcr")
-    _, _, planes = J._parse_baseline(blob)
+    _, _, planes = J._parse(blob)
     for by in range(4):
         for bx in range(4):
             expect = 128 + 2 * ((bx * 9 + by * 4) % 40 - 20)
