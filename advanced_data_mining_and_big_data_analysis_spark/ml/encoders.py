@@ -2,7 +2,7 @@
 
 Reproduces the reference's ColumnTransformer routing (kaggle.py:784-790):
 object columns → OneHotEncoder, numeric columns → MinMaxScaler, assembled
-into a single vector. StringIndexer uses alphabetAsc ordering for sklearn
+into a vector. StringIndexer uses alphabetAsc ordering for sklearn
 LabelEncoder parity (lexicographic codes, kaggle.py:372-395).
 """
 
@@ -14,38 +14,39 @@ from pyspark.ml.feature import MinMaxScaler, OneHotEncoder, StringIndexer, Vecto
 
 def build_feature_pipeline(
     cat_cols: list[str],
-    num_cols: list[str],
-    output_col: str = "features",
-    one_hot: bool = True,
-    scale: bool = True,
+    vectors: dict[str, list[str]],
+    scaled: dict[str, str] | None = None,
 ) -> Pipeline:
-    """StringIndexer(alphabetAsc) → OneHotEncoder(keep-all) → assemble →
-    MinMaxScaler. Matches sklearn defaults the reference relies on:
-    lexicographic label codes, dense one-hot (dropLast=False ~
-    sparse=False), handle_unknown='ignore' ~ handleInvalid='keep'."""
-    stages = []
-    vec_inputs: list[str] = []
-    # intermediate names carry the output_col so two pipelines over the
-    # same categorical columns can stack on one DataFrame
-    if cat_cols:
-        idx_cols = [f"{c}_{output_col}_idx" for c in cat_cols]
+    """One StringIndexer(alphabetAsc) over ``cat_cols`` feeding every
+    vector of ``vectors`` (output column → its inputs, in order). An input
+    ``<c>_idx`` is category column ``c``'s label code, ``<c>_oh`` its
+    one-hot (OneHotEncoder keep-all, fitted only for the columns some
+    vector one-hots), and any other input a numeric column. ``scaled``
+    maps an output column to the vector it MinMax-scales. Matches the
+    sklearn defaults the reference relies on: lexicographic label codes,
+    dense one-hot (dropLast=False ~ sparse=False), handle_unknown='ignore'
+    ~ handleInvalid='keep'."""
+    inputs = {c for cols in vectors.values() for c in cols}
+    stages = [
+        StringIndexer(
+            inputCols=cat_cols,
+            outputCols=[f"{c}_idx" for c in cat_cols],
+            stringOrderType="alphabetAsc",
+            handleInvalid="keep",
+        )
+    ]
+    one_hot = [c for c in cat_cols if f"{c}_oh" in inputs]
+    if one_hot:
         stages.append(
-            StringIndexer(
-                inputCols=cat_cols,
-                outputCols=idx_cols,
-                stringOrderType="alphabetAsc",
-                handleInvalid="keep",
+            OneHotEncoder(
+                inputCols=[f"{c}_idx" for c in one_hot],
+                outputCols=[f"{c}_oh" for c in one_hot],
+                dropLast=False,
             )
         )
-        if one_hot:
-            oh_cols = [f"{c}_{output_col}_oh" for c in cat_cols]
-            stages.append(OneHotEncoder(inputCols=idx_cols, outputCols=oh_cols, dropLast=False))
-            vec_inputs.extend(oh_cols)
-        else:
-            vec_inputs.extend(idx_cols)
-    vec_inputs.extend(num_cols)
-    raw_col = f"_{output_col}_raw" if scale else output_col
-    stages.append(VectorAssembler(inputCols=vec_inputs, outputCol=raw_col, handleInvalid="keep"))
-    if scale:
-        stages.append(MinMaxScaler(inputCol=raw_col, outputCol=output_col))
+    stages.extend(
+        VectorAssembler(inputCols=cols, outputCol=out, handleInvalid="keep")
+        for out, cols in vectors.items()
+    )
+    stages.extend(MinMaxScaler(inputCol=src, outputCol=out) for out, src in (scaled or {}).items())
     return Pipeline(stages=stages)

@@ -34,17 +34,7 @@ def main() -> None:
 
     # E3: score a fresh period and write the submission
     data = tps.engineer_features(tps.synthetic_sales(spark))
-    feat1 = tps.build_feature_pipeline(
-        cat_cols=["country", "store", "product"],
-        num_cols=["sin1", "cos1", "sin2", "cos2", "year", "wd56", "dec_window"],
-        output_col="features1", one_hot=True, scale=False,
-    ).fit(data)
-    feat2 = tps.build_feature_pipeline(
-        cat_cols=["country", "store", "product", "season"],
-        num_cols=["weekday", "wd56", "dec_window", "year"],
-        output_col="features2", one_hot=False, scale=False,
-    ).fit(data)
-    prepared = feat2.transform(feat1.transform(data))
+    prepared = tps.build_feature_pipeline(tps.CATEGORICAL, tps.VECTORS).fit(data).transform(data)
 
     from advanced_data_mining_and_big_data_analysis_spark.ml import BoostedHybrid
     from pyspark.ml.regression import GBTRegressor, LinearRegression

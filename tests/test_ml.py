@@ -128,6 +128,52 @@ def test_tps_pipeline_smape_ceiling(spark):
     assert metrics["rmse"] > 0
 
 
+def test_tps_bench_fit_exact_within_job_budget(spark):
+    """At the benchmark's parameters (perfbench TPS_PARAMS) the fit
+    reproduces its recorded metrics on local[4] (SMAPE as in
+    perfbench/reference.json) in at most 27 Spark jobs: the engineered
+    table is built and cached once, one indexer feeds both vectors, and
+    replicas explode in place instead of joining a broadcast dim."""
+    sc = spark.sparkContext
+    group = "test_tps_bench_fit"
+    sc.setJobGroup(group, group)
+    try:
+        metrics = run_tps_pipeline(spark, replicas=2, gbt_iters=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    expected = {"smape": 6.904876314103267, "mae": 36.05665201911154, "rmse": 53.66298243699895}
+    for k, v in expected.items():
+        assert abs(metrics[k] - v) <= 1e-9 * v, (k, metrics[k], v)
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 27, jobs
+
+
+@pytest.mark.parametrize("run", ["run_tps_pipeline", "run_tps_ensemble"])
+def test_tps_fit_releases_cache_when_fit_raises(spark, monkeypatch, run):
+    """A fit that raises must not leave the training table cached."""
+    from advanced_data_mining_and_big_data_analysis_spark.ml import stacking, tps
+
+    class Boom(RuntimeError):
+        pass
+
+    class FailingHybrid:
+        def __init__(self, **kwargs):
+            pass
+
+        def fit(self, df):
+            raise Boom
+
+    def failing_stack(*args, **kwargs):
+        raise Boom
+
+    monkeypatch.setattr(tps, "BoostedHybrid", FailingHybrid)
+    monkeypatch.setattr(stacking, "oof_stack", failing_stack)
+    spark.catalog.clearCache()
+    with pytest.raises(Boom):
+        getattr(tps, run)(spark, gbt_iters=1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_hybrid_grid_and_blends(spark, linear_data):
     from pyspark.ml.regression import GBTRegressor
     from advanced_data_mining_and_big_data_analysis_spark.ml.ensemble import (
@@ -171,20 +217,10 @@ def test_boosted_hybrid_save_load_roundtrip(spark, tmp_path):
         BoostedHybridModel,
         build_feature_pipeline,
     )
-    from advanced_data_mining_and_big_data_analysis_spark.ml.tps import engineer_features
+    from advanced_data_mining_and_big_data_analysis_spark.ml import tps
 
-    data = engineer_features(synthetic_sales(spark, start="2017-01-01", end="2018-03-31"))
-    feat1 = build_feature_pipeline(
-        cat_cols=["country", "store", "product"],
-        num_cols=["sin1", "cos1", "sin2", "cos2", "year", "wd56", "dec_window"],
-        output_col="features1", one_hot=True, scale=False,
-    ).fit(data)
-    feat2 = build_feature_pipeline(
-        cat_cols=["country", "store", "product", "season"],
-        num_cols=["weekday", "wd56", "dec_window", "year"],
-        output_col="features2", one_hot=False, scale=False,
-    ).fit(data)
-    prepared = feat2.transform(feat1.transform(data))
+    data = tps.engineer_features(synthetic_sales(spark, start="2017-01-01", end="2018-03-31"))
+    prepared = build_feature_pipeline(tps.CATEGORICAL, tps.VECTORS).fit(data).transform(data)
     train = prepared.filter(F.col("date") <= F.lit("2017-12-31"))
     valid = prepared.filter(F.col("date") >= F.lit("2018-01-01"))
 
