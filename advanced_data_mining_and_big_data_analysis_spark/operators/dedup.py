@@ -124,6 +124,39 @@ def _band_explode_sql(bands: int, rows: int) -> str:
     return f"explode(array({items})) AS bb"
 
 
+def _signatures(
+    docs: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_n: int
+) -> DataFrame:
+    """(id, mh0..mh{k-1}, _sh): the k salted minhash mins and the exact
+    shingle SET of each doc as one grouped aggregate. Catalyst's
+    ColumnPruning drops the collect_set from a consumer that reads only
+    the mins (``_band_buckets``), so a bucket path and a verify path
+    over the same frame plan two different aggregates, each with its
+    own text scan and shingle flat-map; only identical subtrees, such
+    as the two sides of a self-join, share an exchange (ReusedExchange).
+
+    Distributed minhash: shingles as rows, the k salted mins as ordinary
+    partial aggregates (map-side combine → one shuffle on the doc id) —
+    at 100 TB this shuffle-with-combine shape is exactly how signature
+    computation scales across executors."""
+    exploded = shingle_rows(docs, id_col, text_col, shingle_n).withColumnRenamed("shingle", "_s")
+    # single-expr-string aggregates/projections: one py4j round trip per
+    # expression instead of ~6 (min/md5/concat/col/lit/alias) — plan
+    # construction latency is a real driver-side cost at fleet scale
+    # (r14 profile: ~0.5 ms per round trip)
+    return exploded.groupBy(id_col).agg(
+        *[F.expr(_mh_expr_sql(i)) for i in range(num_hashes)],
+        F.collect_set("_s").alias("_sh"),
+    )
+
+
+def _band_buckets(sig: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
+    """(id, band, bucket): the LSH band explode of a ``_signatures`` frame."""
+    return sig.select(F.col(id_col), F.expr(_band_explode_sql(bands, num_hashes // bands))).select(
+        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
 def minhash_buckets(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -132,23 +165,9 @@ def minhash_buckets(
     bands: int = 4,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, band, bucket) LSH bucket assignments.
-
-    Distributed minhash: shingles as rows, the k salted mins as ordinary
-    partial aggregates (map-side combine → one shuffle on the doc id) —
-    at 100 TB this shuffle-with-combine shape is exactly how signature
-    computation scales across executors."""
-    rows = num_hashes // bands
-    exploded = shingle_rows(docs, id_col, text_col, shingle_n).withColumnRenamed("shingle", "_s")
-    # single-expr-string aggregates/projections: one py4j round trip per
-    # expression instead of ~6 (min/md5/concat/col/lit/alias) — plan
-    # construction latency is a real driver-side cost at fleet scale
-    # (r14 profile: ~0.5 ms per round trip)
-    sig_df = exploded.groupBy(id_col).agg(
-        *[F.expr(_mh_expr_sql(i)) for i in range(num_hashes)]
-    )
-    return sig_df.select(F.col(id_col), F.expr(_band_explode_sql(bands, rows))).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    """(id, band, bucket) LSH bucket assignments."""
+    return _band_buckets(
+        _signatures(docs, id_col, text_col, num_hashes, shingle_n), id_col, num_hashes, bands
     )
 
 
@@ -198,25 +217,12 @@ def near_dup_pairs(
     ``salt_buckets``), so an adversarial boilerplate bucket cannot
     quadratically stall a task at corpus scale.
 
-    The minhash mins and the exact shingle SET come out of ONE grouped
-    aggregate over one shingle scan: the bucket path and the verify path
-    both hang off the same exchange, so Catalyst's ReusedExchange runs
-    the text scan + shingle flat-map once, not twice (visible in the
-    plan: one Exchange hashpartitioning(doc_id) feeding both subtrees).
+    The bucket path and the verify path both read one ``_signatures``
+    frame; the two sides of the bucket self-join, and the two reads of
+    the shingle sets, each share one exchange (ReusedExchange).
     """
-    rows = num_hashes // bands
-    exploded = shingle_rows(docs, id_col, text_col, shingle_n).withColumnRenamed("shingle", "_s")
-    base = exploded.groupBy(id_col).agg(
-        *[F.expr(_mh_expr_sql(i)) for i in range(num_hashes)],
-        F.collect_set("_s").alias("_sh"),
-    )
-    buckets = salt_buckets(
-        base.select(F.col(id_col), F.expr(_band_explode_sql(bands, rows))).select(
-            id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        ),
-        id_col,
-        max_bucket_size,
-    )
+    base = _signatures(docs, id_col, text_col, num_hashes, shingle_n)
+    buckets = salt_buckets(_band_buckets(base, id_col, num_hashes, bands), id_col, max_bucket_size)
     # every join below pairs two DATA-GROWN sides (bucket assignments;
     # the shingle-SET frame is GBs at sf10): pin merge so neither the
     # static planner nor a post-agg stats misestimate can pick broadcast
@@ -291,33 +297,15 @@ def incremental_dup_ids(
     """
     from pyspark.sql import Window as W
 
-    # r15: minhash mins and the exact shingle SET come out of ONE
-    # grouped aggregate per side (the near_dup_pairs fusion): the bucket
-    # path and the verify path hang off the same exchange, so
-    # ReusedExchange runs each side's text scan + shingle flat-map ONCE
-    # instead of twice — previously the corpus was tokenized+shingled
-    # separately for minhash_buckets and for the verify collect_set
-    # (4 shingle scans, 2 needed; q108 A/B at sf0.1: warm 3.4 -> 2.4 s).
-    rows = num_hashes // bands
-
-    def _base(docs: DataFrame) -> DataFrame:
-        exploded = shingle_rows(docs, id_col, text_col, shingle_n).withColumnRenamed(
-            "shingle", "_s"
-        )
-        return exploded.groupBy(id_col).agg(
-            *[F.expr(_mh_expr_sql(i)) for i in range(num_hashes)],
-            F.collect_set("_s").alias("_sh"),
-        )
-
-    def _buckets(base: DataFrame) -> DataFrame:
-        return base.select(F.col(id_col), F.expr(_band_explode_sql(bands, rows))).select(
-            id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-
-    nbase = _base(new_docs)
-    cbase = _base(corpus_docs)
-    nb = _buckets(nbase)
-    cb_all = _buckets(cbase)
+    # Each side's bucket path and verify path read one ``_signatures``
+    # frame. ColumnPruning gives the bucket path an aggregate without the
+    # shingle set, so the two paths do not share an exchange and each
+    # side is still scanned and shingled twice (q108's plan: 6 Generate
+    # nodes, no ReusedExchange).
+    nbase = _signatures(new_docs, id_col, text_col, num_hashes, shingle_n)
+    cbase = _signatures(corpus_docs, id_col, text_col, num_hashes, shingle_n)
+    nb = _band_buckets(nbase, id_col, num_hashes, bands)
+    cb_all = _band_buckets(cbase, id_col, num_hashes, bands)
     wb = W.partitionBy("band", "bucket").orderBy(
         F.md5(F.concat(F.col("bucket"), F.col(id_col).cast("string"))), id_col
     )
@@ -479,13 +467,14 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     exactly this reason; q114's pre-fix plan string carried 800+
     exchange nodes).
 
-    All checkpoints are LAZY (eager=False): each round's convergence
-    count is the action that materializes that round's labels, so the
-    loop runs ONE job per round instead of two (eager checkpoint job +
-    count job — r14 profile: q114 spent 36 AQE jobs, a third of them
-    these doubled materializations), and the edge/label init frames
-    materialize inside round 1's job rather than as two up-front jobs.
-    The RDD contents are identical either way.
+    All checkpoints use ``eager=False``, so no checkpoint runs a job of
+    its own (eager checkpoint job + count job — r14 profile: q114 spent
+    36 AQE jobs, a third of them these doubled materializations). They
+    are not lazy under AQE, though: building a checkpointed plan runs
+    every shuffle stage beneath it, so the edge/label init frames and
+    each round's join/aggregate shuffles run while the plan is built,
+    and each round's convergence count runs what is left. The RDD
+    contents are identical either way.
     """
     ed = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     # no distinct on the doubled edge list: duplicate edges are harmless

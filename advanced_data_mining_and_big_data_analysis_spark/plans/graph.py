@@ -170,8 +170,11 @@ def _cooc_edges(buckets: DataFrame) -> DataFrame:
 
 
 def _sym_edges(edges: DataFrame) -> DataFrame:
-    """Both directions of every edge, lazily checkpointed: the iterative
-    callers re-join it every round, so the edge build runs once."""
+    """Both directions of every edge, checkpointed with
+    ``localCheckpoint(eager=False)``: the iterative callers re-join it
+    every round, so the edge build runs once. Under AQE that checkpoint
+    is not lazy: building the plan already runs every shuffle stage
+    beneath it, so the query fn runs jobs before its caller's action."""
     return edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)

@@ -120,11 +120,50 @@ TABLES = tuple(SCHEMAS)
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
+def schema_drift(sf_dir: str) -> list[str]:
+    """Diff every table's parquet schema in ``sf_dir`` against ``SCHEMAS``;
+    one line per missing table, missing or new column and changed type.
+    Empty list == no drift.
+
+    The expected arrow types are derived from ``SCHEMAS`` without a
+    timezone: the data stores naive ``timestamp[us]``, which Spark >= 3.4
+    reads as TIMESTAMP_NTZ. Round 4's data regeneration switched
+    ``events.ts`` from TIMESTAMP(NANOS) to that type and the whole bench
+    aborted before a number was recorded, so ``bench.py`` runs this probe
+    first: the first artifact of a drifted round is a diagnosis, not a
+    zero. Drift is a warning, not a failure — the interval rewrite of the
+    ts arithmetic survives both types."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    problems: list[str] = []
+    for table, schema in SCHEMAS.items():
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        if not os.path.exists(path):
+            problems.append(f"{table}: MISSING at {path}")
+            continue
+        try:
+            got = {f.name: str(f.type) for f in pq.read_schema(path)}
+        except Exception as e:  # noqa: BLE001 - a corrupt file is drift too
+            problems.append(f"{table}: unreadable ({type(e).__name__}: {e})")
+            continue
+        want = {f.name: str(to_arrow_type(f.dataType, timestamp_utc=False)) for f in schema}
+        for col, typ in want.items():
+            if col not in got:
+                problems.append(f"{table}.{col}: column missing (have: {sorted(got)})")
+            elif got[col] != typ:
+                problems.append(f"{table}.{col}: type drift {typ} -> {got[col]}")
+        problems += [f"{table}.{col}: NEW column ({typ})" for col, typ in got.items() if col not in want]
+    return problems
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table from a scale-factor directory.
 
-    ``events.parquet`` stores ``ts`` as INT64 TIMESTAMP(NANOS), which the
-    vectorized Spark reader rejects; read it as raw nanos and truncate to
+    ``events.parquet`` stores ``ts`` as plain ``timestamp[us]`` in every
+    current data generation. Older generations stored it as INT64
+    TIMESTAMP(NANOS), which the vectorized Spark reader rejects; for those
+    the nanos branch of ``_read_table`` reads raw nanos and truncates to
     microseconds (Spark's native timestamp precision).
 
     The analyzed reader handle is memoized per (session, sf_dir, table):

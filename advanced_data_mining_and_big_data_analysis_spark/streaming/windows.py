@@ -422,9 +422,19 @@ def stateful_ohlc(
     )
 
 
-def write_foreach_batch_parquet(
-    stream: DataFrame, out_dir: str, checkpoint_dir: str, available_now: bool = True
-):
+def _start_foreach_batch(stream: DataFrame, sink, checkpoint_dir: str):
+    """Start ``sink`` as the foreachBatch sink of ``stream`` under the
+    availableNow trigger: every input available at start is processed,
+    then the query stops. Returns the StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def write_foreach_batch_parquet(stream: DataFrame, out_dir: str, checkpoint_dir: str):
     """foreachBatch parquet sink: each micro-batch lands as an idempotent
     overwrite of its own ``batch_id=N`` directory — foreachBatch is
     at-least-once, so a replayed batch must overwrite, not append, for
@@ -433,10 +443,7 @@ def write_foreach_batch_parquet(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    writer = stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, sink, checkpoint_dir)
 
 
 def write_cdc_snapshot(
@@ -446,7 +453,6 @@ def write_cdc_snapshot(
     key: str,
     op_col: str = "op",
     seq_col: str = "seq",
-    available_now: bool = True,
 ):
     """Streaming incremental table maintenance: a CDC change stream is
     applied micro-batch by micro-batch to a parquet snapshot via
@@ -501,10 +507,7 @@ def write_cdc_snapshot(
         if os.path.exists(old):
             shutil.rmtree(old)
 
-    writer = changes.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(changes, sink, checkpoint_dir)
 
 
 def _persisted(sink):
@@ -529,7 +532,6 @@ def write_dedup_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     jaccard_threshold: float = 0.5,
-    available_now: bool = True,
 ):
     """Streaming curated-corpus ingest: each micro-batch of candidate
     documents is deduped (a) against the corpus accumulated so far via
@@ -579,12 +581,7 @@ def write_dedup_ingest(
             survivors = survivors.join(flagged, id_col, "left_anti")
         survivors.write.mode("append").parquet(corpus_dir)
 
-    writer = new_docs.writeStream.foreachBatch(_persisted(sink)).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(new_docs, _persisted(sink), checkpoint_dir)
 
 
 def streaming_drift_histogram(
@@ -658,7 +655,6 @@ def write_semdedup_ingest(
     cos_threshold: float = 0.85,
     target_cell: int = 200,
     cap: int = 200,
-    available_now: bool = True,
 ):
     """Streaming SEMANTIC-dedup ingest — the a0003/a0001 SemDeDup idiom
     as a continuous corpus loop (VERDICT r12 item 8's streaming twin):
@@ -803,9 +799,4 @@ def write_semdedup_ingest(
         )
         survivors.write.mode("append").partitionBy("cell").parquet(corpus_dir)
 
-    writer = new_vecs.writeStream.foreachBatch(_persisted(sink)).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(new_vecs, _persisted(sink), checkpoint_dir)

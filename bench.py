@@ -16,7 +16,8 @@ Two timings per query:
   re-collect would silently reuse shuffle files and undercount). This is
   the number that extrapolates with data volume.
 DuckDB timings on the oracle SQL provide the same-machine denominator
-(DuckDB has no JIT, so its cold ~= warm).
+(DuckDB has no JIT, so its cold ~= warm), one run per oracle under a
+cap of $SPARK_GRAFT_DUCK_CAP_S seconds (default 90).
 """
 
 from __future__ import annotations
@@ -31,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from advanced_data_mining_and_big_data_analysis_spark import get_spark
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
+from advanced_data_mining_and_big_data_analysis_spark.sources.catalog import schema_drift
+from advanced_data_mining_and_big_data_analysis_spark.testing import DuckTimer
 
 HEADLINE = [
     # relational core
@@ -107,71 +110,6 @@ HEADLINE = [
 _FLAGSHIP_DENOM = {"a0053_apriori_triples", "a0092_burst_detection"}
 
 
-def duckdb_timings(sf_dir: str, names: list[str], qs) -> dict[str, float]:
-    """Same-machine DuckDB wall-times for every headline query's oracle
-    SQL on the same parquet — BASELINE.md publishes no reference query
-    numbers, so this is the denominator that makes a 'within 2x' gate
-    computable (VERDICT r1 item 8). DuckDB runs its default
-    multi-threaded config; both engines pay a cold first query (Spark's
-    is amortized by the warmup, DuckDB has no JIT to warm)."""
-    import duckdb
-
-    from advanced_data_mining_and_big_data_analysis_spark.sources import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    out: dict[str, float] = {}
-    # per-oracle alarm cap: a0053's basket family runs ~190s in DuckDB at
-    # sf0.1 and a0092's recursive-CTE replay ~60s — real results, but the
-    # whole bench must stay inside the driver's window, so a capped entry
-    # records the cap (a LOWER bound on DuckDB's time: the Spark/DuckDB
-    # ratio can only be UNDERSTATED by this, never flattered). Both
-    # queries are excluded from the *_core gate ratio anyway.
-    import signal
-
-    cap_s = int(os.environ.get("SPARK_GRAFT_DUCK_CAP_S", "90"))
-
-    class _Alarm(Exception):
-        pass
-
-    def _raise(signum, frame):
-        raise _Alarm
-
-    signal.signal(signal.SIGALRM, _raise)
-    for name in names:
-        sql = qs[name].oracle
-        if sql is None:
-            continue
-        t0 = time.time()
-        signal.alarm(cap_s)
-        try:
-            con.execute(sql).fetchall()
-            out[name] = round(time.time() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            # Classify: a genuine TIMEOUT records the cap (a LOWER bound
-            # on DuckDB's time — the ratio can only be understated); any
-            # other failing oracle (syntax, OOM, schema drift) records an
-            # explicit error entry excluded from every total, never the
-            # cap (that would inflate duckdb_core and flatter the gate).
-            # The alarm rarely surfaces as _Alarm here: raising inside
-            # DuckDB's C++ execute makes duckdb re-raise it as
-            # RuntimeError('Query interrupted') — match both.
-            timed_out = isinstance(e, _Alarm) or "interrupt" in str(e).lower()
-            if timed_out and time.time() - t0 >= cap_s - 1:
-                out[name] = float(cap_s)
-            else:
-                out[name] = f"error: {type(e).__name__}: {e}"[:200]
-            try:
-                con.interrupt()
-            except Exception:
-                pass
-        finally:
-            signal.alarm(0)
-    con.close()
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -180,12 +118,9 @@ def main() -> None:
     # testdata between rounds and a type drift once zeroed a whole
     # round's bench (r4, TIMESTAMP_NTZ). Drift warns loudly on stderr
     # but never aborts.
-    try:
-        from tools.check_schemas import check as _check_schemas
-
-        _check_schemas(sf_dir)
-    except Exception:
-        pass
+    drift = schema_drift(sf_dir)
+    if drift:
+        print(f"SCHEMA DRIFT in {sf_dir} (queries may still pass):", *drift, sep="\n  !! ", file=sys.stderr)
 
     # The JVM launcher prints unsuppressable banners to stderr before
     # log4j even initializes ("WARNING: Using incubator modules", the
@@ -267,12 +202,23 @@ def main() -> None:
     except Exception:
         pass
 
-    try:
-        duck = duckdb_timings(sf_dir, [n for n in names if n in timings], qs)
-    except Exception:
-        duck = {}
+    # Same-machine DuckDB wall-times of every headline oracle on the same
+    # parquet, one run each — BASELINE.md publishes no reference query
+    # numbers, so this is the denominator that makes a 'within 2x' gate
+    # computable (VERDICT r1 item 8). Per-oracle cap: a0053's basket
+    # family runs ~190s in DuckDB at sf0.1 and a0092's recursive-CTE
+    # replay ~60s, but the whole bench must stay inside the driver's
+    # window, so a capped oracle records the cap (a LOWER bound on
+    # DuckDB's time: the Spark/DuckDB ratio can only be UNDERSTATED).
+    cap_s = int(os.environ.get("SPARK_GRAFT_DUCK_CAP_S", "90"))
+    duck: dict[str, float | str] = {}
+    with DuckTimer(cap_s) as timer:
+        for name in names:
+            if name in timings and qs[name].oracle is not None:
+                t = timer.time(qs[name].oracle, sf_dir)
+                duck[name] = float(cap_s) if t == timer.timed_out else t
     # error-string entries (failing oracles) are excluded from every
-    # total/ratio — only genuine timings (incl. the alarm-cap lower
+    # total/ratio — only genuine timings (incl. the cap's lower
     # bounds) may enter the denominator
     duck_num = {k: v for k, v in duck.items() if isinstance(v, (int, float))}
     duck_err = {k: v for k, v in duck.items() if not isinstance(v, (int, float))}
@@ -297,7 +243,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "_notes": {
             "a0053_apriori_triples": (
-                "DuckDB's recorded time is the 90s ALARM CAP (its true wall "
+                "DuckDB's recorded time is the 90s CAP (its true wall "
                 "is ~190s at sf0.1; DNF >580s at sf1.0) — a real comparative "
                 "result that would otherwise dominate duckdb_total AND the "
                 "bench wall, so the cap keeps the run bounded and the ratio "

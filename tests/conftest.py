@@ -3,13 +3,12 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from advanced_data_mining_and_big_data_analysis_spark import get_spark
-from advanced_data_mining_and_big_data_analysis_spark.sources import TABLES
+from advanced_data_mining_and_big_data_analysis_spark.testing import duck_catalog
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -26,7 +25,4 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con
+    return duck_catalog(SF_DIR)

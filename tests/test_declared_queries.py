@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
-from advanced_data_mining_and_big_data_analysis_spark.testing import compare
+from advanced_data_mining_and_big_data_analysis_spark.testing import oracle_check
 
 QUERIES = all_queries()
 
@@ -34,17 +34,11 @@ def column_warnings(spark):
 
 
 @pytest.mark.parametrize("name", list(QUERIES))
-def test_query_matches_oracle(name, spark, sf_dir, duck, column_warnings):
-    qd = QUERIES[name]
+def test_query_matches_oracle(name, spark, sf_dir, column_warnings):
     seen = len(column_warnings.toString())
-    df = qd.fn(spark, sf_dir)
+    # a query without an oracle must still run (rows-only contract)
+    _, problems = oracle_check(spark, QUERIES[name], sf_dir)
     assert "trivially true equals predicate" not in column_warnings.toString()[seen:], name
-    sdf = df.toPandas()
-    if qd.oracle is None:
-        assert len(sdf) >= 0  # rows-only contract: must run and be stable
-        return
-    odf = duck.execute(qd.oracle).df()
-    problems = compare(sdf, odf)
     assert not problems, f"{name}: {problems}"
 
 
@@ -57,9 +51,9 @@ def test_entry_smoke(spark):
 
 
 def test_tool_query_lists_resolve():
-    """bench.py HEADLINE, every named set of tools/profile_queries.py, and
-    explain_all HEADLINE must all reference registered queries — a rename
-    that orphans a tool list would silently shrink the evidence surface."""
+    """bench.py HEADLINE and every named set of tools/profile_queries.py
+    must reference registered queries — a rename that orphans a tool list
+    would silently shrink the evidence surface."""
     import importlib.util
     import os
 
@@ -76,7 +70,6 @@ def test_tool_query_lists_resolve():
 
     lists = {
         "bench.py HEADLINE": load(os.path.join(root, "bench.py")).HEADLINE,
-        "explain_all.py HEADLINE": load(os.path.join(root, "tools", "explain_all.py")).HEADLINE,
     }
     sets = load(os.path.join(root, "tools", "profile_queries.py")).SETS
     assert {"headline", "weak", "sf10", "sf1_mining"} <= set(sets)
@@ -179,12 +172,5 @@ def one_user_dir(tmp_path_factory, sf_dir):
 
 @pytest.mark.parametrize("name", EMPTY_GRAPH_QUERIES)
 def test_graph_query_matches_oracle_on_empty_graph(name, spark, one_user_dir):
-    import duckdb
-
-    qd = QUERIES[name]
-    sdf = qd.fn(spark, one_user_dir).toPandas()
-    with duckdb.connect() as con:
-        con.execute(f"CREATE VIEW events AS SELECT * FROM '{one_user_dir}/events.parquet'")
-        odf = con.execute(qd.oracle).df()
-    problems = compare(sdf, odf)
+    _, problems = oracle_check(spark, QUERIES[name], one_user_dir)
     assert not problems, f"{name}: {problems}"

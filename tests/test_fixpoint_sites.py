@@ -16,12 +16,11 @@ import datetime as dt
 import importlib
 import logging
 
-import duckdb
 import pytest
 
 from advanced_data_mining_and_big_data_analysis_spark.operators import fixpoint as FP
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
-from advanced_data_mining_and_big_data_analysis_spark.testing import compare
+from advanced_data_mining_and_big_data_analysis_spark.testing import oracle_check
 
 QUERIES = all_queries()
 PLANS = "advanced_data_mining_and_big_data_analysis_spark.plans."
@@ -86,13 +85,9 @@ def _changing_rounds(caplog) -> int:
 def test_multi_round_fixpoint_matches_oracle(name, data, table, spark, request, caplog):
     d = request.getfixturevalue(data)
     with caplog.at_level(logging.INFO, logger=FP.log.name):
-        sdf = QUERIES[name].fn(spark, d).toPandas()
+        _, problems = oracle_check(spark, QUERIES[name], d)
     assert _changing_rounds(caplog) >= 2
-    with duckdb.connect() as con:
-        con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{d}/{table}.parquet'")
-        odf = con.execute(QUERIES[name].oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{name}: {problems}"
+    assert not problems, f"{name} on the synthetic {table}: {problems}"
 
 
 @pytest.mark.parametrize(

@@ -2,8 +2,9 @@
 
 Runs every declared query through Spark AND its oracle SQL through DuckDB
 on the same parquet, then compares row count, column-name set, and an
-order-insensitive value hash (columns sorted by name, rows sorted, floats
-rounded to 6 decimals, values stringified). Use while iterating:
+order-insensitive value hash (``testing.oracle_check``: columns sorted by
+name, rows sorted, floats rounded to 6 decimals, values stringified; a
+value-hash mismatch prints the first differing rows). Use while iterating:
 
     python tools/check_oracle.py [--sf /root/testdata/sf0.01] [query ...]
 """
@@ -11,27 +12,23 @@ rounded to 6 decimals, values stringified). Use while iterating:
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
 import time
 
-import duckdb
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from advanced_data_mining_and_big_data_analysis_spark import get_spark
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries
-from advanced_data_mining_and_big_data_analysis_spark.sources import TABLES
-from advanced_data_mining_and_big_data_analysis_spark.testing import canonical, value_hash
+from advanced_data_mining_and_big_data_analysis_spark.testing import oracle_check
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--verbose", action="store_true")
     ap.add_argument(
         "--json",
         default=None,
@@ -44,69 +41,29 @@ def main() -> int:
     qs = all_queries()
     names = args.names or list(qs)
     spark = get_spark("check-oracle")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
 
     failures = []
     results: dict[str, dict] = {}
     for name in names:
-        qd = qs[name]
         t0 = time.time()
-        try:
-            sdf = qd.fn(spark, args.sf).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
-            failures.append(name)
-            results[name] = {"rows_match": None, "schema_match": None, "hash_match": None,
-                             "spark_rows": None, "oracle_rows": None, "err": str(e)[:500]}
-            continue
-        if qd.oracle is None:
-            print(f"ok?   {name}: rows-only check, {len(sdf)} rows ({time.time()-t0:.1f}s)")
-            if len(sdf) == 0:
-                print(f"WARN  {name}: zero rows")
-            results[name] = {"rows_match": None, "schema_match": None, "hash_match": None,
-                             "spark_rows": len(sdf), "oracle_rows": None,
-                             "err": None, "rows_only": True}
-            continue
-        try:
-            odf = con.execute(qd.oracle).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {e}")
-            failures.append(name)
-            results[name] = {"rows_match": None, "schema_match": None, "hash_match": None,
-                             "spark_rows": len(sdf), "oracle_rows": None, "err": str(e)[:500]}
-            continue
-        s, o = canonical(sdf), canonical(odf)
-        rows_match = len(s) == len(o)
-        schema_match = list(s.columns) == list(o.columns)
-        hash_match = schema_match and value_hash(s) == value_hash(o)
-        problems = []
-        if not rows_match:
-            problems.append(f"rows {len(s)} vs {len(o)}")
-        if not schema_match:
-            problems.append(f"cols {list(s.columns)} vs {list(o.columns)}")
-        elif not hash_match:
-            problems.append("value-hash mismatch")
-            if args.verbose and len(s) == len(o):
-                neq = (s.astype(str) != o.astype(str)).any(axis=1)
-                print(pd.concat([s[neq].head(5), o[neq].head(5)], axis=1))
-        results[name] = {"rows_match": rows_match, "schema_match": schema_match,
-                         "hash_match": hash_match, "spark_rows": len(s),
-                         "oracle_rows": len(o), "err": None}
+        row, problems = oracle_check(spark, qs[name], args.sf)
+        results[name] = row
+        took = f"({time.time() - t0:.1f}s)"
         if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)} ({time.time()-t0:.1f}s)")
+            print(f"FAIL  {name}: {'; '.join(problems)} {took}")
             failures.append(name)
+        elif row.get("rows_only"):
+            print(f"ok?   {name}: rows-only check, {row['spark_rows']} rows {took}")
+            if row["spark_rows"] == 0:
+                print(f"WARN  {name}: zero rows")
         else:
-            print(f"PASS  {name}: {len(s)} rows ({time.time()-t0:.1f}s)")
+            print(f"PASS  {name}: {row['spark_rows']} rows {took}")
 
     if args.json:
         # Stamp each row with the md5 of the oracle SQL it was verified
         # against, so tools/coverage_ledger.py can refuse to carry a
         # green row forward after the query's oracle changes (ADVICE r8:
         # no stale green credit across semantic edits).
-        import hashlib
-
         for name, row in results.items():
             o = qs[name].oracle
             row["oracle_md5"] = hashlib.md5(o.encode()).hexdigest() if o else None

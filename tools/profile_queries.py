@@ -11,7 +11,7 @@ eager jobs, Catalyst phases, the ``(what, round, changed)`` records of
 its ``fixpoint`` loops and the ``tracing.job_layers`` split of its
 jobs. The event log is parsed after the session stops; a run on whose
 jobs it and ``StatusTracker`` disagree goes into ``errors`` and makes the
-tool exit 1. DuckDB times each oracle (``DuckTimer``), and several SFs
+tool exit 1. DuckDB times each oracle (``testing.DuckTimer``), and several SFs
 give each query the floor ``ladder``.
 
 Named queries are re-measured and merged, per SF, into ``--out``; a full
@@ -24,7 +24,6 @@ from __future__ import annotations
 import argparse
 import json
 import logging
-import multiprocessing
 import os
 import shutil
 import sys
@@ -41,7 +40,7 @@ sys.path.insert(0, ROOT)
 import bench  # noqa: E402
 from advanced_data_mining_and_big_data_analysis_spark.operators import fixpoint  # noqa: E402
 from advanced_data_mining_and_big_data_analysis_spark.plans import all_queries  # noqa: E402
-from advanced_data_mining_and_big_data_analysis_spark.sources import TABLES  # noqa: E402
+from advanced_data_mining_and_big_data_analysis_spark.testing import DuckTimer  # noqa: E402
 from perfbench import run as perfbench  # noqa: E402
 from perfbench.run import tracing  # noqa: E402
 
@@ -261,10 +260,8 @@ SETS = {
 }
 # q114's oracle-pinned fixed-k regime is quadratic per decade of data
 SINGLE_WARM = {"q114_semdedup"}
-# DuckDB gets DUCK_CAP_S per query; a run that takes DUCK_REPEAT_S or
-# more is its own median (DuckDB has no JIT to warm)
+# DuckDB gets DUCK_CAP_S per query
 DUCK_CAP_S = 300
-DUCK_REPEAT_S = 2.0
 # The events tracing.parse_event_log reads. It loads the whole log into
 # memory, and SQL plan updates are most of a log's bytes, so the rest is
 # dropped first.
@@ -340,51 +337,6 @@ def measure(spark, name: str, qd, sf_dir: str) -> tuple[dict, list[dict]]:
     row = {"cold_s": runs[0]["wall_s"], "warm_s": med["wall_s"], "warm_reps_s": [r["wall_s"] for r in runs[1:]]}
     row.update((k, med[k]) for k in ("group", "rows", "build_s", "eager_jobs", "catalyst", "rounds"))
     return row, runs
-
-
-def _duck_runs(sql: str, sf_dir: str, reps: int) -> float:
-    """Median seconds of ``reps`` DuckDB runs of the oracle after a first
-    run, or the first run alone when it takes DUCK_REPEAT_S or more."""
-    import duckdb
-
-    times: list[float] = []
-    with duckdb.connect() as con:
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-        for _ in range(1 + reps):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            times.append(time.perf_counter() - t0)
-            if times[0] >= DUCK_REPEAT_S:
-                break
-    warm = sorted(times[1:] or times)
-    return round(warm[len(warm) // 2], 3)
-
-
-class DuckTimer:
-    """Runs ``_duck_runs`` in a worker process that is killed once
-    DUCK_CAP_S pass: DuckDB does not stop every query when interrupted."""
-
-    def __init__(self):
-        self.pool = None
-
-    def time(self, sql: str, sf_dir: str, reps: int) -> float | str:
-        if self.pool is None:
-            self.pool = multiprocessing.get_context("spawn").Pool(1)
-        job = self.pool.apply_async(_duck_runs, (sql, sf_dir, reps))
-        try:
-            return job.get(DUCK_CAP_S)
-        except multiprocessing.TimeoutError:
-            self.close()
-            return f">{DUCK_CAP_S} (did not finish)"
-        except Exception as e:  # noqa: BLE001 - a failing oracle is recorded, not fatal
-            return f"error: {type(e).__name__}: {e}"[:200]
-
-    def close(self) -> None:
-        if self.pool is not None:
-            self.pool.terminate()
-            self.pool.join()
-            self.pool = None
 
 
 def ladder(by_sf: dict) -> dict:
@@ -468,8 +420,7 @@ def main() -> int:
             row["checked_runs"] = len(row["warm_reps_s"]) + 1
 
     known = {} if args.names else prior.get("queries", {})
-    duck = DuckTimer()
-    try:
+    with DuckTimer(DUCK_CAP_S) as duck:
         for name, by_sf in rows.items():
             for label, row in by_sf.items():
                 had = known.get(name, {}).get("sf", {}).get(label, {}).get("duckdb_s")
@@ -481,8 +432,6 @@ def main() -> int:
                     row["duckdb_s"] = duck.time(qs[name].oracle, sfs[label], len(row["warm_reps_s"]))
                 print(f"{name} sf{label}: cold {row['cold_s']} warm {row['warm_s']} "
                       f"jobs {row['layers']['spark.jobs']} duckdb {row['duckdb_s']}", flush=True)
-    finally:
-        duck.close()
 
     doc = prior if args.names else {}
     queries = doc.setdefault("queries", {})
