@@ -183,7 +183,6 @@ def run_tps_ensemble(
     valid_start: str = "2018-01-01",
     gbt_iters: int = 10,
     folds: int = 2,
-    include_mlp: bool = False,
 ) -> dict[str, float]:
     """The reference's full E2 recipe at reduced scale: hybrid grid →
     OOF stacking with a linear meta-learner → median blend of base
@@ -191,11 +190,10 @@ def run_tps_ensemble(
 
     The grid includes an FMRegressor first-stage — the fast stand-in for
     the reference's MLPRegressor(hidden=(200,100)) (kaggle.py:731-741):
-    Spark ML has no built-in MLP regressor. ``include_mlp=True`` swaps in
-    the REAL thing (ml/mlp.py, distributed full-batch GD, deterministic)
-    on the same MinMax-scaled vector; it is opt-in because each fit costs
-    maxIter Spark jobs, which matters in the OOF k-fold loop at toy
-    scale (at cluster scale the per-job overhead amortizes)."""
+    Spark ML has no built-in MLP regressor; the real one (ml/mlp.py,
+    distributed full-batch GD) stays out of the grid because each fit
+    costs maxIter Spark jobs, which dominates the OOF k-fold loop at toy
+    scale."""
     from pyspark.ml.regression import FMRegressor
 
     from .ensemble import external_boosted_stages, hybrid_grid, median_blend
@@ -209,12 +207,6 @@ def run_tps_ensemble(
             regParam=1e-4, seed=42,
         ),
     ]
-    if include_mlp:
-        from .mlp import MLPRegressor
-
-        linear_stages.append(
-            MLPRegressor(featuresCol="features1s", hidden=(32, 16), maxIter=60, stepSize=0.1)
-        )
     grid = hybrid_grid(
         linear_stages=linear_stages,
         boosted_stages=[

@@ -5,8 +5,19 @@ shared deterministic hash primitive (md5 over normalized strings) so every
 result is reproducible across engines and cluster sizes — no Python UDFs in
 any hot path.
 
-Canonical text pipeline: normalize → tokenize → (shingle | fingerprint |
-simhash | stopword-profile). Each step is independently reusable.
+This module is the one text front end of the corpus queries:
+
+- ``tokens`` is the only word tokenizer (``normalize`` stays for the
+  character paths: character n-grams, quality ratios);
+- ``ngram_zip`` is the only n-gram primitive — the zipped-struct Column
+  of a token array's offset slices; ``zip_ngram_rows`` is its row
+  flat-map, joining or hashing each gram, and pair consumers read the
+  struct elements of ``ngram_zip(toks, 2)`` directly;
+- ``token_rows`` / ``word_ngram_rows`` / ``char_ngram_rows`` are the
+  relational forms (tokens and grams as rows) for corpus-wide scans.
+
+Canonical text pipeline: tokens → (n-grams | fingerprint | simhash |
+stopword-profile). Each step is independently reusable.
 """
 
 from __future__ import annotations
@@ -32,26 +43,20 @@ def normalize(text: Column | str) -> Column:
 
 
 def tokens(text: Column | str) -> Column:
-    """array<string> of normalized words (empty strings dropped).
+    """array<string> of normalized words (empty strings dropped) — the
+    only word tokenizer; every word-level operator and query builds on it.
 
-    Token stream is identical to split(normalize(text), ' +') — both
-    split on maximal runs of non-alphanumerics — but in ONE regex pass
-    over the string instead of regexp_replace + regex split (r9 A/B:
-    0.36 -> 0.20 s for the corpus tokenize at sf0.1; this is the hot
-    path under every text operator)."""
+    Its words are those of split(trim(normalize(text)), ' +') — both split
+    on maximal runs of non-alphanumerics — but in ONE regex pass over the
+    string instead of regexp_replace + regex split (r9 A/B: 0.36 -> 0.20 s
+    for the corpus tokenize at sf0.1; this is the hot path under every
+    text operator). The two differ only on empty or all-punctuation
+    text: ``tokens`` gives ``[]`` where the normalize split gives
+    ``[""]``. The empty-token filter is a lambda, which Spark does not
+    fuse into whole-stage codegen: the projection holding ``tokens``
+    runs as its own operator below the codegen span that consumes it."""
     c = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda x: x != "")
-
-
-def word_shingles(toks: Column, n: int = 3, distinct: bool = True) -> Column:
-    """n-word shingles as array<string>; empty array when under n tokens.
-    (sequence() would descend for size < n, hence the guard.)"""
-    joined = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
-    )
-    sh = F.when(F.size(toks) >= n, joined).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(sh) if distinct else sh
 
 
 def simhash16(toks: Column) -> Column:
@@ -166,16 +171,13 @@ def _spread(
     # (~0.1-0.3 s per call, r14 py4j profile), while analyzed stats are
     # already computed by the eager analyzer. The estimate only feeds
     # this under-partitioned-input heuristic, where file-boundary
-    # rounding is immaterial.
+    # rounding is immaterial. The split size is SQLConf's parsed value,
+    # so a unit-suffixed setting ('64m', '1g') counts as the scan does.
     try:
         size = int(str(docs._jdf.queryExecution().analyzed().stats().sizeInBytes()))
     except Exception:
         size = min_split_bytes * n_parts  # unknown -> assume big, spread
-    try:
-        mpb_raw = docs.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-        mpb = int(str(mpb_raw).lower().rstrip("b")) or 1
-    except Exception:
-        mpb = 128 * 1024 * 1024
+    mpb = docs.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     in_parts = max(1, -(-size // mpb))
     if in_parts >= n_parts:
         return proj
@@ -187,13 +189,38 @@ def _spread(
 def token_rows(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", extra_cols: tuple = ()
 ) -> DataFrame:
-    """Tokens as (id, extra..., _pos, _tok) rows, with multiplicity."""
+    """Tokens as (id, extra..., _tok) rows, with multiplicity."""
     spread = _spread(docs, id_col, [*extra_cols, text_col], SPREAD_CHEAP_CPU)
     return spread.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.posexplode(F.split(normalize(text_col), " +")).alias("_pos", "_tok"),
-    ).filter(F.col("_tok") != "")
+        F.col(id_col), *[F.col(c) for c in extra_cols], F.explode(tokens(text_col)).alias("_tok")
+    )
+
+
+def ngram_zip(arr: Column | str, n: int, distinct: bool = False) -> Column:
+    """The n-grams of an array column, in order, as
+    array<struct<g0, ..., g{n-1}>> — the one n-gram primitive.
+
+    The array's n offset slices, each cut to the gram count
+    max(size - n + 1, 0), are zipped, so an array shorter than n gives
+    ``[]`` and no element is null-padded. Slice, arrays_zip and
+    array_distinct are flat codegen expressions: no exchange and no
+    lambda, unlike window-lead (a shuffle+sort per id) or an
+    element-wise transform over sequence() (interpreted; ~50x the CPU
+    per element).
+
+    ``distinct=True`` drops repeated grams with array_distinct on the
+    structs: all of a row's grams come from that one row, so per-row
+    struct dedup IS per-document gram dedup (struct equality == gram
+    equality) — the usual dropDuplicates exchange disappears, and
+    downstream per-gram work shrinks by the repetition factor.
+
+    Consumers that need the elements themselves (adjacent pairs read
+    ``g0`` and ``g1``) explode this Column; ``zip_ngram_rows`` is the row
+    flat-map that joins or hashes each gram."""
+    c = F.col(arr) if isinstance(arr, str) else arr
+    m = F.greatest(F.size(c) - (n - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(c, j + 1, m).alias(f"g{j}") for j in range(n)])
+    return F.array_distinct(zipped) if distinct else zipped
 
 
 def zip_ngram_rows(
@@ -206,27 +233,15 @@ def zip_ngram_rows(
     distinct: bool,
     hashed: bool = False,
 ) -> DataFrame:
-    """n-gram flat-map over an array column — shuffle-free and HOF-free.
+    """(keep_cols..., out_col) gram rows of an array column: the row
+    flat-map of ``ngram_zip``, one whole-stage-codegen pass with NO
+    exchange. Each gram's elements are joined with ``sep``; a gram
+    whose last element is empty (the ``[""]`` of an empty text's
+    character split) is dropped.
 
-    The array is zipped with its own 1..n-1 offset slices; arrays_zip
-    pads the shorter slices with null, and the padded tail is filtered
-    after the explode. Everything (slice, arrays_zip, array_distinct,
-    explode, concat_ws) is a flat codegen expression, so n-gram
-    generation costs one whole-stage-codegen pass with NO exchange —
-    unlike window-lead (shuffle+sort per id) or transform/HOF
-    (interpreted, ~50x CPU) formulations.
-
-    ``distinct=True`` applies array_distinct to the zipped structs
-    BEFORE the explode: all of a row's n-grams come from that one row,
-    so per-row struct dedup IS per-document gram dedup (struct equality
-    == gram equality; elements cannot contain the separator) — the
-    usual dropDuplicates exchange disappears entirely, and downstream
-    per-gram work shrinks by the repetition factor.
-
-    The exploded rows carry only the n gram elements plus keep_cols —
-    the source array/string does NOT ride along (a doc-length string
-    repeated per gram row is the hidden cost of substr-style n-gram
-    plans).
+    The exploded rows carry only the gram plus keep_cols — the source
+    array/string does NOT ride along (a doc-length string repeated per
+    gram row is the hidden cost of substr-style n-gram plans).
 
     ``hashed=True`` emits ``xxhash64`` of the gram STRUCT instead of the
     joined string: the gram text is never materialized, and downstream
@@ -234,22 +249,16 @@ def zip_ngram_rows(
     (xxhash64 folds fields with framing; elements cannot contain the
     separator), collisions ~n^2/2^65. Use when the consumer needs gram
     IDENTITY (joins, distinct counts), not gram TEXT."""
-    arrs = [F.col(arr_col).alias("g0")] + [
-        F.slice(F.col(arr_col), j + 1, F.greatest(F.size(arr_col) - j, F.lit(0))).alias(f"g{j}")
-        for j in range(1, n)
-    ]
-    zipped = F.arrays_zip(*arrs)
-    if distinct:
-        zipped = F.array_distinct(zipped)
-    last = f"g{n - 1}"
     gram = (
         F.xxhash64(F.col("_z"))
         if hashed
         else F.concat_ws(sep, *[F.col(f"_z.g{j}") for j in range(n)])
     )
     return (
-        with_arr.select(*[F.col(c) for c in keep_cols], F.explode(zipped).alias("_z"))
-        .filter(F.col(f"_z.{last}").isNotNull() & (F.col(f"_z.{last}") != ""))
+        with_arr.select(
+            *[F.col(c) for c in keep_cols], F.explode(ngram_zip(arr_col, n, distinct)).alias("_z")
+        )
+        .filter(F.col(f"_z.g{n - 1}") != "")
         .select(*[F.col(c) for c in keep_cols], gram.alias(out_col))
     )
 
@@ -290,12 +299,9 @@ def word_ngram_rows(
     # the token projection, substituting the full tokenize regex into the
     # predicate — the whole split+regexp then runs TWICE per row (r10 A/B:
     # 0.74 -> 0.56 s warm at sf0.1 for a092 from dropping it). Short docs
-    # are already dropped by zip_ngram_rows' post-explode tail filter
-    # (their zipped structs have a null/empty last element).
+    # need none: their ngram_zip array is empty.
     with_t = spread.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.split(F.trim(normalize(text_col)), " +").alias("_toks"),
+        F.col(id_col), *[F.col(c) for c in extra_cols], tokens(text_col).alias("_toks")
     )
     return zip_ngram_rows(with_t, "_toks", n, "gram", [id_col, *extra_cols], " ", False)
 

@@ -467,25 +467,65 @@ _BM25_TERMS = ["hash", "join", "vector"]
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 
-@query(
-    "a0165_bm25_search",
-    oracle=f"""
-    WITH base AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+def _bm25_ctes(terms: list[str]) -> str:
+    """Oracle CTEs base/stats/dl/tf/df of BM25 over ``terms``; a
+    (doc, term) row's contribution is ``_BM25_C_SQL`` over
+    ``_BM25_FROM_SQL``. The twin of ``_bm25_contrib``."""
+    return f"""base AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     stats AS (SELECT COUNT(*) AS n_docs, AVG(len(toks)) AS avgdl FROM base),
     dl AS (SELECT doc_id, len(toks) AS dl FROM base),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf
            FROM (SELECT doc_id, unnest(toks) AS term FROM base)
-           WHERE term IN ({", ".join(f"'{t}'" for t in _BM25_TERMS)})
+           WHERE term IN ({", ".join(f"'{t}'" for t in terms)})
            GROUP BY doc_id, term),
-    df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+    df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)"""
+
+
+_BM25_C_SQL = f"""ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
+               * (tf.tf * ({_BM25_K1} + 1))
+               / (tf.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl.dl / stats.avgdl))"""
+_BM25_FROM_SQL = "tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN stats"
+
+
+def _bm25_contrib(docs: DataFrame, terms: list[str]) -> DataFrame:
+    """(term, doc_id, tf, c): the Okapi BM25 contribution ``c`` of each
+    of ``terms`` to each document holding it. The token explode is
+    filtered to ``terms`` at once (posting lists, never a corpus-wide
+    term table); df and the (N, avgdl) stats are broadcast. ``c`` is
+    the oracle's ``_BM25_C_SQL`` expression tree over exact-integer
+    tf/dl/df, so both engines agree bit-for-bit before any rounding."""
+    base = docs.select("doc_id", X.tokens("text").alias("toks"))
+    stats = base.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
+    )
+    dl = base.select("doc_id", F.size("toks").alias("dl"))
+    tf = (
+        base.select("doc_id", F.explode("toks").alias("term"))
+        .filter(F.col("term").isin(terms))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+    denom = F.col("tf") + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+    return (
+        tf.join(dl, "doc_id")
+        .join(F.broadcast(df_), "term")
+        .crossJoin(F.broadcast(stats))
+        .select("term", "doc_id", "tf", (idf * (F.col("tf") * (_BM25_K1 + 1)) / denom).alias("c"))
+    )
+
+
+@query(
+    "a0165_bm25_search",
+    oracle=f"""
+    WITH {_bm25_ctes(_BM25_TERMS)},
     contrib AS (
       SELECT tf.doc_id,
-             ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-               * (tf.tf * ({_BM25_K1} + 1))
-               / (tf.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl.dl / stats.avgdl))
+             {_BM25_C_SQL}
                AS c,
              tf.tf
-      FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN stats),
+      FROM {_BM25_FROM_SQL}),
     scored AS (SELECT doc_id, ROUND(SUM(c), 6) AS bm25,
                       CAST(COUNT(*) AS BIGINT) AS n_terms_matched,
                       CAST(SUM(tf) AS BIGINT) AS total_tf
@@ -497,28 +537,9 @@ _BM25_K1, _BM25_B = 1.2, 0.75
 )
 def a0165_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", X.tokens("text").alias("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
-    )
-    dl = base.select("doc_id", F.size("toks").alias("dl"))
-    tf = (
-        base.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(_BM25_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("tf") + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-    contrib = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", (idf * (F.col("tf") * (_BM25_K1 + 1)) / denom).alias("c"), "tf")
-    )
     return (
-        contrib.groupBy("doc_id")
+        _bm25_contrib(docs, _BM25_TERMS)
+        .groupBy("doc_id")
         .agg(
             F.round(F.sum("c"), 6).alias("bm25"),
             F.count(F.lit(1)).alias("n_terms_matched"),
@@ -560,22 +581,13 @@ _BM25_Q_SQL = ", ".join(
     "a0168_bm25_multiquery",
     oracle=f"""
     WITH queries(query_id, term) AS (VALUES {_BM25_Q_SQL}),
-    base AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    stats AS (SELECT COUNT(*) AS n_docs, AVG(len(toks)) AS avgdl FROM base),
-    dl AS (SELECT doc_id, len(toks) AS dl FROM base),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf
-           FROM (SELECT doc_id, unnest(toks) AS term FROM base)
-           WHERE term IN ({", ".join(f"'{t}'" for t in _BM25_ALL_TERMS)})
-           GROUP BY doc_id, term),
-    df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+    {_bm25_ctes(_BM25_ALL_TERMS)},
     contrib AS (
       SELECT q.query_id, tf.doc_id,
-             ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-               * (tf.tf * ({_BM25_K1} + 1))
-               / (tf.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl.dl / stats.avgdl))
+             {_BM25_C_SQL}
                AS c,
              tf.tf
-      FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN stats
+      FROM {_BM25_FROM_SQL}
       JOIN queries q ON q.term = tf.term),
     scored AS (SELECT query_id, doc_id, ROUND(SUM(c), 6) AS bm25,
                       CAST(COUNT(*) AS BIGINT) AS n_terms_matched,
@@ -597,32 +609,7 @@ def a0168_bm25_multiquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(qid, t) for qid, ts in _BM25_WORKLOAD for t in ts],
         "query_id string, term string",
     )
-    base = docs.select("doc_id", X.tokens("text").alias("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
-    )
-    dl = base.select("doc_id", F.size("toks").alias("dl"))
-    tf = (
-        base.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(_BM25_ALL_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("tf") + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-    contrib = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(qframe), "term")
-        .select(
-            "query_id",
-            "doc_id",
-            (idf * (F.col("tf") * (_BM25_K1 + 1)) / denom).alias("c"),
-            "tf",
-        )
-    )
+    contrib = _bm25_contrib(docs, _BM25_ALL_TERMS).join(F.broadcast(qframe), "term")
     wrank = W.partitionBy("query_id").orderBy(F.col("bm25").desc(), "doc_id")
     return (
         contrib.groupBy("query_id", "doc_id")
@@ -779,9 +766,9 @@ def q130_prefix_filter_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VERIFY stage scale (see below). Gram rows for the prefix filter
     # explode back out of the checkpointed arrays (one corpus scan
     # total).
-    with_t = docs.select("doc_id", F.split(F.trim(X.normalize("text")), " +").alias("_toks"))
+    with_t = docs.select("doc_id", X.tokens("text").alias("_toks"))
     # grams via the zip_ngram fast path (arrays_zip of offset slices,
-    # flat codegen — an interpreted word_shingles HOF here measured
+    # flat codegen — an interpreted element-wise lambda here measured
     # 50s vs 2s for the whole tt build at sf0.1), regrouped to arrays
     # once; array order is irrelevant to size/array_intersect
     e0 = X.zip_ngram_rows(with_t, "_toks", 5, "g", ["doc_id"], " ", True)
@@ -948,20 +935,8 @@ _KN_D = 0.75
 def a0135_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     with_t = docs.select(X.tokens("text").alias("_toks"))
-    pairs = with_t.select(
-        F.explode(
-            F.when(
-                F.size("_toks") >= 2,
-                F.arrays_zip(
-                    F.col("_toks").alias("a"),
-                    F.slice(F.col("_toks"), 2, F.greatest(F.size("_toks") - 1, F.lit(0))).alias(
-                        "b"
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        ).alias("_p")
-    ).filter(F.col("_p.b").isNotNull() & (F.col("_p.b") != ""))
-    c = pairs.groupBy(F.col("_p.a").alias("a"), F.col("_p.b").alias("b")).agg(
+    pairs = with_t.select(F.explode(X.ngram_zip("_toks", 2)).alias("_p"))
+    c = pairs.groupBy(F.col("_p.g0").alias("a"), F.col("_p.g1").alias("b")).agg(
         F.count("*").alias("c_ab")
     )
     c = c.localCheckpoint(eager=False)  # four consumers; count once
@@ -1095,20 +1070,8 @@ _PMI_MIN = 5
 def a0108_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     with_t = docs.select(X.tokens("text").alias("_toks"))
-    pairs = with_t.select(
-        F.explode(
-            F.when(
-                F.size("_toks") >= 2,
-                F.arrays_zip(
-                    F.col("_toks").alias("a"),
-                    F.slice(F.col("_toks"), 2, F.greatest(F.size("_toks") - 1, F.lit(0))).alias(
-                        "b"
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        ).alias("_p")
-    ).filter(F.col("_p.b").isNotNull() & (F.col("_p.b") != ""))
-    c = pairs.groupBy(F.col("_p.a").alias("a"), F.col("_p.b").alias("b")).agg(
+    pairs = with_t.select(F.explode(X.ngram_zip("_toks", 2)).alias("_p"))
+    c = pairs.groupBy(F.col("_p.g0").alias("a"), F.col("_p.g1").alias("b")).agg(
         F.count("*").alias("c_ab")
     )
     c = c.localCheckpoint(eager=False)
@@ -1389,11 +1352,12 @@ def a0113_containment_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select("doc_id", X.tokens("text").alias("toks"))
     snip = t.filter((F.col("doc_id") % 97 == 0) & (F.size("toks") >= _CONT_SNIP)).select(
         F.col("doc_id").alias("snip_id"),
-        X.word_shingles(F.slice("toks", 1, _CONT_SNIP), n=_CONT_N, distinct=True).alias("gs"),
+        X.ngram_zip(F.slice("toks", 1, _CONT_SNIP), _CONT_N, distinct=True).alias("gs"),
     )
+    # grams join as (g0, g1, g2) structs: struct equality == gram equality
     sg = snip.select("snip_id", F.size("gs").alias("n_q"), F.explode("gs").alias("g"))
-    dg = t.filter((F.col("doc_id") % 97 != 0) & (F.size("toks") >= _CONT_N)).select(
-        "doc_id", F.explode(X.word_shingles(F.col("toks"), n=_CONT_N, distinct=True)).alias("g")
+    dg = t.filter(F.col("doc_id") % 97 != 0).select(
+        "doc_id", F.explode(X.ngram_zip("toks", _CONT_N, distinct=True)).alias("g")
     )
     m = (
         sg.join(dg, "g")
@@ -2275,17 +2239,8 @@ def a0009_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         X.tokens("text").alias("tk")
     ).localCheckpoint(eager=False)  # one tokenize feeds bigram + unigram passes
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size("tk") - 1),
-        lambda i: F.struct(
-            F.element_at("tk", i).alias("w1"),
-            F.element_at("tk", i + F.lit(1)).alias("w2"),
-        ),
-    )
-    bi = (
-        d.filter(F.size("tk") >= 2)
-        .select(F.explode(bigrams).alias("p"))
-        .select("p.w1", "p.w2")
+    bi = d.select(F.explode(X.ngram_zip("tk", 2)).alias("p")).select(
+        F.col("p.g0").alias("w1"), F.col("p.g1").alias("w2")
     )
     c12 = bi.groupBy("w1", "w2").agg((F.count("*") * 1.0).alias("c"))
     uni = (
@@ -2376,20 +2331,8 @@ def a0011_ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decile denominator rides as a broadcast 1-row COUNT(*) (the
     # oracle's nn CTE) instead of a separate d.count() driver job
     nn = d.agg((F.count("*") * 1.0).alias("_nd"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("tk") - (_NOV_N - 1)),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at("tk", i),
-            F.element_at("tk", i + F.lit(1)),
-            F.element_at("tk", i + F.lit(2)),
-        ),
-    )
-    sh = (
-        d.filter(F.size("tk") >= _NOV_N)
-        .select("doc_id", F.explode(F.array_distinct(grams)).alias("g"))
-        .localCheckpoint(eager=False)  # first-occurrence + per-doc passes
-    )
+    # checkpointed: the first-occurrence and per-doc passes both read it
+    sh = X.zip_ngram_rows(d, "tk", _NOV_N, "g", ["doc_id"], " ", True).localCheckpoint(eager=False)
     fo = sh.groupBy("g").agg(F.min("doc_id").alias("fdoc"))
     per_doc = (
         sh.join(fo.hint("merge"), "g")  # data-grown both sides: pin SMJ, let AQE upgrade
@@ -2624,9 +2567,9 @@ def a0019_ngram_self_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exploded gram frame feeds BOTH the df count and the join-back —
     # materialize the tokenize+shingle+explode once (the a095/a0085
     # single-tokenize lesson; sf1.0 A/B: 12.2 -> 7.9 s warm, 1.49x same-run DuckDB)
-    g = t.select(
-        "doc_id", "source", F.explode(X.word_shingles(F.col("tk"), 3, distinct=True)).alias("gr")
-    ).localCheckpoint(eager=False)
+    g = X.zip_ngram_rows(t, "tk", 3, "gr", ["doc_id", "source"], " ", True).localCheckpoint(
+        eager=False
+    )
     df = g.groupBy("gr").agg(F.count("*").alias("df"))
     ov = (
         g.join(df, "gr")
@@ -2836,19 +2779,9 @@ def a0029_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = wtok.groupBy("w").agg(F.count("*").alias("c")).filter(
         F.col("c") >= _TR_MIN
     )
-    t = F.col("toks")
-    adj = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.struct(
-            F.element_at(t, i).alias("a"), F.element_at(t, i + 1).alias("b")
-        ),
-    )
-    guarded = F.when(F.size(t) >= 2, adj).otherwise(
-        F.array().cast("array<struct<a:string,b:string>>")
-    )
     prs = (
-        base.select(F.explode(guarded).alias("p"))
-        .select("p.a", "p.b")
+        base.select(F.explode(X.ngram_zip("toks", 2)).alias("p"))
+        .select(F.col("p.g0").alias("a"), F.col("p.g1").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .join(vocab.select(F.col("w").alias("a")), "a", "left_semi")
         .join(vocab.select(F.col("w").alias("b")), "b", "left_semi")
@@ -3325,7 +3258,6 @@ _EVAL_QUERIES = {
     2: ["merge", "sort", "stream"],
     3: ["filter", "scan", "batch"],
 }
-_EVAL_K1, _EVAL_B = 1.2, 0.75
 _EVAL_DEPTH = 10
 _EVAL_TITLE = 30
 
@@ -3354,8 +3286,8 @@ _EVAL_TERM_ROWS = ", ".join(
             GROUP BY g.qid, g.doc_id),
     score AS (SELECT qt.qid, tf.doc_id, ROUND(SUM(
                 ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-                * (tf.tf * ({_EVAL_K1} + 1))
-                / (tf.tf + {_EVAL_K1} * (1 - {_EVAL_B} + {_EVAL_B} * dl.dl / stats.avgdl))), 6) AS bm25
+                * (tf.tf * ({_BM25_K1} + 1))
+                / (tf.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl.dl / stats.avgdl))), 6) AS bm25
               FROM tf JOIN qt USING (term) JOIN dl USING (doc_id)
                       JOIN df USING (term) CROSS JOIN stats
               GROUP BY qt.qid, tf.doc_id),
@@ -3412,35 +3344,16 @@ def a0047_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid int, term string",
     )
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", X.tokens("text").alias("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
-    )
-    dl = base.select("doc_id", F.size("toks").alias("dl"))
-    all_terms = sorted({t for ts in _EVAL_QUERIES.values() for t in ts})
-    tf = (
-        base.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(all_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     rel = (
-        base.select("doc_id", F.explode(F.slice("toks", 1, _EVAL_TITLE)).alias("tok"))
+        docs.select("doc_id", F.explode(F.slice(X.tokens("text"), 1, _EVAL_TITLE)).alias("tok"))
         .join(F.broadcast(qt), F.col("term") == F.col("tok"))
         .groupBy("qid", "doc_id")
         .agg(F.count_distinct("term").alias("rel"))
     )
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("tf") + _EVAL_K1 * (
-        1 - _EVAL_B + _EVAL_B * F.col("dl") / F.col("avgdl")
-    )
+    all_terms = sorted({t for ts in _EVAL_QUERIES.values() for t in ts})
     score = (
-        tf.join(F.broadcast(qt), "term")
-        .join(dl, "doc_id")
-        .join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("qid", "doc_id", (idf * (F.col("tf") * (_EVAL_K1 + 1)) / denom).alias("c"))
+        _bm25_contrib(docs, all_terms)
+        .join(F.broadcast(qt), "term")
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum("c"), 6).alias("bm25"))
     )

@@ -126,6 +126,17 @@ def q102_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HUB_CAP = 20
 
+# The q128 user co-occurrence graph's edge build, as oracle CTEs.
+_G_EDGES_SQL = f"""ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
+                FROM events),
+    bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
+    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
+    ek AS (SELECT ev.user_id, ev.event_type, ev.b
+           FROM ev JOIN kept USING (event_type, b)),
+    e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
+           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
+                             AND a.user_id < k.user_id)"""
+
 
 def _user_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, b=hour) -> sorted distinct-user array ``us``: ONE
@@ -535,14 +546,7 @@ def _kcore_rounds_sql() -> str:
 @query(
     "a0008_kcore_peeling",
     oracle=f"""
-    WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
-                FROM events),
-    bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
-    ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
-    e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
-           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
-                             AND a.user_id < k.user_id),
+    WITH {_G_EDGES_SQL},
     {_kcore_rounds_sql()},
     fin AS (SELECT node, COUNT(*) AS c
             FROM (SELECT u AS node FROM e{_KC_ROUNDS}
@@ -625,14 +629,7 @@ def _lpa_rounds_sql() -> str:
 @query(
     "a0012_label_propagation",
     oracle=f"""
-    WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
-                FROM events),
-    bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
-    ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
-    e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
-           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
-                             AND a.user_id < k.user_id),
+    WITH {_G_EDGES_SQL},
     sym AS MATERIALIZED (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
     l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM sym),
     {_lpa_rounds_sql()},
@@ -821,14 +818,7 @@ def _bfs_rounds_sql() -> str:
 @query(
     "a0022_bfs_layers",
     oracle=f"""
-    WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
-                FROM events),
-    bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
-    ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
-    e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
-           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
-                             AND a.user_id < k.user_id),
+    WITH {_G_EDGES_SQL},
     sym AS MATERIALIZED (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
     deg AS (SELECT u AS node, COUNT(*) AS c FROM sym GROUP BY u),
     seed AS (SELECT node FROM deg ORDER BY c DESC, node LIMIT 1),
@@ -886,14 +876,7 @@ def a0022_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _modularity_oracle() -> str:
     return f"""
-    WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
-                FROM events),
-    bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
-    ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
-    e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
-           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
-                             AND a.user_id < k.user_id),
+    WITH {_G_EDGES_SQL},
     sym AS MATERIALIZED (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
     l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM sym),
     {_lpa_rounds_sql()},
@@ -1010,14 +993,7 @@ def _cc_rounds_sql() -> str:
 @query(
     "a0028_closeness_centrality",
     oracle=f"""
-    WITH ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
-                FROM events),
-    bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
-    ek AS (SELECT ev.user_id, ev.event_type, ev.b FROM ev JOIN kept USING (event_type, b)),
-    e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
-           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
-                             AND a.user_id < k.user_id),
+    WITH {_G_EDGES_SQL},
     sym AS MATERIALIZED (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
     seeds AS (SELECT DISTINCT u AS node FROM sym ORDER BY node LIMIT {_CC_SEEDS}),
     f0 AS MATERIALIZED (SELECT node AS seed, node FROM seeds),
@@ -1068,18 +1044,6 @@ def a0028_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("seed")
     )
-
-
-# The q128 user co-occurrence graph's edge build, as oracle CTEs.
-_G_EDGES_SQL = f"""ev AS (SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS b
-                FROM events),
-    bs AS (SELECT event_type, b, COUNT(*) AS n FROM ev GROUP BY 1, 2),
-    kept AS (SELECT event_type, b FROM bs WHERE n <= {_HUB_CAP}),
-    ek AS (SELECT ev.user_id, ev.event_type, ev.b
-           FROM ev JOIN kept USING (event_type, b)),
-    e0 AS MATERIALIZED (SELECT DISTINCT a.user_id AS u, k.user_id AS v
-           FROM ek a JOIN ek k ON a.event_type = k.event_type AND a.b = k.b
-                             AND a.user_id < k.user_id)"""
 
 
 # ---------------------------------------------------------------------------

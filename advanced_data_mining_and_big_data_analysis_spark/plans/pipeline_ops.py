@@ -489,17 +489,9 @@ _BG_NLL_FLAG = 3.42  # ~p90 of per-doc bigram NLL at the test SFs
 def a0178_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", "source", X.tokens("text").alias("_t"))
-    n1 = F.greatest(F.size("_t") - 1, F.lit(0))
-    bg = t.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.arrays_zip(
-                F.slice("_t", F.lit(1), n1).alias("w1"),
-                F.slice("_t", F.lit(2), n1).alias("w2"),
-            )
-        ).alias("_p"),
-    ).select("doc_id", "source", F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
+    bg = t.select("doc_id", "source", F.explode(X.ngram_zip("_t", 2)).alias("_p")).select(
+        "doc_id", "source", F.col("_p.g0").alias("w1"), F.col("_p.g1").alias("w2")
+    )
     # one bigram pass builds the count frame; marginals and the vocab
     # size are rollups of it (localCheckpoint: three consumers)
     bc = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb")).localCheckpoint(eager=False)
@@ -1056,9 +1048,7 @@ def q117_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # carry `source` through the shingle flat-map (keep_cols) — joining
     # raw gram rows back to docs would shuffle the full gram stream
-    with_t = docs.select(
-        "doc_id", "source", F.split(F.trim(X.normalize("text")), " +").alias("_toks")
-    )
+    with_t = docs.select("doc_id", "source", X.tokens("text").alias("_toks"))
     grams = X.zip_ngram_rows(with_t, "_toks", 3, "shingle", ["doc_id", "source"], " ", True)
     # HLL registers depend only on the DISTINCT hashed values, so every
     # consumer below — sketch, exact count, global distinct — runs off
@@ -1865,11 +1855,7 @@ _DECON_N = 8
 def a0140_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", "source", X.tokens("text").alias("toks"))
-    sh = t.filter(F.size("toks") >= _DECON_N).select(
-        "doc_id",
-        "source",
-        F.explode(X.word_shingles(F.col("toks"), n=_DECON_N, distinct=True)).alias("g"),
-    )
+    sh = X.zip_ngram_rows(t, "toks", _DECON_N, "g", ["doc_id", "source"], " ", True)
     ev = sh.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
     tr = (
         sh.filter(F.col("doc_id") % 97 != 0)

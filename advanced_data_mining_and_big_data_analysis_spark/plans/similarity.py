@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, Window as W, fu
 
 from ..operators import dedup as D, similarity as SIM, text as X
 from ..sources import load_table
-from .dedup_text import _TOKS
+from .dedup_text import _BM25_C_SQL, _BM25_FROM_SQL, _BM25_TERMS, _bm25_contrib, _bm25_ctes
 from .mining import _round_half_up
 from .registry import query
 
@@ -1941,8 +1941,6 @@ def a0023_semdedup_twolevel_codebook(spark: SparkSession, sf_dir: str) -> DataFr
 # (dense) feeding the same fusion join.
 # ---------------------------------------------------------------------------
 
-_RRF_TERMS = ["hash", "join", "vector"]
-_RRF_K1, _RRF_B = 1.2, 0.75
 _RRF_QVEC = 42  # query document (vec_id == doc_id in the synthetic corpus)
 _RRF_K = 60  # the paper's constant
 _RRF_DEPTH = 50
@@ -1952,19 +1950,10 @@ _RRF_TOP = 15
 @query(
     "a0024_rrf_fusion",
     oracle=f"""
-    WITH base AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    stats AS (SELECT COUNT(*) AS n_docs, AVG(len(toks)) AS avgdl FROM base),
-    dl AS (SELECT doc_id, len(toks) AS dl FROM base),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf
-           FROM (SELECT doc_id, unnest(toks) AS term FROM base)
-           WHERE term IN ({", ".join(f"'{t}'" for t in _RRF_TERMS)})
-           GROUP BY doc_id, term),
-    df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+    WITH {_bm25_ctes(_BM25_TERMS)},
     lex AS (SELECT tf.doc_id, ROUND(SUM(
-              ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-              * (tf.tf * ({_RRF_K1} + 1))
-              / (tf.tf + {_RRF_K1} * (1 - {_RRF_B} + {_RRF_B} * dl.dl / stats.avgdl))), 6) AS bm25
-            FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN stats
+              {_BM25_C_SQL}), 6) AS bm25
+            FROM {_BM25_FROM_SQL}
             GROUP BY tf.doc_id),
     lexrk AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS r
               FROM lex),
@@ -1994,25 +1983,8 @@ _RRF_TOP = 15
 )
 def a0024_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", X.tokens("text").alias("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
-    )
-    dl = base.select("doc_id", F.size("toks").alias("dl"))
-    tf = (
-        base.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(_RRF_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("tf") + _RRF_K1 * (1 - _RRF_B + _RRF_B * F.col("dl") / F.col("avgdl"))
     lex = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", (idf * (F.col("tf") * (_RRF_K1 + 1)) / denom).alias("c"))
+        _bm25_contrib(docs, _BM25_TERMS)
         .groupBy("doc_id")
         .agg(F.round(F.sum("c"), 6).alias("bm25"))
     )

@@ -97,15 +97,11 @@ def streaming_dedup(
     keys: list[str],
     ts_col: str = "ts",
     watermark: str = "30 minutes",
-    within_watermark: bool = True,
 ) -> DataFrame:
-    """Streaming duplicate drop. ``within_watermark`` bounds the dedup state
-    to the watermark horizon (the only sane setting for an unbounded
-    stream — exact global dedup state grows without bound)."""
-    with_wm = events.withWatermark(ts_col, watermark)
-    if within_watermark:
-        return with_wm.dropDuplicatesWithinWatermark(keys)
-    return with_wm.dropDuplicates(keys)
+    """Streaming duplicate drop within the watermark horizon: the dedup
+    state is bounded by the watermark (exact global dedup state over an
+    unbounded stream grows without bound)."""
+    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def stream_stream_join(
@@ -618,9 +614,9 @@ def streaming_drift_histogram(
     )
 
 
-def ks_from_histogram(hist: DataFrame, bins: int = 1024) -> DataFrame:
+def ks_from_histogram(hist: DataFrame) -> DataFrame:
     """KS statistic + 5% drift call from a (bin, n_a, n_b) histogram —
-    one bounded cumulative window over <= ``bins`` rows. Works on the
+    one bounded cumulative window over the histogram's rows. Works on the
     batch histogram or on a streamed one (memory-sink table)."""
     from pyspark.sql import Window
 

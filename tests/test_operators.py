@@ -89,11 +89,16 @@ def test_tokens_and_shingles(spark):
     df = spark.createDataFrame([("Hello, World! hello spark sql",)], "text string")
     toks = df.select(X.tokens("text").alias("t")).collect()[0]["t"]
     assert toks == ["hello", "world", "hello", "spark", "sql"]
-    sh = df.select(X.word_shingles(X.tokens("text"), 3).alias("s")).collect()[0]["s"]
+
+    def shingles(frame):
+        with_t = frame.select(X.tokens("text").alias("t"))
+        return [r["s"] for r in X.zip_ngram_rows(with_t, "t", 3, "s", [], " ", True).collect()]
+
+    sh = shingles(df)
     assert "hello world hello" in sh and len(sh) == 3
     # under-n docs produce empty shingles, not errors
     tiny = spark.createDataFrame([("one two",)], "text string")
-    assert tiny.select(X.word_shingles(X.tokens("text"), 3).alias("s")).collect()[0]["s"] == []
+    assert shingles(tiny) == []
 
 
 def test_near_dup_pairs_planted_duplicate(spark):

@@ -185,8 +185,11 @@ def test_zip_ngram_rows_matches_python_reference(spark, texts, n):
     """Property: the zip/slice/array_distinct n-gram flat-map equals the
     obvious Python reference (normalize, split, sliding window, per-doc
     dedup) on arbitrary text including punctuation, repeated runs of
-    separators, and empty/short docs."""
+    separators, and empty/short docs. The pair form (the two element
+    columns of ``ngram_zip``, no dedup) equals the Python sliding
+    window with multiplicity."""
     import re as _re
+    from collections import Counter
 
     from pyspark.sql import functions as F
 
@@ -202,8 +205,13 @@ def test_zip_ngram_rows_matches_python_reference(spark, texts, n):
         for r in X.zip_ngram_rows(with_t, "_toks", n, "gram", ["doc_id"], " ", True).collect()
     }
     want = set()
+    want_pairs = Counter()
     for i, t in rows:
         toks = [w for w in _re.sub(r"[^a-z0-9 ]", " ", t.lower()).split() if w]
         for j in range(len(toks) - n + 1):
             want.add((i, " ".join(toks[j : j + n])))
+        want_pairs.update((i, a, b) for a, b in zip(toks, toks[1:]))
     assert got == want
+    pairs = with_t.select("doc_id", F.explode(X.ngram_zip("_toks", 2)).alias("_p"))
+    got_pairs = Counter((r["doc_id"], r["_p"]["g0"], r["_p"]["g1"]) for r in pairs.collect())
+    assert got_pairs == want_pairs

@@ -81,7 +81,7 @@ def test_streaming_sessions_equal_batch_sessionization(spark, event_files):
 
 def test_streaming_dedup_and_foreach_batch_sink(spark, event_files):
     src = ST.stream_from_directory(spark, f"{event_files}/events", SCHEMAS["events"])
-    deduped = ST.streaming_dedup(src, ["user_id", "event_type"], within_watermark=True)
+    deduped = ST.streaming_dedup(src, ["user_id", "event_type"])
     out = tempfile.mkdtemp(prefix="stream_sink_")
     try:
         q = ST.write_foreach_batch_parquet(deduped, f"{out}/data", f"{out}/ckpt")
